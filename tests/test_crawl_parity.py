@@ -319,3 +319,94 @@ def test_adaptive_budget_resumability(spark, state_dir):
         r["host"]: r["max_fetches_per_round"] for r in eng2.budgets.collect()
     }
     assert eng_bud == oracle.budgets
+
+
+def test_sketch_failure_is_recorded_and_rounds_fall_back(spark, state_dir, monkeypatch):
+    """A failing width sketch must not fail the round or vanish: the
+    engine records the error, warns, and the next round sizes itself
+    from manifest counts and still schedules."""
+    from webcrawler_go_spark.operators import sketches
+
+    def boom(*a, **k):
+        raise RuntimeError("sketch boom")
+
+    monkeypatch.setattr(sketches, "hll_distinct", boom)
+    eng = CrawlEngine(spark, CFG, state_dir, world=WORLD, adaptive_width=True)
+    eng.seed(_seeds_df(spark))
+    with pytest.warns(RuntimeWarning, match="sketch boom"):
+        assert eng.run_round(0).scheduled > 0
+    assert eng._width_knobs is None
+    assert eng.sketch_errors == [(1, "RuntimeError('sketch boom')")]
+    with pytest.warns(RuntimeWarning, match="sketch boom"):
+        assert eng.run_round(1).scheduled > 0
+    assert [r for r, _ in eng.sketch_errors] == [1, 2]
+
+
+def _run_counting_jobs(spark, eng, rounds: int) -> list[int]:
+    """Run rounds 0..rounds-1 of ``eng``; returns how many Spark jobs
+    each round started, read from the status tracker once the listener
+    bus has delivered every event."""
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    bus = sc._jsc.sc().listenerBus()
+    counts = []
+    for r in range(rounds):
+        bus.waitUntilEmpty()
+        before = set(tracker.getJobIdsForGroup())
+        eng.run_round(r)
+        bus.waitUntilEmpty()
+        counts.append(len(set(tracker.getJobIdsForGroup()) - before))
+    return counts
+
+
+# each commit of the test world writes one file, so a table first holds
+# more than the compaction target (4 files) at the sixth round
+DEEP_ROUNDS = 6
+
+
+@pytest.fixture(scope="module")
+def deep_crawl(spark, tmp_path_factory):
+    """The crawl_deep benchmark's engine config — AIMD budgets and
+    maintenance every 2 rounds — on the test world, with the number of
+    Spark jobs each round started."""
+    eng = CrawlEngine(
+        spark, CFG, str(tmp_path_factory.mktemp("deep")), world=WORLD,
+        adaptive_budget=True, maintenance_interval=2,
+    )
+    eng.seed(_seeds_df(spark))
+    jobs = _run_counting_jobs(spark, eng, DEEP_ROUNDS)
+    oracle = sequential.crawl(
+        WORLD, gen_seeds(WORLD, N_SEEDS), CFG, max_rounds=DEEP_ROUNDS,
+        adaptive_budget=True,
+    )
+    return eng, oracle, jobs
+
+
+def test_adaptive_maintained_crawl_parity(deep_crawl):
+    """AIMD rebalance and compaction run inside the commit pool, beside
+    the frontier dedup that still reads the round's seen snapshot: the
+    crawl must equal the sequential oracle in seen set, per-host
+    sequences and final budget dim."""
+    eng, oracle, _ = deep_crawl
+    assert {r.url_norm for r in eng.url_seen().collect()} == oracle.seen
+    seqs = {r["host"]: r["fetch_sequence"] for r in eng.per_host_sequences().collect()}
+    assert seqs == oracle.sequences
+    budgets = {r["host"]: r["max_fetches_per_round"] for r in eng.budgets.collect()}
+    assert budgets == oracle.budgets
+    # the last round was a maintenance round and compacted every table
+    for t in (eng.seen_t, eng.log_t, eng.docs_t):
+        assert t.current_snapshot()["lineage"]["op"] == "compact", t.name
+
+
+# Spark jobs per round of ``deep_crawl`` (round 5 compacts). The
+# ready-frontier subtree runs once per round, the sketch is one action,
+# and the AIMD rebalance and compaction share the commit pool; a change
+# that adds jobs to the round's path fails here.
+JOBS_PER_ROUND_CEILING = [28, 28, 28, 28, 28, 31]
+
+
+def test_jobs_per_round_ceiling(deep_crawl):
+    _, _, jobs = deep_crawl
+    assert all(j <= c for j, c in zip(jobs, JOBS_PER_ROUND_CEILING)), (
+        jobs, JOBS_PER_ROUND_CEILING
+    )

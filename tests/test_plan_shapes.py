@@ -8,6 +8,8 @@ PLANS.md carry the numbers."""
 
 from __future__ import annotations
 
+import functools
+
 import pytest
 
 import __spark_entry__ as entry_mod
@@ -25,7 +27,10 @@ BNLJ_OK: set[str] = {"urlseen_hll", "cms_heavy_hitters", "adaptive_fetch_width"}
 NO_SCAN = {"head_probe", "url_hash31", "robots_parse"}
 
 
+@functools.cache
 def _plan(spark, name: str) -> str:
+    """Executed plan text of query ``name``, planned once per session:
+    several tests read the same plan."""
     df = entry_mod.queries()[name](spark, SF_DIR)
     return df._jdf.queryExecution().executedPlan().toString()
 

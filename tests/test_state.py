@@ -101,3 +101,26 @@ def test_engine_maintenance_equivalent_and_bounded(spark, state_dir):
     # per-round scheduled must be the ROUND's count even on maintenance
     # rounds (compaction replaces the head manifest; round-3 review fix)
     assert sched0 == sched2
+
+
+def test_maintenance_keeps_files_of_the_rounds_seen_read(spark, state_dir):
+    """On a maintenance round the engine compacts and expires url_seen in
+    the commit pool while the frontier dedup still scans the seen
+    snapshot the round started from: no file of that snapshot may go."""
+    from webcrawler_go_spark.config import CrawlConfig
+    from webcrawler_go_spark.plans.frontier_loop import CrawlEngine
+    from webcrawler_go_spark.schemas import URL_SEEN
+
+    eng = CrawlEngine(spark, CrawlConfig(), state_dir)
+    t = eng.seen_t
+
+    def rows(i):
+        return spark.createDataFrame([(i, f"u{i}", i)], URL_SEEN)
+
+    for i in range(5):
+        t.commit(rows(i))
+    round_start = t.read()
+    eng._commit(t, rows(5), 5, True, lineage={"round": 5})
+    assert t.current_snapshot()["lineage"]["op"] == "compact"
+    assert sorted(r.url_hash for r in round_start.collect()) == list(range(5))
+    assert sorted(r.url_hash for r in t.read().collect()) == list(range(6))

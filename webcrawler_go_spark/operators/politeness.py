@@ -23,6 +23,8 @@ the single-phase Window is used (fewer shuffles).
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -32,13 +34,18 @@ ORDER_COLS = ["round", "parent_seq", "link_pos", "url_hash"]
 # but keeps the op total-order-safe on arbitrary input)
 
 
-def rank_per_host(frontier: DataFrame) -> DataFrame:
-    """Single-phase per-host rank (host cardinality fits a task)."""
-    w = Window.partitionBy("host").orderBy(*[F.col(c) for c in ORDER_COLS])
+def rank_per_host(frontier: DataFrame, by: tuple[str, ...] = ("host",)) -> DataFrame:
+    """Single-phase per-host rank (host cardinality fits a task).
+
+    ``by`` is the rank's partition key: the host, optionally refined by
+    further columns so each (host, …) slice ranks from 1 on its own."""
+    w = Window.partitionBy(*by).orderBy(*[F.col(c) for c in ORDER_COLS])
     return frontier.withColumn("host_rank", F.row_number().over(w))
 
 
-def rank_per_host_salted(frontier: DataFrame, n_salts: int = 16) -> DataFrame:
+def rank_per_host_salted(
+    frontier: DataFrame, n_salts: int = 16, by: tuple[str, ...] = ("host",)
+) -> DataFrame:
     """Two-phase per-host rank for hot hosts (SURVEY §4.1 hard part).
 
     ``Window.partitionBy(host)`` puts a mega-host in ONE task; at 10^10
@@ -58,9 +65,11 @@ def rank_per_host_salted(frontier: DataFrame, n_salts: int = 16) -> DataFrame:
     ranking inside each tile uses the full key, and offsets are exact
     counts of earlier tiles ⇒ identical to the single-phase Window
     (asserted in tests/test_crawl_parity.py::test_salted_rank_equals_unsalted).
+    ``by`` refines the host exactly as in ``rank_per_host``.
     """
+    by = list(by)
     key_cols = [F.col(c) for c in ORDER_COLS]
-    fr = frontier.repartitionByRange(n_salts, F.col("host"), *key_cols)
+    fr = frontier.repartitionByRange(n_salts, *[F.col(c) for c in by], *key_cols)
     fr = fr.withColumn("_pid", F.spark_partition_id())
     # pin ONE evaluation of the range exchange: the local-rank branch and
     # the counts branch must observe the same sampled range boundaries,
@@ -68,19 +77,19 @@ def rank_per_host_salted(frontier: DataFrame, n_salts: int = 16) -> DataFrame:
     # (rows would silently drop at the offsets join). localCheckpoint also
     # truncates lineage inside the iterative loop.
     fr = fr.localCheckpoint(eager=True)
-    w_local = Window.partitionBy("host", "_pid").orderBy(*key_cols)
+    w_local = Window.partitionBy(*by, "_pid").orderBy(*key_cols)
     fr = fr.withColumn("_local_rank", F.row_number().over(w_local))
-    counts = fr.groupBy("host", "_pid").agg(F.count("*").alias("_n"))
+    counts = fr.groupBy(*by, "_pid").agg(F.count("*").alias("_n"))
     w_off = (
-        Window.partitionBy("host")
+        Window.partitionBy(*by)
         .orderBy("_pid")
         .rowsBetween(Window.unboundedPreceding, -1)
     )
     offsets = counts.withColumn(
         "_offset", F.coalesce(F.sum("_n").over(w_off), F.lit(0))
-    ).select("host", "_pid", "_offset")
+    ).select(*by, "_pid", "_offset")
     return (
-        fr.join(F.broadcast(offsets), ["host", "_pid"], "left")
+        fr.join(F.broadcast(offsets), [*by, "_pid"], "left")
         .withColumn(
             "host_rank", (F.col("_offset") + F.col("_local_rank")).cast("int")
         )
@@ -95,48 +104,63 @@ def schedule_round(
     default_budget: int = 20,
     salted: bool = False,
     n_salts: int = 16,
+    hold: Callable[[DataFrame], DataFrame] | None = None,
 ) -> tuple[DataFrame, DataFrame]:
     """W1+W2+W3: returns (scheduled, deferred).
 
-    * filters retry backoff (not_before_round > round → deferred),
-    * ranks per host (salted two-phase when requested),
-    * broadcast-joins the politeness budget dim (small by construction),
-    * keeps host_rank ≤ budget; overflow is deferred to the next round
-      with not_before_round = round+1.
+    * ranks every input row ONCE, per (host, ready) where ready means
+      not_before_round ≤ round (salted two-phase when requested), so
+      ready rows rank 1.. among themselves and backoff rows never take
+      a budget slot;
+    * broadcast-joins the politeness budget dim (small by construction);
+    * scheduled = ready rows with host_rank ≤ budget;
+    * deferred = the rest: ready overflow re-enters the next round with
+      not_before_round = round+1, backoff rows keep theirs (W3).
+
+    Both outputs are filters of that one ranked frame, so an input
+    frontier (the engine's scan → first-discovery → seen anti-join)
+    runs once when ``hold`` persists the frame — ``hold`` gets the
+    ranked frame and returns the frame both outputs read; the caller
+    owns its release.
 
     ``seq`` — the engine-wide fetch sequence used as parent_seq by the
     links this fetch discovers — packs (round, host_rank) into one long:
     per-host order across rounds is then simply ORDER BY seq, and the
     sequential oracle reproduces it exactly.
     """
-    ready = frontier.filter(F.col("not_before_round") <= F.lit(current_round))
-    backoff_deferred = frontier.filter(
-        F.col("not_before_round") > F.lit(current_round)
+    fr = frontier.withColumn(
+        "_ready", F.col("not_before_round") <= F.lit(current_round)
     )
-
+    by = ("host", "_ready")
     ranked = (
-        rank_per_host_salted(ready, n_salts) if salted else rank_per_host(ready)
+        rank_per_host_salted(fr, n_salts, by) if salted else rank_per_host(fr, by)
     )
     ranked = ranked.join(F.broadcast(budgets), "host", "left").withColumn(
         "_budget",
         F.coalesce(F.col("max_fetches_per_round"), F.lit(default_budget)),
     )
+    if hold is not None:
+        ranked = hold(ranked)
+    go = F.col("_ready") & (F.col("host_rank") <= F.col("_budget"))
+    extra = ["_ready", "_budget", "max_fetches_per_round", "crawl_delay_ms"]
     scheduled = (
-        ranked.filter(F.col("host_rank") <= F.col("_budget"))
+        ranked.filter(go)
         .withColumn(
             "seq",
             (F.lit(current_round).cast("long") * F.lit(1 << 32))
             + F.col("host_rank"),
         )
-        .drop("_budget", "max_fetches_per_round", "crawl_delay_ms")
+        .drop(*extra)
     )
-    overflow = (
-        ranked.filter(F.col("host_rank") > F.col("_budget"))
-        .drop("_budget", "max_fetches_per_round", "crawl_delay_ms", "host_rank")
-        .withColumn("not_before_round", F.lit(current_round + 1))
-    )
-    deferred = overflow.unionByName(
-        backoff_deferred, allowMissingColumns=False
+    deferred = (
+        ranked.filter(~go)
+        .withColumn(
+            "not_before_round",
+            F.when(F.col("_ready"), F.lit(current_round + 1)).otherwise(
+                F.col("not_before_round")
+            ),
+        )
+        .drop(*extra, "host_rank")
     )
     return scheduled, deferred
 

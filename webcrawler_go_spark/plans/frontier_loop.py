@@ -2,12 +2,12 @@
 
 Round r (all DataFrame ops; driver only sequences rounds):
 
-    frontier ──filter not_before──► ready ─┬─► deferred (backoff)
+    frontier ──filter not_before──► ready ─┬─► backoff
     ready ──first_discovery──► unique candidates          (J1 in-round)
     unique ──anti-join url_seen──► new                    (J1 cross-round)
     new ──robots──► allowed                               (broadcast dim)
-    allowed ──Window rank per host──► scheduled ≤ budget  (W1+W2)
-                                   └─► overflow → next round
+    allowed ∪ backoff ──rank per (host, ready)──► scheduled ≤ budget (W1+W2)
+                                   └─► overflow + backoff → next round
     scheduled ──mapInPandas fetch──► fetch_log+spans+outlinks   (S3)
     fetch ──posexplode──► next candidates (round+1)       (X1, F1-F4)
     fetch ──retry/blocked rules──► requeued               (W3, J3)
@@ -30,6 +30,7 @@ Window is salted when a host exceeds ``salt_threshold`` rows.
 from __future__ import annotations
 
 import os
+import warnings
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
@@ -38,6 +39,7 @@ from pyspark.sql import functions as F
 from webcrawler_go_spark.config import CrawlConfig
 from webcrawler_go_spark.functions.classify import error_taxonomy, status_class
 from webcrawler_go_spark.functions.urls import canonicalize_cols
+from webcrawler_go_spark.operators.components import _unpersist_local_checkpoint
 from webcrawler_go_spark.operators.dedup import dedup_against_seen, first_discovery
 from webcrawler_go_spark.operators.extract import (
     documents_from_fetch,
@@ -131,6 +133,9 @@ class CrawlEngine:
             )
         self.adaptive_width = bool(adaptive_width)
         self._width_knobs: dict | None = None
+        # (round, exception text) of every sketch job that failed; the
+        # round it sized fell back to manifest counts
+        self.sketch_errors: list[tuple[int, str]] = []
         # AIMD politeness-budget adaptation (VERDICT r6 directive #3,
         # design b92fc25): when on, the budget dim schedule_round
         # broadcast-joins is RECOMPUTED at every crawl boundary from the
@@ -254,7 +259,7 @@ class CrawlEngine:
         seen = self.seen_t.read()
 
         ready = frontier.filter(F.col("not_before_round") <= r)
-        deferred = frontier.filter(F.col("not_before_round") > r)
+        backoff = frontier.filter(F.col("not_before_round") > r)
 
         unique = first_discovery(ready)
         # retried rows (attempts>0) were deliberately removed from seen —
@@ -302,12 +307,24 @@ class CrawlEngine:
             if isinstance(self.salted, bool)
             else est_rows > self.salt_threshold
         )
-        scheduled, overflow = schedule_round(
-            new.unionByName(deferred.limit(0)),  # schema guard
+        # one ranked frame feeds both the fetch and (through ``deferred``:
+        # the ready overflow plus the backoff rows) the next frontier, so
+        # the scan → first-discovery → seen anti-join subtree above runs
+        # once; the frame is persisted for the round and released at its
+        # end
+        held: list[DataFrame] = []
+
+        def hold(df: DataFrame) -> DataFrame:
+            held.append(df.persist())
+            return held[-1]
+
+        scheduled, deferred = schedule_round(
+            new.unionByName(backoff),
             self.budgets,
             current_round=r,
             default_budget=cfg.default_host_budget,
             salted=salted,
+            hold=hold,
         )
         # the fetch happens AT round r regardless of discovery round; the
         # discovery keys ride THROUGH the kernel (no join back needed)
@@ -401,21 +418,20 @@ class CrawlEngine:
             fpp=cfg.bloom_fpp,
         )
         next_frontier = candidates.unionByName(
-            deferred.select(*candidates.columns)
-        ).unionByName(requeue.select(*candidates.columns)).unionByName(
-            overflow.select(*candidates.columns)
-        )
+            requeue.select(*candidates.columns)
+        ).unionByName(deferred.select(*candidates.columns))
 
-        # all four commits read only the checkpointed fetch output (plus
-        # tiny carried frames) and are mutually independent → run them as
-        # concurrent Spark jobs from separate threads. The three CHEAP
-        # commits (seen/docs/log: column-sliced views of the checkpoint)
-        # launch FIRST and overlap the frontier-dedup materialization on
-        # the main thread — the dedup is the round's second-biggest
-        # compute and previously serialized in front of them. The
-        # frontier commit itself still waits for the materialized dedup
-        # (committing the raw plan inside the pool measured 3× slower:
-        # it contends with three parquet writes for every core).
+        # every commit reads only the checkpointed fetch output (plus
+        # tiny carried frames) and the commits are mutually independent →
+        # run them as concurrent Spark jobs from separate threads. The
+        # three CHEAP commits (seen/docs/log: column-sliced views of the
+        # checkpoint) and the AIMD rebalance (a host aggregate of the
+        # checkpoint) launch FIRST and overlap the frontier-dedup
+        # materialization on the main thread — the dedup is the round's
+        # second-biggest compute. The frontier commit waits for the
+        # materialized dedup (committing the raw plan inside the pool
+        # measured 3× slower: it contends with three parquet writes for
+        # every core), and the sketch job reads the same checkpoint.
         # Outputs coalesce to ≤ the core count before writing: carrying
         # the kernel stage's width into FOUR parquet writes per round
         # would pile up 100s of small files per table — growing every
@@ -432,27 +448,37 @@ class CrawlEngine:
             4,
             min(self.spark.sparkContext.defaultParallelism, est_rows // 8000 + 4),
         )
+        maintain = bool(
+            self.maintenance_interval and (r + 1) % self.maintenance_interval == 0
+        )
 
-        with ThreadPoolExecutor(max_workers=5) as pool:
+        with ThreadPoolExecutor(max_workers=6) as pool:
             futures = [
                 pool.submit(
-                    self.seen_t.commit, seen_delta.coalesce(n_out),
-                    lineage={"round": r, "op": "seen+="},
+                    self._commit, self.seen_t, seen_delta.coalesce(n_out), r,
+                    maintain, lineage={"round": r, "op": "seen+="},
                 ),
                 pool.submit(
-                    self.docs_t.commit, docs.coalesce(n_out), lineage={"round": r}
-                ),
-                pool.submit(
-                    self.log_t.commit,
-                    fetched.select(*[f.name for f in FETCH_LOG.fields]).coalesce(n_out),
+                    self._commit, self.docs_t, docs.coalesce(n_out), r, maintain,
                     lineage={"round": r},
                 ),
+                pool.submit(
+                    self._commit, self.log_t,
+                    fetched.select(*[f.name for f in FETCH_LOG.fields]).coalesce(n_out),
+                    r, maintain, lineage={"round": r},
+                ),
             ]
+            if self.adaptive_budget:
+                # round r's budgets(r-1) → health(r-1) lineage stays
+                # live until the round ends (the ranked frame above was
+                # planned against it), so the rebalance hands the old
+                # ledger back for release after the pool instead of
+                # freeing it here
+                rebalance = pool.submit(self._aimd_rebalance, fetched, r)
             # main thread: materialize the frontier dedup concurrently
-            # with the three writes
-            ckpt = os.environ.get("SPARK_GRAFT_FRONTIER_CKPT", "1") != "0"
-            if ckpt:
-                next_frontier = next_frontier.localCheckpoint(eager=True)
+            # with the writes; the frontier commit and the sketch job
+            # both read this checkpoint
+            next_frontier = next_frontier.localCheckpoint(eager=True)
             _mark("frontier-dedup")
             futures.append(
                 pool.submit(
@@ -461,11 +487,7 @@ class CrawlEngine:
                 )
             )
             if self.adaptive_width:
-                # ADVICE r6: adaptive width must not silently die when
-                # SPARK_GRAFT_FRONTIER_CKPT=0 — without the checkpoint
-                # the sketch job recomputes the frontier lineage (the
-                # cost of disabling ckpt), but the knobs stay live.
-                # overlapped sketch job over the (checkpointed) next
+                # overlapped sketch job over the checkpointed next
                 # frontier: HLL distinct-URL estimate of round r+1's
                 # READY slice + CMS max-bucket depth bound for its
                 # hottest host. Both are map-side-combining aggregations
@@ -475,27 +497,17 @@ class CrawlEngine:
                 # only; failures degrade to manifest counts.
                 pool.submit(self._sketch_width_knobs, next_frontier, r + 1)
             commit_manifests = [f_.result() for f_ in futures]
+            old_health = rebalance.result() if self.adaptive_budget else None
         # the fetch-log commit's own manifest — NOT re-read from the head
         # later: maintenance may REPLACE the head with a compact snapshot
         # whose new_rows is the whole-table count, not this round's
         log_manifest = commit_manifests[2]
         _mark("commits")
-
-        if self.adaptive_budget:
-            # AFTER the commit pool on purpose: round r's overflow (now
-            # safely inside the checkpointed/committed next frontier)
-            # was planned against budgets(r-1) → health(r-1); rebalance
-            # earlier and the old health checkpoint gets unpersisted
-            # while that lineage still needs it.
-            self._aimd_rebalance(fetched, r)
-            _mark("aimd-rebalance")
-
-        if self.maintenance_interval and (r + 1) % self.maintenance_interval == 0:
-            target = max(4, self.spark.sparkContext.defaultParallelism)
-            for t in (self.seen_t, self.log_t, self.docs_t):
-                if t.compact(target_files=target, lineage={"round": r}):
-                    t.expire_snapshots(keep_last=2)
-            _mark("maintenance")
+        for df in held:
+            df.unpersist()
+        for df in (old_health, next_frontier):
+            if df is not None:
+                _unpersist_local_checkpoint(df)
 
         # --- per-round metrics (A1/A2/A3 in one aggregate) -----------------
         if not self.collect_stats:
@@ -508,7 +520,7 @@ class CrawlEngine:
                 fetched_ok=0, blocked=0, errors=0, new_documents=0, bytes=0,
             )
             self.stats.append(st)
-            fetched.unpersist()
+            _unpersist_local_checkpoint(fetched)
             return st
         agg = fetched.agg(
             F.count("*").alias("scheduled"),
@@ -537,10 +549,28 @@ class CrawlEngine:
         )
         self.stats.append(st)
         self._journal_metrics(st)
-        fetched.unpersist()
+        _unpersist_local_checkpoint(fetched)
         return st
 
-    def _aimd_rebalance(self, fetched: DataFrame, r: int) -> None:
+    def _commit(
+        self, table: SnapshotTable, df: DataFrame, r: int, maintain: bool, **kw
+    ) -> dict:
+        """Commit ``df`` to ``table``; on a maintenance round, then compact
+        the table back to ~core-count files and expire superseded
+        snapshots. Returns the commit's own manifest.
+
+        ``keep_last=2`` keeps this round's append snapshot, whose file
+        list holds every file of the head the round started from — the
+        files the round's in-flight reads (the seen anti-join of the
+        frontier dedup) still scan while this runs in the commit pool."""
+        manifest = table.commit(df, **kw)
+        if maintain:
+            target = max(4, self.spark.sparkContext.defaultParallelism)
+            if table.compact(target_files=target, lineage={"round": r}):
+                table.expire_snapshots(keep_last=2)
+        return manifest
+
+    def _aimd_rebalance(self, fetched: DataFrame, r: int) -> DataFrame | None:
         """Fold round ``r``'s per-host counters into the health ledger
         and recompute the budget dim for round ``r+1`` (J3's blocked-
         recovery intent, crawler.go:303-336, as data-encoded
@@ -549,7 +579,11 @@ class CrawlEngine:
         (hosts × window) rows, checkpointed per round to truncate
         lineage. errors (error_class non-null) and blocked are disjoint
         by the kernel contract (an errored fetch has no HTTP status to
-        be blocked on) — the oracle counts them the same way."""
+        be blocked on) — the oracle counts them the same way.
+
+        Returns the previous ledger (None in round 0): the round's own
+        plans still read it through the budget dim, so the caller frees
+        it when the round ends."""
         from webcrawler_go_spark.operators.scheduling import aimd_budgets
 
         hc = fetched.groupBy("host").agg(
@@ -584,13 +618,7 @@ class CrawlEngine:
             health.filter(F.col("round") == r).coalesce(1),
             lineage={"round": r, "op": "health+="},
         )
-        from webcrawler_go_spark.operators.components import (
-            _unpersist_local_checkpoint,
-        )
-
-        if self._host_health is not None:
-            _unpersist_local_checkpoint(self._host_health)
-        self._host_health = health
+        old, self._host_health = self._host_health, health
         bud = aimd_budgets(
             health.withColumn("round", F.col("round") - lo),
             n_rounds=r + 1 - lo,
@@ -603,6 +631,7 @@ class CrawlEngine:
             F.col("budget").cast("int").alias("max_fetches_per_round"),
             F.lit(None).cast("int").alias("crawl_delay_ms"),
         )
+        return old
 
     def _aimd_restore(self, next_round: int) -> None:
         """Rebuild the AIMD ledger + budget dim from the persisted
@@ -632,10 +661,6 @@ class CrawlEngine:
         if not health.limit(1).count():
             return
         health = health.localCheckpoint(eager=True)
-        from webcrawler_go_spark.operators.components import (
-            _unpersist_local_checkpoint,
-        )
-
         if self._host_health is not None:
             # an engine that already ran rounds in-process and is asked
             # to resume again: free the prior ledger's cached blocks
@@ -666,30 +691,38 @@ class CrawlEngine:
           min across rows is the tightest such OVERestimate — errs only
           toward more spread when hashed neighbors collide.
 
-        Runs inside the commit thread pool (wall-clock overlapped with
-        the parquet writes); any failure leaves the knobs unset and the
-        next round falls back to manifest counts.
+        Both come from ONE Spark action (the two one-row aggregates
+        cross-joined), run inside the commit thread pool (wall-clock
+        overlapped with the parquet writes). A failure leaves the knobs
+        unset — the next round falls back to manifest counts — and is
+        recorded in ``sketch_errors`` with a warning, never raised.
         """
         from webcrawler_go_spark.operators.sketches import cms_build, hll_distinct
 
         try:
             ready = next_frontier.filter(F.col("not_before_round") <= at_round)
-            est = hll_distinct(
-                ready.select(F.col("url_hash").cast("string").alias("url_hash")),
-                "url_hash",
-                p=12,
-            ).first()
             hot = (
                 cms_build(ready.select("host"), "host")
                 .groupBy("j")
                 .agg(F.max("c").alias("mx"))
                 .agg(F.min("mx").alias("hot"))
+            )
+            est = (
+                hll_distinct(
+                    ready.select(F.col("url_hash").cast("string").alias("url_hash")),
+                    "url_hash",
+                    p=12,
+                )
+                .crossJoin(hot)
                 .first()
             )
-            est_urls = int(est["est_distinct"]) if est else 0
-            n_reg = int(est["n_registers"]) if est else 0
+            if est["est_distinct"] is None:  # empty ready slice: no estimate
+                self._width_knobs = None
+                return
+            est_urls = int(est["est_distinct"])
+            n_reg = int(est["n_registers"])
             m = 1 << 12
-            if est and est_urls <= 5 * m // 2 and n_reg < m:
+            if est_urls <= 5 * m // 2 and n_reg < m:
                 # HLL small-range (linear-counting) correction: the raw
                 # estimator floors at ~alpha·m when most registers are
                 # empty. Driver-side float math is fine HERE — the knob
@@ -702,10 +735,16 @@ class CrawlEngine:
             self._width_knobs = {
                 "at_round": at_round,
                 "est_urls": est_urls,
-                "est_hot_depth": int(hot["hot"] or 0) if hot else 0,
+                "est_hot_depth": int(est["hot"] or 0),
             }
-        except Exception:  # noqa: BLE001 — advisory path, never fatal
+        except Exception as exc:  # noqa: BLE001 — advisory path, never fatal
             self._width_knobs = None
+            self.sketch_errors.append((at_round, repr(exc)))
+            warnings.warn(
+                f"width sketch for round {at_round} failed, falling back to "
+                f"manifest counts: {exc!r}",
+                RuntimeWarning,
+            )
 
     def _journal_metrics(self, st: RoundStats) -> None:
         """Append the round's metrics to a JSONL journal in the state dir
