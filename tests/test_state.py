@@ -104,23 +104,27 @@ def test_engine_maintenance_equivalent_and_bounded(spark, state_dir):
 
 
 def test_maintenance_keeps_files_of_the_rounds_seen_read(spark, state_dir):
-    """On a maintenance round the engine compacts and expires url_seen in
-    the commit pool while the frontier dedup still scans the seen
-    snapshot the round started from: no file of that snapshot may go."""
+    """On a maintenance round the engine compacts and expires fetch_log in
+    the commit pool while the frontier dedup still scans the seen set —
+    a view of fetch_log — the round started from: no file of that
+    snapshot may go."""
     from webcrawler_go_spark.config import CrawlConfig
     from webcrawler_go_spark.plans.frontier_loop import CrawlEngine
-    from webcrawler_go_spark.schemas import URL_SEEN
+    from webcrawler_go_spark.schemas import FETCH_LOG_TABLE
 
     eng = CrawlEngine(spark, CrawlConfig(), state_dir)
-    t = eng.seen_t
+    t = eng.log_t
 
     def rows(i):
-        return spark.createDataFrame([(i, f"u{i}", i)], URL_SEEN)
+        return spark.createDataFrame(
+            [(f"u{i}", i, "h", i, i, 200, "text/html", 0, None, False, None, True)],
+            FETCH_LOG_TABLE,
+        )
 
     for i in range(5):
         t.commit(rows(i))
-    round_start = t.read()
+    round_start = eng.url_seen()
     eng._commit(t, rows(5), 5, True, lineage={"round": 5})
     assert t.current_snapshot()["lineage"]["op"] == "compact"
     assert sorted(r.url_hash for r in round_start.collect()) == list(range(5))
-    assert sorted(r.url_hash for r in t.read().collect()) == list(range(6))
+    assert sorted(r.url_hash for r in eng.url_seen().collect()) == list(range(6))

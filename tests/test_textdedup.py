@@ -68,9 +68,10 @@ def test_global_row_number_exact_and_distributed(spark):
     df = spark.range(0, 5000).select(
         F.concat(F.lit("tok-"), F.lpad((F.col("id") * 37 % 4001).cast("string"), 6, "0")).alias("token")
     ).distinct()
-    got = global_row_number(df, ["token"], out_col="rid", n_parts=8)
+    got, n_rows = global_row_number(df, ["token"], out_col="rid", n_parts=8)
     want = df.select("token", F.row_number().over(Window.orderBy("token")).cast("long").alias("rid"))
     assert got.exceptAll(want).count() == 0 and want.exceptAll(got).count() == 0
+    assert n_rows == want.count()
     # scale property: the ranked data never funnels through one task —
     # no single-partition exchange anywhere, and the one Window in the
     # plan is partitioned (by _pid). Output partition COUNT is left to

@@ -16,18 +16,26 @@ import zipfile
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
-def build() -> str:
-    dist = os.path.join(ROOT, "dist")
-    os.makedirs(dist, exist_ok=True)
-    out = os.path.join(dist, "webcrawler_go_spark.zip")
-    pkg = os.path.join(ROOT, "webcrawler_go_spark")
-    with zipfile.ZipFile(out, "w", zipfile.ZIP_DEFLATED) as z:
-        for dirpath, _dirs, files in os.walk(pkg):
-            for fn in files:
-                if fn.endswith(".py"):
-                    full = os.path.join(dirpath, fn)
-                    z.write(full, os.path.relpath(full, ROOT))
+OUT = os.path.join(ROOT, "dist", "webcrawler_go_spark.zip")
+
+
+def sources() -> dict[str, str]:
+    """{name in the zip: source path} of every .py file of the package."""
+    out = {}
+    for dirpath, _dirs, files in os.walk(os.path.join(ROOT, "webcrawler_go_spark")):
+        for fn in files:
+            if fn.endswith(".py"):
+                full = os.path.join(dirpath, fn)
+                out[os.path.relpath(full, ROOT)] = full
     return out
+
+
+def build() -> str:
+    os.makedirs(os.path.dirname(OUT), exist_ok=True)
+    with zipfile.ZipFile(OUT, "w", zipfile.ZIP_DEFLATED) as z:
+        for name, full in sources().items():
+            z.write(full, name)
+    return OUT
 
 
 if __name__ == "__main__":

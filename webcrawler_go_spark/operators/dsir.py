@@ -139,7 +139,7 @@ def dsir_importance(
         "_negw", -F.col("logweight_milli")
     )
     k_sel = int(math.floor(raw.count() * select_frac))  # scalar stat, one action
-    ranked = global_row_number(raw, ["_negw", id_col], out_col="_rn").select(
+    ranked = global_row_number(raw, ["_negw", id_col], out_col="_rn")[0].select(
         id_col, (F.col("_rn") <= k_sel).alias("selected")
     )
     return (

@@ -157,7 +157,7 @@ def fetch_frontier(
     """Fetch a scheduled frontier round.
 
     ``chunk`` overrides the hot-host rank-chunk salt size (None → the
-    env/default schedule below) — the engine passes a sketch-derived
+    default below; the http backend never salts) — the engine passes a sketch-derived
     value so the hottest host spreads over a bounded task count
     regardless of its actual depth.
 
@@ -171,7 +171,6 @@ def fetch_frontier(
     CPU) and most cores sit idle through the round's dominant stage.
     """
     world = world or World()
-    import os as _os
 
     # IPC surface discipline: only columns the kernel reads or carries
     # cross the Arrow boundary (and the host-hash repartition below).
@@ -186,64 +185,47 @@ def fetch_frontier(
     keep = [c for c in _KERNEL_COLS if c in scheduled.columns]
     scheduled = scheduled.select(*keep)
 
-    if _os.environ.get("SPARK_GRAFT_FETCH_WIDEN", "1") != "0":
-        sc = scheduled.sparkSession.sparkContext
-        par = sc.defaultParallelism or 1
-        if par > 1:
-            # 3× cores when the kernel has real per-URL CPU (http
-            # backend, calibrated parse cost): the kernel stage is the
-            # round's dominant CPU and at exactly 1 task/core any
-            # host-hash imbalance becomes a straggler tail with idle
-            # cores. For the ZERO-parse synthetic kernel the per-task
-            # fixed cost (Arrow IPC roundtrip, scheduling) dominates the
-            # work itself, so extra tasks are pure overhead — 1× there
-            # (measured ~2 s faster over a 6-round 153k-URL loop).
-            # ``size_hint`` (free, from the frontier manifest) caps the
-            # width for SMALL rounds: 96 near-empty tasks per stage —
-            # and per downstream job over the checkpoint — is pure
-            # scheduling overhead when the round has a few hundred URLs.
-            cpu_heavy = backend != "synthetic" or world.parse_cost > 0
-            default_mult = "3" if cpu_heavy else "1"
-            mult = int(
-                _os.environ.get("SPARK_GRAFT_FETCH_WIDTH_MULT", default_mult)
-            )
-            width = par * mult
-            if size_hint is not None:
-                width = max(1, min(width, size_hint // 500 + 1))
-            # hot-host spread (round-5 skew bench finding): hashing by
-            # host alone puts a mega-host's whole round in ONE task — at
-            # 50% frontier skew the fetch stage straggled 2.7× even with
-            # the salted RANK in place (the rank was fine; the kernel
-            # partitioning was the bottleneck). Salt the partition key
-            # with the host-rank chunk (seq's low half = host_rank, rank
-            # order preserved within each contiguous chunk) so a host
-            # spreads across ceil(n/chunk) tasks. HTTP backend keeps
-            # strict co-location: connection reuse + crawl-delay are
-            # per-task-local there, and a politely-crawled host never
-            # legitimately schedules >chunk URLs in one round anyway.
-            env_chunk = _os.environ.get("SPARK_GRAFT_FETCH_HOST_CHUNK")
-            if backend == "http":
-                # HTTP keeps strict host co-location (connection reuse,
-                # crawl-delay are per-task-local) — NEVER salt it, even
-                # when the env knob is set (ADVICE r7: an env var tuned
-                # for the synthetic backend must not silently break the
-                # per-task politeness co-location contract)
-                chunk = 0
-            elif env_chunk is not None:
-                # An EXPLICITLY-set env var beats the engine's sketch-
-                # derived chunk (ADVICE r6): the documented tuning knob —
-                # including '0' to disable hot-host salting — must keep
-                # working when adaptive width is on.
-                chunk = int(env_chunk)
-            elif chunk is None:
-                chunk = 25000
-            if chunk > 0 and "seq" in scheduled.columns:
-                salt = (
-                    F.col("seq").bitwiseAND(F.lit((1 << 32) - 1)) / F.lit(chunk)
-                ).cast("long")
-                scheduled = scheduled.repartition(width, F.col("host"), salt)
-            else:
-                scheduled = scheduled.repartition(width, F.col("host"))
+    sc = scheduled.sparkSession.sparkContext
+    par = sc.defaultParallelism or 1
+    if par > 1:
+        # 3× cores when the kernel has real per-URL CPU (http
+        # backend, calibrated parse cost): the kernel stage is the
+        # round's dominant CPU and at exactly 1 task/core any
+        # host-hash imbalance becomes a straggler tail with idle
+        # cores. For the ZERO-parse synthetic kernel the per-task
+        # fixed cost (Arrow IPC roundtrip, scheduling) dominates the
+        # work itself, so extra tasks are pure overhead — 1× there
+        # (measured ~2 s faster over a 6-round 153k-URL loop).
+        # ``size_hint`` (free, from the frontier manifest) caps the
+        # width for SMALL rounds: 96 near-empty tasks per stage —
+        # and per downstream job over the checkpoint — is pure
+        # scheduling overhead when the round has a few hundred URLs.
+        cpu_heavy = backend != "synthetic" or world.parse_cost > 0
+        width = par * (3 if cpu_heavy else 1)
+        if size_hint is not None:
+            width = max(1, min(width, size_hint // 500 + 1))
+        # hot-host spread (round-5 skew bench finding): hashing by
+        # host alone puts a mega-host's whole round in ONE task — at
+        # 50% frontier skew the fetch stage straggled 2.7× even with
+        # the salted RANK in place (the rank was fine; the kernel
+        # partitioning was the bottleneck). Salt the partition key
+        # with the host-rank chunk (seq's low half = host_rank, rank
+        # order preserved within each contiguous chunk) so a host
+        # spreads across ceil(n/chunk) tasks. HTTP backend keeps
+        # strict co-location: connection reuse + crawl-delay are
+        # per-task-local there, and a politely-crawled host never
+        # legitimately schedules >chunk URLs in one round anyway.
+        if backend == "http":
+            chunk = 0
+        elif chunk is None:
+            chunk = 25000
+        if chunk > 0 and "seq" in scheduled.columns:
+            salt = (
+                F.col("seq").bitwiseAND(F.lit((1 << 32) - 1)) / F.lit(chunk)
+            ).cast("long")
+            scheduled = scheduled.repartition(width, F.col("host"), salt)
+        else:
+            scheduled = scheduled.repartition(width, F.col("host"))
 
     if backend == "synthetic":
         # Arrow-native path (mapInArrow): flat-buffer span construction

@@ -29,8 +29,13 @@ def global_row_number(
     order_cols: list[str],
     out_col: str = "rn",
     n_parts: int = 32,
-) -> DataFrame:
+) -> tuple[DataFrame, int]:
     """Exact global 1-based row_number over ``order_cols``, distributed.
+
+    Returns ``(ranked, n_rows)``. The per-partition counts give the
+    exact row count for free, so callers can make size-aware physical
+    choices (e.g. broadcast a small ranked vocabulary instead of
+    shuffling the token stream against it) without a count job.
 
     Requires the order key to be a total order over ``df``'s rows (ties
     across partition boundaries would make the rank ambiguous — exactly
@@ -62,12 +67,7 @@ def global_row_number(
         .withColumn(out_col, (F.col("_off") + F.col("_lr")).cast("long"))
         .drop("_pid", "_lr", "_off")
     )
-    # the per-partition counts give the EXACT ranked row count for free;
-    # expose it so callers can make size-aware physical choices (e.g.
-    # broadcast a small ranked vocabulary instead of shuffling the
-    # token stream against it) without running a count job
-    out._graft_total_rows = running
-    return out
+    return out, running
 
 
 def global_cumsum(

@@ -611,9 +611,13 @@ def signature_rows_quantized(
     GEMM runs in float64 only when ``d·max|q| < 2^53`` bounds every
     partial sum below the exact-integer ceiling (signs are ±1, so
     partials never exceed d·max|q|), falling back to int64 matmul
-    otherwise. A vector that is NULL, empty, or contains a NULL element
-    lands in bucket 0 of every table, exactly like the NULL-sum
-    behavior of the aggregate form."""
+    otherwise. A vector that is NULL or empty lands in bucket 0 of every
+    table, as in the aggregate form. A vector with a NULL element also
+    lands in bucket 0 of every table here, but NOT in the aggregate
+    form: Spark ``SUM`` skips NULL inputs, so ``banded_signature_keys``
+    computes its signature from the non-NULL dims. The two forms agree
+    on every vector without NULL elements; candidate pairs still agree
+    because both paths filter such vectors out."""
     import pandas as pd
 
     from webcrawler_go_spark.operators.partitioning import spread_to_cluster

@@ -40,9 +40,8 @@ MINHASH_P = 1_000_000_007
 _VOCAB_BROADCAST_ROWS = 2_000_000
 
 
-def _maybe_broadcast(vocab: DataFrame) -> DataFrame:
-    n = getattr(vocab, "_graft_total_rows", None)
-    if n is not None and n <= _VOCAB_BROADCAST_ROWS:
+def _maybe_broadcast(vocab: DataFrame, n_rows: int) -> DataFrame:
+    if n_rows <= _VOCAB_BROADCAST_ROWS:
         return F.broadcast(vocab)
     return vocab
 MINHASH_COEFFS = [
@@ -93,7 +92,7 @@ def token_vocab(tokens: DataFrame) -> DataFrame:
 
     return global_row_number(
         tokens.select("token").distinct(), ["token"], out_col="token_id"
-    )
+    )[0]
 
 
 def doc_token_ids(docs: DataFrame, text_col: str = "text") -> DataFrame:
@@ -169,10 +168,10 @@ def minhash_signatures(
     from webcrawler_go_spark.operators.rank import global_row_number
 
     sh = shingles(docs, n, text_col)
-    vocab = global_row_number(
+    vocab, n_vocab = global_row_number(
         sh.select("shingle").distinct(), ["shingle"], out_col="sid"
     )
-    ids = sh.join(_maybe_broadcast(vocab), "shingle").select("doc_id", "sid")
+    ids = sh.join(_maybe_broadcast(vocab, n_vocab), "shingle").select("doc_id", "sid")
     aggs = [
         F.min((F.col("sid") * F.lit(a) + F.lit(b)) % F.lit(MINHASH_P)).alias(f"h{i}")
         for i, (a, b) in enumerate(MINHASH_COEFFS)
@@ -237,10 +236,12 @@ def simhash(
     from webcrawler_go_spark.operators.rank import global_row_number
 
     sh = shingles(docs, n=ngram, text_col=text_col)
-    vocab = global_row_number(
+    vocab, n_vocab = global_row_number(
         sh.select("shingle").distinct(), ["shingle"], out_col="token_id"
     )
-    ids = sh.join(_maybe_broadcast(vocab), "shingle").select("doc_id", "token_id")
+    ids = sh.join(_maybe_broadcast(vocab, n_vocab), "shingle").select(
+        "doc_id", "token_id"
+    )
     bit_exprs = []
     for k in range(bits):
         a = 2 * k + 3

@@ -11,15 +11,19 @@ Round r (all DataFrame ops; driver only sequences rounds):
     scheduled ──mapInPandas fetch──► fetch_log+spans+outlinks   (S3)
     fetch ──posexplode──► next candidates (round+1)       (X1, F1-F4)
     fetch ──retry/blocked rules──► requeued               (W3, J3)
-    url_seen += scheduled − requeued    (visited.Delete parity,
+    fetch_log += scheduled, final = not requeued
+    url_seen = fetch_log where final    (a view; visited.Delete parity,
                                          crawler.go:316)
     documents += ok pages; metrics += per-round aggregates (A1)
 
-State tables (frontier, url_seen, blocked→encoded in frontier rows,
-documents, fetch_log, metrics) live in SnapshotTable (Iceberg stand-in,
+State tables (frontier, with blocked pages encoded in its rows,
+documents and fetch_log) live in SnapshotTable (Iceberg stand-in,
 state.py) — every round is an atomic commit carrying lineage, so the
 crawl resumes from ANY snapshot (skip-if-exists parity,
-pdfcapture.go:199-223, but transactional).
+pdfcapture.go:199-223, but transactional). The seen set (the
+reference's visited map) and the AIMD ledger are derived from fetch_log,
+not stored: the seen set is its ``final`` rows, the ledger a per-(host,
+round) count of its rows.
 
 Scale notes: the write-then-read through the state layer each round also
 truncates lineage (SURVEY §4.3 — required in iterative Spark jobs); the
@@ -50,15 +54,41 @@ from webcrawler_go_spark.operators.politeness import apply_robots, schedule_roun
 from webcrawler_go_spark.schemas import (
     DOCUMENTS,
     FETCH_LOG,
+    FETCH_LOG_TABLE,
     FRONTIER,
-    HOST_HEALTH,
-    URL_SEEN,
 )
 from webcrawler_go_spark.state import SnapshotTable
 from webcrawler_go_spark.worldgen import World
 
 # DNS failures abort retries (crawler.go:606-609)
 _NO_RETRY_ERRORS = ("no such host",)
+
+
+def _seen_rows(log: DataFrame) -> DataFrame:
+    """The seen-set rows of fetch-log rows: the final ones."""
+    return log.filter(F.col("final")).select(
+        "url_hash",
+        F.col("url").alias("url_norm"),
+        F.col("round").alias("seen_round"),
+    )
+
+
+def _host_counters(log: DataFrame) -> DataFrame:
+    """(host, round, fetched, errors, blocked) of fetch-log rows: the
+    AIMD ledger's A1 counters. errors (error_class non-null) and blocked
+    are disjoint by the kernel contract (an errored fetch has no HTTP
+    status to be blocked on); the blocked count still requires a null
+    error_class, so a row with both counts once — err-ELIF-blocked, as
+    the oracle counts them (ADVICE r7)."""
+    return log.groupBy("host", "round").agg(
+        F.count("*").alias("fetched"),
+        F.sum(F.when(F.col("error_class").isNotNull(), 1).otherwise(0)).alias(
+            "errors"
+        ),
+        F.sum(
+            F.when(F.col("blocked") & F.col("error_class").isNull(), 1).otherwise(0)
+        ).alias("blocked"),
+    )
 
 
 @dataclass
@@ -87,7 +117,7 @@ class CrawlEngine:
         salt_threshold: int = 200_000,
         collect_stats: bool = True,
         maintenance_interval: int = 0,
-        adaptive_width: bool | str = "auto",
+        adaptive_width: bool = True,
         adaptive_budget: bool = False,
         aimd_max_budget: int = 100,
         aimd_hot_milli: int = 200,
@@ -100,9 +130,8 @@ class CrawlEngine:
         self.salted = salted
         os.makedirs(state_dir, exist_ok=True)
         self.frontier_t = SnapshotTable(state_dir, "frontier", FRONTIER).init(spark)
-        self.seen_t = SnapshotTable(state_dir, "url_seen", URL_SEEN).init(spark)
         self.docs_t = SnapshotTable(state_dir, "documents", DOCUMENTS).init(spark)
-        self.log_t = SnapshotTable(state_dir, "fetch_log", FETCH_LOG).init(spark)
+        self.log_t = SnapshotTable(state_dir, "fetch_log", FETCH_LOG_TABLE).init(spark)
         if budgets is None:
             budgets = spark.createDataFrame(
                 [], "host string, max_fetches_per_round int, crawl_delay_ms int"
@@ -112,8 +141,8 @@ class CrawlEngine:
         self.bloom_threshold = bloom_threshold
         self.salt_threshold = salt_threshold
         self.collect_stats = collect_stats
-        # every N rounds, compact the append-mode tables (url_seen /
-        # fetch_log / documents) back to ~core-count files and expire
+        # every N rounds, compact the append-mode tables (fetch_log /
+        # documents) back to ~core-count files and expire
         # superseded snapshots — the Iceberg rewrite_data_files +
         # expireSnapshots maintenance a 10^3-round crawl needs so reads
         # stay O(core-count) files instead of O(rounds). 0 = off.
@@ -127,11 +156,7 @@ class CrawlEngine:
         # whole-table manifest count (which includes deferred rows and
         # knows nothing about skew). Sketches ONLY influence widths —
         # membership (dedup, seen, budgets) never reads them.
-        if adaptive_width == "auto":
-            adaptive_width = (
-                os.environ.get("SPARK_GRAFT_ADAPTIVE_WIDTH", "1") != "0"
-            )
-        self.adaptive_width = bool(adaptive_width)
+        self.adaptive_width = adaptive_width
         self._width_knobs: dict | None = None
         # (round, exception text) of every sketch job that failed; the
         # round it sized fell back to manifest counts
@@ -154,20 +179,20 @@ class CrawlEngine:
         self.aimd_max_budget = aimd_max_budget
         self.aimd_hot_milli = aimd_hot_milli
         self.aimd_window = aimd_window
+        # the window of per-host counters, checkpointed in memory; a
+        # fresh engine resuming mid-crawl rebuilds it from fetch_log
+        # (_aimd_restore) and so holds the same budget dim an
+        # uninterrupted run would (parity-tested)
         self._host_health: DataFrame | None = None
-        # The health ledger is ALSO a snapshot table so S9 resumability
-        # covers AIMD: a fresh engine resuming mid-crawl restores the
-        # window of per-host counters and recomputes the same budget dim
-        # an uninterrupted run would hold (parity-tested). Only created
-        # for adaptive engines — the state dir of a plain crawl is
-        # byte-identical to previous rounds'.
-        self.health_t: SnapshotTable | None = None
-        if self.adaptive_budget:
-            self.health_t = SnapshotTable(
-                state_dir, "host_health", HOST_HEALTH
-            ).init(spark)
-        self.profile = False  # per-phase wall timing to stderr (debug)
         self.stats: list[RoundStats] = []
+
+    # read by perfbench/crawl.py only; goes when the benchmark stops reading it
+    @property
+    def seen_t(self) -> SnapshotTable:
+        return self.log_t
+
+    # read by perfbench/crawl.py only; goes when the benchmark stops reading it
+    health_t = None
 
     # -- seeding ---------------------------------------------------------
 
@@ -241,36 +266,24 @@ class CrawlEngine:
     # -- one round --------------------------------------------------------
 
     def run_round(self, r: int) -> RoundStats:
-        import sys as _sys
-        import time as _time
-
-        _t0 = _time.perf_counter()
-
-        def _mark(label):
-            if self.profile:
-                print(
-                    f"    [round {r}] {label}: "
-                    f"{_time.perf_counter() - _t0:.2f}s cumulative",
-                    file=_sys.stderr,
-                )
-
         cfg = self.config
         frontier = self.frontier_t.read()
-        seen = self.seen_t.read()
+        seen = self.url_seen()
 
         ready = frontier.filter(F.col("not_before_round") <= r)
         backoff = frontier.filter(F.col("not_before_round") > r)
 
         unique = first_discovery(ready)
-        # retried rows (attempts>0) were deliberately removed from seen —
+        # retried rows (attempts>0) were deliberately left out of seen —
         # the anti-join naturally lets them through. The Bloom pre-filter
         # pays off once the seen set dwarfs the per-round frontier; the
-        # committed snapshot's manifest row count estimates it for free
-        # AND survives resume() in a new process (in-memory self.stats is
-        # empty there, which used to disable/undersize the filter on
-        # exactly the large resumed crawls it targets).
-        seen_head = self.seen_t.current_snapshot()
-        seen_estimate = seen_head.get("total_rows", 0) if seen_head else 0
+        # fetch log's manifest row count estimates it for free AND
+        # survives resume() in a new process (in-memory self.stats is
+        # empty there). The count includes the requeued rows, so it
+        # overestimates the seen set: any error goes toward using the
+        # filter.
+        log_head = self.log_t.current_snapshot()
+        seen_estimate = log_head.get("total_rows", 0) if log_head else 0
         new = dedup_against_seen(
             unique,
             seen,
@@ -339,9 +352,7 @@ class CrawlEngine:
         )
         # one round = one materialization: cache the kernel output so the
         # documents/links/retries/metrics branches don't re-fetch
-        _mark("plan-built")
         fetched = fetched.localCheckpoint(eager=True)
-        _mark("fetch-checkpoint")
 
         # --- retry / blocked requeue (W3 + J3) ---------------------------
         retry_error = (
@@ -354,7 +365,12 @@ class CrawlEngine:
             & F.lit(cfg.retry_blocked_pages)
             & (F.col("attempts") + 1 <= F.lit(cfg.blocked_retry_passes))
         )
-        requeue = fetched.filter(retry_error | retry_blocked).select(
+        # ``final``: the fetch takes the URL out of the frontier for good
+        # (visited.Delete parity, crawler.go:316: a requeued URL leaves
+        # the seen set). The fetch log records it, and the seen set is
+        # the log's final rows.
+        logged = fetched.withColumn("final", ~(retry_error | retry_blocked))
+        requeue = logged.filter(~F.col("final")).select(
             F.col("url"),  # canonical (canonicalization is idempotent)
             F.col("url").alias("url_norm"),
             "url_hash",
@@ -368,13 +384,7 @@ class CrawlEngine:
             (F.lit(r) + F.col("attempts") + 1).alias("not_before_round"),
         )
 
-        # --- seen delta: scheduled minus requeued (visited.Delete parity,
-        # crawler.go:316) — pure column logic on the fetch output
-        seen_delta = fetched.filter(~(retry_error | retry_blocked)).select(
-            "url_hash",
-            F.col("url").alias("url_norm"),
-            F.lit(r).alias("seen_round"),
-        )
+        seen_delta = _seen_rows(logged)
 
         # --- payload + next frontier --------------------------------------
         docs = documents_from_fetch(fetched)
@@ -424,16 +434,16 @@ class CrawlEngine:
         # every commit reads only the checkpointed fetch output (plus
         # tiny carried frames) and the commits are mutually independent →
         # run them as concurrent Spark jobs from separate threads. The
-        # three CHEAP commits (seen/docs/log: column-sliced views of the
+        # two CHEAP commits (docs/log: column-sliced views of the
         # checkpoint) and the AIMD rebalance (a host aggregate of the
         # checkpoint) launch FIRST and overlap the frontier-dedup
         # materialization on the main thread — the dedup is the round's
         # second-biggest compute. The frontier commit waits for the
         # materialized dedup (committing the raw plan inside the pool
-        # measured 3× slower: it contends with three parquet writes for
+        # measured 3× slower: it contends with the parquet writes for
         # every core), and the sketch job reads the same checkpoint.
         # Outputs coalesce to ≤ the core count before writing: carrying
-        # the kernel stage's width into FOUR parquet writes per round
+        # the kernel stage's width into THREE parquet writes per round
         # would pile up 100s of small files per table — growing every
         # later read's file listing and the manifest — for zero write
         # parallelism gain (the upstream compute is already done at the
@@ -452,19 +462,15 @@ class CrawlEngine:
             self.maintenance_interval and (r + 1) % self.maintenance_interval == 0
         )
 
-        with ThreadPoolExecutor(max_workers=6) as pool:
+        with ThreadPoolExecutor(max_workers=5) as pool:
             futures = [
-                pool.submit(
-                    self._commit, self.seen_t, seen_delta.coalesce(n_out), r,
-                    maintain, lineage={"round": r, "op": "seen+="},
-                ),
                 pool.submit(
                     self._commit, self.docs_t, docs.coalesce(n_out), r, maintain,
                     lineage={"round": r},
                 ),
                 pool.submit(
                     self._commit, self.log_t,
-                    fetched.select(*[f.name for f in FETCH_LOG.fields]).coalesce(n_out),
+                    logged.select(*FETCH_LOG_TABLE.names).coalesce(n_out),
                     r, maintain, lineage={"round": r},
                 ),
             ]
@@ -479,7 +485,6 @@ class CrawlEngine:
             # with the writes; the frontier commit and the sketch job
             # both read this checkpoint
             next_frontier = next_frontier.localCheckpoint(eager=True)
-            _mark("frontier-dedup")
             futures.append(
                 pool.submit(
                     self.frontier_t.commit, next_frontier.coalesce(n_out),
@@ -501,8 +506,7 @@ class CrawlEngine:
         # the fetch-log commit's own manifest — NOT re-read from the head
         # later: maintenance may REPLACE the head with a compact snapshot
         # whose new_rows is the whole-table count, not this round's
-        log_manifest = commit_manifests[2]
-        _mark("commits")
+        log_manifest = commit_manifests[1]
         for df in held:
             df.unpersist()
         for df in (old_health, next_frontier):
@@ -560,9 +564,10 @@ class CrawlEngine:
         snapshots. Returns the commit's own manifest.
 
         ``keep_last=2`` keeps this round's append snapshot, whose file
-        list holds every file of the head the round started from — the
-        files the round's in-flight reads (the seen anti-join of the
-        frontier dedup) still scan while this runs in the commit pool."""
+        list holds every file of the head the round started from. For
+        fetch_log those are the files the round's in-flight seen read
+        (the anti-join of the frontier dedup) still scans while this runs
+        in the commit pool."""
         manifest = table.commit(df, **kw)
         if maintain:
             target = max(4, self.spark.sparkContext.defaultParallelism)
@@ -577,87 +582,40 @@ class CrawlEngine:
         scheduling). ``fetched`` is already localCheckpointed, so the
         host aggregate is one cheap host-keyed job; the ledger is
         (hosts × window) rows, checkpointed per round to truncate
-        lineage. errors (error_class non-null) and blocked are disjoint
-        by the kernel contract (an errored fetch has no HTTP status to
-        be blocked on) — the oracle counts them the same way.
+        lineage.
 
         Returns the previous ledger (None in round 0): the round's own
         plans still read it through the budget dim, so the caller frees
         it when the round ends."""
-        from webcrawler_go_spark.operators.scheduling import aimd_budgets
-
-        hc = fetched.groupBy("host").agg(
-            F.count("*").alias("fetched"),
-            F.sum(
-                F.when(F.col("error_class").isNotNull(), 1).otherwise(0)
-            ).alias("errors"),
-            # err-ELIF-blocked, structurally (ADVICE r7): a row with both
-            # error_class set AND blocked=true must not count twice —
-            # previously guaranteed only by the kernel's disjointness
-            # contract, now mirrored in the aggregate like the oracle
-            F.sum(
-                F.when(
-                    F.col("blocked") & F.col("error_class").isNull(), 1
-                ).otherwise(0)
-            ).alias("blocked"),
-        ).withColumn("round", F.lit(r))
-        hc = hc.select(*[f.name for f in HOST_HEALTH.fields])
         lo = max(0, r + 1 - self.aimd_window)
+        hc = _host_counters(fetched)
         health = hc if self._host_health is None else (
             self._host_health.unionByName(hc)
         )
-        # ONE aggregation run: the window ledger is checkpointed first
-        # and the persistence commit reads round r's rows back out of
-        # the checkpoint (committing hc directly would re-run the
-        # groupBy over fetched a second time), coalesced to one file —
-        # the table is (hosts × rounds) rows, metadata scale next to
-        # the fetch log. Persisting closes S9 × AIMD: a resumed engine
-        # restores the same budget recurrence.
         health = health.filter(F.col("round") >= lo).localCheckpoint(eager=True)
-        self.health_t.commit(
-            health.filter(F.col("round") == r).coalesce(1),
-            lineage={"round": r, "op": "health+="},
-        )
         old, self._host_health = self._host_health, health
-        bud = aimd_budgets(
-            health.withColumn("round", F.col("round") - lo),
-            n_rounds=r + 1 - lo,
-            base_budget=self.config.default_host_budget,
-            max_budget=self.aimd_max_budget,
-            hot_milli=self.aimd_hot_milli,
-        )
-        self.budgets = bud.select(
-            "host",
-            F.col("budget").cast("int").alias("max_fetches_per_round"),
-            F.lit(None).cast("int").alias("crawl_delay_ms"),
-        )
+        self._set_budgets(health, lo, r + 1)
         return old
 
     def _aimd_restore(self, next_round: int) -> None:
-        """Rebuild the AIMD ledger + budget dim from the persisted
-        health table before resuming at ``next_round`` — so an
-        interrupted adaptive crawl holds the SAME budgets an
-        uninterrupted one would (parity-tested). A crash between the
-        health commit and the frontier commit can leave a duplicate
-        (host, round) row; dedupe EXPLICITLY BY KEY (max of each
-        counter) rather than `.distinct()` — with a nondeterministic
-        backend the re-run counters need not be byte-identical, and a
-        leftover duplicate key would make aimd_budgets'
-        map_from_entries raise at resume (ADVICE r7)."""
-        from webcrawler_go_spark.operators.scheduling import aimd_budgets
+        """Rebuild the AIMD ledger + budget dim from the fetch log's rows
+        of rounds ``[lo, next_round)`` before resuming at ``next_round``
+        — so an interrupted adaptive crawl holds the SAME budgets an
+        uninterrupted one would (parity-tested).
 
+        A round that re-ran after a crash may have committed its fetch
+        log twice. Each ``(url_hash, round)`` therefore counts once, from
+        one whole row (the least of the two runs' rows), so a URL whose
+        re-run outcome differed counts one run's outcome, never a mix."""
         lo = max(0, next_round - self.aimd_window)
-        health = (
-            self.health_t.read()
+        rows = (
+            self.log_t.read()
             .filter((F.col("round") >= lo) & (F.col("round") < next_round))
-            .groupBy("host", "round")
-            .agg(
-                F.max("fetched").alias("fetched"),
-                F.max("errors").alias("errors"),
-                F.max("blocked").alias("blocked"),
-            )
-            .select(*[f.name for f in HOST_HEALTH.fields])
+            .groupBy("url_hash", "round")
+            .agg(F.min(F.struct("host", "error_class", "blocked")).alias("row"))
+            .select("round", "row.*")
         )
+        health = _host_counters(rows)
         if not health.limit(1).count():
             return
         health = health.localCheckpoint(eager=True)
@@ -666,6 +624,13 @@ class CrawlEngine:
             # to resume again: free the prior ledger's cached blocks
             _unpersist_local_checkpoint(self._host_health)
         self._host_health = health
+        self._set_budgets(health, lo, next_round)
+
+    def _set_budgets(self, health: DataFrame, lo: int, next_round: int) -> None:
+        """The budget dim for ``next_round`` from the ledger's rounds
+        ``[lo, next_round)``."""
+        from webcrawler_go_spark.operators.scheduling import aimd_budgets
+
         bud = aimd_budgets(
             health.withColumn("round", F.col("round") - lo),
             n_rounds=next_round - lo,
@@ -790,13 +755,15 @@ class CrawlEngine:
     # -- results ------------------------------------------------------------
 
     def fetch_log(self) -> DataFrame:
-        return self.log_t.read()
+        return self.log_t.read().select(*FETCH_LOG.names)
 
     def documents(self) -> DataFrame:
         return self.docs_t.read()
 
     def url_seen(self) -> DataFrame:
-        return self.seen_t.read()
+        """(url_hash, url_norm, seen_round): the URLs the crawl has taken
+        out of the frontier for good — the reference's visited map."""
+        return _seen_rows(self.log_t.read())
 
     def per_host_sequences(self) -> DataFrame:
         """Per-host ordered fetch sequences — the crawl-order parity

@@ -60,24 +60,6 @@ FRONTIER = StructType(
     ]
 )
 
-URL_SEEN = StructType(
-    [
-        StructField("url_hash", LongType(), False),
-        StructField("url_norm", StringType(), False),
-        StructField("seen_round", IntegerType(), False),
-    ]
-)
-
-HOST_HEALTH = StructType(
-    [
-        StructField("host", StringType(), False),
-        StructField("round", IntegerType(), False),
-        StructField("fetched", LongType(), False),
-        StructField("errors", LongType(), False),
-        StructField("blocked", LongType(), False),
-    ]
-)
-
 SEEDS = StructType(
     [
         StructField("url", StringType(), False),
@@ -118,6 +100,14 @@ FETCH_LOG = StructType(
         StructField("blocked", BooleanType(), False),
         StructField("lastmod", DateType(), True),
     ]
+)
+
+# the engine's fetch-log table: FETCH_LOG plus ``final``, true when the
+# fetch took the URL out of the frontier for good (it was not requeued).
+# The seen set is the ``final`` rows and the AIMD ledger a per-(host,
+# round) count of the rows, so neither is stored apart from this table.
+FETCH_LOG_TABLE = StructType(
+    list(FETCH_LOG.fields) + [StructField("final", BooleanType(), False)]
 )
 
 # result of the fetch+extract kernel, before documents/links split.

@@ -1,9 +1,11 @@
 """Snapshot-table state layer — the sandbox stand-in for Iceberg.
 
-The north rule targets Iceberg tables (frontier / url_seen / blocked /
-documents / metrics) with atomic commits, snapshot history and
-resume-from-snapshot. This container has no Iceberg runtime jar, so the
-same contract is provided over parquet + a JSON manifest:
+The north rule targets Iceberg tables with atomic commits, snapshot
+history and resume-from-snapshot. The crawl keeps three: frontier
+(blocked pages ride in its rows), documents and fetch_log; the seen set
+and the AIMD ledger are derived from fetch_log. This container has no
+Iceberg runtime jar, so the same contract is provided over parquet + a
+JSON manifest:
 
 * a table is a directory of immutable parquet data files;
 * a **snapshot** is a manifest listing the data files visible at commit
@@ -150,8 +152,8 @@ class SnapshotTable:
         partial state; old snapshots stay resumable until
         ``expire_snapshots`` reclaims them).
 
-        Why it matters at 10^10: append-mode tables (url_seen, fetch_log,
-        documents) gain files every round; after 10^3 rounds every read
+        Why it matters at 10^10: append-mode tables (fetch_log, documents)
+        gain files every round; after 10^3 rounds every read
         pays a 10^3-file listing and the manifest grows without bound.
         Periodic compaction keeps reads O(target_files)."""
         head = self._read_head()
