@@ -4483,16 +4483,17 @@ FROM hll h, exact e
 def q_adaptive_fetch_width(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The sketch-driven width-knob derivation the crawl engine runs
     per round (VERDICT r5 directive #7; `frontier_loop.py:
-    _sketch_width_knobs`): HLL distinct-URL estimate (p=10, raw-
+    _read_width_knobs`): HLL distinct-URL estimate (p=10, raw-
     estimator regime on this corpus, the urlseen_hll contract) + the
     count-min max-bucket bound on the hottest host's depth, then the
     derived knobs — hot-host chunk = clamp(depth÷8+1, 2048, 25000),
     fetch width cap = est÷500+1, salt engagement = est > 200k (the
     engine's salt_threshold). All BIGINT floor math, bit-portable to
-    the DuckDB oracle. Inside the engine this runs overlapped with the
-    commit pool and only ever steers physical widths — never
-    membership (crawl parity suites pin that). The 1×1 est×hot combine
-    is a sanctioned BNLJ (BNLJ_OK)."""
+    the DuckDB oracle. Inside the engine Spark's own HLL++ and
+    count-min aggregates ride the next-frontier checkpoint as observed
+    metrics (no job of their own) and only ever steer physical widths —
+    never membership (crawl parity suites pin that). The 1×1 est×hot
+    combine is a sanctioned BNLJ (BNLJ_OK)."""
     from webcrawler_go_spark.operators.sketches import cms_build, hll_distinct
 
     # HLL and CMS branches share the canon pass — materialize it once

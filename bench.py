@@ -57,7 +57,7 @@ HEADLINE = [
     # the index; see BENCH.md). The correctness row still records it.
     "webdata_pipeline",         # WARC → lang/quality/dedup end-to-end
     "html_text_extract",        # WET strip, pure codegen regexp chain
-    "adaptive_fetch_width",     # HLL+CMS width knobs (the engine's sketch job)
+    "adaptive_fetch_width",     # HLL+CMS width knobs (the engine's round sketches)
     # round-7 additions
     "embedding_ivfpq_query_only",  # IVFADC amortized half: the warm pass
                                    # pays ivfpq_build(materialize=True)
@@ -129,7 +129,6 @@ def crawl_throughput(spark, cpus: int) -> tuple[float, int, float]:
             warm_state,
             world=warm_world,
             salted="auto",
-            collect_stats=False,
         )
         weng.seed(
             spark.createDataFrame(
@@ -159,7 +158,6 @@ def crawl_throughput(spark, cpus: int) -> tuple[float, int, float]:
             state,
             world=world,
             salted="auto",
-            collect_stats=False,
         )
         t0 = time.perf_counter()
         round_times = []

@@ -27,13 +27,10 @@ def main() -> None:
     p.add_argument("--state", required=True)
     p.add_argument("--rounds", type=int, default=10)
     p.add_argument("--budget", type=int, default=20)
-    p.add_argument("--salted", action="store_true")
+    p.add_argument("--salted", action="store_true",
+                   help="always salt the politeness rank (default: salt only "
+                        "rounds above the engine's salt_threshold)")
     p.add_argument("--backend", default="synthetic")
-    p.add_argument(
-        "--no-adaptive-width", action="store_true",
-        help="disable the sketch-driven width knobs (round 6; widths "
-             "only — crawl results are identical either way)",
-    )
     p.add_argument("--mode", default="",
                    help="optional result mode after the crawl: search | "
                         "broken-links | oversized-images (crawler.Start modes 1-4)")
@@ -45,8 +42,8 @@ def main() -> None:
     spark = SparkSession.builder.appName("webcrawler-go-spark").getOrCreate()
     cfg = CrawlConfig(max_rounds=args.rounds, default_host_budget=args.budget)
     eng = CrawlEngine(
-        spark, cfg, args.state, fetch_backend=args.backend, salted=args.salted,
-        adaptive_width=not args.no_adaptive_width,
+        spark, cfg, args.state, fetch_backend=args.backend,
+        salted=True if args.salted else "auto",
     )
     head = eng.frontier_t.current_snapshot()
     if head is None:

@@ -11,6 +11,7 @@ reproduce the sequential reference semantics exactly —
 
 from __future__ import annotations
 
+import json
 import os
 import shutil
 
@@ -81,7 +82,9 @@ def test_politeness_budget_never_exceeded(crawl):
 
 def test_resumability(spark, state_dir):
     """Run rounds 0-1, abandon the engine, resume with a NEW engine from
-    the snapshots, finish, and compare with the uninterrupted crawl."""
+    the snapshots, finish, and compare with the uninterrupted crawl. The
+    metrics journal then holds one line per round, each equal to an
+    aggregate of that round's fetch-log rows."""
     eng1 = CrawlEngine(spark, CFG, state_dir, world=WORLD)
     eng1.seed(_seeds_df(spark))
     eng1.resume(start_round=0, max_rounds=2)
@@ -94,6 +97,26 @@ def test_resumability(spark, state_dir):
     assert seen == oracle.seen
     seqs = {r["host"]: r["fetch_sequence"] for r in eng2.per_host_sequences().collect()}
     assert seqs == oracle.sequences
+
+    with open(os.path.join(state_dir, "metrics.jsonl")) as f:
+        journal = [json.loads(line) for line in f]
+    ok = (F.col("status") == 200) & ~F.col("blocked") & F.col("error_class").isNull()
+    from_log = {
+        r["round"]: r.asDict()
+        for r in eng2.fetch_log()
+        .groupBy("round")
+        .agg(
+            F.count("*").alias("scheduled"),
+            F.count(F.when(ok, 1)).alias("fetched_ok"),
+            F.count(F.when(F.col("blocked"), 1)).alias("blocked"),
+            F.count("error_class").alias("errors"),
+            F.count(F.when(ok, 1)).alias("new_documents"),
+            F.sum("bytes").alias("bytes"),
+        )
+        .collect()
+    }
+    assert [st["round"] for st in journal] == list(range(ROUNDS))
+    assert journal == [from_log[st["round"]] for st in journal]
 
 
 def test_salted_engine_full_parity(spark, state_dir):
@@ -192,17 +215,18 @@ def test_capture_mode_rendered_links_parity(spark, state_dir):
 
 
 def test_sketch_width_knobs_populated_and_sound(spark, state_dir):
-    """Round 6's sketch-driven width knobs: after a round, the
-    overlapped sketch job leaves (est_urls, est_hot_depth) for the next
-    round; the HLL estimate lands within its ±~4% p=12 band of the true
-    ready-row distinct count, and the CMS max-bucket depth bound NEVER
-    underestimates the hottest host (underestimating would shrink the
-    spread and re-create the straggler the chunk exists to kill).
+    """Round 6's sketch-driven width knobs: after a round, the sketches
+    its next-frontier checkpoint observed leave (est_urls,
+    est_hot_depth) for the next round; the HLL estimate lands within its
+    ±~4% p=12 band of the true ready-row distinct count, and the CMS
+    max-bucket depth bound NEVER underestimates the hottest host
+    (underestimating would shrink the spread and re-create the
+    straggler the chunk exists to kill).
     Widths only: parity suites above run the same engine and stay
     green whether or not the knobs fire."""
     world = World(n_hosts=8, pages_per_host=40)
     cfg = CrawlConfig(max_rounds=3, default_host_budget=10)
-    eng = CrawlEngine(spark, cfg, state_dir, world=world, adaptive_width=True)
+    eng = CrawlEngine(spark, cfg, state_dir, world=world)
     eng.seed(_seeds_df(spark))
     eng.run_round(0)
     knobs = eng._width_knobs
@@ -328,13 +352,13 @@ def test_sketch_failure_is_recorded_and_rounds_fall_back(spark, state_dir, monke
     """A failing width sketch must not fail the round or vanish: the
     engine records the error, warns, and the next round sizes itself
     from manifest counts and still schedules."""
-    from webcrawler_go_spark.operators import sketches
+    from webcrawler_go_spark.plans import frontier_loop
 
     def boom(*a, **k):
         raise RuntimeError("sketch boom")
 
-    monkeypatch.setattr(sketches, "hll_distinct", boom)
-    eng = CrawlEngine(spark, CFG, state_dir, world=WORLD, adaptive_width=True)
+    monkeypatch.setattr(frontier_loop, "cms_max_bucket", boom)
+    eng = CrawlEngine(spark, CFG, state_dir, world=WORLD)
     eng.seed(_seeds_df(spark))
     with pytest.warns(RuntimeWarning, match="sketch boom"):
         assert eng.run_round(0).scheduled > 0
@@ -433,10 +457,11 @@ def test_aimd_restore_counts_a_rerun_round_once(spark, deep_crawl, tmp_path):
 
 
 # Spark jobs per round of ``deep_crawl`` (round 5 compacts). The
-# ready-frontier subtree runs once per round, the sketch is one action,
-# and the AIMD rebalance and compaction share the commit pool; a change
-# that adds jobs to the round's path fails here.
-JOBS_PER_ROUND_CEILING = [26, 26, 26, 26, 26, 28]
+# ready-frontier subtree runs once per round, the stats and width
+# sketches ride the fetch and next-frontier checkpoints, and the AIMD
+# rebalance and compaction share the commit pool; a change that adds
+# jobs to the round's path fails here.
+JOBS_PER_ROUND_CEILING = [17, 17, 17, 17, 17, 19]
 
 
 def test_jobs_per_round_ceiling(deep_crawl):

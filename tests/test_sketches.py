@@ -16,6 +16,7 @@ from webcrawler_go_spark.operators.sketches import (
     hll_merge,
     hll_registers,
 )
+from webcrawler_go_spark.plans.frontier_loop import cms_max_bucket
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -210,3 +211,43 @@ def test_cms_identifies_heavy_hitters(spark):
     n_total = df.count()
     heavy = {r["u"] for r in est if r["est_count"] * 60 >= n_total}
     assert heavy == {"k0", "k1", "k2", "k3", "k4"}
+
+
+# ---------------------------------------------------------------------------
+# cms_max_bucket: the crawl engine's hot-host depth bound
+# ---------------------------------------------------------------------------
+
+
+def _engine_cms(df, col: str) -> bytes:
+    """Spark's serialized count-min sketch of ``col`` in the shape the
+    crawl engine observes: width 4096, depth 4, seed 0."""
+    return df.agg(
+        F.count_min_sketch(col, F.lit(2 / 4096), F.lit(1 - 2**-4), F.lit(0))
+    ).first()[0]
+
+
+def test_cms_max_bucket_decodes_min_of_row_maxima():
+    """Header (version, total, depth, width), depth seeds, then the
+    table row by row: the bound is the least row maximum."""
+    import struct
+
+    table = [[1, 9, 2], [5, 4, 3]]
+    blob = struct.pack(">iqii", 1, 15, 2, 3) + struct.pack(">2q", 11, 22)
+    blob += struct.pack(">6q", *(c for row in table for c in row))
+    assert cms_max_bucket(blob) == 5
+
+
+def test_cms_max_bucket_exact_for_a_few_keys(spark):
+    """A few keys spread over 4096 buckets do not all collide in every
+    row, so the bound is the hottest key's exact count."""
+    counts = {"h0.test": 7, "h1.test": 3, "h2.test": 2, "h3.test": 1}
+    df = spark.createDataFrame(
+        [(k,) for k, n in counts.items() for _ in range(n)], "host string"
+    )
+    assert cms_max_bucket(_engine_cms(df, "host")) == 7
+
+
+def test_cms_max_bucket_never_under_hottest_key(spark):
+    df = _skewed(spark)
+    hottest = df.groupBy("u").count().agg(F.max("count")).first()[0]
+    assert cms_max_bucket(_engine_cms(df, "u")) >= hottest

@@ -84,8 +84,7 @@ def test_engine_maintenance_equivalent_and_bounded(spark, state_dir):
     for interval in (0, 2):
         sd = tempfile.mkdtemp(prefix=f"maint{interval}-")
         eng = CrawlEngine(
-            spark, cfg, sd, world=world, collect_stats=False,
-            maintenance_interval=interval,
+            spark, cfg, sd, world=world, maintenance_interval=interval
         )
         eng.seed(spark.createDataFrame(
             gen_seeds(world, 4), "url string, priority double, seq int"

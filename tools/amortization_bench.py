@@ -47,9 +47,7 @@ def crawl(spark, label, n_hosts, pages, n_seeds, budget, max_rounds):
     state = tempfile.mkdtemp(prefix=f"amort-{label}-")
     rounds = []
     try:
-        eng = CrawlEngine(
-            spark, cfg, state, world=world, salted="auto", collect_stats=False
-        )
+        eng = CrawlEngine(spark, cfg, state, world=world, salted="auto")
         eng.seed(
             spark.createDataFrame(
                 gen_seeds(world, n_seeds), "url string, priority double, seq int"
@@ -86,9 +84,7 @@ def measure_fixed_overhead(spark) -> float:
     cfg = CrawlConfig(max_rounds=8, default_host_budget=100)
     state = tempfile.mkdtemp(prefix="amort-empty-")
     try:
-        eng = CrawlEngine(
-            spark, cfg, state, world=world, salted="auto", collect_stats=False
-        )
+        eng = CrawlEngine(spark, cfg, state, world=world, salted="auto")
         eng.seed(
             spark.createDataFrame(
                 gen_seeds(world, 2), "url string, priority double, seq int"

@@ -209,8 +209,8 @@ def aimd_budgets(
     hot_milli: int = 200,
 ) -> DataFrame:
     """AIMD per-host politeness-budget adaptation — the budget-rebalance
-    half of the adaptive-crawl story (the width half is
-    `frontier_loop._sketch_width_knobs`). The reference holds every
+    half of the adaptive-crawl story (the width half is the sketches
+    `frontier_loop` observes on each round's next-frontier checkpoint). The reference holds every
     host to one fixed semaphore width (crawler.go's 20-way cap); at
     10^10-URL scale budgets must react to per-host health:
 

@@ -14,7 +14,8 @@ Round r (all DataFrame ops; driver only sequences rounds):
     fetch_log += scheduled, final = not requeued
     url_seen = fetch_log where final    (a view; visited.Delete parity,
                                          crawler.go:316)
-    documents += ok pages; metrics += per-round aggregates (A1)
+    documents += ok pages; metrics += per-round aggregates (A1),
+                 observed on the fetch checkpoint (no job of their own)
 
 State tables (frontier, with blocked pages encoded in its rows,
 documents and fetch_log) live in SnapshotTable (Iceberg stand-in,
@@ -34,10 +35,12 @@ Window is salted when a host exceeds ``salt_threshold`` rows.
 from __future__ import annotations
 
 import os
+import struct
 import warnings
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession
+import numpy as np
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from webcrawler_go_spark.config import CrawlConfig
@@ -91,6 +94,20 @@ def _host_counters(log: DataFrame) -> DataFrame:
     )
 
 
+def cms_max_bucket(blob: bytes) -> int:
+    """The hottest-key depth bound of a count-min sketch that Spark's
+    ``count_min_sketch`` aggregate serialized: a big-endian header
+    (version, total count, depth, width), ``depth`` hash seeds, then the
+    depth × width table of longs. Every key lands in one bucket per row,
+    so each row's max bucket is ≥ the hottest key's count, and the min
+    over rows is the tightest such OVERestimate — collisions only add."""
+    version, _, depth, width = struct.unpack_from(">iqii", blob)
+    if version != 1:
+        raise ValueError(f"count-min sketch version {version}")
+    table = np.frombuffer(blob, ">i8", depth * width, 20 + 8 * depth)
+    return int(table.reshape(depth, width).max(axis=1).min())
+
+
 @dataclass
 class RoundStats:
     round: int
@@ -115,9 +132,9 @@ class CrawlEngine:
         salted: bool | str = "auto",
         bloom_threshold: int = 1_000_000,
         salt_threshold: int = 200_000,
+        # ignored: passed by perfbench/crawl.py; goes when the benchmark stops passing it
         collect_stats: bool = True,
         maintenance_interval: int = 0,
-        adaptive_width: bool = True,
         adaptive_budget: bool = False,
         aimd_max_budget: int = 100,
         aimd_hot_milli: int = 200,
@@ -140,25 +157,23 @@ class CrawlEngine:
         self.robots = robots
         self.bloom_threshold = bloom_threshold
         self.salt_threshold = salt_threshold
-        self.collect_stats = collect_stats
         # every N rounds, compact the append-mode tables (fetch_log /
         # documents) back to ~core-count files and expire
         # superseded snapshots — the Iceberg rewrite_data_files +
         # expireSnapshots maintenance a 10^3-round crawl needs so reads
         # stay O(core-count) files instead of O(rounds). 0 = off.
         self.maintenance_interval = maintenance_interval
-        # sketch-driven width knobs (VERDICT r5 directive #7): while the
-        # commit pool writes round r's outputs, an overlapped job
-        # sketches the NEXT frontier (HLL distinct-URL estimate + the
-        # count-min max-bucket bound on the hottest host's depth) and
-        # round r+1 sizes its fetch width / hot-host chunk / output file
-        # count / salt engagement from those estimates instead of the
-        # whole-table manifest count (which includes deferred rows and
-        # knows nothing about skew). Sketches ONLY influence widths —
+        # sketch-driven width knobs (VERDICT r5 directive #7): the
+        # checkpoint of round r's NEXT frontier observes two sketches of
+        # its ready slice (HLL distinct-URL estimate + the count-min
+        # max-bucket bound on the hottest host's depth) in the same job,
+        # and round r+1 sizes its fetch width / hot-host chunk / output
+        # file count / salt engagement from those estimates instead of
+        # the whole-table manifest count (which includes deferred rows
+        # and knows nothing about skew). Sketches ONLY influence widths —
         # membership (dedup, seen, budgets) never reads them.
-        self.adaptive_width = adaptive_width
         self._width_knobs: dict | None = None
-        # (round, exception text) of every sketch job that failed; the
+        # (round, exception text) of every sketch read that failed; the
         # round it sized fell back to manifest counts
         self.sketch_errors: list[tuple[int, str]] = []
         # AIMD politeness-budget adaptation (VERDICT r6 directive #3,
@@ -297,7 +312,7 @@ class CrawlEngine:
         # skew salting engages only when the round is big enough to need
         # it (manifest row counts make the size check free); below the
         # threshold the single-phase Window is strictly cheaper. When
-        # last round's overlapped sketch job left knobs for THIS round,
+        # last round's next-frontier sketches left knobs for THIS round,
         # its HLL estimate replaces the manifest count (the manifest is
         # the whole table — deferred rows included — and a round-r
         # estimate at ±2% beats a table count that can be off by the
@@ -306,7 +321,7 @@ class CrawlEngine:
         fr_head = self.frontier_t.current_snapshot()
         frontier_rows = fr_head.get("total_rows", 0) if fr_head else 0
         knobs = self._width_knobs
-        if not (self.adaptive_width and knobs and knobs.get("at_round") == r):
+        if not (knobs and knobs.get("at_round") == r):
             knobs = None
         est_rows = knobs["est_urls"] if knobs else frontier_rows
         fetch_chunk = None
@@ -351,8 +366,24 @@ class CrawlEngine:
             chunk=fetch_chunk,
         )
         # one round = one materialization: cache the kernel output so the
-        # documents/links/retries/metrics branches don't re-fetch
-        fetched = fetched.localCheckpoint(eager=True)
+        # documents/links/retries branches don't re-fetch; the same job
+        # counts the round's stats (A1/A2/A3)
+        stats_obs = Observation()
+        fetched = fetched.observe(
+            stats_obs,
+            F.count("*").alias("scheduled"),
+            F.count(
+                F.when(
+                    (F.col("status") == 200)
+                    & ~F.col("blocked")
+                    & F.col("error_class").isNull(),
+                    1,
+                )
+            ).alias("ok"),
+            F.count(F.when(F.col("blocked"), 1)).alias("blocked"),
+            F.count("error_class").alias("errors"),
+            F.coalesce(F.sum("bytes"), F.lit(0)).alias("bytes"),
+        ).localCheckpoint(eager=True)
 
         # --- retry / blocked requeue (W3 + J3) ---------------------------
         retry_error = (
@@ -441,7 +472,7 @@ class CrawlEngine:
         # second-biggest compute. The frontier commit waits for the
         # materialized dedup (committing the raw plan inside the pool
         # measured 3× slower: it contends with the parquet writes for
-        # every core), and the sketch job reads the same checkpoint.
+        # every core).
         # Outputs coalesce to ≤ the core count before writing: carrying
         # the kernel stage's width into THREE parquet writes per round
         # would pile up 100s of small files per table — growing every
@@ -462,7 +493,7 @@ class CrawlEngine:
             self.maintenance_interval and (r + 1) % self.maintenance_interval == 0
         )
 
-        with ThreadPoolExecutor(max_workers=5) as pool:
+        with ThreadPoolExecutor(max_workers=4) as pool:
             futures = [
                 pool.submit(
                     self._commit, self.docs_t, docs.coalesce(n_out), r, maintain,
@@ -482,74 +513,49 @@ class CrawlEngine:
                 # freeing it here
                 rebalance = pool.submit(self._aimd_rebalance, fetched, r)
             # main thread: materialize the frontier dedup concurrently
-            # with the writes; the frontier commit and the sketch job
-            # both read this checkpoint
-            next_frontier = next_frontier.localCheckpoint(eager=True)
+            # with the writes. The same job sketches round r+1's READY
+            # slice for its width knobs: an HLL++ distinct-URL estimate
+            # (rsd 0.02 → p=12) and a 4096 × 4 count-min sketch of its
+            # hosts — the cms_build shape — per-task partial aggregates
+            # merged on the driver, so no exchange and no extra job.
+            ready_next = F.col("not_before_round") <= r + 1
+            width_obs = Observation()
+            next_frontier = next_frontier.observe(
+                width_obs,
+                F.approx_count_distinct(
+                    F.when(ready_next, F.col("url_hash")), 0.02
+                ).alias("est_urls"),
+                F.count_min_sketch(
+                    F.when(ready_next, F.col("host")),
+                    F.lit(2 / 4096), F.lit(1 - 2**-4), F.lit(0),
+                ).alias("cms"),
+            ).localCheckpoint(eager=True)
+            self._width_knobs = self._read_width_knobs(width_obs, r + 1)
             futures.append(
                 pool.submit(
                     self.frontier_t.commit, next_frontier.coalesce(n_out),
                     mode="replace", lineage={"round": r + 1},
                 )
             )
-            if self.adaptive_width:
-                # overlapped sketch job over the checkpointed next
-                # frontier: HLL distinct-URL estimate of round r+1's
-                # READY slice + CMS max-bucket depth bound for its
-                # hottest host. Both are map-side-combining aggregations
-                # whose exchanges are sketch-sized (≤2^p registers /
-                # d·w counters) — the 10^10-frontier replacement for an
-                # exact count job. Results drive NEXT round's widths
-                # only; failures degrade to manifest counts.
-                pool.submit(self._sketch_width_knobs, next_frontier, r + 1)
-            commit_manifests = [f_.result() for f_ in futures]
+            for f_ in futures:
+                f_.result()
             old_health = rebalance.result() if self.adaptive_budget else None
-        # the fetch-log commit's own manifest — NOT re-read from the head
-        # later: maintenance may REPLACE the head with a compact snapshot
-        # whose new_rows is the whole-table count, not this round's
-        log_manifest = commit_manifests[1]
         for df in held:
             df.unpersist()
         for df in (old_health, next_frontier):
             if df is not None:
                 _unpersist_local_checkpoint(df)
 
-        # --- per-round metrics (A1/A2/A3 in one aggregate) -----------------
-        if not self.collect_stats:
-            # cheap path: scheduled count comes free from the fetch-log
-            # commit manifest (parquet footers); full stats remain
-            # derivable later from the fetch_log table
-            st = RoundStats(
-                round=r,
-                scheduled=log_manifest["new_rows"],
-                fetched_ok=0, blocked=0, errors=0, new_documents=0, bytes=0,
-            )
-            self.stats.append(st)
-            _unpersist_local_checkpoint(fetched)
-            return st
-        agg = fetched.agg(
-            F.count("*").alias("scheduled"),
-            F.sum(
-                F.when(
-                    (F.col("status") == 200)
-                    & ~F.col("blocked")
-                    & F.col("error_class").isNull(),
-                    1,
-                ).otherwise(0)
-            ).alias("ok"),
-            F.sum(F.when(F.col("blocked"), 1).otherwise(0)).alias("blocked"),
-            F.sum(F.when(F.col("error_class").isNotNull(), 1).otherwise(0)).alias(
-                "errors"
-            ),
-            F.sum("bytes").alias("bytes"),
-        ).collect()[0]
+        # --- per-round metrics, observed by the fetch checkpoint ----------
+        agg = stats_obs.get
         st = RoundStats(
             round=r,
             scheduled=agg["scheduled"],
-            fetched_ok=agg["ok"] or 0,
-            blocked=agg["blocked"] or 0,
-            errors=agg["errors"] or 0,
-            new_documents=agg["ok"] or 0,
-            bytes=agg["bytes"] or 0,
+            fetched_ok=agg["ok"],
+            blocked=agg["blocked"],
+            errors=agg["errors"],
+            new_documents=agg["ok"],
+            bytes=agg["bytes"],
         )
         self.stats.append(st)
         self._journal_metrics(st)
@@ -558,22 +564,21 @@ class CrawlEngine:
 
     def _commit(
         self, table: SnapshotTable, df: DataFrame, r: int, maintain: bool, **kw
-    ) -> dict:
+    ) -> None:
         """Commit ``df`` to ``table``; on a maintenance round, then compact
         the table back to ~core-count files and expire superseded
-        snapshots. Returns the commit's own manifest.
+        snapshots.
 
         ``keep_last=2`` keeps this round's append snapshot, whose file
         list holds every file of the head the round started from. For
         fetch_log those are the files the round's in-flight seen read
         (the anti-join of the frontier dedup) still scans while this runs
         in the commit pool."""
-        manifest = table.commit(df, **kw)
+        table.commit(df, **kw)
         if maintain:
             target = max(4, self.spark.sparkContext.defaultParallelism)
             if table.compact(target_files=target, lineage={"round": r}):
                 table.expire_snapshots(keep_last=2)
-        return manifest
 
     def _aimd_rebalance(self, fetched: DataFrame, r: int) -> DataFrame | None:
         """Fold round ``r``'s per-host counters into the health ledger
@@ -644,72 +649,39 @@ class CrawlEngine:
             F.lit(None).cast("int").alias("crawl_delay_ms"),
         )
 
-    def _sketch_width_knobs(self, next_frontier: DataFrame, at_round: int) -> None:
-        """Sketch round ``at_round``'s ready slice for its width knobs.
+    def _read_width_knobs(self, obs: Observation, at_round: int) -> dict | None:
+        """Round ``at_round``'s width knobs from the sketches its ready
+        slice's checkpoint observed.
 
-        * ``est_urls`` — HLL (p=12, ±~2%) distinct url_hash over rows
+        * ``est_urls`` — HLL++ (p=12, ±~2%) distinct url_hash over rows
           eligible at ``at_round`` (the manifest count can't exclude
           deferred rows);
-        * ``est_hot_depth`` — min over the count-min sketch's d rows of
-          its max bucket: every host's rows land in one bucket per CMS
-          row, so max-bucket ≥ hottest-host depth in each row and the
-          min across rows is the tightest such OVERestimate — errs only
-          toward more spread when hashed neighbors collide.
+        * ``est_hot_depth`` — ``cms_max_bucket`` of the count-min sketch
+          of their hosts, a depth bound that errs only toward more
+          spread.
 
-        Both come from ONE Spark action (the two one-row aggregates
-        cross-joined), run inside the commit thread pool (wall-clock
-        overlapped with the parquet writes). A failure leaves the knobs
-        unset — the next round falls back to manifest counts — and is
-        recorded in ``sketch_errors`` with a warning, never raised.
+        An empty ready slice gives no knobs. A failed read or decode
+        gives none either — the next round falls back to manifest
+        counts — and is recorded in ``sketch_errors`` with a warning,
+        never raised.
         """
-        from webcrawler_go_spark.operators.sketches import cms_build, hll_distinct
-
         try:
-            ready = next_frontier.filter(F.col("not_before_round") <= at_round)
-            hot = (
-                cms_build(ready.select("host"), "host")
-                .groupBy("j")
-                .agg(F.max("c").alias("mx"))
-                .agg(F.min("mx").alias("hot"))
-            )
-            est = (
-                hll_distinct(
-                    ready.select(F.col("url_hash").cast("string").alias("url_hash")),
-                    "url_hash",
-                    p=12,
-                )
-                .crossJoin(hot)
-                .first()
-            )
-            if est["est_distinct"] is None:  # empty ready slice: no estimate
-                self._width_knobs = None
-                return
-            est_urls = int(est["est_distinct"])
-            n_reg = int(est["n_registers"])
-            m = 1 << 12
-            if est_urls <= 5 * m // 2 and n_reg < m:
-                # HLL small-range (linear-counting) correction: the raw
-                # estimator floors at ~alpha·m when most registers are
-                # empty. Driver-side float math is fine HERE — the knob
-                # is advisory and no oracle ever sees it (the recorded
-                # sketch queries keep the documented integer-only
-                # raw-regime contract).
-                import math as _math
-
-                est_urls = int(m * _math.log(m / (m - n_reg)))
-            self._width_knobs = {
+            m = obs.get
+            if not m["est_urls"]:
+                return None
+            return {
                 "at_round": at_round,
-                "est_urls": est_urls,
-                "est_hot_depth": int(est["hot"] or 0),
+                "est_urls": int(m["est_urls"]),
+                "est_hot_depth": cms_max_bucket(m["cms"]),
             }
         except Exception as exc:  # noqa: BLE001 — advisory path, never fatal
-            self._width_knobs = None
             self.sketch_errors.append((at_round, repr(exc)))
             warnings.warn(
                 f"width sketch for round {at_round} failed, falling back to "
                 f"manifest counts: {exc!r}",
                 RuntimeWarning,
             )
+            return None
 
     def _journal_metrics(self, st: RoundStats) -> None:
         """Append the round's metrics to a JSONL journal in the state dir

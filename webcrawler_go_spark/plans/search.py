@@ -39,7 +39,6 @@ def _crawl(
         state_dir,
         world=world,
         fetch_backend=backend,
-        collect_stats=False,
     )
     if eng.frontier_t.current_snapshot() is None:
         eng.seed(seeds)
