@@ -4490,7 +4490,7 @@ def q_adaptive_fetch_width(spark: SparkSession, sf_dir: str) -> DataFrame:
     fetch width cap = est÷500+1, salt engagement = est > 200k (the
     engine's salt_threshold). All BIGINT floor math, bit-portable to
     the DuckDB oracle. Inside the engine Spark's own HLL++ and
-    count-min aggregates ride the next-frontier checkpoint as observed
+    count-min aggregates ride the next-frontier write as observed
     metrics (no job of their own) and only ever steer physical widths —
     never membership (crawl parity suites pin that). The 1×1 est×hot
     combine is a sanctioned BNLJ (BNLJ_OK)."""

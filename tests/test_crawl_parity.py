@@ -14,14 +14,19 @@ from __future__ import annotations
 import json
 import os
 import shutil
+import tempfile
 
 import pytest
+from hypothesis import Phase, example, given, settings
+from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from webcrawler_go_spark.config import CrawlConfig
+from webcrawler_go_spark.functions.urls import canonicalize_cols
 from webcrawler_go_spark.oracle import sequential
 from webcrawler_go_spark.plans.frontier_loop import CrawlEngine
-from webcrawler_go_spark.worldgen import World, seeds as gen_seeds
+from webcrawler_go_spark.schemas import FRONTIER
+from webcrawler_go_spark.worldgen import World, page_url, seeds as gen_seeds
 
 WORLD = World(n_hosts=8, pages_per_host=40)
 CFG = CrawlConfig(max_rounds=4, default_host_budget=10)
@@ -216,7 +221,7 @@ def test_capture_mode_rendered_links_parity(spark, state_dir):
 
 def test_sketch_width_knobs_populated_and_sound(spark, state_dir):
     """Round 6's sketch-driven width knobs: after a round, the sketches
-    its next-frontier checkpoint observed leave (est_urls,
+    its next-frontier write observed leave (est_urls,
     est_hot_depth) for the next round; the HLL estimate lands within its
     ±~4% p=12 band of the true ready-row distinct count, and the CMS
     max-bucket depth bound NEVER underestimates the hottest host
@@ -369,21 +374,23 @@ def test_sketch_failure_is_recorded_and_rounds_fall_back(spark, state_dir, monke
     assert [r for r, _ in eng.sketch_errors] == [1, 2]
 
 
-def _run_counting_jobs(spark, eng, rounds: int) -> list[int]:
-    """Run rounds 0..rounds-1 of ``eng``; returns how many Spark jobs
-    each round started, read from the status tracker once the listener
-    bus has delivered every event."""
+def _jobs_started(spark, action) -> int:
+    """How many Spark jobs ``action()`` started, read from the status
+    tracker once the listener bus has delivered every event."""
     sc = spark.sparkContext
     tracker = sc.statusTracker()
     bus = sc._jsc.sc().listenerBus()
-    counts = []
-    for r in range(rounds):
-        bus.waitUntilEmpty()
-        before = set(tracker.getJobIdsForGroup())
-        eng.run_round(r)
-        bus.waitUntilEmpty()
-        counts.append(len(set(tracker.getJobIdsForGroup()) - before))
-    return counts
+    bus.waitUntilEmpty()
+    before = set(tracker.getJobIdsForGroup())
+    action()
+    bus.waitUntilEmpty()
+    return len(set(tracker.getJobIdsForGroup()) - before)
+
+
+def _run_counting_jobs(spark, eng, rounds: int) -> list[int]:
+    """Run rounds 0..rounds-1 of ``eng``; returns how many Spark jobs
+    each round started."""
+    return [_jobs_started(spark, lambda r=r: eng.run_round(r)) for r in range(rounds)]
 
 
 # each commit of the test world writes one file, so a table first holds
@@ -411,9 +418,9 @@ def deep_crawl(spark, tmp_path_factory):
 
 def test_adaptive_maintained_crawl_parity(deep_crawl):
     """AIMD rebalance and compaction run inside the commit pool, beside
-    the frontier dedup that still reads the round's seen snapshot: the
-    crawl must equal the sequential oracle in seen set, per-host
-    sequences and final budget dim."""
+    the next-frontier write that may still read the round's seen
+    snapshot: the crawl must equal the sequential oracle in seen set,
+    per-host sequences and final budget dim."""
     eng, oracle, _ = deep_crawl
     assert {r.url_norm for r in eng.url_seen().collect()} == oracle.seen
     seqs = {r["host"]: r["fetch_sequence"] for r in eng.per_host_sequences().collect()}
@@ -456,12 +463,14 @@ def test_aimd_restore_counts_a_rerun_round_once(spark, deep_crawl, tmp_path):
     assert budgets(fresh) == budgets(eng) == oracle.budgets
 
 
-# Spark jobs per round of ``deep_crawl`` (round 5 compacts). The
-# ready-frontier subtree runs once per round, the stats and width
-# sketches ride the fetch and next-frontier checkpoints, and the AIMD
-# rebalance and compaction share the commit pool; a change that adds
-# jobs to the round's path fails here.
-JOBS_PER_ROUND_CEILING = [17, 17, 17, 17, 17, 19]
+# Spark jobs per round of ``deep_crawl`` (round 5 compacts). Each URL
+# passes one dedup, when its round reads the frontier; the next frontier
+# is written straight from its plan, and that write observes the width
+# sketches as the fetch checkpoint observes the stats; the AIMD
+# rebalance and compaction share the commit pool. Round 0 reads an empty
+# fetch log and budget dim, which start no job. A change that adds jobs
+# to the round's path fails here.
+JOBS_PER_ROUND_CEILING = [11, 14, 14, 14, 14, 16]
 
 
 def test_jobs_per_round_ceiling(deep_crawl):
@@ -469,3 +478,97 @@ def test_jobs_per_round_ceiling(deep_crawl):
     assert all(j <= c for j, c in zip(jobs, JOBS_PER_ROUND_CEILING)), (
         jobs, JOBS_PER_ROUND_CEILING
     )
+
+
+def test_empty_state_frames_start_no_job(spark, state_dir):
+    """An empty table's read and the engine's default budget dim are
+    planned on the JVM: joining either starts no Spark job beyond those
+    of the frame it is joined to."""
+    eng = CrawlEngine(spark, CFG, state_dir, world=WORLD)
+    hosts = spark.range(64).select(F.concat(F.lit("h"), F.col("id")).alias("host"))
+    base = _jobs_started(spark, lambda: hosts.count())
+    for empty in (eng.frontier_t.read(), eng.log_t.read(), eng.budgets):
+        assert _jobs_started(
+            spark, lambda: hosts.join(empty, "host", "left").count()
+        ) == base
+
+
+# a small world crawled from hand-made frontiers; the pool of frontier
+# URLs is the world's pages, so frontier rows collide with each other
+# and with the links the crawl discovers
+SMALL_WORLD = World(n_hosts=2, pages_per_host=12)
+SMALL_CFG = CrawlConfig(max_rounds=4, default_host_budget=3)
+POOL = [page_url(h, p) for h in range(2) for p in range(12)]
+
+
+def _frontier_rows(picks) -> list[dict]:
+    """Oracle frontier rows from (url index, not_before_round, attempts,
+    discovery-round lag) picks; link_pos is the row's position, so
+    crawl-order keys are unique and every tie breaks the same way."""
+    return [
+        {
+            "url": POOL[u],
+            "round": max(0, nbr - lag),
+            "parent_seq": 0,
+            "link_pos": i,
+            "attempts": attempts,
+            "not_before_round": nbr,
+        }
+        for i, (u, nbr, attempts, lag) in enumerate(picks)
+    ]
+
+
+@given(
+    st.lists(
+        st.tuples(
+            st.integers(0, len(POOL) - 1),
+            st.integers(0, 3),
+            st.integers(0, 2),
+            st.integers(0, 2),
+        ),
+        min_size=1,
+        max_size=10,
+    )
+)
+# a retried backoff row (eligible at round 2) whose URL a ready row
+# fetches at round 0 and the crawl rediscovers meanwhile: the stale class
+@example([(0, 0, 0, 0), (0, 2, 1, 2), (1, 1, 0, 1), (5, 0, 0, 0)])
+# each example is a crawl of a few seconds: no shrinking
+@settings(
+    max_examples=4, deadline=None, derandomize=True,
+    phases=(Phase.explicit, Phase.generate),
+)
+def test_single_dedup_pass_matches_oracle(spark, picks):
+    """Candidates enter the frontier raw and each URL is deduped once,
+    when its round reads the frontier. From any frontier — one URL found
+    in several rounds, URLs fetched before their row is eligible,
+    backoff rows whose URL another row fetches while they wait — the
+    crawl equals the sequential oracle in seen set and per-host
+    sequences."""
+    rows = _frontier_rows(picks)
+    state = tempfile.mkdtemp(prefix="crawl-state-")
+    try:
+        eng = CrawlEngine(spark, SMALL_CFG, state, world=SMALL_WORLD)
+        parts = canonicalize_cols(F.col("url"), False)
+        fr = spark.createDataFrame(rows).select(
+            "url",
+            parts["url_norm"].alias("url_norm"),
+            F.xxhash64(parts["url_norm"]).alias("url_hash"),
+            parts["host"].alias("host"),
+            parts["path"].alias("path"),
+            *[F.col(c) for c in ("round", "parent_seq", "link_pos", "attempts",
+                                 "not_before_round")],
+        ).select(*[F.col(f.name).cast(f.dataType) for f in FRONTIER.fields])
+        eng.frontier_t.commit(fr, mode="replace", lineage={"round": 0})
+        eng.resume(start_round=0, max_rounds=SMALL_CFG.max_rounds)
+        oracle = sequential.crawl(
+            SMALL_WORLD, [], SMALL_CFG, max_rounds=SMALL_CFG.max_rounds,
+            initial_frontier=rows,
+        )
+        assert {r.url_norm for r in eng.url_seen().collect()} == oracle.seen
+        seqs = {
+            r["host"]: r["fetch_sequence"] for r in eng.per_host_sequences().collect()
+        }
+        assert seqs == oracle.sequences
+    finally:
+        shutil.rmtree(state, ignore_errors=True)

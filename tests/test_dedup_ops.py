@@ -5,11 +5,13 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from webcrawler_go_spark.config import MAX_OUTLINKS
 from webcrawler_go_spark.operators.dedup import (
     bloom_prefilter,
     dedup_against_seen,
     first_discovery,
 )
+from webcrawler_go_spark.operators.extract import next_frontier_candidates
 
 
 def _frontier(spark):
@@ -123,3 +125,20 @@ def test_empty_seen_passthrough(spark):
     )
     seen = spark.createDataFrame([], "url_hash long, url_norm string")
     assert dedup_against_seen(cand, seen, use_bloom=True).count() == 5
+
+
+def test_page_with_too_many_outlinks_fails_soft(spark):
+    """A page with more outlinks than link_pos can pack into the crawl-
+    order key yields its first MAX_OUTLINKS links as candidates instead
+    of failing the task."""
+    links = [f"https://h.test/p{i}" for i in range(70_000)]
+    fetched = spark.createDataFrame(
+        [("https://h.test/", "h.test", 1, 0, links)],
+        "url string, host string, seq long, round int, outlinks array<string>",
+    )
+    got = next_frontier_candidates(fetched).agg(
+        F.count("*").alias("n"), F.max("link_pos").alias("last")
+    ).first()
+    assert (got["n"], got["last"]) == (MAX_OUTLINKS, MAX_OUTLINKS - 1) == (
+        65_536, 65_535
+    )

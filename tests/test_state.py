@@ -104,9 +104,9 @@ def test_engine_maintenance_equivalent_and_bounded(spark, state_dir):
 
 def test_maintenance_keeps_files_of_the_rounds_seen_read(spark, state_dir):
     """On a maintenance round the engine compacts and expires fetch_log in
-    the commit pool while the frontier dedup still scans the seen set —
-    a view of fetch_log — the round started from: no file of that
-    snapshot may go."""
+    the commit pool while the next-frontier write may still rescan the
+    seen set — a view of fetch_log — the round started from: no file of
+    that snapshot may go."""
     from webcrawler_go_spark.config import CrawlConfig
     from webcrawler_go_spark.plans.frontier_loop import CrawlEngine
     from webcrawler_go_spark.schemas import FETCH_LOG_TABLE

@@ -8,6 +8,10 @@ from __future__ import annotations
 
 from dataclasses import dataclass, field
 
+# links a page contributes to the frontier, in document order: link_pos
+# is 16 bits of the packed crawl-order key (extract.next_frontier_candidates)
+MAX_OUTLINKS = 1 << 16
+
 
 @dataclass(frozen=True)
 class CrawlConfig:

@@ -12,6 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from webcrawler_go_spark.config import MAX_OUTLINKS
 from webcrawler_go_spark.functions.classify import (
     has_skipped_extension,
     is_crawlable_href,
@@ -81,12 +82,16 @@ def next_frontier_candidates(
     comparison reproduces since frontiers never cross hosts under F1).
     The parent host is the carried fetch-row column — already canonical,
     no re-parse of found_on.
+
+    A page contributes its first ``MAX_OUTLINKS`` (2^16) outlinks, so
+    link_pos fits the packed key below; the rest are dropped (as in the
+    oracle) instead of failing the task.
     """
     from webcrawler_go_spark.functions.urls import canonicalize_append
 
-    links = outlinks_with_provenance(fetched).filter(
-        is_crawlable_href(F.col("href"))
-    )
+    links = outlinks_with_provenance(
+        fetched.withColumn("outlinks", F.slice("outlinks", 1, MAX_OUTLINKS))
+    ).filter(is_crawlable_href(F.col("href")))
     # crawl-order key packed into ONE bigint so the collapse runs as a
     # HashAggregate: min(struct(...)) plans as SortAggregate, which
     # SORTS the whole exploded link stream by href on both sides of the
@@ -95,12 +100,12 @@ def next_frontier_candidates(
     # invariant makes (parent_round, parent_seq, link_pos) ≡
     # (parent_seq, link_pos): schedule_round assigns parent_seq =
     # (round << 32) | host_rank, so parent_seq order already implies
-    # parent_round order, and link_pos fits 16 bits (checked row-wise —
-    # assert_true turns a violated packing assumption into a loud task
-    # failure, never a silently re-ordered crawl).
+    # parent_round order, and link_pos fits 16 bits (the cap above;
+    # checked row-wise — assert_true turns a violated packing assumption
+    # into a loud task failure, never a silently re-ordered crawl).
     pack_ok = (
         (F.col("link_pos") >= 0)
-        & (F.col("link_pos") < F.lit(1 << 16))
+        & (F.col("link_pos") < F.lit(MAX_OUTLINKS))
         & (F.col("parent_seq") >= 0)
         & (F.col("parent_seq") < F.lit(1 << 46))
         & (

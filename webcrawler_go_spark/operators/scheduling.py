@@ -210,7 +210,7 @@ def aimd_budgets(
 ) -> DataFrame:
     """AIMD per-host politeness-budget adaptation — the budget-rebalance
     half of the adaptive-crawl story (the width half is the sketches
-    `frontier_loop` observes on each round's next-frontier checkpoint). The reference holds every
+    `frontier_loop` observes on each round's next-frontier write). The reference holds every
     host to one fixed semaphore width (crawler.go's 20-way cap); at
     10^10-URL scale budgets must react to per-host health:
 

@@ -20,7 +20,7 @@ from __future__ import annotations
 from dataclasses import dataclass, field
 
 from webcrawler_go_spark import worldgen
-from webcrawler_go_spark.config import CrawlConfig
+from webcrawler_go_spark.config import MAX_OUTLINKS, CrawlConfig
 from webcrawler_go_spark.worldgen import World
 
 _NO_RETRY_ERRORS = ("no such host",)
@@ -191,11 +191,14 @@ def crawl(
             if err is not None or status != 200 or blocked:
                 continue
             res.documents[url] = spans
-            # children in document order (X1), same-host filter (F1)
+            # children in document order (X1), same-host filter (F1);
+            # the first MAX_OUTLINKS links only, as the engine
             pos = 0
             for kind, _t, media, _o in spans:
                 if kind != "link":
                     continue
+                if pos == MAX_OUTLINKS:
+                    break
                 href = media
                 if cfg.same_host_only and _host_of(href) != f["host"]:
                     pos += 1

@@ -11,6 +11,8 @@ Round r (all DataFrame ops; driver only sequences rounds):
     scheduled ──mapInPandas fetch──► fetch_log+spans+outlinks   (S3)
     fetch ──posexplode──► next candidates (round+1)       (X1, F1-F4)
     fetch ──retry/blocked rules──► requeued               (W3, J3)
+    frontier = candidates + requeued + overflow + backoff (raw: the
+               oracle's children + deferred + requeued + overflow)
     fetch_log += scheduled, final = not requeued
     url_seen = fetch_log where final    (a view; visited.Delete parity,
                                          crawler.go:316)
@@ -25,6 +27,11 @@ pdfcapture.go:199-223, but transactional). The seen set (the
 reference's visited map) and the AIMD ledger are derived from fetch_log,
 not stored: the seen set is its ``final`` rows, the ledger a per-(host,
 round) count of its rows.
+
+Each URL is deduped once, as the sequential oracle does: when round r+1
+reads it (every candidate is eligible then). So the frontier table may
+hold already-seen rows, and a crawl whose last links are all seen runs
+one more round that schedules nothing, as the oracle's loop does.
 
 Scale notes: the write-then-read through the state layer each round also
 truncates lineage (SURVEY §4.3 — required in iterative Spark jobs); the
@@ -59,21 +66,13 @@ from webcrawler_go_spark.schemas import (
     FETCH_LOG,
     FETCH_LOG_TABLE,
     FRONTIER,
+    POLITENESS_BUDGET,
 )
-from webcrawler_go_spark.state import SnapshotTable
+from webcrawler_go_spark.state import SnapshotTable, empty_frame
 from webcrawler_go_spark.worldgen import World
 
 # DNS failures abort retries (crawler.go:606-609)
 _NO_RETRY_ERRORS = ("no such host",)
-
-
-def _seen_rows(log: DataFrame) -> DataFrame:
-    """The seen-set rows of fetch-log rows: the final ones."""
-    return log.filter(F.col("final")).select(
-        "url_hash",
-        F.col("url").alias("url_norm"),
-        F.col("round").alias("seen_round"),
-    )
 
 
 def _host_counters(log: DataFrame) -> DataFrame:
@@ -149,11 +148,10 @@ class CrawlEngine:
         self.frontier_t = SnapshotTable(state_dir, "frontier", FRONTIER).init(spark)
         self.docs_t = SnapshotTable(state_dir, "documents", DOCUMENTS).init(spark)
         self.log_t = SnapshotTable(state_dir, "fetch_log", FETCH_LOG_TABLE).init(spark)
-        if budgets is None:
-            budgets = spark.createDataFrame(
-                [], "host string, max_fetches_per_round int, crawl_delay_ms int"
-            )
-        self.budgets = budgets
+        # no budgets: every host gets the default budget
+        self.budgets = budgets if budgets is not None else empty_frame(
+            spark, POLITENESS_BUDGET
+        )
         self.robots = robots
         self.bloom_threshold = bloom_threshold
         self.salt_threshold = salt_threshold
@@ -164,8 +162,8 @@ class CrawlEngine:
         # stay O(core-count) files instead of O(rounds). 0 = off.
         self.maintenance_interval = maintenance_interval
         # sketch-driven width knobs (VERDICT r5 directive #7): the
-        # checkpoint of round r's NEXT frontier observes two sketches of
-        # its ready slice (HLL distinct-URL estimate + the count-min
+        # write of round r's NEXT frontier observes two sketches of its
+        # ready slice (HLL distinct-URL estimate + the count-min
         # max-bucket bound on the hottest host's depth) in the same job,
         # and round r+1 sizes its fetch width / hot-host chunk / output
         # file count / salt engagement from those estimates instead of
@@ -283,7 +281,6 @@ class CrawlEngine:
     def run_round(self, r: int) -> RoundStats:
         cfg = self.config
         frontier = self.frontier_t.read()
-        seen = self.url_seen()
 
         ready = frontier.filter(F.col("not_before_round") <= r)
         backoff = frontier.filter(F.col("not_before_round") > r)
@@ -301,7 +298,7 @@ class CrawlEngine:
         seen_estimate = log_head.get("total_rows", 0) if log_head else 0
         new = dedup_against_seen(
             unique,
-            seen,
+            self.url_seen(),
             use_bloom=seen_estimate > self.bloom_threshold,
             seen_count=seen_estimate,
             fpp=cfg.bloom_fpp,
@@ -415,8 +412,6 @@ class CrawlEngine:
             (F.lit(r) + F.col("attempts") + 1).alias("not_before_round"),
         )
 
-        seen_delta = _seen_rows(logged)
-
         # --- payload + next frontier --------------------------------------
         docs = documents_from_fetch(fetched)
         candidates = next_frontier_candidates(
@@ -440,39 +435,20 @@ class CrawlEngine:
                     ignore_query=cfg.ignore_query_params,
                 )
             )
-        # collapse duplicate discoveries and drop already-seen URLs BEFORE
-        # the frontier commit: raw extraction yields ~links-per-page × the
-        # round size (measured ~30× the surviving rows), and next round's
-        # first pass would collapse it anyway — dedup-before-write moves
-        # the shuffle ahead of the parquet write instead of after the
-        # parquet read, shrinking the biggest per-round write (and, at
-        # 10^10 URLs, the frontier table) by that factor.
-        # first_discovery keeps the min crawl-order key per URL, so the
-        # next round's in-round dedup against deferred/requeued/overflow
-        # rows (which skip this path) still resolves to the same winner.
-        candidates = first_discovery(candidates)
-        candidates = dedup_against_seen(
-            candidates,
-            seen.unionByName(seen_delta),
-            use_bloom=seen_estimate > self.bloom_threshold,
-            seen_count=seen_estimate,
-            fpp=cfg.bloom_fpp,
-        )
+        # candidates enter the frontier raw, for round r+1's read-side
+        # dedup: the raw (href, parent_host) collapse in
+        # next_frontier_candidates already did the bulk of the shrink
         next_frontier = candidates.unionByName(
             requeue.select(*candidates.columns)
         ).unionByName(deferred.select(*candidates.columns))
 
         # every commit reads only the checkpointed fetch output (plus
-        # tiny carried frames) and the commits are mutually independent →
-        # run them as concurrent Spark jobs from separate threads. The
-        # two CHEAP commits (docs/log: column-sliced views of the
-        # checkpoint) and the AIMD rebalance (a host aggregate of the
-        # checkpoint) launch FIRST and overlap the frontier-dedup
-        # materialization on the main thread — the dedup is the round's
-        # second-biggest compute. The frontier commit waits for the
-        # materialized dedup (committing the raw plan inside the pool
-        # measured 3× slower: it contends with the parquet writes for
-        # every core).
+        # the held ranked frame) and the commits are mutually
+        # independent → run them as concurrent Spark jobs from separate
+        # threads. The two CHEAP commits (docs/log: column-sliced views
+        # of the checkpoint) and the AIMD rebalance (a host aggregate of
+        # the checkpoint) launch in the pool and overlap the next-
+        # frontier write on the main thread.
         # Outputs coalesce to ≤ the core count before writing: carrying
         # the kernel stage's width into THREE parquet writes per round
         # would pile up 100s of small files per table — growing every
@@ -512,39 +488,35 @@ class CrawlEngine:
                 # ledger back for release after the pool instead of
                 # freeing it here
                 rebalance = pool.submit(self._aimd_rebalance, fetched, r)
-            # main thread: materialize the frontier dedup concurrently
-            # with the writes. The same job sketches round r+1's READY
-            # slice for its width knobs: an HLL++ distinct-URL estimate
-            # (rsd 0.02 → p=12) and a 4096 × 4 count-min sketch of its
-            # hosts — the cms_build shape — per-task partial aggregates
-            # merged on the driver, so no exchange and no extra job.
+            # main thread: write the next frontier straight from its
+            # plan. The write sketches round r+1's READY slice for its
+            # width knobs: an HLL++ distinct-URL estimate (rsd 0.02 →
+            # p=12) and a 4096 × 4 count-min sketch of its hosts — the
+            # cms_build shape — per-task partial aggregates merged on the
+            # driver, so no exchange and no extra job.
             ready_next = F.col("not_before_round") <= r + 1
             width_obs = Observation()
-            next_frontier = next_frontier.observe(
-                width_obs,
-                F.approx_count_distinct(
-                    F.when(ready_next, F.col("url_hash")), 0.02
-                ).alias("est_urls"),
-                F.count_min_sketch(
-                    F.when(ready_next, F.col("host")),
-                    F.lit(2 / 4096), F.lit(1 - 2**-4), F.lit(0),
-                ).alias("cms"),
-            ).localCheckpoint(eager=True)
-            self._width_knobs = self._read_width_knobs(width_obs, r + 1)
-            futures.append(
-                pool.submit(
-                    self.frontier_t.commit, next_frontier.coalesce(n_out),
-                    mode="replace", lineage={"round": r + 1},
-                )
+            self.frontier_t.commit(
+                next_frontier.observe(
+                    width_obs,
+                    F.approx_count_distinct(
+                        F.when(ready_next, F.col("url_hash")), 0.02
+                    ).alias("est_urls"),
+                    F.count_min_sketch(
+                        F.when(ready_next, F.col("host")),
+                        F.lit(2 / 4096), F.lit(1 - 2**-4), F.lit(0),
+                    ).alias("cms"),
+                ).coalesce(n_out),
+                mode="replace", lineage={"round": r + 1},
             )
+            self._width_knobs = self._read_width_knobs(width_obs, r + 1)
             for f_ in futures:
                 f_.result()
             old_health = rebalance.result() if self.adaptive_budget else None
         for df in held:
             df.unpersist()
-        for df in (old_health, next_frontier):
-            if df is not None:
-                _unpersist_local_checkpoint(df)
+        if old_health is not None:
+            _unpersist_local_checkpoint(old_health)
 
         # --- per-round metrics, observed by the fetch checkpoint ----------
         agg = stats_obs.get
@@ -571,9 +543,9 @@ class CrawlEngine:
 
         ``keep_last=2`` keeps this round's append snapshot, whose file
         list holds every file of the head the round started from. For
-        fetch_log those are the files the round's in-flight seen read
-        (the anti-join of the frontier dedup) still scans while this runs
-        in the commit pool."""
+        fetch_log those are the files of the round's seen read, which the
+        next-frontier write rescans if it loses a held block while this
+        runs in the commit pool."""
         table.commit(df, **kw)
         if maintain:
             target = max(4, self.spark.sparkContext.defaultParallelism)
@@ -651,11 +623,13 @@ class CrawlEngine:
 
     def _read_width_knobs(self, obs: Observation, at_round: int) -> dict | None:
         """Round ``at_round``'s width knobs from the sketches its ready
-        slice's checkpoint observed.
+        slice's write observed.
 
         * ``est_urls`` — HLL++ (p=12, ±~2%) distinct url_hash over rows
           eligible at ``at_round`` (the manifest count can't exclude
-          deferred rows);
+          deferred rows). Those rows are not yet deduped against the
+          seen set, so it over-counts the round's new URLs by the
+          already-seen ones; it sizes widths only, never membership;
         * ``est_hot_depth`` — ``cms_max_bucket`` of the count-min sketch
           of their hosts, a depth bound that errs only toward more
           spread.
@@ -717,9 +691,7 @@ class CrawlEngine:
             head = self.frontier_t.current_snapshot()
             # manifest row counts (parquet footers) make the empty check
             # free — no Spark job per round
-            if head is not None and head.get("total_rows", -1) == 0:
-                break
-            if head is None and self.frontier_t.read().limit(1).count() == 0:
+            if head is None or head.get("total_rows", -1) == 0:
                 break
             out.append(self.run_round(r))
         return out
@@ -735,7 +707,11 @@ class CrawlEngine:
     def url_seen(self) -> DataFrame:
         """(url_hash, url_norm, seen_round): the URLs the crawl has taken
         out of the frontier for good — the reference's visited map."""
-        return _seen_rows(self.log_t.read())
+        return self.log_t.read().filter(F.col("final")).select(
+            "url_hash",
+            F.col("url").alias("url_norm"),
+            F.col("round").alias("seen_round"),
+        )
 
     def per_host_sequences(self) -> DataFrame:
         """Per-host ordered fetch sequences — the crawl-order parity

@@ -29,7 +29,15 @@ import uuid
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import StructType
+
+
+def empty_frame(spark: SparkSession, schema: StructType) -> DataFrame:
+    """An empty DataFrame of ``schema``, a JVM ``LocalRelation``. The
+    Python RDD of ``createDataFrame([], schema)`` would start a
+    Python-worker job for zero rows in every plan that reads it."""
+    return spark.createDataFrame(to_arrow_schema(schema).empty_table())
 
 
 @dataclass
@@ -204,5 +212,5 @@ class SnapshotTable:
             with open(os.path.join(self._manifest_dir, snapshot_id + ".json")) as f:
                 m = json.load(f)
         if m is None or not m["files"]:
-            return self._spark.createDataFrame([], self.schema)
+            return empty_frame(self._spark, self.schema)
         return self._spark.read.schema(self.schema).parquet(*m["files"])
