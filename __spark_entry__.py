@@ -4481,19 +4481,16 @@ FROM hll h, exact e
 
 
 def q_adaptive_fetch_width(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The sketch-driven width-knob derivation the crawl engine runs
-    per round (VERDICT r5 directive #7; `frontier_loop.py:
-    _read_width_knobs`): HLL distinct-URL estimate (p=10, raw-
-    estimator regime on this corpus, the urlseen_hll contract) + the
-    count-min max-bucket bound on the hottest host's depth, then the
-    derived knobs — hot-host chunk = clamp(depth÷8+1, 2048, 25000),
-    fetch width cap = est÷500+1, salt engagement = est > 200k (the
-    engine's salt_threshold). All BIGINT floor math, bit-portable to
-    the DuckDB oracle. Inside the engine Spark's own HLL++ and
-    count-min aggregates ride the next-frontier write as observed
-    metrics (no job of their own) and only ever steer physical widths —
-    never membership (crawl parity suites pin that). The 1×1 est×hot
-    combine is a sanctioned BNLJ (BNLJ_OK)."""
+    """Sketch-derived fetch widths, as a standalone analysis of the
+    corpus: HLL distinct-URL estimate (p=10, raw-estimator regime on
+    this corpus, the urlseen_hll contract) + the count-min max-bucket
+    bound on the hottest host's depth, then the knobs they would set —
+    hot-host chunk = clamp(depth÷8+1, 2048, 25000), fetch width cap =
+    est÷500+1, salt engagement = est > 200k (``config.SALT_THRESHOLD``).
+    All BIGINT floor math, bit-portable to the DuckDB oracle. The crawl
+    engine itself sizes each round from its frontier manifest's row
+    count, not from sketches. The 1×1 est×hot combine is a sanctioned
+    BNLJ (BNLJ_OK)."""
     from webcrawler_go_spark.operators.sketches import cms_build, hll_distinct
 
     # HLL and CMS branches share the canon pass — materialize it once

@@ -57,7 +57,7 @@ HEADLINE = [
     # the index; see BENCH.md). The correctness row still records it.
     "webdata_pipeline",         # WARC → lang/quality/dedup end-to-end
     "html_text_extract",        # WET strip, pure codegen regexp chain
-    "adaptive_fetch_width",     # HLL+CMS width knobs (the engine's round sketches)
+    "adaptive_fetch_width",     # HLL+CMS width knobs (standalone analysis)
     # round-7 additions
     "embedding_ivfpq_query_only",  # IVFADC amortized half: the warm pass
                                    # pays ivfpq_build(materialize=True)

@@ -29,7 +29,7 @@ def main() -> None:
     p.add_argument("--budget", type=int, default=20)
     p.add_argument("--salted", action="store_true",
                    help="always salt the politeness rank (default: salt only "
-                        "rounds above the engine's salt_threshold)")
+                        "rounds above config.SALT_THRESHOLD frontier rows)")
     p.add_argument("--backend", default="synthetic")
     p.add_argument("--mode", default="",
                    help="optional result mode after the crawl: search | "

@@ -1,16 +1,12 @@
 """Dedup operator tests (J1/J2): first-discovery-wins, anti-join
-exactness, Bloom prefilter transparency."""
+exactness, and the sharded Bloom of the seen-set audit."""
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
 
 from webcrawler_go_spark.config import MAX_OUTLINKS
-from webcrawler_go_spark.operators.dedup import (
-    bloom_prefilter,
-    dedup_against_seen,
-    first_discovery,
-)
+from webcrawler_go_spark.operators.dedup import dedup_against_seen, first_discovery
 from webcrawler_go_spark.operators.extract import next_frontier_candidates
 
 
@@ -52,24 +48,6 @@ def test_anti_join_dedup_hash_collision(spark):
     )
     seen = spark.createDataFrame([(1, "collides")], "url_hash long, url_norm string")
     assert dedup_against_seen(cand, seen).count() == 1
-
-
-def test_bloom_prefilter_never_drops_new(spark):
-    """FPP affects performance only: Bloom may pass stale URLs through
-    (caught by the anti-join) but must NEVER drop unseen ones."""
-    cand = spark.range(0, 2000).select(
-        F.col("id").alias("url_hash"), F.col("id").cast("string").alias("url_norm")
-    )
-    seen = spark.range(0, 1000).select(
-        F.col("id").alias("url_hash"), F.col("id").cast("string").alias("url_norm")
-    )
-    definitely_new, maybe_seen = bloom_prefilter(cand, seen, fpp=0.05)
-    new_set = {r.url_hash for r in definitely_new.collect()}
-    assert new_set <= set(range(1000, 2000))  # no false negatives
-    # split is a partition of the candidates
-    assert definitely_new.count() + maybe_seen.count() == 2000
-    exact = {r.url_hash for r in dedup_against_seen(cand, seen, use_bloom=True, fpp=0.05).collect()}
-    assert exact == set(range(1000, 2000))
 
 
 def test_sharded_bloom_matches_monolithic(spark):
@@ -124,7 +102,7 @@ def test_empty_seen_passthrough(spark):
         F.col("id").alias("url_hash"), F.col("id").cast("string").alias("url_norm")
     )
     seen = spark.createDataFrame([], "url_hash long, url_norm string")
-    assert dedup_against_seen(cand, seen, use_bloom=True).count() == 5
+    assert dedup_against_seen(cand, seen).count() == 5
 
 
 def test_page_with_too_many_outlinks_fails_soft(spark):

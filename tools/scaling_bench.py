@@ -107,7 +107,7 @@ def run_one(cpus: int) -> dict:
     warm = frontier.limit(10_000)
     fetch_frontier(
         schedule_round(
-            dedup_against_seen(first_discovery(warm), seen.limit(1), use_bloom=False),
+            dedup_against_seen(first_discovery(warm), seen.limit(1)),
             budgets, 0, default_budget=1_000_000, salted=True, n_salts=cpus * 2,
         )[0].withColumnRenamed("round", "disc_round").withColumn("round", F.lit(0)),
         _world(),
@@ -115,7 +115,7 @@ def run_one(cpus: int) -> dict:
 
     t0 = time.perf_counter()
     unique = first_discovery(frontier)
-    new = dedup_against_seen(unique, seen, use_bloom=False)
+    new = dedup_against_seen(unique, seen)
     scheduled, _ = schedule_round(
         new, budgets, 0, default_budget=1_000_000, salted=True, n_salts=cpus * 2
     )

@@ -81,7 +81,7 @@ def run_round(spark, frontier, salted: bool, cpus: int) -> float:
     )
     seen = frontier.limit(1).select("url_hash", "url_norm")
     t0 = time.perf_counter()
-    new = dedup_against_seen(first_discovery(frontier), seen, use_bloom=False)
+    new = dedup_against_seen(first_discovery(frontier), seen)
     scheduled, _ = schedule_round(
         new, budgets, 0, default_budget=2_000_000,
         salted=salted, n_salts=cpus * 2,

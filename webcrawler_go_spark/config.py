@@ -12,6 +12,16 @@ from dataclasses import dataclass, field
 # is 16 bits of the packed crawl-order key (extract.next_frontier_candidates)
 MAX_OUTLINKS = 1 << 16
 
+# a round whose frontier holds more rows ranks its politeness Window in
+# two salted phases (politeness.schedule_round); below it one phase is
+# strictly cheaper
+SALT_THRESHOLD = 200_000
+
+# AIMD politeness budgets (scheduling.aimd_budgets): the additive-increase
+# cap and the sliding window of per-host rounds the ledger keeps
+AIMD_MAX_BUDGET = 100
+AIMD_WINDOW = 8
+
 
 @dataclass(frozen=True)
 class CrawlConfig:
@@ -33,5 +43,4 @@ class CrawlConfig:
     # capture-mode rendered-DOM links feed the frontier (pdfcapture.go:
     # 440-467); rendered links are same-DOMAIN unconditionally there
     render_links: bool = False
-    bloom_fpp: float = 0.01
     extra: dict = field(default_factory=dict, hash=False, compare=False)

@@ -2,24 +2,21 @@
 reference's ``visited.LoadOrStore`` (crawler.go:562-566, sitemap.go:153,
 pdfcapture.go:154).
 
-Three layers, cheapest first:
+The crawl engine dedups in two layers:
 
 1. **within-round dedup** — the same URL discovered by many parents in one
    round: keep the FIRST discovery by the crawl-order key (round,
    parent_seq, link_pos), matching "first writer wins" in LoadOrStore.
-   Implemented as a min-by aggregation (shuffle on url_hash — required
-   anyway for the anti-join, so AQE can reuse the exchange).
-2. **Bloom pre-filter** — a broadcast Bloom built from url_seen prunes the
-   bulk of already-seen URLs BEFORE the shuffle. FPP affects performance
-   only, never correctness (false positives are just re-checked by the
-   anti-join; false negatives impossible). At 10^10 seen URLs one Bloom
-   is ~12 GB @1% — too big to broadcast whole, so the scale design is a
-   sharded filter: ``pmod(url_hash, n_shards)`` routes each URL to a
-   shard-local Bloom; shards build in parallel from the partitioned seen
-   table and broadcast independently (n_shards × smaller). Local mode
-   uses 1 shard.
-3. **exact anti-join** — ``left_anti`` on url_hash against the seen table:
-   the authoritative check (Bloom is advisory).
+   Implemented as a Window over (url_hash, url_norm), whose shuffle the
+   anti-join below can reuse.
+2. **exact anti-join** — ``left_anti`` on (url_hash, url_norm) against the
+   seen table.
+
+The Bloom filter here (``NumpyBloom``, sharded by ``pmod(url_hash,
+n_shards)`` so each shard is small enough to broadcast on its own) is not
+on the crawl path: the ``bloom_seen_audit`` query measures it against the
+exact seen set, and ``bloom_audit_sequential`` is that query's
+single-process reference.
 """
 
 from __future__ import annotations
@@ -157,8 +154,9 @@ def bloom_prefilter_sharded(
     expected: int | None = None,
     fpp: float = 0.01,
 ) -> tuple[DataFrame, DataFrame]:
-    """Sharded variant of ``bloom_prefilter`` — identical contract
-    (definitely_new, maybe_seen), shard-routed lookups."""
+    """Split ``candidates`` by a sharded Bloom filter of ``seen``:
+    ``(definitely_new, maybe_seen)``. No false negatives, so every seen
+    row lands in ``maybe_seen``; shard-routed lookups."""
     n = expected if expected is not None else seen.count()
     if n == 0:
         return candidates, candidates.limit(0)
@@ -180,36 +178,6 @@ def bloom_prefilter_sharded(
             if m.any():
                 out[m] = bf.contains_many(vals[m])
         return pd.Series(out)
-
-    flagged = candidates.withColumn("_maybe_seen", might_contain(F.col("url_hash")))
-    return (
-        flagged.filter(~F.col("_maybe_seen")).drop("_maybe_seen"),
-        flagged.filter(F.col("_maybe_seen")).drop("_maybe_seen"),
-    )
-
-
-def bloom_prefilter(
-    candidates: DataFrame,
-    seen: DataFrame,
-    expected: int | None = None,
-    fpp: float = 0.01,
-) -> tuple[DataFrame, DataFrame]:
-    """Advisory broadcast-Bloom split before the anti-join shuffle.
-
-    Returns ``(definitely_new, maybe_seen)``: rows the filter has never
-    seen bypass the shuffle entirely (no false negatives possible); only
-    the maybe-seen slice — |candidates ∩ seen| plus an FPP-sized sliver —
-    pays the exact anti-join. FPP is a performance knob only.
-    """
-    n = expected if expected is not None else seen.count()
-    if n == 0:
-        return candidates, candidates.limit(0)
-    bf = build_bloom(seen, max(n, 64), fpp)
-    bf_b = candidates.sparkSession.sparkContext.broadcast(bf)
-
-    @pandas_udf("boolean")
-    def might_contain(h: pd.Series) -> pd.Series:
-        return pd.Series(bf_b.value.contains_many(h.to_numpy()))
 
     flagged = candidates.withColumn("_maybe_seen", might_contain(F.col("url_hash")))
     return (
@@ -253,25 +221,12 @@ def bloom_audit_sequential(
     }
 
 
-def dedup_against_seen(
-    candidates: DataFrame,
-    seen: DataFrame,
-    use_bloom: bool = False,
-    seen_count: int | None = None,
-    fpp: float = 0.01,
-) -> DataFrame:
+def dedup_against_seen(candidates: DataFrame, seen: DataFrame) -> DataFrame:
     """J1: drop candidates already in the seen set.
 
     Exactness comes from the left_anti join on (url_hash, url_norm) —
     the hash is only a cheap join-key prefix; the string keeps the
     reference's exact-string visited semantics under 64-bit collisions.
-    The Bloom stage (hash-only, no false negatives) routes
-    definitely-new rows around the shuffle (off by default in local
-    tests where the broadcast outweighs the prune).
     """
     key = ["url_hash", "url_norm"]
-    if not use_bloom:
-        return candidates.join(seen.select(*key), key, "left_anti")
-    definitely_new, maybe_seen = bloom_prefilter(candidates, seen, seen_count, fpp)
-    checked = maybe_seen.join(seen.select(*key), key, "left_anti")
-    return definitely_new.unionByName(checked)
+    return candidates.join(seen.select(*key), key, "left_anti")

@@ -51,6 +51,10 @@ USER_AGENTS = [
 ]
 
 
+# URLs of one host per kernel task before fetch_frontier spreads the host
+# over more tasks (the hot-host salt below)
+_HOT_HOST_CHUNK = 25000
+
 _EPOCH_DAY32 = (_EPOCH.date() - pd.Timestamp("1970-01-01").date()).days
 
 
@@ -152,14 +156,11 @@ def fetch_frontier(
     max_redirects: int = 10,
     referer_url: str | None = None,
     size_hint: int | None = None,
-    chunk: int | None = None,
 ) -> DataFrame:
     """Fetch a scheduled frontier round.
 
-    ``chunk`` overrides the hot-host rank-chunk salt size (None → the
-    default below; the http backend never salts) — the engine passes a sketch-derived
-    value so the hottest host spreads over a bounded task count
-    regardless of its actual depth.
+    ``size_hint`` (the engine passes the frontier manifest's row count)
+    caps the kernel width for small rounds.
 
     ``scheduled`` must carry (url_norm, host, seq, round). Returns
     FETCH_RESULT rows. The kernel is ``mapInPandas`` so each task streams
@@ -215,13 +216,10 @@ def fetch_frontier(
         # strict co-location: connection reuse + crawl-delay are
         # per-task-local there, and a politely-crawled host never
         # legitimately schedules >chunk URLs in one round anyway.
-        if backend == "http":
-            chunk = 0
-        elif chunk is None:
-            chunk = 25000
-        if chunk > 0 and "seq" in scheduled.columns:
+        if backend != "http" and "seq" in scheduled.columns:
             salt = (
-                F.col("seq").bitwiseAND(F.lit((1 << 32) - 1)) / F.lit(chunk)
+                F.col("seq").bitwiseAND(F.lit((1 << 32) - 1))
+                / F.lit(_HOT_HOST_CHUNK)
             ).cast("long")
             scheduled = scheduled.repartition(width, F.col("host"), salt)
         else:

@@ -20,7 +20,12 @@ from __future__ import annotations
 from dataclasses import dataclass, field
 
 from webcrawler_go_spark import worldgen
-from webcrawler_go_spark.config import MAX_OUTLINKS, CrawlConfig
+from webcrawler_go_spark.config import (
+    AIMD_MAX_BUDGET,
+    AIMD_WINDOW,
+    MAX_OUTLINKS,
+    CrawlConfig,
+)
 from webcrawler_go_spark.worldgen import World
 
 _NO_RETRY_ERRORS = ("no such host",)
@@ -77,9 +82,7 @@ def crawl(
     max_rounds: int = 10,
     initial_frontier: list[dict] | None = None,
     adaptive_budget: bool = False,
-    aimd_max_budget: int = 100,
     aimd_hot_milli: int = 200,
-    aimd_window: int = 8,
 ) -> OracleResult:
     budgets = dict(budgets or {})
     # AIMD parity mirror of CrawlEngine._aimd_rebalance /
@@ -243,7 +246,7 @@ def crawl(
                     )
         frontier = children + deferred + requeued + overflow
         if adaptive_budget:
-            lo = max(0, r + 1 - aimd_window)
+            lo = max(0, r + 1 - AIMD_WINDOW)
             new_budgets: dict[str, int] = {}
             for host, rounds in health.items():
                 window_rows = {rr: rounds[rr] for rr in rounds if rr >= lo}
@@ -255,7 +258,7 @@ def crawl(
                     bad = row is not None and (
                         (row[1] + row[2]) * 1000 >= row[0] * aimd_hot_milli
                     )
-                    b = max(1, b // 2) if bad else min(aimd_max_budget, b + 1)
+                    b = max(1, b // 2) if bad else min(AIMD_MAX_BUDGET, b + 1)
                 new_budgets[host] = b
             budgets = new_budgets
             res.budgets = dict(new_budgets)

@@ -33,24 +33,28 @@ reads it (every candidate is eligible then). So the frontier table may
 hold already-seen rows, and a crawl whose last links are all seen runs
 one more round that schedules nothing, as the oracle's loop does.
 
-Scale notes: the write-then-read through the state layer each round also
-truncates lineage (SURVEY §4.3 — required in iterative Spark jobs); the
-anti-join + repartition are the only shuffles per round; the politeness
-Window is salted when a host exceeds ``salt_threshold`` rows.
+Every per-round size (fetch width, output file count, salt engagement)
+comes from the frontier manifest's row count, which the round's read
+gets for free. The write-then-read through the state layer each round
+also truncates lineage (SURVEY §4.3 — required in iterative Spark jobs);
+the politeness Window is salted when a round's frontier exceeds
+``config.SALT_THRESHOLD`` rows.
 """
 
 from __future__ import annotations
 
 import os
-import struct
-import warnings
 from dataclasses import dataclass
 
-import numpy as np
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
-from webcrawler_go_spark.config import CrawlConfig
+from webcrawler_go_spark.config import (
+    AIMD_MAX_BUDGET,
+    AIMD_WINDOW,
+    SALT_THRESHOLD,
+    CrawlConfig,
+)
 from webcrawler_go_spark.functions.classify import error_taxonomy, status_class
 from webcrawler_go_spark.functions.urls import canonicalize_cols
 from webcrawler_go_spark.operators.components import _unpersist_local_checkpoint
@@ -93,20 +97,6 @@ def _host_counters(log: DataFrame) -> DataFrame:
     )
 
 
-def cms_max_bucket(blob: bytes) -> int:
-    """The hottest-key depth bound of a count-min sketch that Spark's
-    ``count_min_sketch`` aggregate serialized: a big-endian header
-    (version, total count, depth, width), ``depth`` hash seeds, then the
-    depth × width table of longs. Every key lands in one bucket per row,
-    so each row's max bucket is ≥ the hottest key's count, and the min
-    over rows is the tightest such OVERestimate — collisions only add."""
-    version, _, depth, width = struct.unpack_from(">iqii", blob)
-    if version != 1:
-        raise ValueError(f"count-min sketch version {version}")
-    table = np.frombuffer(blob, ">i8", depth * width, 20 + 8 * depth)
-    return int(table.reshape(depth, width).max(axis=1).min())
-
-
 @dataclass
 class RoundStats:
     round: int
@@ -129,15 +119,11 @@ class CrawlEngine:
         robots: DataFrame | None = None,
         fetch_backend: str = "synthetic",
         salted: bool | str = "auto",
-        bloom_threshold: int = 1_000_000,
-        salt_threshold: int = 200_000,
         # ignored: passed by perfbench/crawl.py; goes when the benchmark stops passing it
         collect_stats: bool = True,
         maintenance_interval: int = 0,
         adaptive_budget: bool = False,
-        aimd_max_budget: int = 100,
         aimd_hot_milli: int = 200,
-        aimd_window: int = 8,
     ):
         self.spark = spark
         self.config = config
@@ -153,35 +139,21 @@ class CrawlEngine:
             spark, POLITENESS_BUDGET
         )
         self.robots = robots
-        self.bloom_threshold = bloom_threshold
-        self.salt_threshold = salt_threshold
         # every N rounds, compact the append-mode tables (fetch_log /
         # documents) back to ~core-count files and expire
-        # superseded snapshots — the Iceberg rewrite_data_files +
+        # superseded snapshots of all three tables (the frontier is
+        # replaced every round) — the Iceberg rewrite_data_files +
         # expireSnapshots maintenance a 10^3-round crawl needs so reads
         # stay O(core-count) files instead of O(rounds). 0 = off.
         self.maintenance_interval = maintenance_interval
-        # sketch-driven width knobs (VERDICT r5 directive #7): the
-        # write of round r's NEXT frontier observes two sketches of its
-        # ready slice (HLL distinct-URL estimate + the count-min
-        # max-bucket bound on the hottest host's depth) in the same job,
-        # and round r+1 sizes its fetch width / hot-host chunk / output
-        # file count / salt engagement from those estimates instead of
-        # the whole-table manifest count (which includes deferred rows
-        # and knows nothing about skew). Sketches ONLY influence widths —
-        # membership (dedup, seen, budgets) never reads them.
-        self._width_knobs: dict | None = None
-        # (round, exception text) of every sketch read that failed; the
-        # round it sized fell back to manifest counts
-        self.sketch_errors: list[tuple[int, str]] = []
         # AIMD politeness-budget adaptation (VERDICT r6 directive #3,
         # design b92fc25): when on, the budget dim schedule_round
         # broadcast-joins is RECOMPUTED at every crawl boundary from the
         # accumulated per-host round counters (the A1 family) via
         # scheduling.aimd_budgets — budgets halve on a measured bad
         # round ((errors+blocked)/fetched ≥ hot_milli/1000) and recover
-        # additively, bounded by [1, aimd_max_budget], over a sliding
-        # window of the last ``aimd_window`` rounds. The recurrence is
+        # additively, bounded by [1, AIMD_MAX_BUDGET], over a sliding
+        # window of the last ``AIMD_WINDOW`` rounds. The recurrence is
         # data-encoded (unrolled integer CASE chain, one host-keyed
         # exchange); budgets steer SCHEDULING only — membership (dedup,
         # seen) never reads them. A user-supplied static ``budgets``
@@ -189,9 +161,7 @@ class CrawlEngine:
         # Sequential-oracle parity: oracle/sequential.py implements the
         # identical recurrence (tests/test_crawl_parity.py).
         self.adaptive_budget = bool(adaptive_budget)
-        self.aimd_max_budget = aimd_max_budget
         self.aimd_hot_milli = aimd_hot_milli
-        self.aimd_window = aimd_window
         # the window of per-host counters, checkpointed in memory; a
         # fresh engine resuming mid-crawl rebuilds it from fetch_log
         # (_aimd_restore) and so holds the same budget dim an
@@ -285,52 +255,22 @@ class CrawlEngine:
         ready = frontier.filter(F.col("not_before_round") <= r)
         backoff = frontier.filter(F.col("not_before_round") > r)
 
-        unique = first_discovery(ready)
-        # retried rows (attempts>0) were deliberately left out of seen —
-        # the anti-join naturally lets them through. The Bloom pre-filter
-        # pays off once the seen set dwarfs the per-round frontier; the
-        # fetch log's manifest row count estimates it for free AND
-        # survives resume() in a new process (in-memory self.stats is
-        # empty there). The count includes the requeued rows, so it
-        # overestimates the seen set: any error goes toward using the
-        # filter.
-        log_head = self.log_t.current_snapshot()
-        seen_estimate = log_head.get("total_rows", 0) if log_head else 0
-        new = dedup_against_seen(
-            unique,
-            self.url_seen(),
-            use_bloom=seen_estimate > self.bloom_threshold,
-            seen_count=seen_estimate,
-            fpp=cfg.bloom_fpp,
-        )
+        # retried rows (attempts>0) left the seen set when they were
+        # requeued, so the anti-join lets them through
+        new = dedup_against_seen(first_discovery(ready), self.url_seen())
         if self.robots is not None:
             new = apply_robots(new, self.robots)
 
-        # skew salting engages only when the round is big enough to need
-        # it (manifest row counts make the size check free); below the
-        # threshold the single-phase Window is strictly cheaper. When
-        # last round's next-frontier sketches left knobs for THIS round,
-        # its HLL estimate replaces the manifest count (the manifest is
-        # the whole table — deferred rows included — and a round-r
-        # estimate at ±2% beats a table count that can be off by the
-        # deferred share) and the CMS max-bucket bound sizes the
-        # hot-host chunk.
+        # every size below comes from the frontier manifest's row count
+        # (free: the commit wrote it). Skew salting engages only when the
+        # round is big enough to need it; below the threshold the
+        # single-phase Window is strictly cheaper.
         fr_head = self.frontier_t.current_snapshot()
-        frontier_rows = fr_head.get("total_rows", 0) if fr_head else 0
-        knobs = self._width_knobs
-        if not (knobs and knobs.get("at_round") == r):
-            knobs = None
-        est_rows = knobs["est_urls"] if knobs else frontier_rows
-        fetch_chunk = None
-        if knobs and self.fetch_backend != "http":
-            # spread the hottest host over ~8 kernel tasks; CMS max-
-            # bucket only OVERestimates depth (collisions add), so the
-            # chunk only errs toward more spread, never a straggler
-            fetch_chunk = max(2048, min(knobs["est_hot_depth"] // 8 + 1, 25000))
+        est_rows = fr_head.get("total_rows", 0) if fr_head else 0
         salted = (
             self.salted
             if isinstance(self.salted, bool)
-            else est_rows > self.salt_threshold
+            else est_rows > SALT_THRESHOLD
         )
         # one ranked frame feeds both the fetch and (through ``deferred``:
         # the ready overflow plus the backoff rows) the next frontier, so
@@ -360,7 +300,6 @@ class CrawlEngine:
         fetched = fetch_frontier(
             scheduled, self.world, backend=self.fetch_backend,
             size_hint=est_rows if est_rows else None,
-            chunk=fetch_chunk,
         )
         # one round = one materialization: cache the kernel output so the
         # documents/links/retries branches don't re-fetch; the same job
@@ -488,28 +427,16 @@ class CrawlEngine:
                 # ledger back for release after the pool instead of
                 # freeing it here
                 rebalance = pool.submit(self._aimd_rebalance, fetched, r)
-            # main thread: write the next frontier straight from its
-            # plan. The write sketches round r+1's READY slice for its
-            # width knobs: an HLL++ distinct-URL estimate (rsd 0.02 →
-            # p=12) and a 4096 × 4 count-min sketch of its hosts — the
-            # cms_build shape — per-task partial aggregates merged on the
-            # driver, so no exchange and no extra job.
-            ready_next = F.col("not_before_round") <= r + 1
-            width_obs = Observation()
+            # main thread: write the next frontier straight from its plan
             self.frontier_t.commit(
-                next_frontier.observe(
-                    width_obs,
-                    F.approx_count_distinct(
-                        F.when(ready_next, F.col("url_hash")), 0.02
-                    ).alias("est_urls"),
-                    F.count_min_sketch(
-                        F.when(ready_next, F.col("host")),
-                        F.lit(2 / 4096), F.lit(1 - 2**-4), F.lit(0),
-                    ).alias("cms"),
-                ).coalesce(n_out),
+                next_frontier.coalesce(n_out),
                 mode="replace", lineage={"round": r + 1},
             )
-            self._width_knobs = self._read_width_knobs(width_obs, r + 1)
+            if maintain:
+                # every round replaces the frontier; keep the snapshot
+                # this round read (the held ranked frame may rescan it)
+                # and the one just committed
+                self.frontier_t.expire_snapshots(keep_last=2)
             for f_ in futures:
                 f_.result()
             old_health = rebalance.result() if self.adaptive_budget else None
@@ -564,7 +491,7 @@ class CrawlEngine:
         Returns the previous ledger (None in round 0): the round's own
         plans still read it through the budget dim, so the caller frees
         it when the round ends."""
-        lo = max(0, r + 1 - self.aimd_window)
+        lo = max(0, r + 1 - AIMD_WINDOW)
         hc = _host_counters(fetched)
         health = hc if self._host_health is None else (
             self._host_health.unionByName(hc)
@@ -584,7 +511,7 @@ class CrawlEngine:
         log twice. Each ``(url_hash, round)`` therefore counts once, from
         one whole row (the least of the two runs' rows), so a URL whose
         re-run outcome differed counts one run's outcome, never a mix."""
-        lo = max(0, next_round - self.aimd_window)
+        lo = max(0, next_round - AIMD_WINDOW)
         rows = (
             self.log_t.read()
             .filter((F.col("round") >= lo) & (F.col("round") < next_round))
@@ -612,7 +539,7 @@ class CrawlEngine:
             health.withColumn("round", F.col("round") - lo),
             n_rounds=next_round - lo,
             base_budget=self.config.default_host_budget,
-            max_budget=self.aimd_max_budget,
+            max_budget=AIMD_MAX_BUDGET,
             hot_milli=self.aimd_hot_milli,
         )
         self.budgets = bud.select(
@@ -620,42 +547,6 @@ class CrawlEngine:
             F.col("budget").cast("int").alias("max_fetches_per_round"),
             F.lit(None).cast("int").alias("crawl_delay_ms"),
         )
-
-    def _read_width_knobs(self, obs: Observation, at_round: int) -> dict | None:
-        """Round ``at_round``'s width knobs from the sketches its ready
-        slice's write observed.
-
-        * ``est_urls`` — HLL++ (p=12, ±~2%) distinct url_hash over rows
-          eligible at ``at_round`` (the manifest count can't exclude
-          deferred rows). Those rows are not yet deduped against the
-          seen set, so it over-counts the round's new URLs by the
-          already-seen ones; it sizes widths only, never membership;
-        * ``est_hot_depth`` — ``cms_max_bucket`` of the count-min sketch
-          of their hosts, a depth bound that errs only toward more
-          spread.
-
-        An empty ready slice gives no knobs. A failed read or decode
-        gives none either — the next round falls back to manifest
-        counts — and is recorded in ``sketch_errors`` with a warning,
-        never raised.
-        """
-        try:
-            m = obs.get
-            if not m["est_urls"]:
-                return None
-            return {
-                "at_round": at_round,
-                "est_urls": int(m["est_urls"]),
-                "est_hot_depth": cms_max_bucket(m["cms"]),
-            }
-        except Exception as exc:  # noqa: BLE001 — advisory path, never fatal
-            self.sketch_errors.append((at_round, repr(exc)))
-            warnings.warn(
-                f"width sketch for round {at_round} failed, falling back to "
-                f"manifest counts: {exc!r}",
-                RuntimeWarning,
-            )
-            return None
 
     def _journal_metrics(self, st: RoundStats) -> None:
         """Append the round's metrics to a JSONL journal in the state dir

@@ -185,6 +185,7 @@ class SnapshotTable:
         keep = snaps[-keep_last:]
         drop = snaps[:-keep_last]
         live = {f for m in keep for f in m["files"]}
+        live_dirs = {os.path.dirname(f) for f in live}
         removed = 0
         for m in drop:
             for f in m["files"]:
@@ -194,11 +195,11 @@ class SnapshotTable:
             os.remove(
                 os.path.join(self._manifest_dir, m["snapshot_id"] + ".json")
             )
-        # prune now-empty data dirs
-        for d in os.listdir(self.dir):
-            full = os.path.join(self.dir, d)
-            if d.startswith("data-") and os.path.isdir(full) and not os.listdir(full):
-                shutil.rmtree(full)
+            # the commit's own data dir, with the _SUCCESS and checksum
+            # files the writer leaves beside the parquet files
+            data_dir = os.path.join(self.dir, f"data-{m['snapshot_id']}")
+            if data_dir not in live_dirs:
+                shutil.rmtree(data_dir, ignore_errors=True)
         return removed
 
     # -- read -----------------------------------------------------------------
