@@ -3,13 +3,8 @@
 ``entry(spark)`` runs the flagship "one crawl round" spine on sf0.001.
 ``queries()`` exposes one DataFrame query per implemented operator from
 SURVEY.md §2; ``oracle_sql()`` gives the DuckDB-equivalent ANSI SQL.
-
-Oracle strategy: crawl-shaped inputs (URLs, statuses, link graphs) are
-derived DETERMINISTICALLY from the driver's TPC-H-ish tables with pure
-integer/string arithmetic expressible in both engines, so every operator
-is checkable end-to-end with no engine-private randomness. The derivation
-constants live in ``_D`` below and are mirrored verbatim in the SQL
-strings.
+Both are views over ``webcrawler_go_spark.queries``, where each query is
+declared once, next to its oracle, in its family's module.
 """
 
 from __future__ import annotations
@@ -17,8 +12,6 @@ from __future__ import annotations
 import os
 import sys
 from collections.abc import Callable
-
-import pandas as pd
 
 # the engine package lives next to this file; make imports work no matter
 # which cwd the driver invokes from
@@ -28,6183 +21,148 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import Window
 
-from webcrawler_go_spark.functions.classify import (
-    BOT_INDICATORS,
-    error_taxonomy,
-    fetch_disposition,
-    has_skipped_extension,
-    is_crawlable_href,
-    status_class,
-)
-from webcrawler_go_spark.functions.urls import (
-    canonicalize_cols,
-    canonicalize_sql,
-    sanitize_filename_cols,
-    sanitize_headline_filename_cols,
-)
-from webcrawler_go_spark.operators.textanalysis import LANG_STOPWORDS
+from webcrawler_go_spark.queries import REGISTRY
+from webcrawler_go_spark.queries.common import canon_corpus
+from webcrawler_go_spark.queries.urls import _frontier
 
 SF_DEFAULT = "/root/testdata/sf0.001"
 
-# derivation constants (mirrored in every oracle SQL string)
-_D = {
-    "n_hosts": 41,
-    "n_pages": 997,
-}
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
-
-
-def _spread(df: DataFrame, mult: int = 2) -> DataFrame:
-    """Round-robin repartition a scan-rooted frame to cluster width WHEN
-    its natural split count is deficient (guide §2.5: an unsplittable
-    input bounds every downstream map stage; the driver's single-file
-    tables hold 1-6 parquet row groups, so scan-side compute ran ≤6-way
-    on 32 cores). No-op whenever the input is already well-split — see
-    operators/partitioning.py for the full rationale."""
-    from webcrawler_go_spark.operators.partitioning import spread_to_cluster
-
-    return spread_to_cluster(df, mult)
-
-
-# ---------------------------------------------------------------------------
-# URL corpus: raw (messy) URLs derived from orders — exercises C1 edge rules
-# (missing scheme, uppercase scheme/host, empty path, query, fragment).
-# ---------------------------------------------------------------------------
-
-
-def url_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # spread the 2-row-group orders scan BEFORE the string synthesis +
-    # regex canonicalization that every corpus consumer pays — the
-    # shuffle moves two long columns (~24 MB at sf1.0), the unlocked
-    # compute parallelism is 2-way → cluster-wide
-    o = _spread(_t(spark, sf_dir, "orders").select("o_orderkey", "o_custkey"))
-    k = F.col("o_orderkey")
-    host = F.concat(
-        F.lit("host-"),
-        F.lpad((F.col("o_custkey") % _D["n_hosts"]).cast("string"), 4, "0"),
-        F.lit(".test"),
-    )
-    host = F.when(k % 13 == 0, F.upper(host)).otherwise(host)
-    scheme = (
-        F.when(k % 17 == 0, F.lit(""))
-        .when(k % 17 == 1, F.lit("HTTP://"))
-        .otherwise(F.lit("https://"))
-    )
-    path = F.when(k % 5 == 0, F.lit("")).otherwise(
-        F.concat(F.lit("/page/"), (k % _D["n_pages"]).cast("string"))
-    )
-    query = F.when(
-        k % 7 == 0, F.concat(F.lit("?session="), (k % 100).cast("string"))
-    ).otherwise(F.lit(""))
-    frag = F.when(
-        k % 11 == 0, F.concat(F.lit("#sec-"), (k % 10).cast("string"))
-    ).otherwise(F.lit(""))
-    return o.select(
-        k.alias("k"),
-        F.concat(scheme, host, path, query, frag).alias("url"),
-    )
-
-
-URL_CORPUS_SQL = """
-SELECT o_orderkey AS k,
-       (CASE WHEN o_orderkey % 17 = 0 THEN ''
-             WHEN o_orderkey % 17 = 1 THEN 'HTTP://'
-             ELSE 'https://' END)
-       || (CASE WHEN o_orderkey % 13 = 0
-                THEN upper('host-' || lpad(CAST(o_custkey % 41 AS VARCHAR), 4, '0') || '.test')
-                ELSE 'host-' || lpad(CAST(o_custkey % 41 AS VARCHAR), 4, '0') || '.test' END)
-       || (CASE WHEN o_orderkey % 5 = 0 THEN ''
-                ELSE '/page/' || CAST(o_orderkey % 997 AS VARCHAR) END)
-       || (CASE WHEN o_orderkey % 7 = 0 THEN '?session=' || CAST(o_orderkey % 100 AS VARCHAR) ELSE '' END)
-       || (CASE WHEN o_orderkey % 11 = 0 THEN '#sec-' || CAST(o_orderkey % 10 AS VARCHAR) ELSE '' END)
-       AS url
-FROM orders
-"""
-
-# canonical corpus = canonicalized URL parts (shared CTE for oracles)
-_C = canonicalize_sql("url")
-CANON_SQL = f"""
-WITH corpus AS ({URL_CORPUS_SQL}),
-canon AS (
-  SELECT k, url,
-         {_C['url_norm']} AS url_norm,
-         {_C['host']} AS host,
-         {_C['path']} AS path
-  FROM corpus
+# The driver records only the first 50 entries of queries(), so the
+# order is kept explicit here.
+QUERY_ORDER = (
+    "adaptive_crawl",
+    "embedding_ivfpq_query_only",
+    "webdata_pipeline",
+    "token_budget_fill",
+    "html_text_extract",
+    "warc_source",
+    "warc_cdx_index",
+    "warc_source_split",
+    "hits_scores",
+    "crawl_multiround",
+    "resume_crawl",
+    "adaptive_fetch_width",
+    "streaming_crawl",
+    "capture_crawl",
+    "redirect_chain",
+    "head_probe",
+    "pack_sequences",
+    "pagerank",
+    "dedup_semantic_closure",
+    "mixture_resample",
+    "pdf_text_extract",
+    "pdf_cid_extract",
+    "pdf_filters_extract",
+    "docx_text_extract",
+    "global_counters",
+    "status_histogram",
+    "error_taxonomy",
+    "derived_rates",
+    "frontier_union",
+    "same_host_filter",
+    "broken_links",
+    "image_size_threshold",
+    "dedup_minhash_lsh",
+    "dedup_simhash",
+    "robots_filter",
+    "retry_backoff_filter",
+    "bot_protection",
+    "bot_protection_sitemap",
+    "pagination_synthesis",
+    "archive_url_generation",
+    "token_counts",
+    "doc_fingerprint",
+    "media_decode_wav",
+    "media_metadata",
+    "boilerplate_ngrams",
+    "text_repetition",
+    "text_normalize",
+    "sample_stratified",
+    "pii_scrub",
+    "ngram_contamination",
+    "embedding_ivfpq_topk",
+    "embedding_ivfpq_rerank",
+    "adaptive_budget",
+    "perplexity_buckets",
+    "bpe_merges",
+    "bm25_retrieval",
+    "embedding_pq_topk",
+    "embedding_pq_rerank",
+    "dsir_importance",
+    "bigram_lm_scores",
+    "bpe_encode_corpus",
+    "spider_trap_detect",
+    "recrawl_schedule",
+    "quality_classifier",
+    "urlseen_hll",
+    "host_url_hll",
+    "cms_heavy_hitters",
+    "fetch_latency_quantiles",
+    "bloom_seen_audit",
+    "cuckoo_requeue_audit",
+    "events_window_agg",
+    "events_sessionize",
+    "events_error_rate",
+    "headline_filename",
+    "resolve_reference",
+    "lastmod_date_parse",
+    "targets_file_source",
+    "dedup_jaccard_pairs",
+    "dedup_simhash_pairs",
+    "url_hash31",
+    "visited_dedup",
+    "per_host_fetch_order",
+    "per_host_fetch_sequence",
+    "politeness_budget_topk",
+    "props_json_extract",
+    "feed_field_coalesce",
+    "tag_filter",
+    "media_tiff_container",
+    "media_pdf_cmyk_wrap",
+    "url_canonicalize",
+    "rendered_dom_source",
+    "extract_links_rendered",
+    "streaming_append_sink",
+    "duplicate_passages",
+    "tfidf_top_terms",
+    "embedding_cosine_tiled",
+    "media_frame_sample",
+    "lang_id",
+    "text_quality",
+    "embedding_ivf_topk",
+    "embedding_ann_lsh_banded",
+    "embedding_ann_topk",
+    "embedding_ann_lsh",
+    "dedup_embedding_semantic",
+    "embedding_cosine_pairs",
+    "curation_pipeline",
+    "substring_search",
+    "media_decode_png",
+    "media_cmyk_transform",
+    "streaming_window_agg",
+    "sitemap_output",
+    "truncate_ellipsis",
+    "filename_sanitize",
+    "gzip_decode",
+    "feed_capture_join",
+    "csv_sink",
+    "robots_parse",
+    "dedup_exact",
+    "status_class_predicate",
+    "scheme_filter",
+    "extension_skip_filter",
+    "path_prefix_filter",
+    "html_only_filter",
+    "content_type_dispatch",
 )
-"""
-
-
-def _k_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Just the corpus keys (k = o_orderkey), for aggregate queries whose
-    every column derives from k: skips url_corpus's spread exchange AND
-    the (already column-pruned) URL synthesis. Row-identical to
-    canon_corpus' k column — canon_corpus maps orders 1:1."""
-    return _t(spark, sf_dir, "orders").select(F.col("o_orderkey").alias("k"))
-
-
-def canon_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
-    c = url_corpus(spark, sf_dir)
-    parts = canonicalize_cols(F.col("url"))
-    return c.select(
-        "k",
-        "url",
-        parts["url_norm"].alias("url_norm"),
-        parts["host"].alias("host"),
-        parts["path"].alias("path"),
-    )
-
-
-# synthetic fetch-log fields — pure integer arithmetic on k (FIXTURES §7 mix)
-def _status_col(k):
-    r = k % 100
-    return (
-        F.when(r < 88, 200)
-        .when(r < 92, 404)
-        .when(r < 95, 403)
-        .when(r < 97, 503)
-        .when(r < 98, 429)
-        .otherwise(301)
-    )
-
-
-_STATUS_SQL = """(CASE WHEN k % 100 < 88 THEN 200
-      WHEN k % 100 < 92 THEN 404
-      WHEN k % 100 < 95 THEN 403
-      WHEN k % 100 < 97 THEN 503
-      WHEN k % 100 < 98 THEN 429
-      ELSE 301 END)"""
-
-
-def _ctype_col(k):
-    r = k % 10
-    return (
-        F.when(r < 7, "text/html")
-        .when(r == 7, "application/pdf")
-        .when(r == 8, "image/jpeg")
-        .otherwise(
-            "application/vnd.openxmlformats-officedocument.wordprocessingml.document"
-        )
-    )
-
-
-_CTYPE_SQL = """(CASE WHEN k % 10 < 7 THEN 'text/html'
-      WHEN k % 10 = 7 THEN 'application/pdf'
-      WHEN k % 10 = 8 THEN 'image/jpeg'
-      ELSE 'application/vnd.openxmlformats-officedocument.wordprocessingml.document' END)"""
-
-_BYTES_SQL = "((k * 131 + 7919) % 500000)"
-
-
-def _bytes_col(k):
-    return (k * 131 + 7919) % 500000
-
-
-# ---------------------------------------------------------------------------
-# queries
-# ---------------------------------------------------------------------------
-
-
-def q_url_canonicalize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """C1: canonicalize messy URLs (strip fragment, default scheme,
-    lowercase scheme+host, empty path → '/')."""
-    return canon_corpus(spark, sf_dir).select("k", "url", "url_norm", "host", "path")
-
-
-def q_visited_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """J1: candidates (lineitem-derived, with natural dups) anti-joined
-    against the seen set (orders where k%3=0) → distinct new URLs.
-
-    r8 physical rewrite (result-identical, oracle unchanged): the naive
-    shape ran the regex canonicalization TWICE (candidate + seen
-    branches), broadcast the 1.5M-row canon table (~180 MB hash
-    relation), and shuffled the 6M-row join output into a distinct.
-    Both branches are projections of ONE canon pass, so compute it once
-    and fold the anti-join + distinct into a single url_norm aggregate:
-    a url_norm is in the answer iff some k ∈ lineitem maps to it and no
-    k ≡ 0 (mod 3) maps to it. Exchanges: lineitem key distinct (longs,
-    map-side partial agg) + one 1.5M-row url_norm aggregate; the only
-    join left broadcasts the distinct key set (~12 MB of longs)."""
-    li_k = (
-        _t(spark, sf_dir, "lineitem")
-        .select(F.col("l_orderkey").alias("k"))
-        .distinct()
-        .withColumn("_in_li", F.lit(1))
-    )
-    c = canon_corpus(spark, sf_dir).select("k", "url_norm")
-    return (
-        c.join(F.broadcast(li_k), "k", "left")
-        .groupBy("url_norm")
-        .agg(
-            F.max(F.when(F.col("k") % 3 == 0, 1).otherwise(0)).alias("_seen"),
-            F.max(F.coalesce(F.col("_in_li"), F.lit(0))).alias("_cand"),
-        )
-        .filter((F.col("_seen") == 0) & (F.col("_cand") == 1))
-        .select("url_norm")
-    )
-
-
-def q_frontier_union(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """J2: union of two discovery sources + dedup, counted per host.
-
-    r8: the two source branches are row-disjoint filters of ONE canon
-    pass and the union feeds a distinct, so UNION-then-distinct equals
-    a single disjunctive filter — one canonicalization pass instead of
-    two and one fewer union leg (result-identical; oracle unchanged)."""
-    return (
-        canon_corpus(spark, sf_dir)
-        .filter((F.col("k") % 2 == 0) | (F.col("k") % 3 == 0))
-        .select("url_norm", "host")
-        .distinct()
-        .groupBy("host")
-        .agg(F.count("*").alias("n_urls"))
-    )
-
-
-def _frontier(spark, sf_dir, cluster_by: tuple = ()):
-    """Frontier rows with crawl-order keys derived from lineitem.
-
-    ``cluster_by``: optional subset of the output columns to hash-
-    repartition on BEFORE the distinct. HashPartitioning on a subset of
-    the distinct keys satisfies the aggregate's clustering requirement,
-    so the distinct reuses the exchange — and so does any downstream
-    window partitioned by the same columns: one exchange instead of
-    two/three (guide §2.4 "two operations keyed the same way can share
-    one exchange")."""
-    li = _t(spark, sf_dir, "lineitem").select(
-        F.col("l_orderkey").alias("k"),
-        (F.col("l_orderkey") % 4).cast("int").alias("round"),
-        (F.col("l_suppkey") % 50).cast("long").alias("parent_seq"),
-        F.col("l_linenumber").cast("int").alias("link_pos"),
-    )
-    fr = li.join(canon_corpus(spark, sf_dir), "k").select(
-        "url_norm", "host", "round", "parent_seq", "link_pos"
-    )
-    if cluster_by:
-        n = spark.sparkContext.defaultParallelism * 2
-        fr = fr.repartition(n, *[F.col(c) for c in cluster_by])
-    return fr.distinct()
-
-
-_FRONTIER_SQL = (
-    CANON_SQL
-    + """, frontier AS (
-  SELECT DISTINCT c.url_norm, c.host,
-         CAST(l.l_orderkey % 4 AS INT) AS round,
-         CAST(l.l_suppkey % 50 AS BIGINT) AS parent_seq,
-         CAST(l.l_linenumber AS INT) AS link_pos
-  FROM lineitem l JOIN canon c ON c.k = l.l_orderkey
-)
-"""
-)
-
-
-def q_per_host_fetch_order(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """W1: deterministic per-host fetch order — row_number over
-    (round, parent_seq, link_pos, url_norm)."""
-    w = Window.partitionBy("host").orderBy("round", "parent_seq", "link_pos", "url_norm")
-    # cluster_by=host: the distinct AND the rank window ride ONE host
-    # exchange (full-ranked output ⇒ no prune applies; see the
-    # politeness query for the pruned variant)
-    return _frontier(spark, sf_dir, cluster_by=("host",)).select(
-        "host",
-        "url_norm",
-        F.row_number().over(w).cast("int").alias("host_rank"),
-    )
-
-
-def q_politeness_budget_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """W2: per-host budget top-k. Budget dim derived from the host id
-    (10 + host_id % 11) — keep rank ≤ budget.
-
-    r8 physical rewrite (result-identical): ranking ALL ~150k rows per
-    host through Window.partitionBy(host) funnels each host into one
-    task (41 tasks at sf1.0 — the politeness.py skew note as a measured
-    fact, 15-23 s). Only ranks ≤ budget ≤ 20 survive, so prune first
-    with a salted local rank: local rank within (host, salt) is ≤ the
-    host-global rank, hence every row with global rank ≤ budget
-    survives the local filter, and because ALL its predecessors survive
-    too, the exact window re-ranked over survivors assigns it the SAME
-    rank — while any row with true rank > budget keeps ≥ budget+1
-    survivors ahead of it and still filters out. The exact per-host
-    window then sorts ≤ 64·budget rows per host instead of the corpus."""
-    li = _t(spark, sf_dir, "lineitem").select(
-        F.col("l_orderkey").alias("k"),
-        (F.col("l_orderkey") % 4).cast("int").alias("round"),
-        (F.col("l_suppkey") % 50).cast("long").alias("parent_seq"),
-        F.col("l_linenumber").cast("int").alias("link_pos"),
-    )
-    raw = li.join(canon_corpus(spark, sf_dir), "k").select(
-        "url_norm", "host", "round", "parent_seq", "link_pos",
-        F.pmod(F.xxhash64("url_norm"), F.lit(64)).alias("_salt"),
-    )
-    # _salt is a function of url_norm, so distinct over the widened
-    # column set equals _frontier's distinct — and carrying it INTO the
-    # distinct lets the (host, _salt) repartition serve the distinct
-    # AND the local-rank window with a single exchange (guide §2.4)
-    n = spark.sparkContext.defaultParallelism * 2
-    fr = raw.repartition(n, F.col("host"), F.col("_salt")).distinct()
-    budget = (
-        F.lit(10) + F.substring(F.col("host"), 6, 4).cast("int") % 11
-    ).cast("int")
-    order_cols = ["round", "parent_seq", "link_pos", "url_norm"]
-    fr = fr.withColumn("budget", budget)
-    w_local = Window.partitionBy("host", "_salt").orderBy(*order_cols)
-    pruned = fr.withColumn("_lr", F.row_number().over(w_local)).filter(
-        F.col("_lr") <= F.col("budget")
-    )
-    w = Window.partitionBy("host").orderBy(*order_cols)
-    return (
-        pruned.withColumn("host_rank", F.row_number().over(w).cast("int"))
-        .filter(F.col("host_rank") <= F.col("budget"))
-        .groupBy("host")
-        .agg(
-            F.count("*").alias("n_scheduled"),
-            F.max("host_rank").cast("int").alias("max_rank"),
-        )
-    )
-
-
-def q_per_host_fetch_sequence(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """W1 as an ORDER-SENSITIVE artifact: the full per-host fetch
-    sequence joined into one string — puts crawl-order semantics
-    themselves under the driver's value-hash gate."""
-    fr = _frontier(spark, sf_dir)
-    ordered = F.array_sort(
-        F.collect_list(
-            F.struct("round", "parent_seq", "link_pos", "url_norm")
-        )
-    )
-    return fr.groupBy("host").agg(
-        F.array_join(
-            F.transform(ordered, lambda s: s["url_norm"]), "|"
-        ).alias("fetch_sequence")
-    )
-
-
-def q_dedup_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SimHash near-dup pairs (Hamming ≤ 3 via the pigeonhole block
-    join) — oracle-checked end to end."""
-    from webcrawler_go_spark.operators.textdedup import simhash_near_pairs
-
-    return simhash_near_pairs(_dup_docs(spark, sf_dir), max_hamming=1, bits=16)
-
-
-def q_retry_backoff_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """W3: data-encoded retry schedule — ready rows at round 3 are those
-    with not_before_round ≤ 3; others wait."""
-    fr = canon_corpus(spark, sf_dir).select(
-        "url_norm",
-        (F.col("k") % 5).cast("int").alias("attempts"),
-        ((F.col("k") % 5) + (F.col("k") % 3)).cast("int").alias("not_before_round"),
-    )
-    return fr.filter(F.col("not_before_round") <= 3).select(
-        "url_norm", "attempts", "not_before_round"
-    )
-
-
-def q_status_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A2: counts by status class 2xx/3xx/4xx/5xx (crawler.go:654-663)."""
-    log = _k_corpus(spark, sf_dir).select(
-        "k", _status_col(F.col("k")).alias("status")
-    )
-    return (
-        log.groupBy(status_class(F.col("status")).alias("status_class"))
-        .agg(F.count("*").alias("n"))
-    )
-
-
-def q_status_class_predicate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """F6: disposition classify — blocked (403/503/429) > error(≥400) >
-    redirect(3xx) > ok."""
-    log = canon_corpus(spark, sf_dir).select(
-        "k", "url_norm", _status_col(F.col("k")).alias("status")
-    )
-    return log.select(
-        "url_norm",
-        "status",
-        fetch_disposition(F.col("status")).alias("disposition"),
-    )
-
-
-def q_error_taxonomy(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A3: network-error taxonomy by substring (crawler.go:1030-1042)."""
-    errs = _k_corpus(spark, sf_dir).select(
-        "k",
-        F.when(F.col("k") % 5 == 0, "dial tcp: i/o timeout")
-        .when(F.col("k") % 5 == 1, "connect: connection refused")
-        .when(F.col("k") % 5 == 2, "lookup example: no such host")
-        .when(F.col("k") % 5 == 3, "x509: certificate has expired")
-        .otherwise("EOF")
-        .alias("err"),
-    )
-    return errs.groupBy(error_taxonomy(F.col("err")).alias("error_kind")).agg(
-        F.count("*").alias("n")
-    )
-
-
-def q_global_counters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A1: the reference's stats panel as ONE global aggregate: pages,
-    bytes, per-class counts, blocked count."""
-    log = _k_corpus(spark, sf_dir).select(
-        "k",
-        _status_col(F.col("k")).alias("status"),
-        _bytes_col(F.col("k")).alias("bytes"),
-    )
-    return log.agg(
-        F.count("*").alias("pages_checked"),
-        F.sum("bytes").alias("bytes_downloaded"),
-        F.sum(F.when((F.col("status") >= 200) & (F.col("status") < 300), 1).otherwise(0)).alias("status_2xx"),
-        F.sum(F.when((F.col("status") >= 300) & (F.col("status") < 400), 1).otherwise(0)).alias("status_3xx"),
-        F.sum(F.when((F.col("status") >= 400) & (F.col("status") < 500), 1).otherwise(0)).alias("status_4xx"),
-        F.sum(F.when(F.col("status") >= 500, 1).otherwise(0)).alias("status_5xx"),
-        F.sum(F.when(F.col("status").isin(403, 503, 429), 1).otherwise(0)).alias("blocked_count"),
-    )
-
-
-def q_derived_rates(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A4: avg page size (bytes/page) over OK pages — integer math then a
-    single final division."""
-    log = _k_corpus(spark, sf_dir).select(
-        "k",
-        _status_col(F.col("k")).alias("status"),
-        _bytes_col(F.col("k")).alias("bytes"),
-    ).filter(F.col("status") == 200)
-    # Integer division (DIV) on both sides — a float ROUND here straddles
-    # Spark HALF_UP vs DuckDB rounding and double-formatting differences,
-    # which is exactly the kind of boundary that broke the round-1 hash.
-    return log.agg(
-        F.count("*").alias("pages"),
-        F.sum("bytes").alias("bytes_total"),
-    ).select(
-        "pages",
-        "bytes_total",
-        F.expr("bytes_total DIV pages").alias("avg_page_bytes"),
-    )
-
-
-def q_same_host_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """F1: keep only links whose host equals the discovering page's host
-    (crawler.go:984-987); count kept + skipped-external per host."""
-    li = _t(spark, sf_dir, "lineitem")
-    pairs = li.select(
-        F.concat(
-            F.lit("host-"),
-            F.lpad((F.col("l_suppkey") % 7).cast("string"), 4, "0"),
-            F.lit(".test"),
-        ).alias("page_host"),
-        F.concat(
-            F.lit("host-"),
-            F.lpad((F.col("l_partkey") % 7).cast("string"), 4, "0"),
-            F.lit(".test"),
-        ).alias("link_host"),
-    )
-    return pairs.groupBy("page_host").agg(
-        F.sum(F.when(F.col("link_host") == F.col("page_host"), 1).otherwise(0)).alias("internal_links"),
-        F.sum(F.when(F.col("link_host") != F.col("page_host"), 1).otherwise(0)).alias("skipped_external"),
-    )
-
-
-def q_scheme_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """F3+F11: drop empty/pseudo hrefs (#, mailto:, tel:, javascript:,
-    data:) and non-http(s) schemes (sitemap.go:346-364)."""
-    hrefs = canon_corpus(spark, sf_dir).select(
-        "k",
-        F.when(F.col("k") % 9 == 0, F.lit("#top"))
-        .when(F.col("k") % 9 == 1, F.lit("mailto:x@example.com"))
-        .when(F.col("k") % 9 == 2, F.lit("tel:+1555"))
-        .when(F.col("k") % 9 == 3, F.lit("javascript:void(0)"))
-        .when(F.col("k") % 9 == 4, F.lit("ftp://files.example.com/a"))
-        .when(F.col("k") % 9 == 5, F.lit(""))
-        .otherwise(F.col("url"))
-        .alias("href"),
-    )
-    return hrefs.filter(is_crawlable_href(F.col("href"))).select("k", "href")
-
-
-def q_extension_skip_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """F4: skip the 27 non-page extensions (sitemap.go:375-390)."""
-    p = _t(spark, sf_dir, "part").select(
-        F.col("p_partkey").alias("pk"),
-        F.concat(
-            F.lit("/files/item-"),
-            F.col("p_partkey").cast("string"),
-            F.when(F.col("p_partkey") % 8 == 0, ".pdf")
-            .when(F.col("p_partkey") % 8 == 1, ".jpg")
-            .when(F.col("p_partkey") % 8 == 2, ".css")
-            .when(F.col("p_partkey") % 8 == 3, ".docx")
-            .when(F.col("p_partkey") % 8 == 4, ".html")
-            .when(F.col("p_partkey") % 8 == 5, ".GZ")
-            .otherwise(""),
-        ).alias("path"),
-    )
-    return p.filter(~has_skipped_extension(F.col("path"))).select("pk", "path")
-
-
-def q_path_prefix_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """F2: PathFilter — only URLs under /page/1 (prefix semantics,
-    sitemap.go:158-174)."""
-    return (
-        canon_corpus(spark, sf_dir)
-        .filter(F.col("path").startswith("/page/1"))
-        .select("url_norm", "path")
-        .distinct()
-    )
-
-
-def q_html_only_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """F5: only text/html responses survive (sitemap.go:239-245)."""
-    log = canon_corpus(spark, sf_dir).select(
-        "k", "url_norm", _ctype_col(F.col("k")).alias("content_type")
-    )
-    return log.filter(F.col("content_type").contains("text/html")).select(
-        "url_norm", "content_type"
-    )
-
-
-def q_content_type_dispatch(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """C7: route by Content-Type substring → pdf/docx/html/other counts
-    (crawler.go:806-828)."""
-    from webcrawler_go_spark.functions.classify import content_kind
-
-    log = canon_corpus(spark, sf_dir).select(
-        "k", _ctype_col(F.col("k")).alias("content_type")
-    )
-    return log.groupBy(content_kind(F.col("content_type")).alias("kind")).agg(
-        F.count("*").alias("n")
-    )
-
-
-def q_image_size_threshold(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """F10: oversized images — image/* responses with bytes > 100 KB
-    (crawler.go:947-954, threshold*1024 main.go:498)."""
-    log = canon_corpus(spark, sf_dir).select(
-        "k",
-        "url_norm",
-        _ctype_col(F.col("k")).alias("content_type"),
-        _bytes_col(F.col("k")).alias("bytes"),
-    )
-    return (
-        log.filter(F.col("content_type").startswith("image/"))
-        .filter(F.col("bytes") > 100 * 1024)
-        .select(
-            "url_norm",
-            "bytes",
-            F.round(F.col("bytes") / 1024.0, 2).alias("size_kb"),
-        )
-    )
-
-
-def q_bot_protection(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """F7: disjunctive bot-protection detection — any of the 16 indicator
-    substrings in the lowercased body (crawler.go:1001-1028)."""
-    d = _t(spark, sf_dir, "documents")
-    body = F.when(
-        F.col("doc_id") % 10 == 0,
-        F.concat(
-            F.lit("One moment... "),
-            F.lit(BOT_INDICATORS[0]),
-            F.lit(" "),
-            F.col("text"),
-        ),
-    ).when(
-        F.col("doc_id") % 10 == 1,
-        F.concat(F.lit("Attention Required! | Cloudflare — "), F.col("text")),
-    ).otherwise(F.col("text"))
-    from webcrawler_go_spark.functions.classify import bot_protection
-
-    return d.select(F.col("doc_id"), body.alias("body")).select(
-        "doc_id", bot_protection(F.col("body")).alias("is_blocked")
-    )
-
-
-def q_bot_protection_sitemap(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """F8: conjunctive challenge-page detection (sitemap.go:290-329) —
-    ALL substrings of a pattern must match; CDN name alone must NOT fire;
-    short-page heuristic (<2000 chars) included."""
-    from webcrawler_go_spark.functions.classify import sitemap_bot_protection
-
-    d = _t(spark, sf_dir, "documents")
-    body = (
-        F.when(
-            F.col("doc_id") % 11 == 0,
-            F.concat(F.lit("checking your browser ... please wait — "), F.col("text")),
-        )
-        .when(F.col("doc_id") % 11 == 1, F.lit("short: checking your browser"))
-        .when(
-            F.col("doc_id") % 11 == 2,
-            F.concat(F.lit("protected by Cloudflare — "), F.col("text")),
-        )
-        .otherwise(F.col("text"))
-    )
-    return d.select(
-        "doc_id", sitemap_bot_protection(body).alias("is_challenge")
-    )
-
-
-def q_substring_search(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """C6: case-sensitive substring search over document text
-    (crawler.go:822-827) — search mode's match predicate."""
-    d = _t(spark, sf_dir, "documents")
-    return d.filter(F.col("text").contains("spark")).select("doc_id", "n_chars")
-
-
-def q_pagination_synthesis(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """W4/X7: generate ?page=2..10 candidates for listing pages
-    (sitemap.go:508-541: listing = path ends '/' or extension-less)."""
-    base = (
-        canon_corpus(spark, sf_dir)
-        .filter(~F.col("path").rlike(r"\.[a-z0-9]+$"))
-        .filter(F.col("k") % 50 == 0)
-        .select("host", "path")
-        .distinct()
-    )
-    return base.select(
-        "host",
-        "path",
-        F.explode(F.sequence(F.lit(2), F.lit(10))).alias("page_n"),
-    ).select(
-        F.concat(
-            F.lit("https://"),
-            F.col("host"),
-            F.col("path"),
-            F.lit("?page="),
-            F.col("page_n").cast("string"),
-        ).alias("candidate_url")
-    )
-
-
-def q_archive_url_generation(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """W4: month-archive URL synthesis for news-like year paths
-    (sitemap.go:423-505): /news/<year>/ → 12 month URLs."""
-    months = [
-        "january", "february", "march", "april", "may", "june",
-        "july", "august", "september", "october", "november", "december",
-    ]
-    n = _t(spark, sf_dir, "nation").select(
-        F.concat(
-            F.lit("https://host-"),
-            F.lpad((F.col("n_nationkey") % 5).cast("string"), 4, "0"),
-            F.lit(".test/news/"),
-            (F.lit(2020) + F.col("n_nationkey") % 6).cast("string"),
-        ).alias("base")
-    ).distinct()
-    return n.select(
-        "base", F.explode(F.array(*[F.lit(m) for m in months])).alias("month")
-    ).select(
-        F.concat(F.col("base"), F.lit("/"), F.col("month"), F.lit("/")).alias(
-            "archive_url"
-        )
-    )
-
-
-def q_sitemap_output(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """L1+S8: sitemap rows — reachable ∧ HTML ∧ 2xx ∧ path-included URLs,
-    lexicographically sorted, with lastmod (sitemap.go:543-600).
-    Output set ⊂ traversal set (SURVEY §3.2)."""
-    o = _t(spark, sf_dir, "orders").select(
-        F.col("o_orderkey").alias("k"), F.col("o_orderdate")
-    )
-    c = canon_corpus(spark, sf_dir).join(o, "k")
-    rows = (
-        c.select(
-            "k",
-            "url_norm",
-            _status_col(F.col("k")).alias("status"),
-            _ctype_col(F.col("k")).alias("content_type"),
-            F.to_date("o_orderdate").alias("lastmod"),
-        )
-        .filter((F.col("status") == 200) & (F.col("content_type") == "text/html"))
-        .select(F.col("url_norm").alias("loc"), "lastmod")
-        .groupBy("loc")
-        .agg(F.max("lastmod").alias("lastmod"))
-        .orderBy("loc")
-    )
-    return rows
-
-
-def q_truncate_ellipsis(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """C12: s[:n-3]+'...' display truncation (crawler.go:499-504), n=40."""
-    d = _t(spark, sf_dir, "documents")
-    n = 40
-    return d.select(
-        "doc_id",
-        F.when(
-            F.length("text") > n,
-            F.concat(F.substring("text", 1, n - 3), F.lit("...")),
-        )
-        .otherwise(F.col("text"))
-        .alias("display_text"),
-    )
-
-
-def q_filename_sanitize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """C4: URL path → safe filename (pdfcapture.go:514-554), no-query fast
-    path (query-hash branch exercised in tests via the Go-parity UDF)."""
-    return (
-        canon_corpus(spark, sf_dir)
-        .select(
-            "url_norm",
-            sanitize_filename_cols(F.col("url_norm")).alias("filename"),
-        )
-        .distinct()
-    )
-
-
-def q_headline_filename(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """C5: headline+datecode → filename (jsonfeed.go:305-343)."""
-    c = _spread(_t(spark, sf_dir, "customer"))
-    headline = F.concat(
-        F.lit("Breaking: "), F.col("c_name"), F.lit(" wins (again)!")
-    )
-    datecode = F.when(
-        F.col("c_custkey") % 2 == 0,
-        F.concat(F.lit("2026"), F.lpad((F.col("c_custkey") % 12 + 1).cast("string"), 2, "0"), F.lit("15")),
-    ).otherwise(F.lit(None).cast("string"))
-    return c.select(
-        F.col("c_custkey").alias("ck"),
-        sanitize_headline_filename_cols(headline, datecode).alias("filename"),
-    )
-
-
-def q_broken_links(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """J4: link→page provenance — outlinks joined to their fetch status;
-    broken = status ≥ 400 or network error (crawler.go:830-888)."""
-    li = _t(spark, sf_dir, "lineitem").select(
-        F.col("l_orderkey").alias("k"),
-        (F.col("l_partkey") % 1000).alias("lk"),
-        F.col("l_linenumber").cast("int").alias("link_pos"),
-    )
-    pages = canon_corpus(spark, sf_dir).select("k", F.col("url_norm").alias("found_on"))
-    # link target = another corpus URL keyed by lk-derived order key
-    targets = canon_corpus(spark, sf_dir).select(
-        (F.col("k") % 1000).alias("lk"), F.col("url_norm").alias("href")
-    ).groupBy("lk").agg(F.min("href").alias("href"))
-    links = li.join(pages, "k").join(targets, "lk")
-    status = canon_corpus(spark, sf_dir).select(
-        F.col("url_norm").alias("href2"), _status_col(F.col("k")).alias("status")
-    ).groupBy("href2").agg(F.min("status").alias("status"))
-    return (
-        links.join(status, links["href"] == status["href2"], "left")
-        .filter(F.col("status") >= 400)
-        .select("found_on", F.col("href").alias("broken_url"), "status", "link_pos")
-    )
-
-
-def q_resolve_reference(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """C2: RFC-3986 reference resolution on the common grammar —
-    absolute kept, '/x' → scheme://host/x, relative → parent dir
-    (crawler.go:862-866; full urljoin parity via the pandas UDF is unit
-    tested, this query covers the SQL-expressible grammar)."""
-    base = canon_corpus(spark, sf_dir).select("k", "url_norm", "host", "path")
-    href = (
-        F.when(F.col("k") % 4 == 0, F.lit("https://ext.test/abs"))
-        .when(F.col("k") % 4 == 1, F.lit("/rooted/page"))
-        .when(F.col("k") % 4 == 2, F.lit("child"))
-        .otherwise(F.lit("../up"))
-    )
-    scheme_host = F.concat(F.lit("https://"), F.col("host"))
-    parent_dir = F.regexp_replace(F.col("path"), "[^/]*$", "")
-    resolved = (
-        F.when(href.rlike("^https?://"), href)
-        .when(href.startswith("/"), F.concat(scheme_host, href))
-        .when(
-            href.startswith("../"),
-            F.concat(
-                scheme_host,
-                F.regexp_replace(parent_dir, "[^/]*/$", ""),
-                F.regexp_replace(href, r"^\.\./", ""),
-            ),
-        )
-        .otherwise(F.concat(scheme_host, parent_dir, href))
-    )
-    return base.select("k", href.alias("href"), resolved.alias("resolved"))
-
-
-def q_lastmod_date_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """C10: RFC-1123 Last-Modified header → date (sitemap.go:250-253)."""
-    o = _t(spark, sf_dir, "orders").select(
-        F.col("o_orderkey").alias("k"), F.to_date("o_orderdate").alias("d")
-    )
-    hdr = F.concat(
-        F.date_format("d", "EEE, dd MMM yyyy"), F.lit(" 08:30:00 GMT")
-    )
-    # Spark ≥3 bans day-name fields in PARSE patterns (they're redundant):
-    # strip the 'Mon, ' prefix before parsing, as real header parsers do
-    parsed = F.to_timestamp(
-        F.regexp_replace(hdr, "^[A-Za-z]+, ", ""), "dd MMM yyyy HH:mm:ss zzz"
-    )
-    return o.select(
-        "k",
-        hdr.alias("last_modified_header"),
-        F.to_date(parsed).alias("lastmod"),
-    )
-
-
-def q_robots_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Robots allow/deny longest-prefix-match (FIXTURES §6, tie→allow):
-    URLs surviving the deny rules, counted per host."""
-    c = canon_corpus(spark, sf_dir).select("url_norm", "host", "path").distinct()
-    s = _t(spark, sf_dir, "supplier")
-    robots = s.select(
-        F.concat(
-            F.lit("host-"),
-            F.lpad((F.col("s_suppkey") % _D["n_hosts"]).cast("string"), 4, "0"),
-            F.lit(".test"),
-        ).alias("host"),
-        F.when(F.col("s_suppkey") % 2 == 0, "deny").otherwise("allow").alias("rule"),
-        F.concat(F.lit("/page/"), (F.col("s_suppkey") % 10).cast("string")).alias(
-            "path_pfx"
-        ),
-    ).distinct()
-    from webcrawler_go_spark.operators.politeness import apply_robots
-
-    fr = c.withColumn("url_hash", F.xxhash64("url_norm"))
-    allowed = apply_robots(fr, robots)
-    return allowed.groupBy("host").agg(F.count("*").alias("n_allowed"))
-
-
-def q_targets_file_source(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """S2: batch targets-file source — read text, extract URLs, dedup
-    (reference README.md:300-331 batch capture mode)."""
-    t = spark.read.text("/root/repo/fixtures/targets.txt")
-    urls = t.select(
-        F.explode(
-            F.regexp_extract_all(F.col("value"), F.lit(r"https?://[^\s]+"), 0)
-        ).alias("url")
-    )
-    return urls.distinct()
-
-
-def _url_hash31_oracle_sql() -> str:
-    """The corpus has exactly 100 distinct query strings (session=0..99);
-    the oracle joins a VALUES table of their hash31_hex8 values computed
-    by the SCALAR implementation (unit-tested against Go golden values,
-    pdfcapture.go:556-562) — the distributed Arrow UDF must match."""
-    from webcrawler_go_spark.hashing import hash31_hex8
-
-    vals = ",\n              ".join(
-        f"('session={n}', '{hash31_hex8(f'session={n}')}')" for n in range(100)
-    )
-    return (
-        f"WITH corpus AS ({URL_CORPUS_SQL}),\n"
-        f"golden(query, hash8) AS (VALUES {vals})\n"
-        "SELECT c.url, g.query, g.hash8\n"
-        "FROM corpus c JOIN golden g\n"
-        "  ON g.query = regexp_extract(c.url, '\\?([^#]*)', 1)\n"
-        "WHERE regexp_extract(c.url, '\\?([^#]*)', 1) <> ''"
-    )
-
-
-def q_url_hash31(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """C3: Go-parity filename hash over query strings via the Arrow UDF;
-    oracle = VALUES of the scalar implementation's hashes (golden-tested,
-    pdfcapture.go:556-562)."""
-    from webcrawler_go_spark.functions.urls import hash31_hex8_udf
-
-    c = url_corpus(spark, sf_dir)
-    q = F.regexp_extract("url", r"\?([^#]*)", 1)
-    return (
-        c.filter(q != "")
-        .select("url", q.alias("query"), hash31_hex8_udf()(q).alias("hash8"))
-    )
-
-
-HEAD_PROBE_WORLD_URLS = [
-    f"https://host-{h:04d}.test/page/{p}" for h in range(30) for p in range(10)
-]
-
-
-def q_head_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """S4: HEAD-probe surface — same fetch kernel, no body: per-URL
-    status for link validation (crawler.go:869-882). Probes a fixed
-    world-grammar URL set; the oracle is built from the SEQUENTIAL
-    scalar reference functions (the crawl-parity ground truth), so the
-    distributed kernel's dispositions are value-checked end to end."""
-    from webcrawler_go_spark.operators.fetch import fetch_frontier
-    from webcrawler_go_spark.worldgen import World
-
-    fr = spark.createDataFrame(
-        [(u, i) for i, u in enumerate(HEAD_PROBE_WORLD_URLS)],
-        "url_norm string, seq long",
-    ).select(
-        "url_norm",
-        F.xxhash64("url_norm").alias("url_hash"),
-        F.regexp_extract("url_norm", r"https://([^/]*)", 1).alias("host"),
-        F.regexp_extract("url_norm", r"https://[^/]*(/.*)", 1).alias("path"),
-        "seq",
-        F.lit(0).alias("round"),
-    )
-    probed = fetch_frontier(fr, World(), method="HEAD")
-    return probed.select("url", "status", "error_class")
-
-
-def _head_probe_oracle_sql() -> str:
-    """VALUES oracle computed from the scalar worldgen reference — the
-    same independent sequential implementation the parity suite trusts."""
-    from webcrawler_go_spark import worldgen
-    from webcrawler_go_spark.worldgen import World
-
-    w = World()
-    rows = []
-    for u in HEAD_PROBE_WORLD_URLS:
-        e = worldgen.error_class_of(w, u)
-        s = 0 if e is not None else worldgen.status_of(w, u)
-        e_sql = "NULL" if e is None else f"'{e}'"
-        rows.append(f"('{u}', {s}, {e_sql})")
-    vals = ",\n              ".join(rows)
-    return (
-        "SELECT url, CAST(status AS INT) AS status, CAST(error_class AS VARCHAR) AS error_class\n"
-        f"            FROM (VALUES {vals}) AS t(url, status, error_class)"
-    )
-
-
-RENDER_WORLD_URLS = [
-    f"https://host-{h:04d}.test/page/{p}" for h in range(12) for p in range(8)
-]
-
-
-def _render_urls_df(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame(
-        [(u,) for u in RENDER_WORLD_URLS], "url_norm string"
-    ).select(
-        "url_norm",
-        F.regexp_extract("url_norm", r"https://([^/]*)", 1).alias("host"),
-    )
-
-
-def q_rendered_dom_source(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """S6 rendered-dom-source (pdfcapture.go:226-305): the render kernel
-    over a fixed world-URL set — one row per URL carrying the JS eval's
-    exact output contract (absolute hrefs, javascript:/mailto:/tel:
-    filtered browser-side, newline-joined). The renderer is the
-    deterministic fake (no Chrome in this container — same honest-stub
-    policy as video decode; the chromium path emits per-row
-    render_error rows, pytest-covered); the oracle is golden VALUES
-    from the same scalar reference, so the kernel's payload is
-    value-checked byte-for-byte."""
-    from webcrawler_go_spark.operators.render import render_frontier
-    from webcrawler_go_spark.worldgen import World
-
-    return render_frontier(_render_urls_df(spark), World())
-
-
-def q_extract_links_rendered(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X3 extract-links-rendered (pdfcapture.go:440-467): split the
-    rendered payload on newlines, trim, drop empties, same-domain only —
-    pure Catalyst split/posexplode/filter over the S6 source, document
-    order preserved as link_pos."""
-    from webcrawler_go_spark.operators.render import (
-        extract_links_rendered,
-        render_frontier,
-    )
-    from webcrawler_go_spark.worldgen import World
-
-    return extract_links_rendered(render_frontier(_render_urls_df(spark), World()))
-
-
-def _sql_str(s: str) -> str:
-    return "'" + s.replace("'", "''") + "'"
-
-
-def _rendered_dom_oracle_sql() -> str:
-    """Golden VALUES from the scalar fake renderer (head_probe pattern):
-    url, host, the exact newline-joined payload, NULL render_error."""
-    from webcrawler_go_spark.worldgen import World, rendered_links_raw
-
-    w = World()
-    rows = []
-    for u in RENDER_WORLD_URLS:
-        host = u.split("/")[2]
-        rows.append(
-            f"({_sql_str(u)}, {_sql_str(host)}, "
-            f"{_sql_str(rendered_links_raw(w, u))}, CAST(NULL AS VARCHAR))"
-        )
-    vals = ",\n              ".join(rows)
-    return (
-        "SELECT url_norm, host, links_raw, render_error\n"
-        f"            FROM (VALUES {vals}) AS t(url_norm, host, links_raw, render_error)"
-    )
-
-
-def _extract_links_rendered_oracle_sql() -> str:
-    """Golden VALUES mirroring the Go-side filter chain
-    (pdfcapture.go:443-467) in plain Python over the scalar renderer:
-    split on newline, TrimSpace, skip empties, same-host only; link_pos
-    is the pre-filter document-order index (posexplode parity)."""
-    from webcrawler_go_spark.worldgen import World, rendered_links_raw
-
-    w = World()
-    rows = []
-    for u in RENDER_WORLD_URLS:
-        host = u.split("/")[2]
-        for pos, raw in enumerate(rendered_links_raw(w, u).split("\n")):
-            link = raw.strip()
-            if not link:
-                continue
-            link_host = link.split("/")[2] if "://" in link else ""
-            if link_host != host:
-                continue
-            rows.append(f"({_sql_str(u)}, {_sql_str(link)}, {pos})")
-    vals = ",\n              ".join(rows)
-    return (
-        "SELECT found_on, link, CAST(link_pos AS INT) AS link_pos\n"
-        f"            FROM (VALUES {vals}) AS t(found_on, link, link_pos)"
-    )
-
-
-def _ivf_topk_oracle_sql(
-    k: int = 5, n_cells: int = 8, n_queries: int = 8, nprobe: int = 1
-) -> str:
-    """Golden VALUES oracle for embedding_ivf_topk (the head_probe
-    pattern): an independent numpy re-implementation of the DETERMINISTIC
-    IVF pipeline — seeds = n_cells lowest vec_ids, 2 Lloyd steps, nprobe=1
-    — evaluated over the driver's sf0.01 embeddings table.
-
-    Float semantics mirror similarity.py exactly: element ops ((a-b)², x·y,
-    x²) in float32, accumulation sequential left-to-right in float64
-    (= F.aggregate), Lloyd means in float64 cast to float32, cosine
-    rounded HALF_UP to 6 (= F.round). Cell means are the one spot where
-    Spark's addition order is partition-dependent — the float32 cast of
-    the mean swallows that (double-sum noise ~1e-15 vs float32 quantum
-    ~6e-8)."""
-    from decimal import ROUND_HALF_UP, Decimal
-
-    import numpy as np
-    import pyarrow.parquet as pq
-
-    sf_dir = os.environ.get("SPARK_GRAFT_ORACLE_SF_DIR", "/root/testdata/sf0.01")
-    try:
-        tbl = pq.read_table(
-            f"{sf_dir}/embeddings.parquet", columns=["vec_id", "embedding"]
-        )
-    except (OSError, FileNotFoundError):
-        # golden oracles are data-derived; an absent table must fail THIS
-        # query's comparison, not break oracle_sql() for every query
-        return (
-            "SELECT CAST(NULL AS BIGINT) AS query_id, CAST(NULL AS BIGINT) AS neighbor,"
-            " CAST(NULL AS DOUBLE) AS cosine, CAST(NULL AS INT) AS rank WHERE false"
-        )
-    ids = tbl.column("vec_id").to_numpy()
-    vecs = np.array(tbl.column("embedding").to_pylist(), dtype=np.float32)
-    order = np.argsort(ids, kind="stable")
-    ids, vecs = ids[order], vecs[order]
-
-    def seq_sum64(arr32: np.ndarray) -> float:
-        acc = 0.0
-        for x in arr32:
-            acc += float(x)
-        return acc
-
-    # live-cell tracking mirrors Spark's groupBy semantics: a Lloyd cell
-    # that loses every member yields NO row in ivf_assign's centroid
-    # groupBy — it is DROPPED, never kept stale. (No cell empties on the
-    # current data; this keeps the replication faithful regardless.)
-    cents = vecs[:n_cells].copy()
-    live = list(range(n_cells))
-
-    def assign_live(cs, lv) -> np.ndarray:
-        cells = np.empty(len(vecs), dtype=np.int64)
-        for i, v in enumerate(vecs):
-            d = (v[None, :] - cs[lv]) * (v[None, :] - cs[lv])
-            d2 = [seq_sum64(row) for row in d]
-            cells[i] = lv[int(np.argmin(d2))]  # ties → lowest live cell id
-        return cells
-
-    for _ in range(2):
-        cells = assign_live(cents, live)
-        new_live = []
-        for c in live:
-            members = vecs[cells == c]
-            if len(members):
-                cents[c] = members.astype(np.float64).mean(axis=0).astype(np.float32)
-                new_live.append(c)
-        live = new_live
-    final_cells = assign_live(cents, live)
-
-    def r6(x: float) -> float:
-        # repr(x) = shortest round-trip decimal = java BigDecimal.valueOf
-        # semantics inside Spark's round(); Decimal(x) (exact binary
-        # expansion) would diverge at rounding boundaries.
-        return float(Decimal(repr(x)).quantize(Decimal("0.000001"), rounding=ROUND_HALF_UP))
-
-    def probed_cells(qi: int) -> list[int]:
-        # nprobe nearest LIVE cells by (d2, cell) — same tie-break as
-        # the Spark Window (orderBy _d2 asc, cell asc)
-        v = vecs[qi]
-        d = (v[None, :] - cents[live]) * (v[None, :] - cents[live])
-        d2 = [seq_sum64(row) for row in d]
-        order = sorted(range(len(live)), key=lambda j: (d2[j], live[j]))
-        return [live[j] for j in order[:nprobe]]
-
-    rows = []
-    for qi in range(len(ids)):
-        if ids[qi] >= n_queries:
-            continue
-        probe = set(probed_cells(qi))
-        qv = vecs[qi]
-        nq = seq_sum64(qv * qv) ** 0.5
-        scored = []
-        for ni in range(len(ids)):
-            if final_cells[ni] not in probe or ids[ni] == ids[qi]:
-                continue
-            nv = seq_sum64(vecs[ni] * vecs[ni]) ** 0.5
-            cos = r6(seq_sum64(qv * vecs[ni]) / (nv * nq))
-            scored.append((-cos, int(ids[ni]), cos))
-        scored.sort()
-        for rank, (_, nid, cos) in enumerate(scored[:k], 1):
-            rows.append(f"({int(ids[qi])}, {nid}, {cos!r}, {rank})")
-    vals = ",\n              ".join(rows)
-    return (
-        "SELECT CAST(query_id AS BIGINT) AS query_id, CAST(neighbor AS BIGINT) AS neighbor,\n"
-        "       CAST(cosine AS DOUBLE) AS cosine, CAST(rank AS INT) AS rank\n"
-        f"FROM (VALUES {vals}) AS t(query_id, neighbor, cosine, rank)"
-    )
-
-
-def _crawl_multiround_oracle_sql(**cfg_overrides) -> str:
-    """Golden VALUES oracle for the full engine run (the head_probe
-    pattern): per-host (fetched, bytes) computed by the SEQUENTIAL
-    reference crawl over the same world/config — an independent
-    implementation with zero Spark. ``cfg_overrides`` parameterize the
-    CrawlConfig (e.g. render_links=True for the capture-mode row)."""
-    from webcrawler_go_spark import worldgen
-    from webcrawler_go_spark.config import CrawlConfig
-    from webcrawler_go_spark.oracle import sequential
-    from webcrawler_go_spark.worldgen import World
-    from webcrawler_go_spark.worldgen import seeds as gen_seeds
-
-    world = World(n_hosts=6, pages_per_host=30)
-    cfg = CrawlConfig(max_rounds=3, default_host_budget=8, **cfg_overrides)
-    res = sequential.crawl(world, gen_seeds(world, 3), cfg, max_rounds=3)
-    per_host: dict[str, list[int]] = {}
-    for e in res.fetch_log:
-        b = 0 if e["error_class"] is not None else worldgen.bytes_of(world, e["url"])
-        agg = per_host.setdefault(e["host"], [0, 0])
-        agg[0] += 1
-        agg[1] += b
-    rows = ",\n              ".join(
-        f"('{h}', {c}, {b})" for h, (c, b) in sorted(per_host.items())
-    )
-    return (
-        "SELECT host, CAST(fetched AS BIGINT) AS fetched, CAST(bytes AS BIGINT) AS bytes\n"
-        f"            FROM (VALUES {rows}) AS t(host, fetched, bytes)"
-    )
-
-
-def q_crawl_multiround(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The COMPLETE batch-iterative engine end-to-end — seed → 3 rounds
-    of canonicalize/dedup/schedule/fetch/extract/requeue with snapshot
-    commits — returning per-host fetch counts. Oracle (r3): golden
-    VALUES computed by the SEQUENTIAL plain-Python reference crawl
-    (the parity ground truth), so even the full engine run is
-    value-checked by the driver; the finer-grained parity gate (seen
-    set, per-host order, span sequences) runs in
-    tests/test_crawl_parity.py."""
-    import tempfile
-
-    from webcrawler_go_spark.config import CrawlConfig
-    from webcrawler_go_spark.plans.frontier_loop import CrawlEngine
-    from webcrawler_go_spark.worldgen import World, seeds as gen_seeds
-
-    world = World(n_hosts=6, pages_per_host=30)
-    cfg = CrawlConfig(max_rounds=3, default_host_budget=8)
-    state = tempfile.mkdtemp(prefix="q-crawl-")
-    eng = CrawlEngine(spark, cfg, state, world=world)
-    eng.run(
-        spark.createDataFrame(
-            gen_seeds(world, 3), "url string, priority double, seq int"
-        ),
-        max_rounds=3,
-    )
-    return (
-        eng.fetch_log()
-        .groupBy("host")
-        .agg(F.count("*").alias("fetched"), F.sum("bytes").alias("bytes"))
-    )
-
-
-def q_redirect_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """L2 redirect-limit (crawler.go:189-199 CheckRedirect) as a driver
-    row: the http fetch kernel walks a DETERMINISTIC synthetic redirect
-    world (an injected transport — /r/<i>/<k> 301-redirects down to
-    /r/0/<k>, which serves 200 'arrived k=<k> hops=<n>'); chain length
-    cycles k % 14, so lengths 10-13 exceed the Go cap (error after
-    max_redirects requests → at most 9 redirects followed) and must
-    yield status 0 + the Go client's exact error string. Oracle =
-    closed-form CASE on k."""
-    from webcrawler_go_spark.schemas import FETCH_RESULT
-
-    c = _t(spark, sf_dir, "customer").select(F.col("c_custkey").alias("k"))
-    url = F.concat(
-        F.lit("https://rc.test/r/"),
-        (F.col("k") % 14).cast("string"),
-        F.lit("/"),
-        F.col("k").cast("string"),
-    )
-    fr = c.select(
-        url.alias("url_norm"),
-        F.xxhash64(url).alias("url_hash"),
-        F.lit("rc.test").alias("host"),
-        F.col("k").cast("long").alias("seq"),
-        F.lit(0).alias("round"),
-        F.lit(0).alias("attempts"),
-    )
-
-    def kernel(batches):
-        import re as _re
-
-        from webcrawler_go_spark.operators.fetch import _http_kernel
-
-        class _Resp:
-            def __init__(self, status, headers, body=""):
-                self.status_code = status
-                self.headers = headers
-                self.text = body
-                self.content = body.encode()
-
-        def transport(session, method, u, headers):
-            m = _re.match(r"https://rc\.test/r/(\d+)/(\d+)", u)
-            i, k = int(m.group(1)), int(m.group(2))
-            if i == 0:
-                n_hops = k % 14
-                return _Resp(
-                    200,
-                    {"Content-Type": "text/plain"},
-                    f"arrived k={k} hops={n_hops}",
-                )
-            return _Resp(
-                301, {"Location": f"https://rc.test/r/{i - 1}/{k}"}
-            )
-
-        gen = _http_kernel(
-            method="GET", timeout_s=5, max_redirects=10,
-            referer_url=None, transport=transport,
-        )
-        yield from gen(batches)
-
-    fetched = fr.mapInPandas(kernel, FETCH_RESULT)
-    return fetched.select(
-        F.col("seq").alias("k"),
-        "status",
-        "error_class",
-        F.try_element_at("spans", F.lit(1))["text"].alias("final_text"),
-    )
-
-
-def q_resume_crawl(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """S9 resumability as a driver row (pdfcapture.go:199-223 skip-if-
-    exists, but transactional): run 2 of 3 rounds, drop the engine, and
-    let a FRESH engine instance resume from the committed snapshots for
-    round 3. The per-host result must equal the UNINTERRUPTED reference
-    — the oracle is the same sequential golden crawl as
-    crawl_multiround, so any resume-state defect (lost frontier rows,
-    double-fetch, wrong round counter) hash-fails."""
-    import tempfile
-
-    from webcrawler_go_spark.config import CrawlConfig
-    from webcrawler_go_spark.plans.frontier_loop import CrawlEngine
-    from webcrawler_go_spark.worldgen import World, seeds as gen_seeds
-
-    world = World(n_hosts=6, pages_per_host=30)
-    cfg = CrawlConfig(max_rounds=3, default_host_budget=8)
-    state = tempfile.mkdtemp(prefix="q-resume-")
-    eng = CrawlEngine(spark, cfg, state, world=world)
-    eng.seed(
-        spark.createDataFrame(
-            gen_seeds(world, 3), "url string, priority double, seq int"
-        )
-    )
-    for r in range(2):
-        eng.run_round(r)
-    # "crash": a NEW engine over the same state dir picks up at round 2
-    eng2 = CrawlEngine(spark, cfg, state, world=world)
-    eng2.resume(max_rounds=3)
-    return (
-        eng2.fetch_log()
-        .groupBy("host")
-        .agg(F.count("*").alias("fetched"), F.sum("bytes").alias("bytes"))
-    )
-
-
-def _adaptive_crawl_oracle_sql() -> str:
-    """Golden VALUES from the sequential reference crawl with the AIMD
-    budget recurrence mirrored (oracle/sequential.py): per-host fetched
-    count + the FINAL adaptive budget — both must match the engine's
-    data-encoded recurrence bit-for-bit."""
-    from webcrawler_go_spark.config import CrawlConfig
-    from webcrawler_go_spark.oracle import sequential
-    from webcrawler_go_spark.worldgen import World
-    from webcrawler_go_spark.worldgen import seeds as gen_seeds
-
-    world = World(n_hosts=6, pages_per_host=30)
-    cfg = CrawlConfig(max_rounds=4, default_host_budget=8)
-    res = sequential.crawl(
-        world, gen_seeds(world, 3), cfg, max_rounds=4,
-        adaptive_budget=True, aimd_hot_milli=100,
-    )
-    per_host: dict[str, int] = {}
-    for e in res.fetch_log:
-        per_host[e["host"]] = per_host.get(e["host"], 0) + 1
-    # a host whose activity fell entirely outside the AIMD window holds
-    # the default budget (ADVICE r7: indexing res.budgets[h] raised
-    # KeyError if max_rounds ever exceeded aimd_window; identical SQL
-    # text at the current 4-round/window-8 config)
-    rows = ",\n              ".join(
-        f"('{h}', {c}, {res.budgets.get(h, cfg.default_host_budget)})"
-        for h, c in sorted(per_host.items())
-    )
-    return (
-        "SELECT host, CAST(fetched AS BIGINT) AS fetched,\n"
-        "       CAST(final_budget AS INT) AS final_budget\n"
-        f"            FROM (VALUES {rows}) AS t(host, fetched, final_budget)"
-    )
-
-
-def q_adaptive_crawl(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """AIMD politeness budgets IN THE LOOP (VERDICT r6 directive #3 —
-    the reference's blocked-recovery intent, crawler.go:303-336, as
-    data-encoded scheduling): the full engine run with
-    ``adaptive_budget=True`` recomputes the budget dim at every crawl
-    boundary from the per-host A1 counters via
-    `scheduling.aimd_budgets` — halve on a measured bad round
-    ((errors+blocked)/fetched ≥ 10%), +1 additive recovery on clean
-    rounds. Returns per-host (fetched, final_budget); the oracle is the
-    sequential golden crawl with the identical recurrence, so a budget
-    that halves a round late (or a schedule that ignores the shrunken
-    budget) hash-fails. Laws + full sequence parity:
-    tests/test_crawl_parity.py::test_adaptive_budget_parity_and_laws."""
-    import tempfile
-
-    from webcrawler_go_spark.config import CrawlConfig
-    from webcrawler_go_spark.plans.frontier_loop import CrawlEngine
-    from webcrawler_go_spark.worldgen import World, seeds as gen_seeds
-
-    world = World(n_hosts=6, pages_per_host=30)
-    cfg = CrawlConfig(max_rounds=4, default_host_budget=8)
-    state = tempfile.mkdtemp(prefix="q-aimd-")
-    eng = CrawlEngine(
-        spark, cfg, state, world=world,
-        adaptive_budget=True, aimd_hot_milli=100,
-    )
-    eng.run(
-        spark.createDataFrame(
-            gen_seeds(world, 3), "url string, priority double, seq int"
-        ),
-        max_rounds=4,
-    )
-    counts = eng.fetch_log().groupBy("host").agg(F.count("*").alias("fetched"))
-    return counts.join(F.broadcast(eng.budgets), "host").select(
-        "host",
-        "fetched",
-        F.col("max_fetches_per_round").cast("int").alias("final_budget"),
-    )
-
-
-def q_capture_crawl(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """S6/X3 IN THE LOOP (capture mode, pdfcapture.go:440-467): the full
-    engine run with cfg.render_links — rendered-DOM links join the
-    frontier after each page's static links and compete for the same
-    politeness budget. Oracle: the sequential golden crawl with the
-    same flag, so any divergence in render ordering, same-domain
-    enforcement, or budget interaction hash-fails. The finer parity
-    gate (seen set, per-host order, /js/ reachability) runs in
-    tests/test_crawl_parity.py::test_capture_mode_rendered_links_parity."""
-    import tempfile
-
-    from webcrawler_go_spark.config import CrawlConfig
-    from webcrawler_go_spark.plans.frontier_loop import CrawlEngine
-    from webcrawler_go_spark.worldgen import World, seeds as gen_seeds
-
-    world = World(n_hosts=6, pages_per_host=30)
-    cfg = CrawlConfig(max_rounds=3, default_host_budget=8, render_links=True)
-    state = tempfile.mkdtemp(prefix="q-capture-")
-    eng = CrawlEngine(spark, cfg, state, world=world)
-    eng.run(
-        spark.createDataFrame(
-            gen_seeds(world, 3), "url string, priority double, seq int"
-        ),
-        max_rounds=3,
-    )
-    return (
-        eng.fetch_log()
-        .groupBy("host")
-        .agg(F.count("*").alias("fetched"), F.sum("bytes").alias("bytes"))
-    )
-
-
-def q_streaming_crawl(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """§2.10 at the PRODUCTION shape (round-5 directive #5): the frontier
-    loop hosted by Structured Streaming — seeds arrive on a real file
-    STREAM and ``run_frontier_foreach_batch`` executes engine rounds per
-    micro-batch under the streaming scheduler (foreachBatch), state in
-    the same transactional snapshot tables as the batch loop. At scale
-    the file source becomes a Kafka/queue seed feed and the query runs
-    continuously; the semantics here must be EXACTLY the batch engine's
-    — the oracle is the same sequential golden crawl as
-    crawl_multiround/resume_crawl, so any divergence introduced by the
-    streaming hosting (double-seed, lost round, wrong fold-in) hash-
-    fails."""
-    import tempfile
-
-    from webcrawler_go_spark.config import CrawlConfig
-    from webcrawler_go_spark.plans.frontier_loop import CrawlEngine
-    from webcrawler_go_spark.streaming.frontier_stream import (
-        run_frontier_foreach_batch,
-    )
-    from webcrawler_go_spark.worldgen import World, seeds as gen_seeds
-
-    world = World(n_hosts=6, pages_per_host=30)
-    cfg = CrawlConfig(max_rounds=3, default_host_budget=8)
-    base = tempfile.mkdtemp(prefix="q-stream-crawl-")
-    state = os.path.join(base, "state")
-    src = os.path.join(base, "seeds")
-    schema = "url string, priority double, seq int"
-    seed_df = spark.createDataFrame(gen_seeds(world, 3), schema)
-    seed_df.coalesce(1).write.parquet(src)
-    eng = CrawlEngine(spark, cfg, state, world=world)
-    q = run_frontier_foreach_batch(
-        eng,
-        spark.readStream.schema(schema).parquet(src),
-        os.path.join(base, "ckpt"),
-        max_rounds_per_batch=3,
-    )
-    if not q.awaitTermination(300):
-        q.stop()
-        raise TimeoutError(
-            "streaming_crawl: availableNow query did not terminate in 300s"
-        )
-    return (
-        eng.fetch_log()
-        .groupBy("host")
-        .agg(F.count("*").alias("fetched"), F.sum("bytes").alias("bytes"))
-    )
-
-
-# ---------------------------------------------------------------------------
-# training-data pipeline operators (dedup / similarity / text analysis /
-# events / multimodal) — first-class at 100 TB
-# ---------------------------------------------------------------------------
-
-
-def _dup_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """documents ∪ shifted copies (doc_id+100000 where doc_id%7=0) — the
-    testdata has no natural duplicates, so dedup queries synthesize them
-    identically in both engines."""
-    d = _spread(_t(spark, sf_dir, "documents").select("doc_id", "text"))
-    dups = d.filter(F.col("doc_id") % 7 == 0).select(
-        (F.col("doc_id") + 100000).alias("doc_id"), "text"
-    )
-    return d.unionByName(dups)
-
-
-_DUP_DOCS_SQL = """
-docs AS (
-  SELECT doc_id, text FROM documents
-  UNION ALL
-  SELECT doc_id + 100000 AS doc_id, text FROM documents WHERE doc_id % 7 = 0
-)
-"""
-
-# DuckDB 1.0 has no WITH ORDINALITY; lateral unnest(generate_series) gives
-# 1-based positions instead
-_TOKENS_SQL = """
-toklists AS (
-  SELECT doc_id, string_split_regex(trim(text), '\\s+') AS l FROM docs
-),
-tokens AS (
-  SELECT doc_id, CAST(t.i AS INT) AS pos1, l[t.i] AS token
-  FROM toklists, unnest(generate_series(1, len(l))) AS t(i)
-  WHERE l[t.i] <> ''
-)
-"""
-
-_SHINGLES_SQL = """
-grams AS (
-  SELECT doc_id, token || ' ' || t1 || ' ' || t2 AS shingle
-  FROM (
-    SELECT doc_id, token,
-           lead(token, 1) OVER (PARTITION BY doc_id ORDER BY pos1) AS t1,
-           lead(token, 2) OVER (PARTITION BY doc_id ORDER BY pos1) AS t2
-    FROM tokens
-  )
-  WHERE t1 IS NOT NULL AND t2 IS NOT NULL
-),
-sh AS (SELECT DISTINCT doc_id, shingle FROM grams)
-"""
-
-
-def q_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact dedup: digest-groupBy, canonical = min doc_id per text."""
-    from webcrawler_go_spark.operators.textdedup import exact_duplicates
-
-    return exact_duplicates(_dup_docs(spark, sf_dir))
-
-
-def q_dedup_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Word-3-gram Jaccard near-dup pairs ≥ 0.5 (exact candidate-join)."""
-    from webcrawler_go_spark.operators.textdedup import jaccard_pairs
-
-    return jaccard_pairs(_dup_docs(spark, sf_dir), n=3, threshold=0.5)
-
-
-def q_dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """MinHash(8)+LSH(4 bands × 2 rows) candidate pairs."""
-    from webcrawler_go_spark.operators.textdedup import minhash_lsh_pairs
-
-    return minhash_lsh_pairs(_dup_docs(spark, sf_dir), n=3, rows_per_band=2)
-
-
-def q_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """16-bit SimHash fingerprint per document (sign of weighted bits)."""
-    from webcrawler_go_spark.operators.textdedup import simhash
-
-    return simhash(_dup_docs(spark, sf_dir), bits=16)
-
-
-def q_embedding_cosine_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Brute-force cosine near-pairs ≥ 0.2 over quantized embeddings
-    (quantization ⇒ exact integer dot products, cross-engine equal)."""
-    from webcrawler_go_spark.operators.similarity import cosine_pairs_quantized
-
-    emb = _t(spark, sf_dir, "embeddings")
-    return cosine_pairs_quantized(emb, threshold=0.2, scale=1000)
-
-
-def q_embedding_cosine_tiled(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact all-pairs cosine at the SCALE-CORRECT shape: block-packed
-    vectors, arithmetic tile index (no cartesian), one exact int64 GEMM
-    per tile, O(n·m)-row shuffle. Same oracle as the O(n²)-labeled
-    `embedding_cosine_pairs` baseline — the contract is byte-identical
-    output from a different physical strategy (threshold 0.2)."""
-    from webcrawler_go_spark.operators.similarity import cosine_pairs_tiled
-
-    emb = _t(spark, sf_dir, "embeddings")
-    # n_blocks 8 → 32 (r8): 36 tiles left a 2-wave straggle at 32 cores;
-    # 528 smaller tiles balance the GEMM across the cluster and shrink
-    # per-task peak memory — the result set is blocking-invariant.
-    return cosine_pairs_tiled(emb, threshold=0.2, scale=1000, n_blocks=32)
-
-
-def q_embedding_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ANN near-pairs via banded multi-table LSH at the LARGE-CORPUS
-    operating point (B=8 tables × K=10 bits vs the banded query's 4×8):
-    more tables recovers the recall that the more selective 2^10-bucket
-    tables give up — the knob you turn UP as n grows. Rerouted from the
-    single-table 2^8-bucket signature in round 3 — one K-bit table is a
-    quadratic-verify bomb at 10^9 vectors (round-2 verdict)."""
-    from webcrawler_go_spark.operators.similarity import lsh_candidate_pairs_banded
-
-    emb = _t(spark, sf_dir, "embeddings")
-    return lsh_candidate_pairs_banded(
-        emb, n_tables=8, bits_per_table=10, threshold=0.15, scale=1000
-    )
-
-
-def q_robots_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """robots.txt PARSER (grouping + RFC 9309 §2.2.1 most-specific-group
-    selection + empty-Disallow drop): bodies with a '*' group and — on
-    even hosts — a specific 'ourbot' group; the oracle states the
-    semantic result (specific group REPLACES '*' where present)."""
-    from webcrawler_go_spark.functions.robots import parse_robots_txt
-
-    c = _spread(_t(spark, sf_dir, "customer")).select(F.col("c_custkey").alias("k"))
-    ks = F.col("k").cast("string")
-    host = F.concat(F.lit("h"), ks, F.lit(".test"))
-    star_grp = F.concat(
-        F.lit("# generated\nUser-agent: *\nDisallow: /a"),
-        ks,
-        F.lit("/\nAllow: /b/\n"),
-    )
-    spec_grp = F.concat(
-        F.lit("\nUser-agent: ourbot\nDisallow: /c"),
-        ks,
-        F.lit("/\nDisallow:\n"),  # empty Disallow = allow-all, no rule
-    )
-    body = F.when(F.col("k") % 2 == 0, F.concat(star_grp, spec_grp)).otherwise(
-        star_grp
-    )
-    bodies = c.select(host.alias("host"), body.alias("body"))
-    return parse_robots_txt(bodies, user_agent="ourbot")
-
-
-def q_embedding_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ANN top-k per query via banded multi-table LSH candidates +
-    quantized-cosine verify + Window top-k (the similarity-search API's
-    headline shape; queries = the 8 lowest vec_ids)."""
-    from webcrawler_go_spark.operators.similarity import ann_topk_lsh
-
-    emb = _t(spark, sf_dir, "embeddings")
-    queries = emb.filter(F.col("vec_id") < 8)
-    return ann_topk_lsh(emb, queries, k=5, n_tables=4, bits_per_table=8)
-
-
-def q_media_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Multimodal frame sampling: video blobs → every 10th frame, max 8,
-    with 24fps timestamps — mapInPandas plumbing real, codec math the
-    deterministic fake (no codec libs in this container)."""
-    from webcrawler_go_spark.operators.multimodal import (
-        media_blobs_from_documents,
-        sample_frames,
-    )
-
-    blobs = media_blobs_from_documents(_spread(_t(spark, sf_dir, "documents")))
-    return sample_frames(blobs, every=10, max_frames=8, use_fake_decoder=True)
-
-
-def q_media_decode_png(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL image decode (round-3 directive #9): synthesize a true PNG
-    per row (deterministic pixels, per-row filters cycling None/Sub/Up),
-    then decode it with the stdlib-only PNG decoder — signature, chunk
-    CRCs, zlib inflate, filter reversal are all exercised per row. The
-    oracle states the expected (width, height, pixel sum) straight from
-    the pixel formula, so a decoder that mis-reverses any filter row
-    hash-fails."""
-    import pandas as pd
-
-    c = _spread(
-        _t(spark, sf_dir, "customer").select(F.col("c_custkey").alias("k"))
-    )
-
-    def kernel(batches):
-        from webcrawler_go_spark.functions.media_codecs import (
-            decode_png,
-            encode_png,
-        )
-
-        for b in batches:
-            rows = []
-            for k in b["k"]:
-                k = int(k)
-                w, h = k % 8 + 2, k % 5 + 2
-                px = bytes((k * 31 + j * 7) % 256 for j in range(w * h * 3))
-                blob = encode_png(w, h, px, channels=3,
-                                  row_filters=[y % 3 for y in range(h)])
-                dw, dh, _ch, dpx = decode_png(blob)
-                rows.append((k, dw, dh, sum(dpx)))
-            yield pd.DataFrame(
-                rows, columns=["k", "width", "height", "pix_sum"]
-            )
-
-    return c.mapInPandas(
-        kernel, "k long, width int, height int, pix_sum long"
-    )
-
-
-def q_media_cmyk_transform(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """S10's colorimetric core (pdfcapture.go:399-431): real PNG decode →
-    naive-GCR RGB→CMYK (exact integer round-half-up) → per-channel sums.
-    Only the Ghostscript/ImageMagick PDF-X/TIFF *wrapper* remains a
-    container boundary; the color math runs for real here. Oracle = the
-    pixel + CMYK formulas in SQL."""
-    import pandas as pd
-
-    c = _spread(_t(spark, sf_dir, "customer")).select(F.col("c_custkey").alias("k"))
-
-    def kernel(batches):
-        from webcrawler_go_spark.functions.media_codecs import (
-            decode_png,
-            encode_png,
-            rgb_to_cmyk,
-        )
-
-        for b in batches:
-            rows = []
-            for k in b["k"]:
-                k = int(k)
-                w, h = k % 8 + 2, k % 5 + 2
-                px = bytes((k * 31 + j * 7) % 256 for j in range(w * h * 3))
-                _w, _h, _ch, dpx = decode_png(
-                    encode_png(w, h, px, row_filters=[y % 3 for y in range(h)])
-                )
-                cmyk = rgb_to_cmyk(dpx)
-                rows.append(
-                    (k, sum(cmyk[0::4]), sum(cmyk[1::4]), sum(cmyk[2::4]),
-                     sum(cmyk[3::4]))
-                )
-            yield pd.DataFrame(
-                rows, columns=["k", "c_sum", "m_sum", "y_sum", "k_sum"]
-            )
-
-    return c.mapInPandas(
-        kernel, "k long, c_sum long, m_sum long, y_sum long, k_sum long"
-    )
-
-
-def q_media_tiff_container(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """S10 CONTAINER closure, TIFF side (pdfcapture.go:759-790:
-    ``convertToCMYKTIFF`` shells to ImageMagick ``convert -colorspace
-    CMYK -compress LZW``). Per customer row: deterministic RGB pixels →
-    `rgb_to_cmyk` → a REAL baseline TIFF 6.0 file (Photometric 5
-    Separated + InkSet CMYK, per-strip TIFF-LZW, Predictor 2 on odd
-    keys, k%3+1 rows/strip so multi-strip paths run) → re-parsed by the
-    independent reader. Emits the container's structural fields, the
-    per-channel ink sums computed FROM THE DECODED PIXELS, and a
-    byte-equality round-trip flag — all closed-form for the SQL oracle.
-    Embarrassingly parallel mapInPandas; the payload-free repartition on
-    the 8-byte key column spreads the CPU-bound codec work across all
-    cores even when the upstream scan is a single split (small test
-    files = 1 task otherwise; at 100 TB the scan arrives pre-split and
-    the exchange stays negligible — keys only, no pixel bytes)."""
-    import pandas as pd
-
-    c = (
-        _t(spark, sf_dir, "customer")
-        .select(F.col("c_custkey").alias("k"))
-        .repartition(spark.sparkContext.defaultParallelism)
-    )
-
-    def kernel(batches):
-        import numpy as np
-
-        from webcrawler_go_spark.functions.media_codecs import rgb_to_cmyk
-        from webcrawler_go_spark.functions.media_containers import (
-            decode_tiff,
-            encode_tiff_cmyk,
-        )
-
-        for b in batches:
-            rows = []
-            for k in b["k"]:
-                k = int(k)
-                w, h = k % 8 + 2, k % 5 + 2
-                # same (k*31 + 7j) mod 256 ramp as the SQL oracle, numpy-
-                # vectorized (exact integer math, values unchanged)
-                rgb = (
-                    (k * 31 + 7 * np.arange(w * h * 3, dtype=np.int64)) % 256
-                ).astype(np.uint8).tobytes()
-                cmyk = rgb_to_cmyk(rgb)
-                blob = encode_tiff_cmyk(
-                    cmyk, w, h, compression="lzw",
-                    predictor=1 + k % 2, rows_per_strip=k % 3 + 1,
-                )
-                d = decode_tiff(blob)
-                px = d["pixels"]
-                sums = (
-                    np.frombuffer(px, dtype=np.uint8)
-                    .reshape(-1, 4)
-                    .sum(axis=0, dtype=np.int64)
-                )
-                rows.append((
-                    k, d["width"], d["height"], d["photometric"],
-                    d["compression"], d["predictor"], d["inkset"],
-                    d["n_strips"], px == cmyk,
-                    int(sums[0]), int(sums[1]), int(sums[2]), int(sums[3]),
-                ))
-            yield pd.DataFrame(rows, columns=[
-                "k", "width", "height", "photometric", "compression",
-                "predictor", "inkset", "n_strips", "tiff_ok",
-                "c_sum", "m_sum", "y_sum", "k_sum",
-            ])
-
-    return c.mapInPandas(
-        kernel,
-        "k long, width int, height int, photometric int, compression int, "
-        "predictor int, inkset int, n_strips int, tiff_ok boolean, "
-        "c_sum long, m_sum long, y_sum long, k_sum long",
-    )
-
-
-def q_media_pdf_cmyk_wrap(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """S10 CONTAINER closure, PDF side (pdfcapture.go:731-757:
-    ``convertToCMYKPDF`` shells to Ghostscript ``pdfwrite`` with
-    ``-dProcessColorModel=/DeviceCMYK``). Per customer row: RGB →
-    `rgb_to_cmyk` → a valid single-page PDF embedding the pixels as a
-    /DeviceCMYK /FlateDecode Image XObject with byte-accurate xref →
-    re-extracted by the un-wrapper. Same oracle pattern as the TIFF
-    twin; the ICC OutputIntent of full PDF/X stays out of scope (no
-    profile data in the sandbox), documented in SURVEY §2.1. Payload-
-    free key repartition before the kernel — same rationale as the TIFF
-    twin (spread CPU-bound codec work even off a single-split scan)."""
-    import pandas as pd
-
-    c = (
-        _t(spark, sf_dir, "customer")
-        .select(F.col("c_custkey").alias("k"))
-        .repartition(spark.sparkContext.defaultParallelism)
-    )
-
-    def kernel(batches):
-        from webcrawler_go_spark.functions.media_codecs import rgb_to_cmyk
-        from webcrawler_go_spark.functions.media_containers import (
-            unwrap_pdf_cmyk,
-            wrap_pdf_cmyk,
-        )
-
-        for b in batches:
-            rows = []
-            for k in b["k"]:
-                k = int(k)
-                w, h = k % 8 + 2, k % 5 + 2
-                rgb = bytes((k * 31 + j * 7) % 256 for j in range(w * h * 3))
-                cmyk = rgb_to_cmyk(rgb)
-                u = unwrap_pdf_cmyk(wrap_pdf_cmyk(cmyk, w, h))
-                px = u["pixels"]
-                rows.append((
-                    k, u["width"], u["height"], u["colorspace"], u["filter"],
-                    u["bits_per_component"], u["n_objects"], px == cmyk,
-                    sum(px[0::4]), sum(px[1::4]), sum(px[2::4]), sum(px[3::4]),
-                ))
-            yield pd.DataFrame(rows, columns=[
-                "k", "width", "height", "colorspace", "pdf_filter",
-                "bits", "n_objects", "pdf_ok",
-                "c_sum", "m_sum", "y_sum", "k_sum",
-            ])
-
-    return c.mapInPandas(
-        kernel,
-        "k long, width int, height int, colorspace string, pdf_filter string, "
-        "bits int, n_objects int, pdf_ok boolean, "
-        "c_sum long, m_sum long, y_sum long, k_sum long",
-    )
-
-
-def q_media_decode_wav(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL audio decode: synthesize 8-bit PCM WAV bytes per row and
-    decode with the stdlib ``wave`` RIFF parser; emit header fields plus
-    the exact integer sum of squared centered samples (engine-neutral).
-    Oracle = the sample formula in SQL."""
-    import pandas as pd
-
-    c = _spread(_t(spark, sf_dir, "customer")).select(F.col("c_custkey").alias("k"))
-
-    def kernel(batches):
-        from webcrawler_go_spark.functions.media_codecs import (
-            decode_wav,
-            encode_wav_pcm,
-        )
-
-        for b in batches:
-            rows = []
-            for k in b["k"]:
-                k = int(k)
-                n = k % 50 + 20
-                samples = [(k * 131 + i * 17) % 256 for i in range(n)]
-                d = decode_wav(encode_wav_pcm(samples, sample_rate=8000))
-                rows.append((k, d["sample_rate"], d["n_samples"], d["sum_sq"]))
-            yield pd.DataFrame(
-                rows, columns=["k", "sample_rate", "n_samples", "sum_sq"]
-            )
-
-    return c.mapInPandas(
-        kernel, "k long, sample_rate int, n_samples int, sum_sq long"
-    )
-
-
-def q_embedding_ann_lsh_banded(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ANN via MULTI-TABLE banded hyperplane LSH (the 10^9-vector shape:
-    B independent K-bit tables — recall from B, bucket size from K;
-    candidates unioned across tables, verified in-bucket)."""
-    from webcrawler_go_spark.operators.similarity import lsh_candidate_pairs_banded
-
-    emb = _t(spark, sf_dir, "embeddings")
-    return lsh_candidate_pairs_banded(
-        emb, n_tables=4, bits_per_table=8, threshold=0.15, scale=1000
-    )
-
-
-def q_dedup_embedding_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Embedding-cosine near-dup dedup over documents via the SCALE path:
-    hyperplane-LSH bucketed candidate pairs (same-bucket only — never an
-    all-pairs cross join), verified quantized cosine ≥ τ, canonical =
-    min(doc_id, neighbors). Recall < 1 by LSH construction — the oracle
-    applies the identical bucketing, so results match exactly. One-pass
-    canonicalization (the full transitive closure is an iterative driver
-    loop at scale — see q_dedup_semantic_closure)."""
-    from webcrawler_go_spark.operators.similarity import lsh_candidate_pairs_banded
-
-    emb = _t(spark, sf_dir, "embeddings")
-    docs = _t(spark, sf_dir, "documents").select("doc_id")
-    pairs = lsh_candidate_pairs_banded(
-        emb, n_tables=4, bits_per_table=8, threshold=0.5, scale=1000
-    )
-    neighbors = pairs.select(
-        F.col("a").alias("doc_id"), F.col("b").alias("nbr")
-    ).unionByName(pairs.select(F.col("b").alias("doc_id"), F.col("a").alias("nbr")))
-    best = neighbors.groupBy("doc_id").agg(F.min("nbr").alias("min_nbr"))
-    return docs.join(best, "doc_id", "left").select(
-        "doc_id",
-        F.least(F.col("doc_id"), F.coalesce(F.col("min_nbr"), F.col("doc_id"))).alias(
-            "canonical_id"
-        ),
-    )
-
-
-def q_dedup_semantic_closure(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Transitive-closure near-dup canonicalization: banded-LSH verified
-    pairs → connected components via iterated min-label propagation →
-    canonical = MIN doc id of the duplicate CLUSTER. Chains A~B~C
-    collapse to one canonical even when the A~C pair was never emitted
-    (the piece one-pass q_dedup_embedding_semantic lacks; round-2
-    verdict directive #4). Oracle = recursive CTE over the same pairs.
-    Threshold 0.3 (vs the one-pass query's 0.5) so the sf0.01 data
-    yields hundreds of pairs and real multi-node chains — the closure
-    actually has work to do in the driver-checked run."""
-    from webcrawler_go_spark.operators.components import canonicalize_closure
-    from webcrawler_go_spark.operators.similarity import lsh_candidate_pairs_banded
-
-    emb = _t(spark, sf_dir, "embeddings")
-    docs = _t(spark, sf_dir, "documents").select("doc_id")
-    pairs = lsh_candidate_pairs_banded(
-        emb, n_tables=4, bits_per_table=8, threshold=0.3, scale=1000
-    )
-    return canonicalize_closure(docs, pairs)
-
-
-def q_embedding_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF ANN: coarse k-means cells + nprobe=2 multi-cell probe + per-
-    cell top-k — the partition-pruning scale path. Oracle = numpy golden
-    replication of the deterministic pipeline (r3); recall@5 vs brute
-    force asserted in tests/test_similarity.py (0.85 / 0.90 / 0.93 at
-    nprobe 1 / 2 / 3 on this data)."""
-    from webcrawler_go_spark.operators.similarity import ivf_topk
-
-    emb = _t(spark, sf_dir, "embeddings")
-    queries = emb.filter(F.col("vec_id") < 8)
-    return ivf_topk(emb, queries, k=5, n_cells=8, nprobe=2)
-
-
-def q_embedding_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ANN top-k via product quantization + asymmetric distance: m=4
-    subspace codebooks (deterministic k-means), corpus encoded to 4
-    integer codes/vector (~1/32 the float32 footprint — the PQ memory
-    story at 10⁹ vectors), queries scored through a broadcast LUT with
-    integer micro-unit distances so the subspace sum is order-
-    independent. Oracle = numpy golden replication (the IVF pattern);
-    recall vs brute force asserted in tests/test_similarity.py."""
-    from webcrawler_go_spark.operators.similarity import pq_topk
-
-    emb = _t(spark, sf_dir, "embeddings")
-    queries = emb.filter(F.col("vec_id") < 8)
-    return pq_topk(emb, queries, k=5, m=4, n_cents=16)
-
-
-def _pq_topk_oracle_sql(k: int = 5, m: int = 4, n_cents: int = 16, n_queries: int = 8) -> str:
-    """Golden VALUES oracle for embedding_pq_topk: the sequential numpy
-    replication (similarity.pq_topk_numpy) evaluated over the driver's
-    sf0.01 embeddings — the _ivf_topk_oracle_sql pattern."""
-    import pyarrow.parquet as pq
-
-    from webcrawler_go_spark.operators.similarity import pq_topk_numpy
-
-    sf_dir = os.environ.get("SPARK_GRAFT_ORACLE_SF_DIR", "/root/testdata/sf0.01")
-    try:
-        tbl = pq.read_table(
-            f"{sf_dir}/embeddings.parquet", columns=["vec_id", "embedding"]
-        )
-    except (OSError, FileNotFoundError):
-        return (
-            "SELECT CAST(NULL AS BIGINT) AS query_id, CAST(NULL AS BIGINT) AS neighbor,"
-            " CAST(NULL AS BIGINT) AS adc_d2_micro, CAST(NULL AS INT) AS rank WHERE false"
-        )
-    rows = pq_topk_numpy(
-        tbl.column("vec_id").to_numpy(),
-        tbl.column("embedding").to_pylist(),
-        range(n_queries),
-        m=m,
-        n_cents=n_cents,
-        k=k,
-    )
-    vals = ",\n              ".join(
-        f"({q}, {nb}, {adc}, {r})" for q, nb, adc, r in rows
-    )
-    return (
-        "SELECT CAST(query_id AS BIGINT) AS query_id, CAST(neighbor AS BIGINT) AS neighbor,\n"
-        "                   CAST(adc_d2_micro AS BIGINT) AS adc_d2_micro, CAST(rank AS INT) AS rank\n"
-        f"            FROM (VALUES {vals}) AS t(query_id, neighbor, adc_d2_micro, rank)"
-    )
-
-
-def q_embedding_pq_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """PQ shortlist (depth 50 from the compressed codes) + exact-cosine
-    re-rank of only those candidates — the production ANN composition:
-    the exact pass touches 50·|Q| pairs instead of N·|Q|, and any true
-    neighbor the shortlist retains is provably recovered (asserted in
-    tests: recall@5 of this query ≡ raw shortlist recall@50). Oracle =
-    numpy golden replication with IVF float semantics."""
-    from webcrawler_go_spark.operators.similarity import pq_rerank_topk
-
-    emb = _t(spark, sf_dir, "embeddings")
-    queries = emb.filter(F.col("vec_id") < 8)
-    return pq_rerank_topk(emb, queries, k=5, shortlist=50, m=4, n_cents=16)
-
-
-def _pq_rerank_oracle_sql(
-    k: int = 5, shortlist: int = 50, m: int = 4, n_cents: int = 16, n_queries: int = 8
-) -> str:
-    """Golden VALUES for embedding_pq_rerank: pq_topk_numpy shortlist +
-    sequential-float64 exact cosine, rounded HALF_UP to 6 (the
-    _ivf_topk_oracle_sql float contract)."""
-    from decimal import ROUND_HALF_UP, Decimal
-
-    import numpy as np
-    import pyarrow.parquet as pq
-
-    from webcrawler_go_spark.operators.similarity import pq_topk_numpy
-
-    sf_dir = os.environ.get("SPARK_GRAFT_ORACLE_SF_DIR", "/root/testdata/sf0.01")
-    try:
-        tbl = pq.read_table(
-            f"{sf_dir}/embeddings.parquet", columns=["vec_id", "embedding"]
-        )
-    except (OSError, FileNotFoundError):
-        return (
-            "SELECT CAST(NULL AS BIGINT) AS query_id, CAST(NULL AS BIGINT) AS neighbor,"
-            " CAST(NULL AS DOUBLE) AS cosine, CAST(NULL AS INT) AS rank WHERE false"
-        )
-    ids = tbl.column("vec_id").to_numpy()
-    vecs = np.array(tbl.column("embedding").to_pylist(), dtype=np.float32)
-    order = np.argsort(ids, kind="stable")
-    ids, vecs = ids[order], vecs[order]
-    by_id = {int(i): vecs[j] for j, i in enumerate(ids)}
-
-    short = pq_topk_numpy(ids, vecs, range(n_queries), m=m, n_cents=n_cents, k=shortlist)
-
-    def seq_sum64(arr32):
-        acc = 0.0
-        for x in arr32:
-            acc += float(x)
-        return acc
-
-    def r6(x: float) -> float:
-        return float(
-            Decimal(repr(x)).quantize(Decimal("0.000001"), rounding=ROUND_HALF_UP)
-        )
-
-    cand: dict[int, list[int]] = {}
-    for q, nb, _adc, _r in short:
-        cand.setdefault(q, []).append(nb)
-    rows = []
-    for q, nbs in sorted(cand.items()):
-        qv = by_id[q]
-        nq = seq_sum64(qv * qv) ** 0.5
-        scored = []
-        for nb in nbs:
-            v = by_id[nb]
-            nv = seq_sum64(v * v) ** 0.5
-            cosine = r6(seq_sum64(v * qv) / (nv * nq))
-            scored.append((-cosine, nb, cosine))
-        scored.sort()
-        rows.extend(
-            (q, nb, cosine, r + 1) for r, (_neg, nb, cosine) in enumerate(scored[:k])
-        )
-    vals = ",\n              ".join(
-        f"({q}, {nb}, {cos!r}, {r})" for q, nb, cos, r in rows
-    )
-    return (
-        "SELECT CAST(query_id AS BIGINT) AS query_id, CAST(neighbor AS BIGINT) AS neighbor,\n"
-        "                   CAST(cosine AS DOUBLE) AS cosine, CAST(rank AS INT) AS rank\n"
-        f"            FROM (VALUES {vals}) AS t(query_id, neighbor, cosine, rank)"
-    )
-
-
-def q_embedding_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVFADC (IVF × PQ composed — VERDICT r5 directive #5): IVF coarse
-    cells partition the corpus, ONE global PQ codebook trained on the
-    cell residuals, queries probe nprobe=2 cells and ADC-scan only those
-    cells' compressed codes through broadcast integer LUTs. At 10⁹
-    vectors this is THE standard operating point: the scan touches
-    nprobe/n_cells of a corpus that lives as m small ints per vector
-    (~1/32 the float footprint), never the raw floats. Oracle = numpy
-    golden replication (similarity.ivfpq_topk_numpy, the IVF float
-    contract); recall + nprobe monotonicity asserted in
-    tests/test_similarity.py."""
-    from webcrawler_go_spark.operators.similarity import ivfpq_topk
-
-    emb = _t(spark, sf_dir, "embeddings")
-    queries = emb.filter(F.col("vec_id") < 8)
-    return ivfpq_topk(emb, queries, k=5, n_cells=8, nprobe=2, m=4, n_cents=16)
-
-
-def _ivfpq_topk_oracle_sql(
-    k: int = 5, n_cells: int = 8, nprobe: int = 2, m: int = 4,
-    n_cents: int = 16, n_queries: int = 8, q_lo: int = 0,
-) -> str:
-    """Golden VALUES oracle for embedding_ivfpq_topk: the sequential
-    numpy replication (similarity.ivfpq_topk_numpy) evaluated over the
-    driver's sf0.01 embeddings — the _ivf_topk_oracle_sql pattern.
-    ``q_lo`` shifts the query-id window (the query_only row uses a
-    DISJOINT batch from the build row's)."""
-    import pyarrow.parquet as pq
-
-    from webcrawler_go_spark.operators.similarity import ivfpq_topk_numpy
-
-    sf_dir = os.environ.get("SPARK_GRAFT_ORACLE_SF_DIR", "/root/testdata/sf0.01")
-    try:
-        tbl = pq.read_table(
-            f"{sf_dir}/embeddings.parquet", columns=["vec_id", "embedding"]
-        )
-    except (OSError, FileNotFoundError):
-        return (
-            "SELECT CAST(NULL AS BIGINT) AS query_id, CAST(NULL AS BIGINT) AS neighbor,"
-            " CAST(NULL AS BIGINT) AS adc_d2_micro, CAST(NULL AS INT) AS rank WHERE false"
-        )
-    rows = ivfpq_topk_numpy(
-        tbl.column("vec_id").to_numpy(),
-        tbl.column("embedding").to_pylist(),
-        range(q_lo, n_queries),
-        k=k, n_cells=n_cells, nprobe=nprobe, m=m, n_cents=n_cents,
-    )
-    vals = ",\n              ".join(
-        f"({q}, {nb}, {adc}, {r})" for q, nb, adc, r in rows
-    )
-    return (
-        "SELECT CAST(query_id AS BIGINT) AS query_id, CAST(neighbor AS BIGINT) AS neighbor,\n"
-        "                   CAST(adc_d2_micro AS BIGINT) AS adc_d2_micro, CAST(rank AS INT) AS rank\n"
-        f"            FROM (VALUES {vals}) AS t(query_id, neighbor, adc_d2_micro, rank)"
-    )
-
-
-def q_embedding_ivfpq_query_only(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The AMORTIZED half of IVFADC on the record (VERDICT r6 directive
-    #5): `ivfpq_build(materialize=True)` trains the coarse quantizer +
-    residual PQ codebook ONCE (eager localCheckpoints — the in-session
-    stand-in for the persisted index tables a production deployment
-    keeps), then `ivfpq_query` answers a DISJOINT query batch
-    (vec_id 8..15) against the frozen artifacts: one broadcast-probe
-    assignment + the codes ⨝ LUT integer ADC scan, none of the training
-    shuffles re-run. bench.py times exactly this marginal cost (its
-    warm pass pays the build), putting the 10:1 train:query split —
-    previously a BENCH.md prose number — on the driver record. Oracle =
-    the same numpy golden replication over the shifted query window."""
-    from webcrawler_go_spark.operators.similarity import ivfpq_build, ivfpq_query
-
-    emb = _t(spark, sf_dir, "embeddings")
-    index = ivfpq_build(
-        emb, n_cells=8, m=4, n_cents=16, materialize=True
-    )
-    queries = emb.filter((F.col("vec_id") >= 8) & (F.col("vec_id") < 16))
-    return ivfpq_query(index, queries, k=5, nprobe=2)
-
-
-def q_embedding_ivfpq_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The full IVFADC production composition: IVF-pruned ADC shortlist
-    (depth 50 from nprobe=2 cells' compressed codes) + exact-cosine
-    re-rank of only those candidates. recall@5 of this query ≡ the raw
-    shortlist recall@50 (the pq_rerank contract, asserted in tests).
-    Oracle = numpy golden replication: ivfpq_topk_numpy shortlist +
-    sequential-float64 exact cosine rounded HALF_UP to 6."""
-    from webcrawler_go_spark.operators.similarity import ivfpq_rerank_topk
-
-    emb = _t(spark, sf_dir, "embeddings")
-    queries = emb.filter(F.col("vec_id") < 8)
-    return ivfpq_rerank_topk(
-        emb, queries, k=5, shortlist=50, n_cells=8, nprobe=2, m=4, n_cents=16
-    )
-
-
-def _ivfpq_rerank_oracle_sql(
-    k: int = 5, shortlist: int = 50, n_cells: int = 8, nprobe: int = 2,
-    m: int = 4, n_cents: int = 16, n_queries: int = 8,
-) -> str:
-    """Golden VALUES for embedding_ivfpq_rerank: ivfpq_topk_numpy
-    shortlist + sequential-float64 exact cosine, rounded HALF_UP to 6
-    (the _pq_rerank_oracle_sql pattern)."""
-    from decimal import ROUND_HALF_UP, Decimal
-
-    import numpy as np
-    import pyarrow.parquet as pq
-
-    from webcrawler_go_spark.operators.similarity import ivfpq_topk_numpy
-
-    sf_dir = os.environ.get("SPARK_GRAFT_ORACLE_SF_DIR", "/root/testdata/sf0.01")
-    try:
-        tbl = pq.read_table(
-            f"{sf_dir}/embeddings.parquet", columns=["vec_id", "embedding"]
-        )
-    except (OSError, FileNotFoundError):
-        return (
-            "SELECT CAST(NULL AS BIGINT) AS query_id, CAST(NULL AS BIGINT) AS neighbor,"
-            " CAST(NULL AS DOUBLE) AS cosine, CAST(NULL AS INT) AS rank WHERE false"
-        )
-    ids = tbl.column("vec_id").to_numpy()
-    vecs = np.array(tbl.column("embedding").to_pylist(), dtype=np.float32)
-    order = np.argsort(ids, kind="stable")
-    ids, vecs = ids[order], vecs[order]
-    by_id = {int(i): vecs[j] for j, i in enumerate(ids)}
-
-    short = ivfpq_topk_numpy(
-        ids, vecs, range(n_queries),
-        k=shortlist, n_cells=n_cells, nprobe=nprobe, m=m, n_cents=n_cents,
-    )
-
-    def seq_sum64(arr32):
-        acc = 0.0
-        for x in arr32:
-            acc += float(x)
-        return acc
-
-    def r6(x: float) -> float:
-        return float(
-            Decimal(repr(x)).quantize(Decimal("0.000001"), rounding=ROUND_HALF_UP)
-        )
-
-    cand: dict[int, list[int]] = {}
-    for q, nb, _adc, _r in short:
-        cand.setdefault(q, []).append(nb)
-    rows = []
-    for q, nbs in sorted(cand.items()):
-        qv = by_id[q]
-        nq = seq_sum64(qv * qv) ** 0.5
-        scored = []
-        for nb in nbs:
-            v = by_id[nb]
-            nv = seq_sum64(v * v) ** 0.5
-            cosine = r6(seq_sum64(v * qv) / (nv * nq))
-            scored.append((-cosine, nb, cosine))
-        scored.sort()
-        rows.extend(
-            (q, nb, cosine, r + 1) for r, (_neg, nb, cosine) in enumerate(scored[:k])
-        )
-    vals = ",\n              ".join(
-        f"({q}, {nb}, {cos!r}, {r})" for q, nb, cos, r in rows
-    )
-    return (
-        "SELECT CAST(query_id AS BIGINT) AS query_id, CAST(neighbor AS BIGINT) AS neighbor,\n"
-        "                   CAST(cosine AS DOUBLE) AS cosine, CAST(rank AS INT) AS rank\n"
-        f"            FROM (VALUES {vals}) AS t(query_id, neighbor, cosine, rank)"
-    )
-
-
-def q_text_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Curation repetition signals (Gopher/MassiveText duplicate-n-gram
-    family): word + word-bigram duplication counts per document, pure
-    array ops. New in round 3."""
-    from webcrawler_go_spark.operators.textanalysis import repetition_features
-
-    return repetition_features(_spread(_t(spark, sf_dir, "documents")))
-
-
-def q_pii_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Curation PII scrubbing (emails/IPv4/phones → typed tokens) over
-    synthesized PII-bearing text — regexp_replace chain, Java-regex vs
-    RE2-parity patterns shared with the oracle via PII_PATTERNS. New in
-    round 3."""
-    from webcrawler_go_spark.operators.textanalysis import pii_scrub
-
-    c = _spread(_t(spark, sf_dir, "customer")).select(F.col("c_custkey").alias("k"))
-    ks = F.col("k").cast("string")
-    text = F.concat(
-        F.lit("reach user"), ks, F.lit("@example"), (F.col("k") % 7).cast("string"),
-        F.lit(".com or +1 (555) 010-"), (F.lit(1000) + F.col("k") % 9000).cast("string"),
-        F.lit(" via 10."), (F.col("k") % 200).cast("string"),
-        F.lit("."), ((F.col("k") * 7) % 256).cast("string"),
-        F.lit("."), (F.col("k") % 250).cast("string"),
-        F.lit(" ok"),
-    )
-    return c.select("k", pii_scrub(text).alias("scrubbed"))
-
-
-def _pii_scrub_oracle_sql() -> str:
-    from webcrawler_go_spark.operators.textanalysis import PII_PATTERNS
-
-    expr = (
-        "'reach user' || CAST(k AS VARCHAR) || '@example' || CAST(k % 7 AS VARCHAR)"
-        " || '.com or +1 (555) 010-' || CAST(1000 + k % 9000 AS VARCHAR)"
-        " || ' via 10.' || CAST(k % 200 AS VARCHAR)"
-        " || '.' || CAST((k * 7) % 256 AS VARCHAR)"
-        " || '.' || CAST(k % 250 AS VARCHAR) || ' ok'"
-    )
-    for pat, repl in PII_PATTERNS:
-        lit = pat.replace("'", "''")
-        expr = f"regexp_replace({expr}, '{lit}', '{repl}', 'g')"
-    return f"""
-        SELECT k, {expr} AS scrubbed
-        FROM (SELECT c_custkey AS k FROM customer)"""
-
-
-def q_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The END-TO-END training-data curation pass as ONE DataFrame
-    program — the thing a 100 TB pipeline actually runs nightly:
-
-        normalize → quality gate (≥40 ws-tokens) → exact dedup
-        (first-writer-wins on canonical text) → near-dup canonical
-        filter (banded-LSH pairs → transitive closure, keep cluster
-        canonicals) → deterministic stratified sample (all long docs,
-        20% of short).
-
-    Every stage is an already-oracle-checked operator; this query proves
-    the COMPOSITION end to end (the oracle chains the same stages as
-    CTEs). Output = the surviving training set with its audit columns."""
-    from webcrawler_go_spark.operators.components import canonicalize_closure
-    from webcrawler_go_spark.operators.similarity import lsh_candidate_pairs_banded
-    from webcrawler_go_spark.operators.textanalysis import (
-        normalize_text,
-        stratified_sample,
-        token_count_ws,
-    )
-
-    d = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    norm = d.select("doc_id", normalize_text(F.col("text")).alias("norm_text"))
-    tok = norm.withColumn("n_tokens", token_count_ws(F.col("norm_text")))
-    q = tok.filter(F.col("n_tokens") >= 40)
-    first = q.groupBy("norm_text").agg(F.min("doc_id").alias("doc_id"))
-    q = q.join(first.select("doc_id"), "doc_id")
-    emb = _t(spark, sf_dir, "embeddings")
-    pairs = lsh_candidate_pairs_banded(
-        emb, n_tables=4, bits_per_table=8, threshold=0.5, scale=1000
-    )
-    labels = canonicalize_closure(d.select("doc_id"), pairs)
-    q = q.join(labels, "doc_id").filter(F.col("canonical_id") == F.col("doc_id"))
-    q = q.withColumn(
-        "stratum",
-        F.when(F.length("norm_text") >= 200, "long").otherwise("short"),
-    )
-    kept = stratified_sample(q, "stratum", {"long": 1.0, "short": 0.2})
-    return kept.select(
-        "doc_id", F.col("n_tokens").cast("long").alias("n_tokens"), "stratum"
-    )
-
-
-def _curation_pipeline_oracle_sql() -> str:
-    """The same five stages as chained CTEs over the recursive-closure
-    oracle fragments already proven individually."""
-    return f"""
-WITH RECURSIVE {_semantic_pairs_cte(4, 8, 0.5)},
-edges AS (
-  SELECT a AS u, b AS v FROM pairs
-  UNION ALL
-  SELECT b AS u, a AS v FROM pairs
-),
-reach(u, lbl) AS (
-  SELECT u, u FROM (SELECT DISTINCT u FROM edges)
-  UNION
-  SELECT e.v, r.lbl FROM reach r JOIN edges e ON e.u = r.u
-),
-comp AS (SELECT u AS doc_id, MIN(lbl) AS canon FROM reach GROUP BY u),
-norm AS (
-  SELECT doc_id,
-         lower(trim(regexp_replace(
-           regexp_replace(text, '[\\x00-\\x08\\x0b\\x0c\\x0e-\\x1f\\x7f]', '', 'g'),
-           '\\s+', ' ', 'g'))) AS norm_text
-  FROM documents
-),
-tok AS (
-  SELECT doc_id, norm_text,
-         CASE WHEN trim(norm_text) = '' THEN 0
-              ELSE len(string_split_regex(trim(norm_text), '\\s+')) END AS n_tokens
-  FROM norm
-),
-quality AS (SELECT * FROM tok WHERE n_tokens >= 40),
-first_writer AS (SELECT MIN(doc_id) AS doc_id FROM quality GROUP BY norm_text),
-canonical AS (
-  SELECT q.doc_id, q.n_tokens,
-         CASE WHEN length(q.norm_text) >= 200 THEN 'long' ELSE 'short' END AS stratum
-  FROM quality q
-  JOIN first_writer USING (doc_id)
-  LEFT JOIN comp ON comp.doc_id = q.doc_id
-  WHERE COALESCE(comp.canon, q.doc_id) = q.doc_id
-)
-SELECT doc_id, CAST(n_tokens AS BIGINT) AS n_tokens, stratum
-FROM canonical
-WHERE (((doc_id % 999999937) * 2654435761) % 999999937) % 1000000
-      < CAST((CASE WHEN stratum = 'long' THEN 1.0 ELSE 0.2 END) * 1000000 AS BIGINT)
-"""
-
-
-def q_ngram_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Benchmark decontamination: every 20th document plays the held-out
-    eval set; corpus docs sharing any word 4-gram with it are flagged.
-    Broadcast semi-join on the benchmark's distinct grams — the standard
-    pre-training hygiene pass at 100 TB (eval suites are small)."""
-    from webcrawler_go_spark.operators.textanalysis import ngram_contamination
-
-    d = _spread(_t(spark, sf_dir, "documents")).select("doc_id", "text")
-    corpus = d.filter(F.col("doc_id") % 20 != 0)
-    bench = d.filter(F.col("doc_id") % 20 == 0)
-    return ngram_contamination(corpus, bench, n=4)
-
-
-def q_boilerplate_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cross-document boilerplate: per doc, distinct word 3-grams
-    occurring in > 5 documents corpus-wide (templated/boilerplate
-    content the within-doc repetition signals cannot see)."""
-    from webcrawler_go_spark.operators.textanalysis import boilerplate_ngram_stats
-
-    d = _spread(_t(spark, sf_dir, "documents")).select("doc_id", "text")
-    return boilerplate_ngram_stats(d, n=3, df_threshold=5)
-
-
-def q_streaming_window_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Structured Streaming as a DRIVER row (SURVEY §2.10): the events
-    table replayed through a real file-source stream — readStream →
-    watermark → windowed agg → memory sink, availableNow trigger — must
-    produce EXACTLY the batch answer (the oracle is the same SQL as
-    events_window_agg). This is the continuous-crawl stats ticker
-    (crawler.go:338-373) in its streaming form; at scale the file
-    source becomes Kafka/queue and the memory sink a table, with the
-    identical plan in between."""
-    import shutil
-    import tempfile
-    import uuid
-
-    from webcrawler_go_spark.streaming.frontier_stream import stream_window_counts
-
-    events = _t(spark, sf_dir, "events")
-    d = tempfile.mkdtemp(prefix="q-stream-")
-    src = os.path.join(d, "src")
-    os.makedirs(src)
-    shutil.copy(
-        os.path.join(sf_dir, "events.parquet"), os.path.join(src, "events.parquet")
-    )
-    name = "win_" + uuid.uuid4().hex[:10]
-    q = (
-        stream_window_counts(spark.readStream.schema(events.schema).parquet(src))
-        .writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .option("checkpointLocation", os.path.join(d, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    # awaitTermination(timeout) returns False on TIMEOUT without
-    # raising — a silent partial memory-sink table would surface as a
-    # confusing hash mismatch downstream, so fail loudly instead
-    if not q.awaitTermination(180):
-        q.stop()
-        raise TimeoutError(
-            "streaming_window_agg: availableNow query did not terminate "
-            "within 180s"
-        )
-    return spark.table(name)
-
-
-def q_duplicate_passages(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Passage-level exact dedup (Lee et al. 2022's suffix-array dedup,
-    re-expressed distributed as seed-and-extend: positional 5-gram seed
-    matches → one gram-keyed shuffle → gaps-and-islands maximal-run
-    merge per (pair, diagonal)). The corpus synthesizes shared passages
-    SQL-reproducibly: every 9th doc is prefixed with the first 240
-    chars of its successor's text, so (9k, 9k+1) share a ~40-token
-    passage; the oracle re-derives the identical runs."""
-    from webcrawler_go_spark.operators.textdedup import duplicate_passages
-
-    d = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    nxt = d.select(
-        (F.col("doc_id") - 1).alias("doc_id"), F.col("text").alias("next_text")
-    )
-    corpus = d.join(nxt, "doc_id", "left").select(
-        "doc_id",
-        F.when(
-            (F.col("doc_id") % 9 == 0) & F.col("next_text").isNotNull(),
-            F.concat(F.substring("next_text", 1, 240), F.lit(" "), F.col("text")),
-        )
-        .otherwise(F.col("text"))
-        .alias("text"),
-    )
-    return duplicate_passages(corpus, n=5, min_len=8)
-
-
-def q_tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-doc top-3 TF-IDF terms with integer-quantized idf (millinat
-    floor) so ranking is bit-deterministic across engines."""
-    from webcrawler_go_spark.operators.textanalysis import tfidf_top_terms
-
-    return tfidf_top_terms(_spread(_t(spark, sf_dir, "documents")).select("doc_id", "text"))
-
-
-def q_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """PageRank over an SQL-reproducible link graph (lineitem order→part
-    edges mod 1000, self-loops dropped) in integer fixed-point — the
-    frontier-prioritization signal for the crawl's priority queue,
-    bit-exact across engines (see
-    components.pagerank_fixed_point)."""
-    from webcrawler_go_spark.operators.components import pagerank_fixed_point
-
-    li = (
-        _t(spark, sf_dir, "lineitem")
-        .select(
-            (F.col("l_orderkey") % 1000).alias("src"),
-            (F.col("l_partkey") % 1000).alias("dst"),
-        )
-        .filter(F.col("src") != F.col("dst"))
-    )
-    return pagerank_fixed_point(li, iterations=3)
-
-
-def q_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """HITS hubs & authorities over the same SQL-reproducible link
-    graph as `pagerank` (lineitem order→part edges mod 1000) in integer
-    fixed-point with L1 rescaling — the seed-selection complement to
-    PageRank (authorities = pages worth fetching, hubs = pages worth
-    re-crawling for links). Bit-exact across engines; the two per-
-    iteration Σ's are sanctioned 1-row collects
-    (components.hits_fixed_point)."""
-    from webcrawler_go_spark.operators.components import hits_fixed_point
-
-    li = (
-        _t(spark, sf_dir, "lineitem")
-        .select(
-            (F.col("l_orderkey") % 1000).alias("src"),
-            (F.col("l_partkey") % 1000).alias("dst"),
-        )
-        .filter(F.col("src") != F.col("dst"))
-    )
-    return hits_fixed_point(li, iterations=3)
-
-
-def _hits_oracle_sql(iterations: int = 3, scale: int = 10**6) -> str:
-    """Unrolled fixed-point HITS CTE chain — integer sums + scalar
-    rescale subqueries, hash-exact vs the Spark loop."""
-    ctes = [
-        """edges AS (
-          SELECT DISTINCT l_orderkey % 1000 AS src, l_partkey % 1000 AS dst
-          FROM lineitem WHERE l_orderkey % 1000 <> l_partkey % 1000)""",
-        """nodes AS (SELECT DISTINCT node FROM
-          (SELECT src AS node FROM edges UNION SELECT dst FROM edges))""",
-        "params AS (SELECT COUNT(*) AS n FROM nodes)",
-        f"h0 AS (SELECT node, {scale} // n AS hub FROM nodes, params)",
-    ]
-    for i in range(1, iterations + 1):
-        ctes.append(
-            f"""ar{i} AS (SELECT n.node, COALESCE(SUM(h.hub), 0) AS a
-              FROM nodes n LEFT JOIN edges e ON e.dst = n.node
-              LEFT JOIN h{i - 1} h ON h.node = e.src GROUP BY 1)"""
-        )
-        ctes.append(f"sa{i} AS (SELECT SUM(a) AS s FROM ar{i})")
-        ctes.append(
-            f"""a{i} AS (SELECT node, a * {scale} // GREATEST(s, 1) AS auth
-              FROM ar{i}, sa{i})"""
-        )
-        ctes.append(
-            f"""hr{i} AS (SELECT n.node, COALESCE(SUM(a2.auth), 0) AS h
-              FROM nodes n LEFT JOIN edges e ON e.src = n.node
-              LEFT JOIN a{i} a2 ON a2.node = e.dst GROUP BY 1)"""
-        )
-        ctes.append(f"sh{i} AS (SELECT SUM(h) AS s FROM hr{i})")
-        ctes.append(
-            f"""h{i} AS (SELECT node, h * {scale} // GREATEST(s, 1) AS hub
-              FROM hr{i}, sh{i})"""
-        )
-    return (
-        "WITH " + ",\n            ".join(ctes)
-        + f"""
-            SELECT a{iterations}.node,
-                   CAST(auth AS BIGINT) AS auth_scaled,
-                   CAST(hub AS BIGINT) AS hub_scaled
-            FROM a{iterations} JOIN h{iterations} USING (node)"""
-    )
-
-
-def _pagerank_oracle_sql(iterations: int = 3) -> str:
-    """Unrolled fixed-point PageRank CTE chain — every op integer, so
-    the hash must match the Spark loop exactly."""
-    base = "(SELECT 1000000000000 // n FROM params)"
-    tel = "(SELECT (1000000000000 // n) * 15 // 100 FROM params)"
-    ctes = [
-        """edges AS (
-          SELECT DISTINCT l_orderkey % 1000 AS src, l_partkey % 1000 AS dst
-          FROM lineitem WHERE l_orderkey % 1000 <> l_partkey % 1000)""",
-        """nodes AS (SELECT DISTINCT node FROM
-          (SELECT src AS node FROM edges UNION SELECT dst FROM edges))""",
-        "params AS (SELECT COUNT(*) AS n FROM nodes)",
-        "deg AS (SELECT src, COUNT(*) AS out_deg FROM edges GROUP BY 1)",
-        f"r0 AS (SELECT node, {base} AS rank FROM nodes)",
-    ]
-    for i in range(1, iterations + 1):
-        ctes.append(
-            f"""c{i} AS (SELECT e.dst, SUM(r.rank // d.out_deg) AS s
-              FROM edges e JOIN r{i - 1} r ON r.node = e.src
-              JOIN deg d ON d.src = e.src GROUP BY 1)"""
-        )
-        ctes.append(
-            f"""r{i} AS (SELECT n.node,
-              {tel} + COALESCE(c{i}.s, 0) * 85 // 100 AS rank
-              FROM nodes n LEFT JOIN c{i} ON c{i}.dst = n.node)"""
-        )
-    return (
-        "WITH " + ",\n            ".join(ctes)
-        + f"\n            SELECT node, CAST(rank AS BIGINT) AS pagerank_scaled"
-        f" FROM r{iterations}"
-    )
-
-
-def q_streaming_append_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """§2.10 late-data semantics at the production OUTPUT shape (round-5;
-    complements `streaming_window_agg`'s complete-mode memory-sink demo
-    and `streaming_crawl`'s foreachBatch loop): the events table
-    replayed as a TWO-file stream (maxFilesPerTrigger=1 → multiple
-    micro-batches, so the watermark actually advances between batches)
-    through readStream → 2h watermark → 1h windowed agg → **append
-    mode** → a real parquet FILE sink, then the sink read back. Append
-    emits each window exactly once, when the watermark passes its end —
-    at scale this is the only mode that works (complete mode re-emits
-    unbounded state). Oracle: the batch aggregation RESTRICTED to
-    watermark-finalized windows (win_end ≤ max(ts) − 2h) — probe-
-    verified emitted-set equality on this Spark version."""
-    import shutil
-    import tempfile
-
-    events = _t(spark, sf_dir, "events")
-    base = tempfile.mkdtemp(prefix="q-stream-append-")
-    src = os.path.join(base, "src")
-    os.makedirs(src)
-    mx = events.agg(F.max("ts")).collect()[0][0]
-    cut = F.expr(f"timestamp'{mx}' - interval 96 hours")
-    events.filter(F.col("ts") <= cut).write.parquet(os.path.join(src, "f1.parquet"))
-    events.filter(F.col("ts") > cut).write.parquet(os.path.join(src, "f2.parquet"))
-
-    from webcrawler_go_spark.streaming.frontier_stream import stream_window_counts
-
-    out = os.path.join(base, "out")
-    q = (
-        stream_window_counts(
-            spark.readStream.schema(events.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src + "/*")
-        )
-        .writeStream.format("parquet")
-        .option("path", out)
-        .option("checkpointLocation", os.path.join(base, "ckpt"))
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    if not q.awaitTermination(180):
-        q.stop()
-        shutil.rmtree(base, ignore_errors=True)
-        raise TimeoutError(
-            "streaming_append_sink: availableNow query did not terminate "
-            "within 180s"
-        )
-    return spark.read.parquet(out)
-
-
-def q_text_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from webcrawler_go_spark.operators.textanalysis import quality_features
-
-    return quality_features(_spread(_t(spark, sf_dir, "documents")))
-
-
-def q_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from webcrawler_go_spark.operators.textanalysis import lang_id
-
-    d = _spread(_t(spark, sf_dir, "documents"))
-    return d.select("doc_id", "lang", lang_id(F.col("text")).alias("lang_pred"))
-
-
-def q_token_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from webcrawler_go_spark.operators.textanalysis import (
-        token_count_bpe_ish,
-        token_count_ws,
-    )
-
-    d = _spread(_t(spark, sf_dir, "documents"))
-    return d.select(
-        "doc_id",
-        token_count_ws(F.col("text")).alias("n_tokens_ws"),
-        token_count_bpe_ish(F.col("text")).alias("n_tokens_bpe"),
-    )
-
-
-def q_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Training-sequence packing (concat-and-chunk, capacity 256): every
-    document's whitespace tokens laid end-to-end in doc_id order, cut
-    into fixed-size context windows, docs spanning a boundary split —
-    one row per (doc × overlapped sequence) with both within-sequence
-    and within-doc token spans. Global token offsets via the two-phase
-    range-partitioned cumsum (no single-partition Window); oracle = the
-    identical window cumsum + generate_series chunk overlap in SQL."""
-    from webcrawler_go_spark.operators.textanalysis import pack_sequences
-
-    d = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    return pack_sequences(d, capacity=256)
-
-
-def q_bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Distributed BPE training (Sennrich 2016 / GPT-2 family) on the
-    deterministic synthetic word-frequency table (the crawl_multiround
-    fixed-world pattern — BPE's merge sequence depends on corpus-wide
-    counts, so the oracle needs a closed input): 40 merges learned 4 per
-    round (the batched scale path — one vocab-scale pair shuffle + one
-    ≤16-row driver argmax + one Arrow merge-apply kernel per round).
-    Oracle = the sequential plain-Python reference's merge table as
-    VALUES; classic one-per-round parity is pytest-asserted."""
-    from webcrawler_go_spark.operators.bpe import bpe_train, demo_word_counts
-
-    wc = spark.createDataFrame(
-        list(demo_word_counts().items()), "word string, count long"
-    )
-    merges = bpe_train(wc, n_merges=40, merges_per_round=4)
-    return spark.createDataFrame(
-        [(i, a, b, c) for i, (a, b, c) in enumerate(merges)],
-        "rank long, left string, right string, pair_count long",
-    )
-
-
-def q_bpe_encode_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """END-TO-END corpus tokenization with a REAL learned tokenizer:
-    word counts from the documents table → distributed BPE training (24
-    merges, 4/round) → greedy encode of the DISTINCT VOCABULARY only
-    (the scale trick: encode |V| words, not N docs — at 100 TB the
-    vocab table is ~10⁷ rows vs 10¹⁰ docs) → broadcast-join the encoded
-    lengths back onto the token stream → per-doc exact BPE token
-    counts. Replaces the `token_counts` regex HEURISTIC with the real
-    thing. Oracle = golden VALUES from the sequential reference over
-    the same parquet."""
-    from webcrawler_go_spark.operators.bpe import bpe_encode, bpe_train
-
-    docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    tok = docs.select(
-        "doc_id",
-        F.explode(F.split(F.trim("text"), r"\s+")).alias("word"),
-    ).filter(F.col("word") != "")
-    wc = tok.groupBy("word").agg(F.count("*").alias("count"))
-    merges = bpe_train(wc, n_merges=24, merges_per_round=4)
-    enc = bpe_encode(wc.select("word"), merges).select(
-        "word", F.col("n_tokens").alias("word_bpe_len")
-    )
-    per_doc = (
-        tok.join(F.broadcast(enc), "word")
-        .groupBy("doc_id")
-        .agg(
-            F.count("*").alias("n_words"),
-            F.sum("word_bpe_len").alias("n_bpe_tokens"),
-        )
-    )
-    return docs.select("doc_id").join(per_doc, "doc_id", "left").select(
-        "doc_id",
-        F.coalesce("n_words", F.lit(0)).cast("long").alias("n_words"),
-        F.coalesce("n_bpe_tokens", F.lit(0)).cast("long").alias("n_bpe_tokens"),
-    )
-
-
-def _bpe_encode_corpus_oracle_sql() -> str:
-    """Golden VALUES from the sequential BPE reference replicating the
-    whole corpus pipeline (word counts → train 24/4 → encode) over the
-    driver's sf0.01 documents parquet."""
-    import pyarrow.parquet as pq
-
-    from webcrawler_go_spark.operators.bpe import (
-        bpe_encode_sequential,
-        bpe_train_sequential,
-    )
-
-    sf_dir = os.environ.get("SPARK_GRAFT_ORACLE_SF_DIR", "/root/testdata/sf0.01")
-    try:
-        tbl = pq.read_table(f"{sf_dir}/documents.parquet", columns=["doc_id", "text"])
-    except (OSError, FileNotFoundError):
-        return (
-            "SELECT CAST(NULL AS BIGINT) AS doc_id, CAST(NULL AS BIGINT) AS n_words,"
-            " CAST(NULL AS BIGINT) AS n_bpe_tokens WHERE false"
-        )
-    doc_words = {
-        int(d): [w for w in (t or "").strip().split() if w]
-        for d, t in zip(tbl.column("doc_id").to_pylist(), tbl.column("text").to_pylist())
-    }
-    wc: dict[str, int] = {}
-    for ws in doc_words.values():
-        for w in ws:
-            wc[w] = wc.get(w, 0) + 1
-    merges = bpe_train_sequential(wc, 24, merges_per_round=4)
-    enc_len = {w: len(bpe_encode_sequential(w, merges)) for w in wc}
-    vals = ",\n              ".join(
-        f"({d}, {len(ws)}, {sum(enc_len[w] for w in ws)})"
-        for d, ws in sorted(doc_words.items())
-    )
-    return (
-        "SELECT CAST(doc_id AS BIGINT) AS doc_id, CAST(n_words AS BIGINT) AS n_words,\n"
-        "                   CAST(n_bpe_tokens AS BIGINT) AS n_bpe_tokens\n"
-        f"            FROM (VALUES {vals}) AS t(doc_id, n_words, n_bpe_tokens)"
-    )
-
-
-def _bpe_merges_oracle_sql() -> str:
-    """VALUES oracle computed by the SEQUENTIAL plain-Python BPE trainer
-    (`bpe_train_sequential`, same batched K=4 algorithm) over the same
-    deterministic word-frequency table — the head_probe golden-VALUES
-    pattern: the distributed trainer must reproduce the scalar
-    reference's merge table exactly, rank for rank."""
-    from webcrawler_go_spark.operators.bpe import (
-        bpe_train_sequential,
-        demo_word_counts,
-    )
-
-    merges = bpe_train_sequential(demo_word_counts(), 40, merges_per_round=4)
-    rows = ",\n              ".join(
-        f"({i}, '{a}', '{b}', {c})" for i, (a, b, c) in enumerate(merges)
-    )
-    return (
-        'SELECT CAST(rank AS BIGINT) AS rank, left_sym AS "left",\n'
-        '                   right_sym AS "right", CAST(pair_count AS BIGINT) AS pair_count\n'
-        f"            FROM (VALUES {rows}) AS t(rank, left_sym, right_sym, pair_count)"
-    )
-
-
-# Deterministic BM25 probe queries over the synthetic documents
-# vocabulary (31 tokens; 'dup' is the one rare term). Shared by the
-# Spark query and the DuckDB oracle.
-BM25_QUERIES: list[tuple[int, list[str]]] = [
-    (1, ["dup", "hash", "merge"]),
-    (2, ["table", "scan", "filter"]),
-    (3, ["spark", "stream", "window", "agg"]),
-]
-
-
-def q_bm25_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Okapi BM25 top-10 per probe query in integer fixed-point
-    (k1=6/5, b=3/4, milli-quantized Lucene idf) — ranked retrieval for
-    corpus probes / decontamination lookups. Query table is broadcast;
-    postings are semi-joined to the query terms BEFORE the (doc_id,
-    token) shuffle; dl rides the postings so no corpus-wide length
-    join. Oracle = identical integer math in SQL."""
-    from webcrawler_go_spark.operators.retrieval import bm25_topk
-
-    qdf = spark.createDataFrame(
-        [(q, t) for q, ts in BM25_QUERIES for t in ts],
-        "query_id int, term string",
-    )
-    d = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    return bm25_topk(d, qdf, k=10)
-
-
-def q_bigram_lm_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """CCNet-style perplexity quality signal: add-one-smoothed bigram
-    LM trained on the corpus itself, every doc scored under it in
-    exact milli-nat integers (slice+arrays_zip codegen bigrams, two
-    map-side-combining count shuffles). Oracle = identical math via
-    positional array indexing in SQL."""
-    from webcrawler_go_spark.operators.retrieval import bigram_lm_scores
-
-    return bigram_lm_scores(
-        _t(spark, sf_dir, "documents").select("doc_id", "text")
-    )
-
-
-def q_perplexity_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """CCNet's head/middle/tail perplexity split (Wenzek et al., "CCNet:
-    Extracting High Quality Monolingual Datasets from Web Crawl Data",
-    LREC 2020): score every document under the corpus-trained bigram LM
-    (`bigram_lm_scores`, exact millinats), then split PER LANGUAGE into
-    terciles of negated avg log-prob (nll — positive, so integer
-    division is engine-symmetric). The tercile cutoffs come from the
-    fixed-width histogram-quantile sketch, NOT a per-language global
-    sort — one bucket-keyed shuffle bounded by the value range, then a
-    broadcast join assigns buckets (the 100 TB shape; ntile would need
-    a total order per language). head = lowest perplexity third."""
-    from webcrawler_go_spark.operators.retrieval import bigram_lm_scores
-    from webcrawler_go_spark.operators.sketches import histogram_quantiles
-
-    d = _t(spark, sf_dir, "documents").select("doc_id", "lang", "text")
-    scores = bigram_lm_scores(d.select("doc_id", "text"))
-    s = scores.join(d.select("doc_id", "lang"), "doc_id").select(
-        "doc_id", "lang", (-F.col("avg_logprob_milli")).alias("nll_milli")
-    )
-    width = 200
-    hq = histogram_quantiles(
-        s, "nll_milli", ["lang"], width=width, quantiles=(33, 67)
-    )
-    return s.join(F.broadcast(hq), "lang").select(
-        "doc_id",
-        "lang",
-        "nll_milli",
-        F.when(F.expr(f"nll_milli div {width} <= p33 div {width}"), "head")
-        .when(F.expr(f"nll_milli div {width} <= p67 div {width}"), "middle")
-        .otherwise("tail")
-        .alias("bucket"),
-    )
-
-
-def _perplexity_buckets_oracle_sql(width: int = 200) -> str:
-    """bigram-LM CTE chain (the bigram_lm_scores contract) + the
-    histogram-quantile twin + the same bucket-edge assignment."""
-    from webcrawler_go_spark.operators.sketches import histogram_quantiles_sql
-
-    hq = histogram_quantiles_sql(
-        "nll_milli", "s", "lang", width, quantiles=(33, 67)
-    )
-    return f"""
-WITH d AS (
-  SELECT doc_id,
-         CASE WHEN trim(text) = '' THEN CAST([] AS VARCHAR[])
-              ELSE string_split_regex(trim(text), '\\s+') END AS l
-  FROM documents
-),
-tok AS (SELECT t.w FROM d, unnest(l) AS t(w)),
-c1 AS (SELECT w, COUNT(*) AS c1 FROM tok GROUP BY 1),
-v AS (SELECT COUNT(*) AS v FROM c1),
-g AS (
-  SELECT doc_id, l[t.i] AS w1, l[t.i + 1] AS w2
-  FROM d, unnest(generate_series(1, len(l) - 1)) AS t(i)
-),
-c2 AS (SELECT w1, w2, COUNT(*) AS c2 FROM g GROUP BY 1, 2),
-lp AS (
-  SELECT g.doc_id,
-         CAST(floor(1000.0 * ln((c2 + 1.0)
-              / (c1 + CAST(v AS DOUBLE)))) AS BIGINT) AS lp
-  FROM g JOIN c2 USING (w1, w2) JOIN c1 ON c1.w = g.w1, v
-),
-pd AS (
-  SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_bigrams,
-         CAST(SUM(lp) AS BIGINT) AS logprob_milli
-  FROM lp GROUP BY 1
-),
-s AS (
-  SELECT doc.doc_id, doc.lang,
-         CAST(CASE WHEN COALESCE(n_bigrams, 0) = 0 THEN 0
-              ELSE (-logprob_milli) // n_bigrams END AS BIGINT) AS nll_milli
-  FROM documents doc LEFT JOIN pd USING (doc_id)
-),{hq}
-SELECT s.doc_id, s.lang, s.nll_milli,
-       CASE WHEN s.nll_milli // {width} <= hq.p33 // {width} THEN 'head'
-            WHEN s.nll_milli // {width} <= hq.p67 // {width} THEN 'middle'
-            ELSE 'tail' END AS bucket
-FROM s JOIN hq USING (lang)
-"""
-
-
-def _bm25_values_sql() -> str:
-    return ",".join(
-        f"({q}, '{t}')" for q, ts in BM25_QUERIES for t in ts
-    )
-
-
-def q_mixture_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Temperature-based domain-mixture resampling (alpha 0.5): each
-    domain keeps docs at rate floor(1e6·sqrt(min_count/count))/1e6 — the
-    rarest domain keeps everything, head domains are damped — via the
-    deterministic hash-threshold draw. One metadata-scale agg + one
-    broadcast join; the corpus side is a narrow filter. The sf sources
-    are uniform by construction, so the query folds them into a 60/30/10
-    power-law head/mid/tail split first — the damping path actually
-    runs (head rate ≈ 0.408, mid ≈ 0.577, tail = 1). Oracle = the
-    identical counts/sqrt/floor/draw arithmetic in SQL."""
-    from webcrawler_go_spark.operators.textanalysis import mixture_resample
-
-    d = _t(spark, sf_dir, "documents").select(
-        "doc_id",
-        F.when(F.col("doc_id") % 10 < 6, "head")
-        .when(F.col("doc_id") % 10 < 9, "mid")
-        .otherwise("tail")
-        .alias("source"),
-    )
-    return mixture_resample(d, alpha=0.5)
-
-
-def q_token_budget_fill(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Token-budget mixture fill (`textanalysis.token_budget_fill`):
-    each source (the 60/30/10 head/mid/tail split) fills a 15,000-token
-    budget in deterministic priority order (doc_id % 97 as a stand-in
-    priority, doc_id tiebreak) — the budgeted counterpart to
-    `mixture_resample`; training-mixture specs are token budgets, not
-    keep rates. Prefix semantics fall out of the monotone inclusive
-    cumsum. Oracle = the identical windowed SUM in SQL."""
-    from webcrawler_go_spark.operators.textanalysis import (
-        token_budget_fill,
-        token_count_ws,
-    )
-
-    d = _t(spark, sf_dir, "documents").select(
-        "doc_id",
-        F.when(F.col("doc_id") % 10 < 6, "head")
-        .when(F.col("doc_id") % 10 < 9, "mid")
-        .otherwise("tail")
-        .alias("source"),
-        token_count_ws(F.col("text")).cast("long").alias("n_tokens"),
-        (F.col("doc_id") % 97).alias("priority"),
-    )
-    return token_budget_fill(d, budget_tokens=15_000).select(
-        "doc_id", "source", "n_tokens", "cum_tokens"
-    )
-
-
-_TOKEN_BUDGET_FILL_ORACLE_SQL = """
-WITH d AS (
-  SELECT doc_id,
-         (CASE WHEN doc_id % 10 < 6 THEN 'head'
-               WHEN doc_id % 10 < 9 THEN 'mid'
-               ELSE 'tail' END) AS source,
-         CAST(CASE WHEN trim(text) = '' THEN 0
-              ELSE len(string_split_regex(trim(text), '\\s+')) END AS BIGINT)
-           AS n_tokens,
-         doc_id % 97 AS priority
-  FROM documents
-),
-c AS (
-  SELECT doc_id, source, n_tokens,
-         CAST(SUM(n_tokens) OVER (PARTITION BY source
-              ORDER BY priority, doc_id) AS BIGINT) AS cum_tokens
-  FROM d
-)
-SELECT doc_id, source, n_tokens, cum_tokens
-FROM c WHERE cum_tokens <= 15000
-"""
-
-
-def q_text_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Curation: canonical text form before dedup (lowercase, control
-    chars stripped, whitespace collapsed, trimmed) — pure Catalyst."""
-    from webcrawler_go_spark.operators.textanalysis import normalize_text
-
-    docs = _spread(_t(spark, sf_dir, "documents"))
-    return docs.select(
-        "doc_id",
-        normalize_text(
-            F.concat(F.lit("  MiXeD\tCase \x07"), F.col("text"), F.lit("  "))
-        ).alias("norm_text"),
-    )
-
-
-def q_sample_stratified(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Training-data curation: deterministic per-stratum Bernoulli sample
-    (keep all long docs, 20% of short) — hash-threshold draw, reproducible
-    across engines and partitionings."""
-    from webcrawler_go_spark.operators.textanalysis import stratified_sample
-
-    docs = _t(spark, sf_dir, "documents").select(
-        "doc_id",
-        "text",
-        F.when(F.length("text") >= 200, "long").otherwise("short").alias("stratum"),
-    )
-    kept = stratified_sample(docs, "stratum", {"long": 1.0, "short": 0.2})
-    return kept.select("doc_id", "stratum")
-
-
-def q_tag_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """F9 (jsonfeed.go:119-131): drop empty-link items, keep only items
-    whose tags contain the configured tag."""
-    from webcrawler_go_spark.plans.feed import filter_feed_items
-
-    c = _t(spark, sf_dir, "customer")
-    feed = c.select(
-        F.col("c_custkey").alias("item_id"),
-        F.when(F.col("c_custkey") % 7 == 0, F.lit("")).otherwise(
-            F.concat(F.lit("https://feed.test/p/"), F.col("c_custkey").cast("string"))
-        ).alias("link"),
-        F.concat(
-            F.lit("tag-"), (F.col("c_custkey") % 5).cast("string"), F.lit(",common")
-        ).alias("tags"),
-    )
-    return filter_feed_items(feed, "tag-2").select("item_id", "link", "tags")
-
-
-def q_gzip_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """C13 (crawler.go:681-689): gunzip bodies whose Content-Encoding is
-    gzip, pass others through — round trip: bodies are gzip-compressed
-    from documents.text inside the kernel, decoded by the REAL decode
-    kernel; the oracle states the original text."""
-    from webcrawler_go_spark.functions.encoding import gzip_decode_udf
-
-    docs = _t(spark, sf_dir, "documents").select(
-        "doc_id", F.substring("text", 1, 120).alias("t")
-    )
-
-    def to_blobs(batches):
-        import gzip as _gz
-
-        import pandas as pd
-
-        for b in batches:
-            enc, body = [], []
-            for did, t in zip(b["doc_id"], b["t"]):
-                if did % 2 == 0:
-                    enc.append("gzip")
-                    body.append(_gz.compress(t.encode(), mtime=0))
-                else:
-                    enc.append("identity")
-                    body.append(t.encode())
-            yield pd.DataFrame(
-                {"doc_id": b["doc_id"], "encoding": enc, "body": body}
-            )
-
-    blobs = docs.mapInPandas(to_blobs, "doc_id long, encoding string, body binary")
-    return blobs.select(
-        "doc_id",
-        "encoding",
-        gzip_decode_udf()(F.col("body"), F.col("encoding")).alias("decoded"),
-    )
-
-
-def q_feed_capture_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """J5 (jsonfeed.go:166-186): feed items × fetched captures — pair item
-    metadata + headline-derived artifact filename (C5) with the capture's
-    fetch status, joined on the canonical URL."""
-    from webcrawler_go_spark.plans.feed import feed_capture_frontier
-
-    canon = canon_corpus(spark, sf_dir)
-    feed = canon.filter(F.col("k") % 4 == 0).select(
-        F.concat(F.lit("Item "), F.col("k").cast("string")).alias("headline"),
-        F.col("url_norm").alias("link"),
-        F.lit("2026-01-15").alias("date"),
-        F.lit("brief").alias("brief"),
-        F.lit("news").alias("tags"),
-        F.lit(None).cast("string").alias("datecode"),
-    )
-    frontier = feed_capture_frontier(feed, "https://base.test")
-    captures = canon.groupBy("url_norm").agg(F.min("k").alias("k")).select(
-        "url_norm", _status_col(F.col("k")).alias("status")
-    )
-    return frontier.join(captures, "url_norm").select(
-        "headline", "url_norm", "captured_file", "status"
-    )
-
-
-def q_csv_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """S7: CSV sink round trip — write the search-mode report through the
-    REAL sink (mode column order, header, single file) and read it back;
-    the oracle states the report contents."""
-    import tempfile
-
-    from webcrawler_go_spark.sinks.csv_sink import write_csv
-
-    log = canon_corpus(spark, sf_dir).select(
-        F.col("url_norm").alias("url"),
-        _status_col(F.col("k")).alias("status"),
-        _ctype_col(F.col("k")).alias("content_type"),
-        _bytes_col(F.col("k")).alias("bytes"),
-    )
-    out = tempfile.mkdtemp(prefix="csvsink-q-")
-    write_csv(log, out, mode_name="search", single_file=True)
-    return spark.read.option("header", True).schema(
-        "url string, status int, content_type string, bytes long"
-    ).csv(out)
-
-
-def q_pdf_text_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X4: REAL PDF text extraction (parser/pdf.go:11-53) as a round
-    trip: build a valid FlateDecode PDF from each document's text inside
-    the kernel, extract with the pure-Python content-stream walker, emit
-    the extracted text. The oracle states what extraction must return —
-    the original text — so any parser defect hash-mismatches."""
-    docs = _spread(_t(spark, sf_dir, "documents")).select(
-        "doc_id", F.substring("text", 1, 200).alias("t")
-    )
-
-    def kernel(batches):
-        import pandas as pd
-
-        from webcrawler_go_spark.operators.doc_extract import (
-            make_pdf,
-            pdf_text_blocks,
-        )
-
-        for b in batches:
-            ext = ["\n".join(pdf_text_blocks(make_pdf([t]))) for t in b["t"]]
-            yield pd.DataFrame({"doc_id": b["doc_id"], "extracted": ext})
-
-    return docs.mapInPandas(kernel, "doc_id long, extracted string")
-
-
-def q_pdf_cid_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X4 extension (round-3 directive #7): CID/Identity-H PDF text
-    extraction round trip — build a Type0-font PDF whose show strings
-    are 2-byte CIDs under a NON-identity ToUnicode cmap (cid = cp + 7;
-    digits via bfrange, the rest via bfchar), extract through the cmap
-    walker, emit the text. parser/pdf.go reaches this via pdfcpu; this
-    is the stdlib equivalent."""
-    docs = _spread(_t(spark, sf_dir, "documents")).select(
-        "doc_id", F.substring("text", 1, 120).alias("t")
-    )
-
-    def kernel(batches):
-        import pandas as pd
-
-        from webcrawler_go_spark.operators.doc_extract import (
-            make_pdf_cid,
-            pdf_text_blocks,
-        )
-
-        for b in batches:
-            ext = ["\n".join(pdf_text_blocks(make_pdf_cid([t]))) for t in b["t"]]
-            yield pd.DataFrame({"doc_id": b["doc_id"], "extracted": ext})
-
-    return docs.mapInPandas(kernel, "doc_id long, extracted string")
-
-
-# (filter chain, /Predictor DecodeParm, display name). The two
-# predictor entries cover PNG row filters (12, with the fixture's
-# per-row 0-4 cycle incl. Paeth) and TIFF horizontal differencing (2)
-# — round-5 directive #3; pdfcpu parity parser/pdf.go:11-53.
-_PDF_FILTER_CYCLE = [
-    (["FlateDecode"], None, "FlateDecode"),
-    (["RunLengthDecode"], None, "RunLengthDecode"),
-    (["ASCIIHexDecode"], None, "ASCIIHexDecode"),
-    (["ASCII85Decode"], None, "ASCII85Decode"),
-    (["LZWDecode"], None, "LZWDecode"),
-    # chained filters, decoded in order
-    (["ASCII85Decode", "FlateDecode"], None, "ASCII85Decode+FlateDecode"),
-    (["FlateDecode"], 12, "FlateDecode+Pred12"),
-    (["LZWDecode"], 2, "LZWDecode+Pred2"),
-]
-
-
-def q_pdf_filters_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X4 breadth (round-4 directive #6 + round-5 directive #3;
-    parser/pdf.go:11-53 — pdfcpu handles LZW/RunLength/ASCIIHex/ASCII85
-    streams, /Predictor-coded streams, and encrypted documents): per
-    row, build a PDF whose content stream is encoded with a filter
-    chain cycled by doc_id (incl. a two-filter chain and two
-    PREDICTOR-coded variants — PNG filters 0-4 on Flate, TIFF
-    differencing on LZW) — or an /Encrypt-marked document every 7th
-    row — and extract through the stdlib decoders. The oracle states
-    the contract: the original text back for every supported chain,
-    EMPTY (never wrong) for encrypted."""
-    docs = _spread(
-        _t(spark, sf_dir, "documents").select(
-            "doc_id", F.substring("text", 1, 160).alias("t")
-        )
-    )
-
-    def kernel(batches):
-        import pandas as pd
-
-        from webcrawler_go_spark.operators.doc_extract import (
-            make_pdf,
-            pdf_text_blocks,
-        )
-
-        for b in batches:
-            names, ext = [], []
-            for did, t in zip(b["doc_id"], b["t"]):
-                did = int(did)
-                if did % 7 == 0:
-                    blob = make_pdf([t], encrypted=True)
-                    names.append("Encrypted")
-                else:
-                    chain, pred, name = _PDF_FILTER_CYCLE[did % 8]
-                    blob = make_pdf([t], filters=chain, predictor=pred)
-                    names.append(name)
-                ext.append("\n".join(pdf_text_blocks(blob)))
-            yield pd.DataFrame(
-                {"doc_id": b["doc_id"], "filter_chain": names, "extracted": ext}
-            )
-
-    return docs.mapInPandas(
-        kernel, "doc_id long, filter_chain string, extracted string"
-    )
-
-
-def q_docx_text_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X5: REAL DOCX extraction (parser/docx.go:11-31) round trip: build
-    a .docx (two runs per paragraph) from each document's text, extract
-    paragraphs via the stdlib zip+XML walk, emit the joined text."""
-    docs = _spread(_t(spark, sf_dir, "documents")).select(
-        "doc_id", F.substring("text", 1, 150).alias("t")
-    )
-
-    def kernel(batches):
-        import pandas as pd
-
-        from webcrawler_go_spark.operators.doc_extract import (
-            docx_paragraphs,
-            make_docx,
-        )
-
-        for b in batches:
-            ext = ["\n".join(docx_paragraphs(make_docx([t]))) for t in b["t"]]
-            yield pd.DataFrame({"doc_id": b["doc_id"], "extracted": ext})
-
-    return docs.mapInPandas(kernel, "doc_id long, extracted string")
-
-
-def q_doc_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from webcrawler_go_spark.operators.textanalysis import doc_fingerprint
-
-    return doc_fingerprint(_spread(_t(spark, sf_dir, "documents")).select("doc_id", "text"))
-
-
-def q_events_window_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from webcrawler_go_spark.operators.events import tumbling_window_agg
-
-    return tumbling_window_agg(_t(spark, sf_dir, "events"), minutes=60)
-
-
-def q_events_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from webcrawler_go_spark.operators.events import sessionize
-
-    return sessionize(_t(spark, sf_dir, "events"), gap_minutes=30)
-
-
-def q_events_error_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from webcrawler_go_spark.operators.events import error_rate_by_window
-
-    return error_rate_by_window(_t(spark, sf_dir, "events"), minutes=60)
-
-
-def q_props_json_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """C9-adjacent: schema-flexible JSON field extraction + string coerce
-    (jsonfeed.go:224-284)."""
-    e = _t(spark, sf_dir, "events")
-    return e.select(
-        "event_id",
-        F.get_json_object("props", "$.k").alias("k_str"),
-        F.get_json_object("props", "$.k").cast("int").alias("k_val"),
-    )
-
-
-def q_feed_field_coalesce(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """C8: flexible field fallbacks (headline|title|name, link|url|...)
-    over a feed-shaped projection of customer."""
-    from webcrawler_go_spark.functions.classify import coalesce_feed_fields
-
-    c = _t(spark, sf_dir, "customer")
-    feed = c.select(
-        F.col("c_custkey").alias("item_id"),
-        F.when(F.col("c_custkey") % 3 == 0, F.concat(F.lit("T"), F.col("c_name"))).alias("title"),
-        F.concat(F.lit("N"), F.col("c_name")).alias("name"),
-        F.when(F.col("c_custkey") % 2 == 0, F.concat(F.lit("https://u/"), F.col("c_custkey").cast("string"))).alias("url"),
-        F.concat(F.lit("https://p/"), F.col("c_custkey").cast("string")).alias("permalink"),
-        F.when(F.col("c_custkey") % 5 == 0, F.lit("2026-01-01")).alias("published"),
-        F.col("c_mktsegment").alias("summary"),
-        F.when(F.col("c_custkey") % 4 == 0, F.lit("tag-a,tag-b")).alias("keywords"),
-    )
-    return feed.select("item_id", *coalesce_feed_fields(feed.columns))
-
-
-def q_media_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Multimodal plumbing: binary blobs → mapInPandas decode (fake
-    deterministic decoder) → typed feature rows. The Arrow/batch path is
-    real; only the codec math is faked (no codec libs in the container)."""
-    from webcrawler_go_spark.operators.multimodal import (
-        decode_media,
-        media_blobs_from_documents,
-    )
-
-    blobs = media_blobs_from_documents(_spread(_t(spark, sf_dir, "documents")))
-    return decode_media(blobs, use_fake_decoder=True)
-
-
-# bigram shingles for SimHash (unigram features degenerate on the small
-# shared vocabulary — see textdedup.simhash)
-_SHINGLES2_SQL = """
-grams2 AS (
-  SELECT doc_id, token || ' ' || t1 AS shingle
-  FROM (
-    SELECT doc_id, token,
-           lead(token, 1) OVER (PARTITION BY doc_id ORDER BY pos1) AS t1
-    FROM tokens
-  )
-  WHERE t1 IS NOT NULL
-),
-sh2 AS (SELECT DISTINCT doc_id, shingle FROM grams2)
-"""
-
-
-def _simhash_oracle_sql(bits: int = 16) -> str:
-    sums = ",\n    ".join(
-        f"SUM(CASE WHEN ((v.token_id * {2 * k + 3} + {997 * k + 101}) % 1000000007) % 2 = 1 "
-        f"THEN 1 ELSE -1 END) AS s{k}"
-        for k in range(bits)
-    )
-    fp = " + ".join(f"(CASE WHEN s{k} > 0 THEN {1 << k} ELSE 0 END)" for k in range(bits))
-    return f"""
-WITH {_DUP_DOCS_SQL.strip().rstrip()}, {_TOKENS_SQL.strip()}, {_SHINGLES2_SQL.strip()},
-vocab AS (
-  SELECT shingle, CAST(row_number() OVER (ORDER BY shingle) AS BIGINT) AS token_id
-  FROM (SELECT DISTINCT shingle FROM sh2)
-),
-sums AS (
-  SELECT t.doc_id, {sums}
-  FROM sh2 t JOIN vocab v USING (shingle)
-  GROUP BY t.doc_id
-)
-SELECT doc_id, CAST({fp} AS BIGINT) AS simhash FROM sums
-"""
-
-
-def _simhash_pairs_oracle_sql(bits: int = 16, max_hamming: int = 3) -> str:
-    base = _simhash_oracle_sql(bits).strip()
-    # wrap the fingerprint query as a CTE and do the pigeonhole block join
-    n_blocks = max_hamming + 1
-    block_bits = bits // n_blocks
-    blks = ",".join(str(i) for i in range(n_blocks))
-    return f"""
-WITH fp AS ({base})
-, blocks AS (
-  SELECT doc_id, simhash, b.blk,
-         (simhash >> ({block_bits} * b.blk)) % {1 << block_bits} AS blk_val
-  FROM fp, (SELECT unnest([{blks}]) AS blk) b
-),
-cand AS (
-  SELECT DISTINCT a.doc_id AS a, b.doc_id AS b,
-                  a.simhash AS fa, b.simhash AS fb
-  FROM blocks a JOIN blocks b
-    ON a.blk = b.blk AND a.blk_val = b.blk_val AND a.doc_id < b.doc_id
-)
-SELECT a, b, CAST(bit_count(xor(fa, fb)) AS INT) AS hamming
-FROM cand WHERE bit_count(xor(fa, fb)) <= {max_hamming}
-"""
-
-
-def _minhash_oracle_sql() -> str:
-    from webcrawler_go_spark.operators.textdedup import MINHASH_COEFFS, MINHASH_P
-
-    hs = ",\n    ".join(
-        f"MIN((sid * {a} + {b}) % {MINHASH_P}) AS h{i}"
-        for i, (a, b) in enumerate(MINHASH_COEFFS)
-    )
-    bands = "\n  UNION ALL\n".join(
-        f"  SELECT doc_id, {i} AS band, CAST(h{2 * i} AS VARCHAR) || '_' || CAST(h{2 * i + 1} AS VARCHAR) AS bucket FROM sig"
-        for i in range(4)
-    )
-    return f"""
-WITH {_DUP_DOCS_SQL.strip()}, {_TOKENS_SQL.strip()}, {_SHINGLES_SQL.strip()},
-vocab AS (
-  SELECT shingle, CAST(row_number() OVER (ORDER BY shingle) AS BIGINT) AS sid
-  FROM (SELECT DISTINCT shingle FROM sh)
-),
-ids AS (SELECT doc_id, sid FROM sh JOIN vocab USING (shingle)),
-sig AS (SELECT doc_id, {hs} FROM ids GROUP BY doc_id),
-banded AS (
-{bands}
-)
-SELECT DISTINCT a.doc_id AS a, b.doc_id AS b
-FROM banded a JOIN banded b ON a.band = b.band AND a.bucket = b.bucket AND a.doc_id < b.doc_id
-"""
-
-
-def _stopword_hits_sql(text_expr: str, words: list[str]) -> str:
-    """Single-pass whole-word hit count (the Spark twin:
-    size(array_intersect(split(lower(text), WORD_SEP_RE), profile))).
-    The separator class is the same Unicode-aware [^\\p{L}\\p{N}_]+ in
-    RE2 as in Java regex, so non-ASCII profile words (sv för/är/på)
-    tokenize identically on both sides."""
-    lits = ", ".join("'" + w.replace("'", "''") + "'" for w in words)
-    return (
-        f"COALESCE(len(list_intersect("
-        f"string_split_regex(lower({text_expr}), '[^\\p{{L}}\\p{{N}}_]+'), [{lits}])), 0)"
-    )
-
-
-def _lang_id_sql_scores(text_expr: str) -> dict[str, str]:
-    from webcrawler_go_spark.operators.textanalysis import LANG_STOPWORDS
-
-    return {
-        lang: _stopword_hits_sql(text_expr, words)
-        for lang, words in LANG_STOPWORDS.items()
-    }
-
-
-def _lang_id_oracle_sql() -> str:
-    """Generated generically from LANG_STOPWORDS so broadening a profile
-    or adding a language updates Spark and oracle from one source; the
-    CASE order mirrors the dict's tie-break order."""
-    s = _lang_id_sql_scores("text")
-    langs = list(s)
-    best = "GREATEST(" + ", ".join(s.values()) + ")"
-    whens = "\n        ".join(
-        f"WHEN {s[lang]} = {best} THEN '{lang}'" for lang in langs[:-1]
-    )
-    return f"""
-SELECT doc_id, lang,
-  (CASE WHEN {best} = 0 THEN 'und'
-        {whens}
-        ELSE '{langs[-1]}' END) AS lang_pred
-FROM documents
-"""
-
-
-# pixel generator + naive-GCR CMYK math + per-channel ink sums, shared by
-# the three S10 oracles (media_cmyk_transform and the two container twins):
-# pixel p of customer k has r,g,b = v(3p),v(3p+1),v(3p+2), v(j)=(k*31+j*7)%256;
-# K = 255-max, X' = round-half-up(255*(255-X-K)/(255-K)) (0 when K=255)
-_CMYK_SUMS_SQL = """
-px AS (
-  SELECT k,
-         (k * 31 + (3 * u.p) * 7) % 256 AS r,
-         (k * 31 + (3 * u.p + 1) * 7) % 256 AS g,
-         (k * 31 + (3 * u.p + 2) * 7) % 256 AS b
-  FROM (SELECT c_custkey AS k FROM customer) t,
-       unnest(generate_series(0, (k % 8 + 2) * (k % 5 + 2) - 1)) AS u(p)
-),
-cmyk AS (
-  SELECT k,
-         CASE WHEN kk = 255 THEN 0
-              ELSE (510 * (255 - r - kk) + (255 - kk)) // (510 - 2 * kk) END AS c,
-         CASE WHEN kk = 255 THEN 0
-              ELSE (510 * (255 - g - kk) + (255 - kk)) // (510 - 2 * kk) END AS m,
-         CASE WHEN kk = 255 THEN 0
-              ELSE (510 * (255 - b - kk) + (255 - kk)) // (510 - 2 * kk) END AS y,
-         kk
-  FROM (SELECT *, 255 - GREATEST(r, g, b) AS kk FROM px)
-),
-sums AS (
-  SELECT k,
-         CAST(SUM(c) AS BIGINT) AS c_sum,
-         CAST(SUM(m) AS BIGINT) AS m_sum,
-         CAST(SUM(y) AS BIGINT) AS y_sum,
-         CAST(SUM(kk) AS BIGINT) AS k_sum
-  FROM cmyk GROUP BY k
-)
-"""
-
-
-_QEMB_SQL = """
-qa AS (
-  SELECT vec_id, CAST(u.i AS INT) AS ord,
-         CAST(round(CAST(embedding[u.i] AS DOUBLE) * 1000) AS BIGINT) AS qx
-  FROM embeddings, unnest(generate_series(1, len(embedding))) AS u(i)
-),
-n2 AS (SELECT vec_id, SUM(qx * qx) AS n2 FROM qa GROUP BY vec_id)
-"""
-
-
-# shared by embedding_cosine_pairs (row-pair baseline) and
-# embedding_cosine_tiled (block-GEMM strategy) — the two queries'
-# contract is identical output
-_COSINE_PAIRS_ORACLE_SQL = f"""
-    WITH {_QEMB_SQL.strip()},
-    dots AS (
-      SELECT a.vec_id AS a, b.vec_id AS b, SUM(a.qx * b.qx) AS dot
-      FROM qa a JOIN qa b ON a.ord = b.ord AND a.vec_id < b.vec_id
-      GROUP BY 1, 2
-    )
-    SELECT a, b,
-           ROUND(dot / (sqrt(CAST(na.n2 AS DOUBLE)) * sqrt(CAST(nb.n2 AS DOUBLE))), 6) AS cosine
-    FROM dots JOIN n2 na ON na.vec_id = a JOIN n2 nb ON nb.vec_id = b
-    WHERE ROUND(dot / (sqrt(CAST(na.n2 AS DOUBLE)) * sqrt(CAST(nb.n2 AS DOUBLE))), 6) >= 0.2"""
-
-
-def _banded_cte_parts(n_tables: int, bits_per_table: int) -> tuple[str, str]:
-    """(signs, per_table) SQL fragments for the banded multi-table LSH
-    bucketing — the single source of truth mirrored against
-    similarity._banded_table_bucket, shared by every banded oracle."""
-    n_planes = n_tables * bits_per_table
-    signs = ",\n    ".join(
-        f"SUM(CASE WHEN ((ord * {2 * p + 3} + {7 * p}) % 1009) % 2 = 1 "
-        f"THEN qx ELSE -qx END) AS g{p}"
-        for p in range(n_planes)
-    )
-    per_table = "\n  UNION ALL\n  ".join(
-        "SELECT vec_id, {t} AS tbl, CAST({expr} AS BIGINT) AS bucket FROM sig".format(
-            t=t,
-            expr=" + ".join(
-                f"(CASE WHEN g{t * bits_per_table + k} > 0 THEN {1 << k} ELSE 0 END)"
-                for k in range(bits_per_table)
-            ),
-        )
-        for t in range(n_tables)
-    )
-    return signs, per_table
-
-
-def _ann_banded_oracle_sql(
-    n_tables: int = 4, bits_per_table: int = 8, threshold: float = 0.15
-) -> str:
-    """Oracle for the multi-table LSH: same mod-1009 affine plane family,
-    buckets per table UNION ALL'd, candidates distinct over tables,
-    verified quantized cosine."""
-    signs, per_table = _banded_cte_parts(n_tables, bits_per_table)
-    return f"""
-WITH {_QEMB_SQL.strip()},
-sig AS (
-  SELECT vec_id, {signs}
-  FROM qa GROUP BY vec_id
-),
-buckets AS (
-  {per_table}
-),
-cand AS (
-  SELECT DISTINCT ba.vec_id AS a, bb.vec_id AS b
-  FROM buckets ba JOIN buckets bb
-    ON ba.tbl = bb.tbl AND ba.bucket = bb.bucket AND ba.vec_id < bb.vec_id
-),
-dots AS (
-  SELECT c.a, c.b, SUM(pa.qx * pb.qx) AS dot
-  FROM cand c
-  JOIN qa pa ON pa.vec_id = c.a
-  JOIN qa pb ON pb.vec_id = c.b AND pb.ord = pa.ord
-  GROUP BY 1, 2
-)
-SELECT a, b, ROUND(dot / (sqrt(CAST(na.n2 AS DOUBLE)) * sqrt(CAST(nb.n2 AS DOUBLE))), 6) AS cosine
-FROM dots JOIN n2 na ON na.vec_id = a JOIN n2 nb ON nb.vec_id = b
-WHERE ROUND(dot / (sqrt(CAST(na.n2 AS DOUBLE)) * sqrt(CAST(nb.n2 AS DOUBLE))), 6) >= {threshold}
-"""
-
-
-def _ann_topk_oracle_sql(
-    n_tables: int = 4, bits_per_table: int = 8, k: int = 5, n_queries: int = 8
-) -> str:
-    """Top-k ANN oracle: same banded bucketing; candidates = corpus rows
-    sharing ≥1 (table, bucket) with a query (vec_id < n_queries), scored
-    by quantized cosine, ranked per query with a deterministic tiebreak."""
-    signs, per_table = _banded_cte_parts(n_tables, bits_per_table)
-    return f"""
-WITH {_QEMB_SQL.strip()},
-sig AS (
-  SELECT vec_id, {signs}
-  FROM qa GROUP BY vec_id
-),
-buckets AS (
-  {per_table}
-),
-cand AS (
-  SELECT DISTINCT bq.vec_id AS query_id, bn.vec_id AS neighbor
-  FROM buckets bq JOIN buckets bn
-    ON bq.tbl = bn.tbl AND bq.bucket = bn.bucket AND bn.vec_id <> bq.vec_id
-  WHERE bq.vec_id < {n_queries}
-),
-dots AS (
-  SELECT c.query_id, c.neighbor, SUM(pq.qx * pn.qx) AS dot
-  FROM cand c
-  JOIN qa pq ON pq.vec_id = c.query_id
-  JOIN qa pn ON pn.vec_id = c.neighbor AND pn.ord = pq.ord
-  GROUP BY 1, 2
-),
-scored AS (
-  SELECT query_id, neighbor,
-         ROUND(dot / (sqrt(CAST(nq.n2 AS DOUBLE)) * sqrt(CAST(nn.n2 AS DOUBLE))), 6) AS cosine
-  FROM dots JOIN n2 nq ON nq.vec_id = query_id JOIN n2 nn ON nn.vec_id = neighbor
-)
-SELECT query_id, neighbor, cosine, CAST(rnk AS INT) AS rank FROM (
-  SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY cosine DESC, neighbor) AS rnk
-  FROM scored
-) WHERE rnk <= {k}
-"""
-
-
-def _semantic_pairs_cte(
-    n_tables: int = 4, bits_per_table: int = 8, threshold: float = 0.5
-) -> str:
-    """Shared CTE chain ending in ``pairs(a, b)``: banded multi-table LSH
-    candidates (same bucketing as similarity.lsh_candidate_pairs_banded),
-    verified quantized cosine ≥ threshold."""
-    signs, per_table = _banded_cte_parts(n_tables, bits_per_table)
-    return f"""{_QEMB_SQL.strip()},
-sig AS (
-  SELECT vec_id, {signs}
-  FROM qa GROUP BY vec_id
-),
-buckets AS (
-  {per_table}
-),
-cand AS (
-  SELECT DISTINCT ba.vec_id AS a, bb.vec_id AS b
-  FROM buckets ba JOIN buckets bb
-    ON ba.tbl = bb.tbl AND ba.bucket = bb.bucket AND ba.vec_id < bb.vec_id
-),
-dots AS (
-  SELECT c.a, c.b, SUM(pa.qx * pb.qx) AS dot
-  FROM cand c
-  JOIN qa pa ON pa.vec_id = c.a
-  JOIN qa pb ON pb.vec_id = c.b AND pb.ord = pa.ord
-  GROUP BY 1, 2
-),
-pairs AS (
-  SELECT a, b FROM dots
-  JOIN n2 na ON na.vec_id = a JOIN n2 nb ON nb.vec_id = b
-  WHERE ROUND(dot / (sqrt(CAST(na.n2 AS DOUBLE)) * sqrt(CAST(nb.n2 AS DOUBLE))), 6) >= {threshold}
-)"""
-
-
-def _semantic_dedup_oracle_sql(
-    n_tables: int = 4, bits_per_table: int = 8, threshold: float = 0.5
-) -> str:
-    """Semantic dedup oracle over the banded-LSH verified pairs, one-pass
-    min-neighbor canonicalization (transitive closure is the separate
-    dedup_semantic_closure query)."""
-    return f"""
-WITH {_semantic_pairs_cte(n_tables, bits_per_table, threshold)},
-neighbors AS (
-  SELECT a AS doc_id, b AS nbr FROM pairs
-  UNION ALL
-  SELECT b AS doc_id, a AS nbr FROM pairs
-),
-best AS (SELECT doc_id, MIN(nbr) AS min_nbr FROM neighbors GROUP BY doc_id)
-SELECT d.doc_id,
-       LEAST(d.doc_id, COALESCE(best.min_nbr, d.doc_id)) AS canonical_id
-FROM documents d LEFT JOIN best ON best.doc_id = d.doc_id
-"""
-
-
-def _semantic_closure_oracle_sql(
-    n_tables: int = 4, bits_per_table: int = 8, threshold: float = 0.5
-) -> str:
-    """Transitive-closure oracle: same banded pairs, then min reachable
-    label per node via a recursive CTE (UNION dedups → terminates)."""
-    return f"""
-WITH RECURSIVE {_semantic_pairs_cte(n_tables, bits_per_table, threshold)},
-edges AS (
-  SELECT a AS u, b AS v FROM pairs
-  UNION ALL
-  SELECT b AS u, a AS v FROM pairs
-),
-reach(u, lbl) AS (
-  SELECT u, u FROM (SELECT DISTINCT u FROM edges)
-  UNION
-  SELECT e.v, r.lbl FROM reach r JOIN edges e ON e.u = r.u
-),
-comp AS (SELECT u AS doc_id, MIN(lbl) AS canon FROM reach GROUP BY u)
-SELECT d.doc_id,
-       COALESCE(comp.canon, d.doc_id) AS canonical_id
-FROM documents d LEFT JOIN comp ON comp.doc_id = d.doc_id
-"""
-
-
-def _sitemap_bot_oracle_sql() -> str:
-    from webcrawler_go_spark.functions.classify import (
-        SITEMAP_CHALLENGE_PATTERNS,
-        SITEMAP_SHORT_PAGE_INDICATORS,
-    )
-
-    def lit(s: str) -> str:
-        return "'" + s.replace("'", "''") + "'"  # "you don't have permission"
-
-    conj = " OR ".join(
-        "(" + " AND ".join(f"contains(lower(body), {lit(s)})" for s in pat) + ")"
-        for pat in SITEMAP_CHALLENGE_PATTERNS
-    )
-    short = " OR ".join(
-        f"contains(lower(body), {lit(s)})" for s in SITEMAP_SHORT_PAGE_INDICATORS
-    )
-    return f"""
-        SELECT doc_id, ({conj}) OR (length(body) < 2000 AND ({short})) AS is_challenge
-        FROM (
-          SELECT doc_id,
-                 (CASE WHEN doc_id % 11 = 0
-                       THEN 'checking your browser ... please wait — ' || text
-                       WHEN doc_id % 11 = 1 THEN 'short: checking your browser'
-                       WHEN doc_id % 11 = 2 THEN 'protected by Cloudflare — ' || text
-                       ELSE text END) AS body
-          FROM documents
-        )"""
-
-
-# ---------------------------------------------------------------------------
-# WARC ingest: the web-archive container every large crawl corpus ships in.
-# Deterministic fixture: documents grouped 20-per-archive, each record its
-# own gzip member (the splittable Common Crawl framing), parsed back
-# distributed at file-per-task granularity.
-# ---------------------------------------------------------------------------
-
-_WARC_RECORDS_PER_FILE = 20
-
-
-def _warc_fixture_fields(doc_id: int) -> tuple[str, str, int, str]:
-    """(uri, warc_date, status, content_type) for a document — the
-    contract both the Spark fixture kernel and the oracles state."""
-    fid = doc_id // _WARC_RECORDS_PER_FILE
-    uri = f"https://w{fid}.example.org/doc/{doc_id}"
-    date = f"2024-03-15T10:{(doc_id // 60) % 60:02d}:{doc_id % 60:02d}Z"
-    if doc_id % 13 == 0:
-        return uri, date, 404, "text/plain"
-    return uri, date, 200, "text/html"
-
-
-# HTML wrapper around a WARC fixture payload — the CCNet-shaped archive
-# (Common Crawl WARC holds HTML; WET strips it). Python half and SQL
-# half MUST build the identical string; entities/script/comment
-# exercise the full WET chain. {did} is the doc id, {t} the text slice.
-_WARC_HTML_PRE = (
-    "<html><head><style>p{margin:0}</style></head><body>"
-    "<script>if (1 < 2 && x) go();</script><h1>Doc &amp; &#8211; "
-)
-_WARC_HTML_MID = "</h1><!-- c --><p>"
-_WARC_HTML_POST = "</p><p>&copy; tail&nbsp;end</p></body></html>"
-
-
-def _warc_html_wrap_sql(text_expr: str) -> str:
-    """The SQL twin of the kernel's HTML wrap."""
-    return (
-        f"'{_WARC_HTML_PRE}' || CAST(doc_id AS VARCHAR) || '{_WARC_HTML_MID}'"
-        f" || {text_expr} || '{_WARC_HTML_POST}'"
-    )
-
-
-def _warc_files(
-    spark: SparkSession, sf_dir: str, html_wrap: bool = False
-) -> DataFrame:
-    """documents → one row per .warc.gz archive (filename, content).
-
-    Grouping key doc_id // 20 mirrors how a crawler rolls archives
-    (fixed records per file); records within a file are doc_id-sorted
-    so the archive bytes — and therefore member offsets — are
-    deterministic for the CDX golden oracle. ``html_wrap=True`` stores
-    each payload as a deterministic HTML page around the text slice
-    (the CCNet ingest shape for `webdata_pipeline`'s WET stage)."""
-    docs = _t(spark, sf_dir, "documents").select(
-        "doc_id",
-        F.substring("text", 1, 200).alias("t"),
-        F.floor(F.col("doc_id") / _WARC_RECORDS_PER_FILE).cast("long").alias("file_id"),
-    )
-
-    def build(pdf):
-        import pandas as pd
-
-        from webcrawler_go_spark.sources.warc import make_warc_gz, make_warc_record
-
-        pdf = pdf.sort_values("doc_id")
-        fid = int(pdf["file_id"].iloc[0])
-        recs = []
-        for did, t in zip(pdf["doc_id"], pdf["t"]):
-            uri, date, status, ctype = _warc_fixture_fields(int(did))
-            if html_wrap:
-                t = f"{_WARC_HTML_PRE}{int(did)}{_WARC_HTML_MID}{t}{_WARC_HTML_POST}"
-            recs.append(
-                make_warc_record(
-                    uri, date, t.encode("utf-8"), status=status, content_type=ctype
-                )
-            )
-        return pd.DataFrame(
-            {"filename": [f"crawl-{fid:05d}.warc.gz"], "content": [make_warc_gz(recs)]}
-        )
-
-    return docs.groupBy("file_id").applyInPandas(
-        build, "filename string, content binary"
-    )
-
-
-def q_warc_source(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """WARC ingest round trip: write documents into per-record-gzipped
-    archives, parse them back distributed (`sources/warc.py`,
-    file-per-task — the real unit of WARC parallelism), and emit the
-    record table. The oracle states the full contract in plain SQL:
-    URI/status/MIME derivation, HTTP payload byte length, and exact
-    payload round-trip. Reference analogy: `filesave.go:21-60` persists
-    captures one loose file each; WARC is the at-scale container for
-    the same bytes."""
-    from webcrawler_go_spark.sources.warc import warc_records
-
-    recs = warc_records(_warc_files(spark, sf_dir))
-    return recs.select(
-        F.regexp_extract("target_uri", r"/doc/(\d+)$", 1).cast("long").alias("doc_id"),
-        "target_uri",
-        "http_status",
-        "mime",
-        "content_length",
-        "payload",
-    )
-
-
-def q_warc_source_split(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Within-file WARC splits (VERDICT r5 directive #6): the member
-    offsets the CDX path computes become a split table, members are
-    bucketed into 2 contiguous byte-range buckets per archive, and each
-    (file, split) task inflates ONLY its slices — so one hot 1 GB
-    archive spreads across tasks instead of pinning one
-    (`sources/warc.py:warc_records_split`). Output adds the split_id
-    each record was decoded under; the oracle recomputes member offsets
-    with the sequential writer (deterministic gzip bytes) and the same
-    byte-range bucket formula, joined to `documents` for the payload
-    contract — proving both the round trip AND the bucketing. Record-
-    set equality with the file-per-task path is asserted in pytest."""
-    from webcrawler_go_spark.sources.warc import warc_records, warc_records_split
-
-    files = _warc_files(spark, sf_dir)
-    # the offsets sidecar — in production the CDX index; here a light
-    # prior pass over the same archives
-    offsets = warc_records(files).select(
-        "filename", "member_offset", "member_length"
-    )
-    recs = warc_records_split(files, offsets, n_splits=2)
-    return recs.select(
-        F.regexp_extract("target_uri", r"/doc/(\d+)$", 1).cast("long").alias("doc_id"),
-        "target_uri",
-        "http_status",
-        "content_length",
-        "payload",
-        "member_offset",
-        "split_id",
-    )
-
-
-def _warc_split_oracle_sql(n_splits: int = 2) -> str:
-    """Golden-int-join oracle for warc_source_split: rebuild the
-    archives with the same writer sequentially (gzip bytes are
-    deterministic → identical member offsets), bucket offsets with the
-    same ⌊offset·n/filelen⌋ formula, and emit (doc_id, member_offset,
-    split_id) VALUES joined to `documents` for the uri/status/payload
-    contract — integers golden, payload text straight from the table."""
-    import pyarrow.parquet as pq
-
-    from webcrawler_go_spark.sources.warc import make_warc_gz, make_warc_record
-
-    sf_dir = os.environ.get("SPARK_GRAFT_ORACLE_SF_DIR", "/root/testdata/sf0.01")
-    try:
-        tbl = pq.read_table(f"{sf_dir}/documents.parquet", columns=["doc_id", "text"])
-    except (OSError, FileNotFoundError):
-        return (
-            "SELECT CAST(NULL AS BIGINT) AS doc_id, CAST(NULL AS VARCHAR) AS target_uri,"
-            " CAST(NULL AS INT) AS http_status, CAST(NULL AS BIGINT) AS content_length,"
-            " CAST(NULL AS VARCHAR) AS payload, CAST(NULL AS BIGINT) AS member_offset,"
-            " CAST(NULL AS INT) AS split_id WHERE false"
-        )
-    docs = sorted(zip(tbl.column("doc_id").to_pylist(), tbl.column("text").to_pylist()))
-    by_file: dict[int, list[tuple[int, str]]] = {}
-    for did, text in docs:
-        by_file.setdefault(did // _WARC_RECORDS_PER_FILE, []).append((did, text[:200]))
-    triples = []
-    for fid, members in sorted(by_file.items()):
-        recs, metas = [], []
-        for did, t in members:  # doc_id-sorted
-            uri, date, status, ctype = _warc_fixture_fields(did)
-            recs.append(
-                make_warc_record(
-                    uri, date, t.encode("utf-8"), status=status, content_type=ctype
-                )
-            )
-            metas.append(did)
-        blob = make_warc_gz(recs)
-        # member offsets: re-walk compressed lengths member by member
-        import zlib as _z
-
-        pos = 0
-        offs = []
-        for rec in recs:
-            c = _z.compressobj(level=6, wbits=31)
-            ln = len(c.compress(rec) + c.flush())
-            offs.append((pos, ln))
-            pos += ln
-        flen = pos
-        for did, (off, ln) in zip(metas, offs):
-            split_id = min(off * n_splits // flen, n_splits - 1)
-            triples.append((did, off, split_id))
-        assert flen == len(blob)
-    vals = ",\n              ".join(
-        f"({d}, {o}, {s})" for d, o, s in triples
-    )
-    return f"""
-            WITH m(doc_id, member_offset, split_id) AS (VALUES {vals})
-            SELECT CAST(d.doc_id AS BIGINT) AS doc_id,
-                   'https://w' || CAST(d.doc_id // 20 AS VARCHAR) || '.example.org/doc/'
-                       || CAST(d.doc_id AS VARCHAR) AS target_uri,
-                   CAST(CASE WHEN d.doc_id % 13 = 0 THEN 404 ELSE 200 END AS INT) AS http_status,
-                   CAST(strlen(substring(d.text, 1, 200)) AS BIGINT) AS content_length,
-                   substring(d.text, 1, 200) AS payload,
-                   CAST(m.member_offset AS BIGINT) AS member_offset,
-                   CAST(m.split_id AS INT) AS split_id
-            FROM documents d JOIN m ON m.doc_id = d.doc_id"""
-
-
-def q_webdata_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The CANONICAL Common-Crawl curation program (CCNet, Wenzek et
-    al. LREC 2020) as ONE DataFrame program from archive bytes to a
-    perplexity-filtered training set (VERDICT r6 directive #7):
-
-        WARC archives (HTML pages) → distributed record parse → HTTP
-        status + MIME gate → WET strip (`html_to_text`, pure codegen) →
-        language ID → token quality gate → self-trained bigram-LM
-        perplexity terciles PER LANGUAGE (histogram-quantile cutoffs,
-        no global sort) → keep head+middle → exact first-writer dedup
-        via `textdedup.exact_duplicates` (digest-prefixed key).
-
-    Every stage is an already-oracle-checked operator; this row proves
-    the COMPOSITION. The oracle chains the same stages' SQL twins over
-    the same tables."""
-    from webcrawler_go_spark.functions.html_text import html_to_text
-    from webcrawler_go_spark.operators.retrieval import bigram_lm_scores
-    from webcrawler_go_spark.operators.sketches import histogram_quantiles
-    from webcrawler_go_spark.operators.textanalysis import lang_id, token_count_ws
-    from webcrawler_go_spark.operators.textdedup import exact_duplicates
-    from webcrawler_go_spark.sources.warc import warc_records
-
-    recs = warc_records(_warc_files(spark, sf_dir, html_wrap=True))
-    ok = recs.filter(
-        F.col("parse_error").isNull()
-        & (F.col("http_status") == 200)
-        & (F.col("mime") == "text/html")
-    )
-    wet = ok.select(
-        F.regexp_extract("target_uri", r"/doc/(\d+)$", 1).cast("long").alias("doc_id"),
-        html_to_text(F.col("payload")).alias("text_clean"),
-    ).localCheckpoint(eager=True)
-    # ^ the strip chain must run ONCE per page: left lazy, lang_id's
-    # ~30 stopword-score expressions each inline the full regex chain
-    # (measured 8 s vs 0.3 s at sf0.1)
-    # Materialize the WET table ONCE (eager checkpoint = the in-session
-    # stand-in for writing .wet files, which is exactly what Common
-    # Crawl does between these stages): the LM trains with three
-    # branches over the corpus (unigram counts, bigram counts, per-doc
-    # scoring) and without the barrier each branch would re-parse the
-    # archives and re-run the regex chain.
-    flt = wet.select(
-        "doc_id",
-        "text_clean",
-        lang_id(F.col("text_clean")).alias("lang_pred"),
-        token_count_ws(F.col("text_clean")).cast("long").alias("n_tokens"),
-    ).filter(
-        (F.col("lang_pred") != "und") & (F.col("n_tokens") >= 10)
-    ).localCheckpoint(eager=True)
-    scores = bigram_lm_scores(
-        flt.select("doc_id", F.col("text_clean").alias("text"))
-    )
-    s = flt.join(scores, "doc_id").select(
-        "doc_id", "lang_pred", "text_clean", "n_tokens",
-        (-F.col("avg_logprob_milli")).alias("nll_milli"),
-    ).localCheckpoint(eager=True)  # scored corpus: read by the quantile
-    # sketch AND the bucket join — one LM pass, not two
-    width = 200
-    hq = histogram_quantiles(
-        s, "nll_milli", ["lang_pred"], width=width, quantiles=(33, 67)
-    )
-    kept = (
-        s.join(F.broadcast(hq), "lang_pred")
-        .withColumn(
-            "bucket",
-            F.when(F.expr(f"nll_milli div {width} <= p33 div {width}"), "head")
-            .when(F.expr(f"nll_milli div {width} <= p67 div {width}"), "middle")
-            .otherwise("tail"),
-        )
-        .filter(F.col("bucket") != "tail")
-    )
-    canon = exact_duplicates(
-        kept.select("doc_id", F.col("text_clean").alias("text"))
-    )
-    return (
-        kept.join(
-            canon.filter(F.col("doc_id") == F.col("canonical_id")).select("doc_id"),
-            "doc_id",
-        )
-        .select("doc_id", "lang_pred", "bucket", "n_tokens")
-    )
-
-
-def _webdata_pipeline_oracle_sql(width: int = 200) -> str:
-    """Chained-CTE oracle for the CCNet program: the WARC round trip is
-    payload ≡ the HTML wrap over substring(text, 1, 200) with the
-    status/MIME gate ≡ doc_id % 13 ≠ 0 (the `warc_source` contract),
-    then the WET chain twin (generated from HTML_TEXT_STEPS), the
-    lang_id and token-count fragments, the bigram-LM + histogram-
-    quantile tercile twins (the `perplexity_buckets` contract keyed by
-    PREDICTED language), head+middle keep, first-writer dedup."""
-    from webcrawler_go_spark.functions.html_text import html_to_text_sql
-    from webcrawler_go_spark.operators.sketches import histogram_quantiles_sql
-
-    s = _lang_id_sql_scores("text_clean")
-    langs = list(s)
-    best = "GREATEST(" + ", ".join(s.values()) + ")"
-    whens = "\n             ".join(
-        f"WHEN {s[lang]} = {best} THEN '{lang}'" for lang in langs[:-1]
-    )
-    wet_expr = html_to_text_sql(_warc_html_wrap_sql("substring(text, 1, 200)"))
-    hq = histogram_quantiles_sql(
-        "nll_milli", "s", "lang_pred", width, quantiles=(33, 67)
-    )
-    return f"""
-WITH wet AS (
-  SELECT doc_id, {wet_expr} AS text_clean
-  FROM documents
-  WHERE doc_id % 13 <> 0
-),
-lang AS (
-  SELECT doc_id, text_clean,
-         (CASE WHEN {best} = 0 THEN 'und'
-             {whens}
-             ELSE '{langs[-1]}' END) AS lang_pred,
-         CAST(CASE WHEN trim(text_clean) = '' THEN 0
-              ELSE len(string_split_regex(trim(text_clean), '\\s+')) END AS BIGINT)
-           AS n_tokens
-  FROM wet
-),
-flt AS (
-  SELECT * FROM lang WHERE lang_pred <> 'und' AND n_tokens >= 10
-),
-d AS (
-  SELECT doc_id,
-         CASE WHEN trim(text_clean) = '' THEN CAST([] AS VARCHAR[])
-              ELSE string_split_regex(trim(text_clean), '\\s+') END AS l
-  FROM flt
-),
-tok AS (SELECT t.w FROM d, unnest(l) AS t(w)),
-c1 AS (SELECT w, COUNT(*) AS c1 FROM tok GROUP BY 1),
-v AS (SELECT COUNT(*) AS v FROM c1),
-g AS (
-  SELECT doc_id, l[t.i] AS w1, l[t.i + 1] AS w2
-  FROM d, unnest(generate_series(1, len(l) - 1)) AS t(i)
-),
-c2 AS (SELECT w1, w2, COUNT(*) AS c2 FROM g GROUP BY 1, 2),
-lp AS (
-  SELECT g.doc_id,
-         CAST(floor(1000.0 * ln((c2 + 1.0)
-              / (c1 + CAST(v AS DOUBLE)))) AS BIGINT) AS lp
-  FROM g JOIN c2 USING (w1, w2) JOIN c1 ON c1.w = g.w1, v
-),
-pd AS (
-  SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_bigrams,
-         CAST(SUM(lp) AS BIGINT) AS logprob_milli
-  FROM lp GROUP BY 1
-),
-s AS (
-  SELECT f.doc_id, f.lang_pred, f.text_clean, f.n_tokens,
-         CAST(CASE WHEN COALESCE(n_bigrams, 0) = 0 THEN 0
-              ELSE (-logprob_milli) // n_bigrams END AS BIGINT) AS nll_milli
-  FROM flt f LEFT JOIN pd USING (doc_id)
-),{hq}
-, kept AS (
-  SELECT s.doc_id, s.lang_pred, s.text_clean, s.n_tokens,
-         CASE WHEN s.nll_milli // {width} <= hq.p33 // {width} THEN 'head'
-              WHEN s.nll_milli // {width} <= hq.p67 // {width} THEN 'middle'
-              ELSE 'tail' END AS bucket
-  FROM s JOIN hq USING (lang_pred)
-),
-keep AS (
-  SELECT MIN(doc_id) AS doc_id FROM kept WHERE bucket <> 'tail'
-  GROUP BY text_clean
-)
-SELECT k.doc_id, k.lang_pred, k.bucket, k.n_tokens
-FROM kept k JOIN keep USING (doc_id)
-WHERE k.bucket <> 'tail'
-"""
-
-
-def q_html_text_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """WET-style visible-text extraction as pure codegen
-    (`functions/html_text.py`): deterministic HTML is synthesized
-    around each document (script/style blocks with markup-looking
-    JS, comments, entities, nested tags), then stripped by the shared
-    regexp chain — script/style CONTENT dropped, tags → spaces,
-    one-level entity decode (&amp; last), whitespace collapsed. The
-    oracle builds the identical HTML in SQL and applies the chain via
-    `html_to_text_sql` (generated from the same step table, so the two
-    engines cannot drift). Complements the Python HTMLParser span
-    kernel (X1/X2): this is the bulk no-Python path a 100 TB WET pass
-    runs at scan rate."""
-    from webcrawler_go_spark.functions.html_text import html_to_text
-
-    d = _spread(_t(spark, sf_dir, "documents").select("doc_id", "text"))
-    ks = F.col("doc_id").cast("string")
-    html = F.concat(
-        F.lit("<html><head><title>Doc "), ks,
-        F.lit("</title><style>p { color: red; }</style></head>"
-              "<body><script type=\"text/javascript\">var x = 1 < 2 && doc;"
-              "</script><h1>Doc &amp; &#39;"), ks,
-        F.lit("&#39;</h1><!-- hidden --> <p>"),
-        F.substring("text", 1, 120),
-        F.lit("</p><p>tail &lt;tag&gt; &nbsp;end</p></body></html>"),
-    )
-    clean = html_to_text(html)
-    return d.select(
-        "doc_id",
-        clean.alias("text_clean"),
-        F.length(clean).cast("long").alias("n_chars"),
-    )
-
-
-def _html_text_oracle_sql() -> str:
-    from webcrawler_go_spark.functions.html_text import html_to_text_sql
-
-    html = (
-        "'<html><head><title>Doc ' || CAST(doc_id AS VARCHAR) || "
-        "'</title><style>p { color: red; }</style></head>"
-        "<body><script type=\"text/javascript\">var x = 1 < 2 && doc;"
-        "</script><h1>Doc &amp; &#39;' || CAST(doc_id AS VARCHAR) || "
-        "'&#39;</h1><!-- hidden --> <p>' || substring(text, 1, 120) || "
-        "'</p><p>tail &lt;tag&gt; &nbsp;end</p></body></html>'"
-    )
-    clean = html_to_text_sql(html)
-    return f"""
-SELECT doc_id,
-       {clean} AS text_clean,
-       CAST(strlen({clean}) AS BIGINT) AS n_chars
-FROM documents
-"""
-
-
-def q_warc_cdx_index(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """CDX capture index over the parsed archives: SURT urlkey, 14-digit
-    timestamp, SHA-1 payload digest, and the (filename, offset, length)
-    random-access triple per record — all codegen built-ins
-    (`sources/warc.py:cdx_index`), globally sorted the way CDX shards
-    are. Oracle = sequential golden replication (same writer bytes,
-    independent Python SURT/digest/timestamp)."""
-    from webcrawler_go_spark.sources.warc import cdx_index, warc_records
-
-    return cdx_index(warc_records(_warc_files(spark, sf_dir)))
-
-
-def _warc_cdx_oracle_sql() -> str:
-    """Golden VALUES for warc_cdx_index: rebuild the archives with the
-    same writer sequentially (gzip bytes are deterministic, so member
-    offsets/lengths match), but derive urlkey/timestamp/digest/status
-    independently in Python (hashlib SHA-1, hand-reversed host) rather
-    than through the Spark expressions under test."""
-    import hashlib
-
-    import pyarrow.parquet as pq
-
-    from webcrawler_go_spark.sources.warc import (
-        iter_warc_members,
-        make_warc_gz,
-        make_warc_record,
-    )
-
-    sf_dir = os.environ.get("SPARK_GRAFT_ORACLE_SF_DIR", "/root/testdata/sf0.01")
-    try:
-        tbl = pq.read_table(f"{sf_dir}/documents.parquet", columns=["doc_id", "text"])
-    except (OSError, FileNotFoundError):
-        return (
-            "SELECT CAST(NULL AS VARCHAR) AS urlkey, CAST(NULL AS VARCHAR) AS timestamp,"
-            " CAST(NULL AS VARCHAR) AS original, CAST(NULL AS VARCHAR) AS mime,"
-            " CAST(NULL AS INT) AS status, CAST(NULL AS VARCHAR) AS digest,"
-            " CAST(NULL AS BIGINT) AS length, CAST(NULL AS BIGINT) AS offset,"
-            " CAST(NULL AS VARCHAR) AS filename WHERE false"
-        )
-    docs = sorted(
-        zip(tbl.column("doc_id").to_pylist(), tbl.column("text").to_pylist())
-    )
-    rows = []
-    by_file: dict[int, list[tuple[int, str]]] = {}
-    for did, text in docs:
-        by_file.setdefault(did // _WARC_RECORDS_PER_FILE, []).append(
-            (did, text[:200])
-        )
-    for fid, members in sorted(by_file.items()):
-        recs, meta = [], []
-        for did, t in members:  # already doc_id-sorted
-            uri, date, status, ctype = _warc_fixture_fields(did)
-            recs.append(
-                make_warc_record(
-                    uri, date, t.encode("utf-8"), status=status, content_type=ctype
-                )
-            )
-            meta.append((uri, date, status, ctype, t))
-        blob = make_warc_gz(recs)
-        offsets = [(off, ln) for off, ln, _raw in iter_warc_members(blob)]
-        assert len(offsets) == len(meta)
-        for (uri, date, status, ctype, t), (off, ln) in zip(meta, offsets):
-            host = uri.split("://", 1)[1].split("/", 1)[0]
-            path = "/" + uri.split("://", 1)[1].split("/", 1)[1]
-            urlkey = ",".join(reversed(host.split("."))) + ")" + path
-            ts = "".join(ch for ch in date if ch.isdigit())
-            digest = hashlib.sha1(t.encode("utf-8")).hexdigest()
-            rows.append(
-                (urlkey, ts, uri, ctype, status, digest, ln, off,
-                 f"crawl-{fid:05d}.warc.gz")
-            )
-    rows.sort(key=lambda r: (r[0], r[1]))
-
-    def lit(s: str) -> str:
-        return "'" + s.replace("'", "''") + "'"
-
-    vals = ",\n              ".join(
-        f"({lit(u)}, {lit(ts)}, {lit(o)}, {lit(m)}, {st}, {lit(dg)}, {ln}, {off}, {lit(fn)})"
-        for u, ts, o, m, st, dg, ln, off, fn in rows
-    )
-    return (
-        "SELECT urlkey, timestamp, original, mime, CAST(status AS INT) AS status,\n"
-        "                   digest, CAST(length AS BIGINT) AS length,\n"
-        "                   CAST(\"offset\" AS BIGINT) AS offset, filename\n"
-        f'            FROM (VALUES {vals}) AS t(urlkey, timestamp, original, mime, status, digest, length, "offset", filename)'
-    )
-
-
-def q_dsir_importance(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """DSIR importance resampling (Xie et al. 2023) over documents:
-    every 7th document plays the target domain, the rest are scored by
-    the add-one-smoothed hashed-(uni+bi)gram importance log-ratio in
-    integer millinats, and the top 20% of raw documents are selected.
-    Whole pipeline is three aggregations + the two-phase distributed
-    rank — oracle is the identical program in plain SQL."""
-    from webcrawler_go_spark.operators.dsir import dsir_importance
-
-    docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    return dsir_importance(
-        docs, target_pred=(F.col("doc_id") % 7 == 0), n_buckets=512,
-        select_frac=0.2,
-    )
-
-
-_DSIR_ORACLE_SQL = r"""
-WITH docs AS (SELECT doc_id, text, doc_id % 7 = 0 AS is_target FROM documents),
-arr AS (
-  SELECT doc_id, is_target,
-         list_filter(string_split_regex(lower(text), '[^\p{L}\p{N}_]+'),
-                     x -> x <> '') AS l
-  FROM docs
-),
-uni AS (
-  SELECT doc_id, is_target, l[t.i] AS feature
-  FROM arr, unnest(generate_series(1, len(l))) AS t(i)
-),
-bi AS (
-  SELECT doc_id, is_target, l[t.i] || ' ' || l[t.i + 1] AS feature
-  FROM arr, unnest(generate_series(1, len(l) - 1)) AS t(i)
-),
-feats AS (SELECT * FROM uni UNION ALL SELECT * FROM bi),
-vocab AS (
-  SELECT feature,
-         ((CAST(row_number() OVER (ORDER BY feature) AS BIGINT) * 1000003)
-            % 1000000007) % 512 AS bucket
-  FROM (SELECT DISTINCT feature FROM feats)
-),
-inst AS (SELECT f.doc_id, f.is_target, v.bucket FROM feats f JOIN vocab v USING (feature)),
-model AS (
-  SELECT bucket,
-         SUM(CASE WHEN is_target THEN 1 ELSE 0 END) AS t_b,
-         SUM(CASE WHEN is_target THEN 0 ELSE 1 END) AS r_b
-  FROM inst GROUP BY bucket
-),
-tot AS (SELECT SUM(t_b) AS tt, SUM(r_b) AS rr FROM model),
-llr AS (
-  SELECT bucket,
-         CAST(floor(1000.0 * ln(
-               (CAST(t_b + 1 AS DOUBLE) * CAST(rr + 512 AS DOUBLE))
-             / (CAST(r_b + 1 AS DOUBLE) * CAST(tt + 512 AS DOUBLE))))
-           AS BIGINT) AS llr_milli
-  FROM model, tot
-),
-scores AS (
-  SELECT i.doc_id, COUNT(*) AS n_features, SUM(l.llr_milli) AS logweight_milli
-  FROM inst i JOIN llr l USING (bucket) GROUP BY i.doc_id
-),
-scored AS (
-  SELECT d.doc_id, d.is_target,
-         COALESCE(s.n_features, 0) AS n_features,
-         COALESCE(s.logweight_milli, 0) AS logweight_milli
-  FROM docs d LEFT JOIN scores s USING (doc_id)
-),
-k AS (SELECT CAST(floor(COUNT(*) * 0.2) AS BIGINT) AS k
-      FROM scored WHERE NOT is_target),
-ranked AS (
-  SELECT doc_id,
-         row_number() OVER (ORDER BY -logweight_milli, doc_id) AS rn
-  FROM scored WHERE NOT is_target
-)
-SELECT s.doc_id, s.is_target,
-       CAST(s.n_features AS BIGINT) AS n_features,
-       CAST(s.logweight_milli AS BIGINT) AS logweight_milli,
-       COALESCE(r.rn <= k.k, false) AS selected
-FROM scored s LEFT JOIN ranked r USING (doc_id), k
-"""
-
-
-def q_quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """GPT-3/CCNet-style trained quality filter as multinomial NB in
-    integer millinats: English documents play the curated class,
-    doc_id%3<2 is the train split, every document scored + classified.
-    Closed-form training = two aggregations; oracle is the identical
-    program in SQL (same double-op grouping in the log-ratio)."""
-    from webcrawler_go_spark.operators.quality_clf import nb_quality_scores
-
-    docs = _spread(_t(spark, sf_dir, "documents")).select("doc_id", "text", "lang")
-    return nb_quality_scores(
-        docs,
-        label_pred=(F.col("lang") == "en"),
-        train_pred=(F.col("doc_id") % 3 < 2),
-    )
-
-
-_QUALITY_CLF_ORACLE_SQL = r"""
-WITH docs AS (
-  SELECT doc_id, text, lang = 'en' AS is_positive,
-         doc_id % 3 < 2 AS in_train
-  FROM documents
-),
-arr AS (
-  SELECT doc_id, is_positive, in_train,
-         list_filter(string_split_regex(lower(text), '[^\p{L}\p{N}_]+'),
-                     x -> x <> '') AS l
-  FROM docs
-),
-toks AS (
-  SELECT doc_id, is_positive, in_train, l[t.i] AS token
-  FROM arr, unnest(generate_series(1, len(l))) AS t(i)
-),
-model AS (
-  SELECT token,
-         SUM(CASE WHEN is_positive THEN 1 ELSE 0 END) AS n_pos,
-         SUM(CASE WHEN is_positive THEN 0 ELSE 1 END) AS n_neg
-  FROM toks WHERE in_train GROUP BY token
-),
-tot AS (SELECT SUM(n_pos) AS tp, SUM(n_neg) AS tn, COUNT(*) AS v FROM model),
-nd AS (
-  SELECT SUM(CASE WHEN is_positive AND in_train THEN 1 ELSE 0 END) AS np,
-         SUM(CASE WHEN NOT is_positive AND in_train THEN 1 ELSE 0 END) AS nn
-  FROM docs
-),
-consts AS (
-  SELECT CAST(floor(1000.0 * ln(CAST(np AS DOUBLE) / nn)) AS BIGINT)
-           AS prior_milli,
-         CAST(floor(1000.0 * ln(CAST(tn + v AS DOUBLE) / (tp + v))) AS BIGINT)
-           AS unseen_milli
-  FROM nd, tot
-),
-w AS (
-  SELECT token,
-         CAST(floor(1000.0 * ln(
-               (CAST(n_pos + 1 AS DOUBLE) * CAST(tn + v AS DOUBLE))
-             / (CAST(n_neg + 1 AS DOUBLE) * CAST(tp + v AS DOUBLE))))
-           AS BIGINT) AS w_milli
-  FROM model, tot
-),
-per_doc AS (
-  SELECT t.doc_id, COUNT(*) AS n_tokens,
-         SUM(COALESCE(w.w_milli, c.unseen_milli)) AS tok_sum
-  FROM toks t LEFT JOIN w USING (token), consts c
-  GROUP BY t.doc_id
-)
-SELECT d.doc_id, d.is_positive, d.in_train,
-       CAST(COALESCE(p.n_tokens, 0) AS BIGINT) AS n_tokens,
-       CAST(c.prior_milli + COALESCE(p.tok_sum, 0) AS BIGINT) AS score_milli,
-       (c.prior_milli + COALESCE(p.tok_sum, 0)) >= 0 AS predicted
-FROM docs d LEFT JOIN per_doc p USING (doc_id), consts c
-"""
-
-
-def q_urlseen_hll(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """J1 cardinality at the 10^10 shape: HyperLogLog estimate of the
-    distinct canonical-URL count (the reference reads its exact
-    ``visited`` map size for the stats block, crawler.go:1076-1110; a
-    1000-executor crawl replaces that with a 2^p-register mergeable
-    sketch so the only shuffle is ≤ m tiny rows — see
-    operators/sketches.py). p=10 fits this corpus' ~11.4k distinct
-    (raw-estimator regime n ≳ 2.5·m); the row carries the exact count
-    and the per-mille error so accuracy is ON the recorded record. The
-    1×1 est×exact combine is a sanctioned BNLJ (BNLJ_OK)."""
-    from webcrawler_go_spark.operators.sketches import hll_distinct
-
-    # both the sketch and the exact-count audit branch aggregate the
-    # canonical corpus — materialize it once (no exchange reuse for
-    # repeated subtrees; lazy, so queries() stays side-effect-free)
-    c = canon_corpus(spark, sf_dir).select("url_norm").localCheckpoint(eager=False)
-    est = hll_distinct(c, "url_norm", p=10)
-    exact = c.agg(F.countDistinct("url_norm").alias("n_exact"))
-    return est.crossJoin(exact).select(
-        "n_registers",
-        "z_scaled",
-        "est_distinct",
-        "n_exact",
-        F.expr("abs(est_distinct - n_exact) * 1000 div n_exact").alias(
-            "err_permille"
-        ),
-    )
-
-
-def _urlseen_hll_oracle_sql() -> str:
-    from webcrawler_go_spark.operators.sketches import hll_oracle_cte
-
-    return (
-        CANON_SQL
-        + ", src AS (SELECT url_norm FROM canon),"
-        + hll_oracle_cte("url_norm", p=10, src="src")
-        + """,
-exact AS (SELECT CAST(COUNT(DISTINCT url_norm) AS BIGINT) AS n_exact FROM canon)
-SELECT h.n_registers, h.z_scaled, h.est_distinct, e.n_exact,
-       CAST(abs(h.est_distinct - e.n_exact) * 1000 // e.n_exact AS BIGINT)
-         AS err_permille
-FROM hll h, exact e
-"""
-    )
-
-
-def q_adaptive_fetch_width(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Sketch-derived fetch widths, as a standalone analysis of the
-    corpus: HLL distinct-URL estimate (p=10, raw-estimator regime on
-    this corpus, the urlseen_hll contract) + the count-min max-bucket
-    bound on the hottest host's depth, then the knobs they would set —
-    hot-host chunk = clamp(depth÷8+1, 2048, 25000), fetch width cap =
-    est÷500+1, salt engagement = est > 200k (``config.SALT_THRESHOLD``).
-    All BIGINT floor math, bit-portable to the DuckDB oracle. The crawl
-    engine itself sizes each round from its frontier manifest's row
-    count, not from sketches. The 1×1 est×hot combine is a sanctioned
-    BNLJ (BNLJ_OK)."""
-    from webcrawler_go_spark.operators.sketches import cms_build, hll_distinct
-
-    # HLL and CMS branches share the canon pass — materialize it once
-    c = canon_corpus(spark, sf_dir).select("host", "url_norm").localCheckpoint(
-        eager=False
-    )
-    est = hll_distinct(c.select("url_norm"), "url_norm", p=10).select(
-        "n_registers", "est_distinct"
-    )
-    hot = (
-        cms_build(c.select("host"), "host")
-        .groupBy("j")
-        .agg(F.max("c").alias("mx"))
-        .agg(F.min("mx").cast("long").alias("est_hot_depth"))
-    )
-    return est.crossJoin(hot).select(
-        "n_registers",
-        F.col("est_distinct").alias("est_urls"),
-        "est_hot_depth",
-        F.greatest(
-            F.lit(2048).cast("long"),
-            F.least(
-                F.expr("est_hot_depth div 8 + 1"), F.lit(25000).cast("long")
-            ),
-        ).alias("chunk"),
-        F.expr("est_distinct div 500 + 1").alias("width_cap"),
-        (F.col("est_distinct") > 200_000).alias("salted"),
-    )
-
-
-def _adaptive_fetch_width_oracle_sql() -> str:
-    from webcrawler_go_spark.operators.sketches import CMS_W, hll_oracle_cte
-
-    return (
-        CANON_SQL
-        + ", src AS (SELECT url_norm FROM canon),"
-        + hll_oracle_cte("url_norm", p=10, src="src")
-        + f""",
-hosts AS (SELECT host FROM canon),
-cms_rows AS (SELECT unnest([0, 1, 2, 3]) AS j),
-cms_sketch AS (
-  SELECT t.j,
-         CAST('0x' || substr(md5(CAST(t.j AS VARCHAR) || ':' || host), 1, 15)
-              AS BIGINT) % {CMS_W} AS bucket,
-         COUNT(*) AS c
-  FROM hosts, cms_rows t GROUP BY 1, 2
-),
-hot AS (
-  SELECT CAST(MIN(mx) AS BIGINT) AS est_hot_depth
-  FROM (SELECT j, MAX(c) AS mx FROM cms_sketch GROUP BY j)
-)
-SELECT h.n_registers,
-       h.est_distinct AS est_urls,
-       hot.est_hot_depth,
-       CAST(GREATEST(2048, LEAST(hot.est_hot_depth // 8 + 1, 25000)) AS BIGINT)
-         AS chunk,
-       CAST(h.est_distinct // 500 + 1 AS BIGINT) AS width_cap,
-       h.est_distinct > 200000 AS salted
-FROM hll h, hot
-"""
-    )
-
-
-def q_host_url_hll(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Grouped-key sketch: distinct-URL estimate PER HOST (the frontier
-    scheduler's per-host queue-depth signal) from one groupBy over the
-    same registers — 41 sketches in a single ≤ 41·2^p-row exchange
-    instead of 41 COUNT(DISTINCT) passes. p=6 matches the ~280/host
-    cardinality; exact + per-mille error joined on for the record."""
-    from webcrawler_go_spark.operators.sketches import hll_distinct
-
-    c = canon_corpus(spark, sf_dir).select("host", "url_norm")
-    est = hll_distinct(c, "url_norm", p=6, keys=["host"])
-    exact = c.groupBy("host").agg(F.countDistinct("url_norm").alias("n_exact"))
-    return est.join(exact, "host").select(
-        "host",
-        "n_registers",
-        "est_distinct",
-        "n_exact",
-        F.expr("abs(est_distinct - n_exact) * 1000 div n_exact").alias(
-            "err_permille"
-        ),
-    )
-
-
-def _host_url_hll_oracle_sql() -> str:
-    from webcrawler_go_spark.operators.sketches import hll_oracle_cte
-
-    return (
-        CANON_SQL
-        + ", src AS (SELECT host, url_norm FROM canon),"
-        + hll_oracle_cte("url_norm", p=6, src="src", keys_sql="host")
-        + """,
-exact AS (
-  SELECT host, CAST(COUNT(DISTINCT url_norm) AS BIGINT) AS n_exact
-  FROM canon GROUP BY host
-)
-SELECT h.host, h.n_registers, h.est_distinct, e.n_exact,
-       CAST(abs(h.est_distinct - e.n_exact) * 1000 // e.n_exact AS BIGINT)
-         AS err_permille
-FROM hll h JOIN exact e USING (host)
-"""
-    )
-
-
-def q_cms_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Frequency sketch (count-min, Cormode-Muthukrishnan 2005) finding
-    heavy-hitter pages in a skewed visit stream: 1/3 of visits hammer 7
-    hot pages, the rest spread over 499. The d×w counter table (16k
-    rows) is built with one sketch-sized shuffle and broadcast to the
-    candidate lookup — at 10^10 visits the URL-keyed exact groupBy this
-    replaces is the bottleneck shuffle. Every candidate row records
-    est/exact/overestimate (CMS law: est ≥ exact, never under) and the
-    φ=1/60 heavy-hitter verdict; the 1-row total join is a sanctioned
-    BNLJ (BNLJ_OK)."""
-    from webcrawler_go_spark.operators.sketches import cms_build, cms_lookup
-
-    li = _t(spark, sf_dir, "lineitem")
-    page = (
-        F.when(F.col("l_orderkey") % 3 == 0, F.col("l_orderkey") % 7)
-        .otherwise(F.col("l_orderkey") % 499)
-    )
-    visits = li.select(
-        F.concat(F.lit("https://hot.test/page/"), page.cast("string")).alias(
-            "url"
-        )
-    )
-    sketch = cms_build(visits, "url")
-    est = cms_lookup(sketch, visits.distinct(), "url")
-    exact = visits.groupBy("url").agg(F.count(F.lit(1)).alias("exact_count"))
-    total = visits.agg(F.count(F.lit(1)).alias("n_total"))
-    return (
-        est.join(exact, "url")
-        .crossJoin(total)
-        .select(
-            "url",
-            "est_count",
-            "exact_count",
-            F.expr("(est_count - exact_count) * 1000 div exact_count").alias(
-                "over_permille"
-            ),
-            (F.col("est_count") * 60 >= F.col("n_total")).alias("is_heavy"),
-        )
-    )
-
-
-def _cms_heavy_hitters_oracle_sql() -> str:
-    from webcrawler_go_spark.operators.sketches import cms_oracle_cte
-
-    return (
-        """
-WITH visits AS (
-  SELECT 'https://hot.test/page/' ||
-         CAST(CASE WHEN l_orderkey % 3 = 0 THEN l_orderkey % 7
-                   ELSE l_orderkey % 499 END AS VARCHAR) AS url
-  FROM lineitem
-),
-cand AS (SELECT DISTINCT url FROM visits),"""
-        + cms_oracle_cte(
-            col_expr="url", src="visits", cand_src="cand", cand_col="url"
-        )
-        + """,
-exact AS (SELECT url, CAST(COUNT(*) AS BIGINT) AS exact_count
-          FROM visits GROUP BY url),
-tot AS (SELECT COUNT(*) AS n_total FROM visits)
-SELECT c.url, c.est_count, e.exact_count,
-       CAST((c.est_count - e.exact_count) * 1000 // e.exact_count AS BIGINT)
-         AS over_permille,
-       c.est_count * 60 >= t.n_total AS is_heavy
-FROM cms c JOIN exact e USING (url), tot t
-"""
-    )
-
-
-def q_fetch_latency_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-host fetch-latency SLO percentiles (p50/p90/p99) via
-    fixed-width histogram quantiles: an exact p99 over 10^10 fetches
-    needs a global sort; the histogram needs one bucket-keyed shuffle
-    bounded by the value range (≤98 buckets/host here), then a
-    cumulative Window over that tiny table. True quantile lies within
-    [p, p+10ms) by construction (tested). Latency synthesized
-    deterministically from k (20 + k² mod 980 ms)."""
-    from webcrawler_go_spark.operators.sketches import histogram_quantiles
-
-    c = canon_corpus(spark, sf_dir).select(
-        "host", F.expr("20 + (k * k % 980)").alias("lat_ms")
-    )
-    return histogram_quantiles(c, "lat_ms", ["host"], width=10)
-
-
-def _fetch_latency_quantiles_oracle_sql() -> str:
-    from webcrawler_go_spark.operators.sketches import histogram_quantiles_sql
-
-    return (
-        CANON_SQL
-        + ", src AS (SELECT host, 20 + (k * k % 980) AS lat_ms FROM canon),"
-        + histogram_quantiles_sql("lat_ms", "src", "host", 10)
-        + "\nSELECT host, n, p50, p90, p99 FROM hq\n"
-    )
-
-
-def _str_hash64_udf():
-    """Arrow-batched column form of the engine's str_hash64 (factory —
-    UDF registration needs an active session)."""
-    from pyspark.sql.functions import pandas_udf
-
-    from webcrawler_go_spark.hashing import str_hash64_np
-
-    @pandas_udf("long")
-    def h64(u: pd.Series) -> pd.Series:
-        # bit-reinterpret uint64 → int64 (astype would overflow-check)
-        return pd.Series(str_hash64_np(u.tolist()).view("int64"))
-
-    return h64
-
-
-def _hashed_seen_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Shared fixture for the seen-filter audit rows: one row per
-    distinct canonical URL with its engine hash, the seen flag
-    (min-k ≡ 0 mod 3) and the blocked-requeue flag (seen ∧ k ≡ 0 mod 5,
-    the visited.Delete population)."""
-    h64 = _str_hash64_udf()
-    return (
-        canon_corpus(spark, sf_dir)
-        .groupBy("url_norm")
-        .agg(F.min("k").alias("k"))
-        .select(
-            "url_norm",
-            h64("url_norm").alias("url_hash"),
-            (F.col("k") % 3 == 0).alias("actually_seen"),
-            ((F.col("k") % 3 == 0) & (F.col("k") % 5 == 0)).alias("requeued"),
-        )
-    )
-
-
-def q_bloom_seen_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """J1's 10^10 path as a DRIVER ROW (previously pytest-only): the
-    sharded broadcast-Bloom seen-filter (per-partition bitmap build →
-    treeReduce OR → pmod shard routing through the Arrow lookup kernel,
-    dedup.py:137-190) audited against the exact seen set. One row:
-    candidate/seen/maybe-seen counts, the deterministic false-positive
-    count, and n_false_negative — structurally 0, the no-false-negative
-    law that makes the filter SAFE as a pre-shuffle prune. Oracle =
-    `bloom_audit_sequential`, the same bitmap math built by one scalar
-    loop (golden VALUES): what's proven is the distributed plumbing.
-    Hash is the engine's str_hash64 family (hashing.py docstring:
-    shared with sequential references by design)."""
-    from webcrawler_go_spark.operators.dedup import bloom_prefilter_sharded
-
-    cand = _hashed_seen_candidates(spark, sf_dir).select(
-        "url_norm", "url_hash", "actually_seen"
-    )
-    seen = cand.filter("actually_seen").select("url_hash", "url_norm")
-    new_df, maybe_df = bloom_prefilter_sharded(cand, seen, n_shards=4)
-    flagged = new_df.withColumn("maybe_seen", F.lit(False)).unionByName(
-        maybe_df.withColumn("maybe_seen", F.lit(True))
-    )
-    return flagged.agg(
-        F.count(F.lit(1)).alias("n_candidates"),
-        F.sum(F.col("actually_seen").cast("long")).alias("n_seen"),
-        F.sum(F.col("maybe_seen").cast("long")).alias("n_maybe_seen"),
-        F.sum(
-            (F.col("maybe_seen") & ~F.col("actually_seen")).cast("long")
-        ).alias("n_false_positive"),
-        F.sum(
-            (~F.col("maybe_seen") & F.col("actually_seen")).cast("long")
-        ).alias("n_false_negative"),
-    )
-
-
-def _oracle_corpus_min_k() -> tuple[list[int], list[int], list[int]] | None:
-    """Python restatement of the sf0.01 URL corpus for the seen-filter
-    audit oracles (formula ≡ URL_CORPUS_SQL; canonicalizer =
-    `_canon_one`, parity-tested against the Column form in
-    test_urls.py). Returns (all_hashes, seen_hashes, requeued_hashes)
-    over distinct canonical URLs keyed by min-k, or None when the
-    oracle sf dir is absent."""
-    import pyarrow.parquet as pq
-
-    from webcrawler_go_spark.functions.urls import _canon_one
-    from webcrawler_go_spark.hashing import str_hash64
-
-    sf_dir = os.environ.get("SPARK_GRAFT_ORACLE_SF_DIR", "/root/testdata/sf0.01")
-    try:
-        tbl = pq.read_table(
-            f"{sf_dir}/orders.parquet", columns=["o_orderkey", "o_custkey"]
-        )
-    except (OSError, FileNotFoundError):
-        return None
-    min_k: dict[str, int] = {}
-    for k, ck in zip(
-        tbl.column("o_orderkey").to_pylist(), tbl.column("o_custkey").to_pylist()
-    ):
-        host = f"host-{ck % 41:04d}.test"
-        if k % 13 == 0:
-            host = host.upper()
-        scheme = "" if k % 17 == 0 else ("HTTP://" if k % 17 == 1 else "https://")
-        path = "" if k % 5 == 0 else f"/page/{k % 997}"
-        query = f"?session={k % 100}" if k % 7 == 0 else ""
-        frag = f"#sec-{k % 10}" if k % 11 == 0 else ""
-        norm = _canon_one(scheme + host + path + query + frag, False)
-        if norm not in min_k or k < min_k[norm]:
-            min_k[norm] = k
-    to_signed = lambda h: h - (1 << 64) if h >= (1 << 63) else h  # noqa: E731
-    all_hashes = [to_signed(str_hash64(u)) for u in min_k]
-    seen_hashes = [
-        to_signed(str_hash64(u)) for u, k in min_k.items() if k % 3 == 0
-    ]
-    requeued_hashes = [
-        to_signed(str_hash64(u))
-        for u, k in min_k.items()
-        if k % 3 == 0 and k % 5 == 0
-    ]
-    return all_hashes, seen_hashes, requeued_hashes
-
-
-def _bloom_seen_audit_oracle_sql() -> str:
-    """Golden VALUES from the sequential sharded-Bloom reference over
-    the shared Python corpus restatement (`_oracle_corpus_min_k`)."""
-    from webcrawler_go_spark.operators.dedup import bloom_audit_sequential
-
-    corpus = _oracle_corpus_min_k()
-    if corpus is None:
-        return (
-            "SELECT CAST(NULL AS BIGINT) AS n_candidates, CAST(NULL AS BIGINT)"
-            " AS n_seen, CAST(NULL AS BIGINT) AS n_maybe_seen, CAST(NULL AS"
-            " BIGINT) AS n_false_positive, CAST(NULL AS BIGINT) AS"
-            " n_false_negative WHERE false"
-        )
-    all_hashes, seen_hashes, _ = corpus
-    c = bloom_audit_sequential(seen_hashes, all_hashes, n_shards=4)
-    return (
-        "SELECT CAST(n_candidates AS BIGINT) AS n_candidates,"
-        " CAST(n_seen AS BIGINT) AS n_seen,"
-        " CAST(n_maybe_seen AS BIGINT) AS n_maybe_seen,"
-        " CAST(n_false_positive AS BIGINT) AS n_false_positive,"
-        " CAST(n_false_negative AS BIGINT) AS n_false_negative"
-        f" FROM (VALUES ({c['n_candidates']}, {c['n_seen']},"
-        f" {c['n_maybe_seen']}, {c['n_false_positive']},"
-        f" {c['n_false_negative']})) AS t(n_candidates, n_seen,"
-        " n_maybe_seen, n_false_positive, n_false_negative)"
-    )
-
-
-def q_cuckoo_requeue_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The cuckoo seen-filter (J1's other 10^10 path — the one with
-    DELETE, mirroring visited.Delete on blocked-page requeue,
-    crawler.go:316 / J3) as a driver row, previously pytest-only:
-    deterministic-layout build (ascending-hash inserts, then sorted
-    requeue deletions) on the documented driver path, broadcast, Arrow
-    lookup kernel over every candidate. One row audits the laws:
-    n_fn_active ≡ 0 (an inserted-and-not-deleted key is always found —
-    the safety property), requeued keys drop to the exact fingerprint-
-    collision residue, unseen keys false-positive at the counted rate.
-    Oracle = `cuckoo_audit_sequential`, same build + scalar loop."""
-    from pyspark.sql.functions import pandas_udf
-
-    from webcrawler_go_spark.operators.cuckoo import cuckoo_build_deterministic
-
-    cand = _hashed_seen_candidates(spark, sf_dir)
-    seen_hashes = [
-        r[0]
-        for r in cand.filter("actually_seen")
-        .select("url_hash")
-        .orderBy("url_hash")
-        .collect()
-    ]
-    requeued_hashes = [
-        r[0]
-        for r in cand.filter("requeued")
-        .select("url_hash")
-        .orderBy("url_hash")
-        .collect()
-    ]
-    cf = cuckoo_build_deterministic(seen_hashes, requeued_hashes)
-    b = spark.sparkContext.broadcast(cf)
-
-    @pandas_udf("boolean")
-    def cf_contains(h: pd.Series) -> pd.Series:
-        return pd.Series(b.value.contains_many(h.to_numpy()))
-
-    flagged = cand.withColumn("found", cf_contains(F.col("url_hash")))
-    active = F.col("actually_seen") & ~F.col("requeued")
-    return flagged.agg(
-        F.count(F.lit(1)).alias("n_candidates"),
-        F.sum(F.col("actually_seen").cast("long")).alias("n_seen"),
-        F.sum(F.col("requeued").cast("long")).alias("n_requeued"),
-        F.sum((active & ~F.col("found")).cast("long")).alias("n_fn_active"),
-        F.sum((F.col("requeued") & F.col("found")).cast("long")).alias(
-            "n_requeued_still_found"
-        ),
-        F.sum((~F.col("actually_seen") & F.col("found")).cast("long")).alias(
-            "n_fp_unseen"
-        ),
-    )
-
-
-def _cuckoo_requeue_audit_oracle_sql() -> str:
-    """Golden VALUES from the sequential cuckoo reference over the same
-    Python corpus restatement as the Bloom audit."""
-    from webcrawler_go_spark.operators.cuckoo import cuckoo_audit_sequential
-
-    min_k = _oracle_corpus_min_k()
-    if min_k is None:
-        return (
-            "SELECT CAST(NULL AS BIGINT) AS n_candidates, CAST(NULL AS BIGINT)"
-            " AS n_seen, CAST(NULL AS BIGINT) AS n_requeued, CAST(NULL AS"
-            " BIGINT) AS n_fn_active, CAST(NULL AS BIGINT) AS"
-            " n_requeued_still_found, CAST(NULL AS BIGINT) AS n_fp_unseen"
-            " WHERE false"
-        )
-    all_hashes, seen_hashes, requeued_hashes = min_k
-    c = cuckoo_audit_sequential(seen_hashes, requeued_hashes, all_hashes)
-    return (
-        "SELECT CAST(n_candidates AS BIGINT) AS n_candidates,"
-        " CAST(n_seen AS BIGINT) AS n_seen,"
-        " CAST(n_requeued AS BIGINT) AS n_requeued,"
-        " CAST(n_fn_active AS BIGINT) AS n_fn_active,"
-        " CAST(n_requeued_still_found AS BIGINT) AS n_requeued_still_found,"
-        " CAST(n_fp_unseen AS BIGINT) AS n_fp_unseen"
-        f" FROM (VALUES ({c['n_candidates']}, {c['n_seen']},"
-        f" {c['n_requeued']}, {c['n_fn_active']},"
-        f" {c['n_requeued_still_found']}, {c['n_fp_unseen']}))"
-        " AS t(n_candidates, n_seen, n_requeued, n_fn_active,"
-        " n_requeued_still_found, n_fp_unseen)"
-    )
-
-
-def q_spider_trap_detect(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Spider-trap detection (Mercator, WWW 1999 §4) over the discovered
-    URL corpus: collapse digit runs to the mint template, then flag
-    (host, template) groups minting many distinct URLs over few distinct
-    contents. Hosts with id ≡ 0 (mod 7) play the trap role — their
-    content key cycles mod 3 while honest hosts' content is unique per
-    URL. One template-keyed shuffle; oracle is the identical SQL."""
-    from webcrawler_go_spark.operators.scheduling import spider_trap_scores
-
-    c = canon_corpus(spark, sf_dir)
-    # one row per DISTINCT discovered URL; min(k) is the URL's stable
-    # identity (k-sets of distinct URLs are disjoint → mins distinct)
-    urls = c.groupBy("url_norm", "host").agg(F.min("k").alias("uk"))
-    host_num = F.substring(F.col("host"), 6, 4).cast("int")
-    disc = urls.select(
-        "url_norm",
-        "host",
-        F.when(host_num % 7 == 0, F.col("uk") % 3)
-        .otherwise(F.col("uk"))
-        .alias("content_key"),
-    )
-    return spider_trap_scores(disc, min_urls=20, min_ratio=5)
-
-
-_SPIDER_TRAP_ORACLE_SQL = (
-    CANON_SQL
-    + """, urls AS (
-  SELECT url_norm, host, MIN(k) AS uk FROM canon GROUP BY url_norm, host
-),
-disc AS (
-  SELECT url_norm, host,
-         CASE WHEN CAST(substr(host, 6, 4) AS INT) % 7 = 0
-              THEN uk % 3 ELSE uk END AS content_key
-  FROM urls
-),
-tpl AS (
-  SELECT host,
-         regexp_replace(url_norm, '[0-9]+', 'N', 'g') AS template,
-         url_norm, content_key
-  FROM disc
-)
-SELECT host, template,
-       CAST(COUNT(DISTINCT url_norm) AS BIGINT) AS n_urls,
-       CAST(COUNT(DISTINCT content_key) AS BIGINT) AS n_contents,
-       CAST(floor(1000 * COUNT(DISTINCT url_norm)
-                  / COUNT(DISTINCT content_key)) AS BIGINT)
-         AS trap_ratio_milli,
-       (COUNT(DISTINCT url_norm) >= 20
-        AND COUNT(DISTINCT url_norm) >= 5 * COUNT(DISTINCT content_key))
-         AS is_trap
-FROM tpl GROUP BY host, template
-"""
-)
-
-
-def q_adaptive_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """AIMD per-host politeness-budget adaptation over 8 rounds of
-    synthetic per-host health counters (`scheduling.aimd_budgets` — the
-    budget-rebalance half of VERDICT r5 directive #7; the reference
-    fixes every host at one semaphore width, crawler.go). Per (host,
-    round = k%8): fetched = row count, errors/blocked from
-    deterministic k-formulas; a round is bad when (errors+blocked)/fetched
-    ≥ 20%, budgets halve on bad rounds (floor, min 1) and grow +1
-    (cap 100) on clean ones, starting at 10. Plan: ONE host-keyed
-    exchange pivoting the flags into a map, then the 8-step recurrence
-    unrolled as codegen CASE columns. Oracle = DuckDB recursive CTE
-    running the identical recurrence."""
-    from webcrawler_go_spark.operators.scheduling import aimd_budgets
-
-    c = canon_corpus(spark, sf_dir)
-    hr = (
-        c.select(
-            "host",
-            (F.col("k") % 8).cast("int").alias("round"),
-            F.when((F.col("k") / 8).cast("long") % 5 == 0, 1).otherwise(0).alias("_e"),
-            F.when((F.col("k") / 8).cast("long") % 7 == 0, 1).otherwise(0).alias("_b"),
-        )
-        .groupBy("host", "round")
-        .agg(
-            F.count(F.lit(1)).alias("fetched"),
-            F.sum("_e").alias("errors"),
-            F.sum("_b").alias("blocked"),
-        )
-    )
-    return aimd_budgets(hr, n_rounds=8, base_budget=10, max_budget=100, hot_milli=200)
-
-
-_ADAPTIVE_BUDGET_ORACLE_SQL = (
-    # the recurrence CTE needs the RECURSIVE keyword on the WITH chain
-    CANON_SQL.replace("WITH corpus", "WITH RECURSIVE corpus", 1)
-    + """
-, hr AS (
-  SELECT host, CAST(k % 8 AS INT) AS round,
-         COUNT(*) AS fetched,
-         SUM(CASE WHEN (k // 8) % 5 = 0 THEN 1 ELSE 0 END) AS errors,
-         SUM(CASE WHEN (k // 8) % 7 = 0 THEN 1 ELSE 0 END) AS blocked
-  FROM canon GROUP BY 1, 2
-),
-hosts AS (SELECT DISTINCT host FROM hr),
-rounds AS (SELECT unnest(generate_series(0, 7)) AS round),
-flags AS (
-  SELECT h.host, r.round,
-         COALESCE((hr.errors + hr.blocked) * 1000 >= hr.fetched * 200, FALSE)
-           AS bad
-  FROM hosts h CROSS JOIN rounds r
-  LEFT JOIN hr ON hr.host = h.host AND hr.round = r.round
-),
-rec(host, round, budget, n_bad) AS (
-  SELECT host, -1, CAST(10 AS BIGINT), CAST(0 AS BIGINT) FROM hosts
-  UNION ALL
-  SELECT f.host, f.round,
-         CASE WHEN f.bad THEN GREATEST(1, rec.budget // 2)
-              ELSE LEAST(100, rec.budget + 1) END,
-         rec.n_bad + CASE WHEN f.bad THEN 1 ELSE 0 END
-  FROM rec JOIN flags f ON f.host = rec.host AND f.round = rec.round + 1
-)
-SELECT host, budget, n_bad AS n_bad_rounds FROM rec WHERE round = 7
-"""
-)
-
-
-def q_recrawl_schedule(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Recrawl priority (Cho & Garcia-Molina, SIGMOD 2000) from a
-    synthetic capture history: each distinct URL gets 2-8 captures whose
-    content version advances at a per-URL rate (floor(seq·(uk%5)/8) —
-    a fifth of URLs never change, the rest at 1/8..4/8 per tick),
-    λ is the observed change fraction in millis, and priority is the
-    expected staleness floor(1000·(1−e^{−λ·age})) at scheduler tick 12.
-    LAG window + per-URL aggregate share one url-keyed exchange."""
-    from webcrawler_go_spark.operators.scheduling import recrawl_priority
-
-    c = canon_corpus(spark, sf_dir)
-    urls = c.groupBy("url_norm").agg(F.min("k").alias("uk"))
-    caps = urls.select(
-        "url_norm",
-        "uk",
-        F.explode(
-            F.sequence(F.lit(1).cast("long"), (F.col("uk") % 7) + 2)
-        ).alias("capture_seq"),
-    ).select(
-        "url_norm",
-        "capture_seq",
-        F.floor(
-            F.col("capture_seq") * (F.col("uk") % 5) / 8
-        ).alias("content_key"),
-    )
-    return recrawl_priority(caps, now_seq=12, hot_milli=500)
-
-
-_RECRAWL_ORACLE_SQL = (
-    CANON_SQL
-    + """, urls AS (
-  SELECT url_norm, MIN(k) AS uk FROM canon GROUP BY url_norm
-),
-caps AS (
-  SELECT url_norm, cs AS capture_seq,
-         CAST(floor(cs * (uk % 5) / 8) AS BIGINT) AS content_key
-  FROM urls, UNNEST(range(1, (uk % 7) + 3)) AS g(cs)
-),
-chg AS (
-  SELECT url_norm, capture_seq,
-         CASE WHEN lag(content_key) OVER w IS NULL THEN 0
-              WHEN lag(content_key) OVER w <> content_key THEN 1
-              ELSE 0 END AS chg
-  FROM caps
-  WINDOW w AS (PARTITION BY url_norm ORDER BY capture_seq)
-),
-stats AS (
-  SELECT url_norm, COUNT(*) AS n_caps, SUM(chg) AS n_changes,
-         MAX(capture_seq) AS last_seq
-  FROM chg GROUP BY url_norm
-),
-lam AS (
-  SELECT url_norm, n_caps, n_changes,
-         CASE WHEN n_caps > 1
-              THEN CAST(floor(1000 * n_changes / (n_caps - 1)) AS BIGINT)
-              ELSE 0 END AS lambda_milli,
-         12 - last_seq AS age
-  FROM stats
-),
-prio AS (
-  SELECT url_norm, n_caps, n_changes, lambda_milli, age,
-         CAST(floor(1000.0 * (1.0 - exp(
-               -(CAST(lambda_milli AS DOUBLE) / 1000.0) * age)))
-           AS BIGINT) AS priority_milli
-  FROM lam
-)
-SELECT url_norm,
-       CAST(n_caps AS BIGINT) AS n_caps,
-       CAST(n_changes AS BIGINT) AS n_changes,
-       lambda_milli,
-       CAST(age AS BIGINT) AS age,
-       priority_milli,
-       priority_milli >= 500 AS recrawl
-FROM prio
-"""
-)
-
-
-# ---------------------------------------------------------------------------
-# registry
-# ---------------------------------------------------------------------------
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """Registration ORDER is deliberate: the driver's correctness harness
-    records exactly the first 50 entries per round, so entries are ranked
-    by how much a missing row would cost. Round-7 tiering (VERDICT r6
-    "Next round" #1; `python tools/staleness.py` mechanizes this ledger
-    and prints the suggested next window): (1) queries NEW this round;
-    (2) every query whose code changed this round — the CCNet rewrite of
-    webdata_pipeline (+ the WET chain and warc fixtures under it), the
-    grouped-cumsum token_budget_fill, the warc corrupt-archive resync,
-    the hits guards, the AIMD-touched frontier loop (all engine rows),
-    and the fetch/rank-module riders; (3) the 4 doc_extract rows whose
-    module was rewritten in r6 (judge-verified then, driver-recorded
-    now); (4) all 26 remaining r4 rows — after this round every row's
-    freshest green is ≤2 rounds old and rotation is steady-state.
-    Everything below the cap holds a green r5/r6 row on code
-    byte-unchanged since that row was recorded."""
-    return {
-        # (1) new in r7
-        "adaptive_crawl": q_adaptive_crawl,
-        "embedding_ivfpq_query_only": q_embedding_ivfpq_query_only,
-        # (2) code changed in r7 — must re-record
-        "webdata_pipeline": q_webdata_pipeline,
-        "token_budget_fill": q_token_budget_fill,
-        "html_text_extract": q_html_text_extract,
-        "warc_source": q_warc_source,
-        "warc_cdx_index": q_warc_cdx_index,
-        "warc_source_split": q_warc_source_split,
-        "hits_scores": q_hits,
-        "crawl_multiround": q_crawl_multiround,
-        "resume_crawl": q_resume_crawl,
-        "adaptive_fetch_width": q_adaptive_fetch_width,
-        "streaming_crawl": q_streaming_crawl,
-        "capture_crawl": q_capture_crawl,
-        "redirect_chain": q_redirect_chain,
-        "head_probe": q_head_probe,
-        "pack_sequences": q_pack_sequences,
-        "pagerank": q_pagerank,
-        "dedup_semantic_closure": q_dedup_semantic_closure,
-        "mixture_resample": q_mixture_resample,
-        # (3) r6-rewritten doc_extract module: driver-record the
-        # judge-verified greens
-        "pdf_text_extract": q_pdf_text_extract,
-        "pdf_cid_extract": q_pdf_cid_extract,
-        "pdf_filters_extract": q_pdf_filters_extract,
-        "docx_text_extract": q_docx_text_extract,
-        # (4) the 26 r4-stale rows (VERDICT r6 What's-wrong #1)
-        "global_counters": q_global_counters,
-        "status_histogram": q_status_histogram,
-        "error_taxonomy": q_error_taxonomy,
-        "derived_rates": q_derived_rates,
-        "frontier_union": q_frontier_union,
-        "same_host_filter": q_same_host_filter,
-        "broken_links": q_broken_links,
-        "image_size_threshold": q_image_size_threshold,
-        "dedup_minhash_lsh": q_dedup_minhash_lsh,
-        "dedup_simhash": q_dedup_simhash,
-        "robots_filter": q_robots_filter,
-        "retry_backoff_filter": q_retry_backoff_filter,
-        "bot_protection": q_bot_protection,
-        "bot_protection_sitemap": q_bot_protection_sitemap,
-        "pagination_synthesis": q_pagination_synthesis,
-        "archive_url_generation": q_archive_url_generation,
-        "token_counts": q_token_counts,
-        "doc_fingerprint": q_doc_fingerprint,
-        "media_decode_wav": q_media_decode_wav,
-        "media_metadata": q_media_metadata,
-        "boilerplate_ngrams": q_boilerplate_ngrams,
-        "text_repetition": q_text_repetition,
-        "text_normalize": q_text_normalize,
-        "sample_stratified": q_sample_stratified,
-        "pii_scrub": q_pii_scrub,
-        "ngram_contamination": q_ngram_contamination,
-        # ---- position 50 boundary: everything below holds a green
-        # ---- r5/r6 row on code byte-unchanged since it was recorded;
-        # ---- an unrecorded slot here costs nothing (the judge accepts
-        # ---- r5∪r6∪r7). Run `python tools/staleness.py` for the
-        # ---- freshest-green ledger and the suggested r8 window.
-        "embedding_ivfpq_topk": q_embedding_ivfpq_topk,
-        "embedding_ivfpq_rerank": q_embedding_ivfpq_rerank,
-        "adaptive_budget": q_adaptive_budget,
-        "perplexity_buckets": q_perplexity_buckets,
-        "bpe_merges": q_bpe_merges,
-        "bm25_retrieval": q_bm25_retrieval,
-        "embedding_pq_topk": q_embedding_pq_topk,
-        "embedding_pq_rerank": q_embedding_pq_rerank,
-        "dsir_importance": q_dsir_importance,
-        "bigram_lm_scores": q_bigram_lm_scores,
-        "bpe_encode_corpus": q_bpe_encode_corpus,
-        "spider_trap_detect": q_spider_trap_detect,
-        "recrawl_schedule": q_recrawl_schedule,
-        "quality_classifier": q_quality_classifier,
-        "urlseen_hll": q_urlseen_hll,
-        "host_url_hll": q_host_url_hll,
-        "cms_heavy_hitters": q_cms_heavy_hitters,
-        "fetch_latency_quantiles": q_fetch_latency_quantiles,
-        "bloom_seen_audit": q_bloom_seen_audit,
-        "cuckoo_requeue_audit": q_cuckoo_requeue_audit,
-        "events_window_agg": q_events_window_agg,
-        "events_sessionize": q_events_sessionize,
-        "events_error_rate": q_events_error_rate,
-        "headline_filename": q_headline_filename,
-        "resolve_reference": q_resolve_reference,
-        "lastmod_date_parse": q_lastmod_date_parse,
-        "targets_file_source": q_targets_file_source,
-        "dedup_jaccard_pairs": q_dedup_jaccard_pairs,
-        "dedup_simhash_pairs": q_dedup_simhash_pairs,
-        "url_hash31": q_url_hash31,
-        "visited_dedup": q_visited_dedup,
-        "per_host_fetch_order": q_per_host_fetch_order,
-        "per_host_fetch_sequence": q_per_host_fetch_sequence,
-        "politeness_budget_topk": q_politeness_budget_topk,
-        "props_json_extract": q_props_json_extract,
-        "feed_field_coalesce": q_feed_field_coalesce,
-        "tag_filter": q_tag_filter,
-        "media_tiff_container": q_media_tiff_container,
-        "media_pdf_cmyk_wrap": q_media_pdf_cmyk_wrap,
-        "url_canonicalize": q_url_canonicalize,
-        "rendered_dom_source": q_rendered_dom_source,
-        "extract_links_rendered": q_extract_links_rendered,
-        "streaming_append_sink": q_streaming_append_sink,
-        "duplicate_passages": q_duplicate_passages,
-        "tfidf_top_terms": q_tfidf_top_terms,
-        "embedding_cosine_tiled": q_embedding_cosine_tiled,
-        "media_frame_sample": q_media_frame_sample,
-        "lang_id": q_lang_id,
-        "text_quality": q_text_quality,
-        "embedding_ivf_topk": q_embedding_ivf_topk,
-        "embedding_ann_lsh_banded": q_embedding_ann_lsh_banded,
-        "embedding_ann_topk": q_embedding_ann_topk,
-        "embedding_ann_lsh": q_embedding_ann_lsh,
-        "dedup_embedding_semantic": q_dedup_embedding_semantic,
-        "embedding_cosine_pairs": q_embedding_cosine_pairs,
-        "curation_pipeline": q_curation_pipeline,
-        "substring_search": q_substring_search,
-        "media_decode_png": q_media_decode_png,
-        "media_cmyk_transform": q_media_cmyk_transform,
-        "streaming_window_agg": q_streaming_window_agg,
-        "sitemap_output": q_sitemap_output,
-        "truncate_ellipsis": q_truncate_ellipsis,
-        "filename_sanitize": q_filename_sanitize,
-        "gzip_decode": q_gzip_decode,
-        "feed_capture_join": q_feed_capture_join,
-        "csv_sink": q_csv_sink,
-        "robots_parse": q_robots_parse,
-        "dedup_exact": q_dedup_exact,
-        "status_class_predicate": q_status_class_predicate,
-        "scheme_filter": q_scheme_filter,
-        "extension_skip_filter": q_extension_skip_filter,
-        "path_prefix_filter": q_path_prefix_filter,
-        "html_only_filter": q_html_only_filter,
-        "content_type_dispatch": q_content_type_dispatch,
-    }
+    return {name: REGISTRY[name].build for name in QUERY_ORDER}
 
 
 def oracle_sql() -> dict[str, str]:
-    return {
-        "url_canonicalize": CANON_SQL + "SELECT k, url, url_norm, host, path FROM canon",
-        "visited_dedup": CANON_SQL + """
-            SELECT DISTINCT c.url_norm
-            FROM lineitem l JOIN canon c ON c.k = l.l_orderkey
-            WHERE NOT EXISTS (
-                SELECT 1 FROM canon s WHERE s.k % 3 = 0 AND s.url_norm = c.url_norm
-            )""",
-        "frontier_union": CANON_SQL + """
-            SELECT host, COUNT(*) AS n_urls FROM (
-              SELECT DISTINCT url_norm, host FROM (
-                SELECT url_norm, host FROM canon WHERE k % 2 = 0
-                UNION ALL
-                SELECT url_norm, host FROM canon WHERE k % 3 = 0
-              )
-            ) GROUP BY host""",
-        "per_host_fetch_order": _FRONTIER_SQL + """
-            SELECT host, url_norm,
-                   CAST(ROW_NUMBER() OVER (PARTITION BY host
-                        ORDER BY round, parent_seq, link_pos, url_norm) AS INT) AS host_rank
-            FROM frontier""",
-        "politeness_budget_topk": _FRONTIER_SQL + """
-            , ranked AS (
-              SELECT host, url_norm,
-                     ROW_NUMBER() OVER (PARTITION BY host
-                          ORDER BY round, parent_seq, link_pos, url_norm) AS host_rank,
-                     10 + CAST(substr(host, 6, 4) AS INT) % 11 AS budget
-              FROM frontier
-            )
-            SELECT host, COUNT(*) AS n_scheduled, CAST(MAX(host_rank) AS INT) AS max_rank
-            FROM ranked WHERE host_rank <= budget GROUP BY host""",
-        "retry_backoff_filter": CANON_SQL + """
-            SELECT url_norm,
-                   CAST(k % 5 AS INT) AS attempts,
-                   CAST((k % 5) + (k % 3) AS INT) AS not_before_round
-            FROM canon
-            WHERE (k % 5) + (k % 3) <= 3""",
-        "status_histogram": CANON_SQL + f"""
-            SELECT CAST({_STATUS_SQL} // 100 AS VARCHAR) || 'xx' AS status_class,
-                   COUNT(*) AS n
-            FROM canon GROUP BY 1""",
-        "status_class_predicate": CANON_SQL + f"""
-            SELECT url_norm, {_STATUS_SQL} AS status,
-                   (CASE WHEN {_STATUS_SQL} IN (403,503,429) THEN 'blocked'
-                         WHEN {_STATUS_SQL} >= 400 THEN 'error'
-                         WHEN {_STATUS_SQL} >= 300 AND {_STATUS_SQL} < 400 THEN 'redirect'
-                         ELSE 'ok' END) AS disposition
-            FROM canon""",
-        "error_taxonomy": CANON_SQL + """
-            SELECT (CASE WHEN err LIKE '%timeout%' THEN 'timeout'
-                         WHEN err LIKE '%connection refused%' THEN 'refused'
-                         WHEN err LIKE '%no such host%' THEN 'dns'
-                         WHEN err LIKE '%certificate%' THEN 'ssl'
-                         ELSE 'other' END) AS error_kind,
-                   COUNT(*) AS n
-            FROM (
-              SELECT (CASE WHEN k % 5 = 0 THEN 'dial tcp: i/o timeout'
-                           WHEN k % 5 = 1 THEN 'connect: connection refused'
-                           WHEN k % 5 = 2 THEN 'lookup example: no such host'
-                           WHEN k % 5 = 3 THEN 'x509: certificate has expired'
-                           ELSE 'EOF' END) AS err
-              FROM canon
-            ) GROUP BY 1""",
-        "global_counters": CANON_SQL + f"""
-            SELECT COUNT(*) AS pages_checked,
-                   CAST(SUM({_BYTES_SQL}) AS BIGINT) AS bytes_downloaded,
-                   CAST(SUM(CASE WHEN {_STATUS_SQL} >= 200 AND {_STATUS_SQL} < 300 THEN 1 ELSE 0 END) AS BIGINT) AS status_2xx,
-                   CAST(SUM(CASE WHEN {_STATUS_SQL} >= 300 AND {_STATUS_SQL} < 400 THEN 1 ELSE 0 END) AS BIGINT) AS status_3xx,
-                   CAST(SUM(CASE WHEN {_STATUS_SQL} >= 400 AND {_STATUS_SQL} < 500 THEN 1 ELSE 0 END) AS BIGINT) AS status_4xx,
-                   CAST(SUM(CASE WHEN {_STATUS_SQL} >= 500 THEN 1 ELSE 0 END) AS BIGINT) AS status_5xx,
-                   CAST(SUM(CASE WHEN {_STATUS_SQL} IN (403,503,429) THEN 1 ELSE 0 END) AS BIGINT) AS blocked_count
-            FROM canon""",
-        "derived_rates": CANON_SQL + f"""
-            SELECT COUNT(*) AS pages,
-                   CAST(SUM({_BYTES_SQL}) AS BIGINT) AS bytes_total,
-                   CAST(SUM({_BYTES_SQL}) // COUNT(*) AS BIGINT) AS avg_page_bytes
-            FROM canon WHERE {_STATUS_SQL} = 200""",
-        "same_host_filter": """
-            SELECT 'host-' || lpad(CAST(l_suppkey % 7 AS VARCHAR), 4, '0') || '.test' AS page_host,
-                   CAST(SUM(CASE WHEN l_partkey % 7 = l_suppkey % 7 THEN 1 ELSE 0 END) AS BIGINT) AS internal_links,
-                   CAST(SUM(CASE WHEN l_partkey % 7 <> l_suppkey % 7 THEN 1 ELSE 0 END) AS BIGINT) AS skipped_external
-            FROM lineitem GROUP BY 1""",
-        "scheme_filter": CANON_SQL + """
-            SELECT k, href FROM (
-              SELECT k,
-                     (CASE WHEN k % 9 = 0 THEN '#top'
-                           WHEN k % 9 = 1 THEN 'mailto:x@example.com'
-                           WHEN k % 9 = 2 THEN 'tel:+1555'
-                           WHEN k % 9 = 3 THEN 'javascript:void(0)'
-                           WHEN k % 9 = 4 THEN 'ftp://files.example.com/a'
-                           WHEN k % 9 = 5 THEN ''
-                           ELSE url END) AS href
-              FROM canon
-            )
-            WHERE href IS NOT NULL AND trim(href) <> ''
-              AND NOT regexp_matches(trim(href), '^(#|mailto:|tel:|javascript:|data:)')
-              AND lower(regexp_extract(href, '^([a-zA-Z][a-zA-Z0-9+.-]*):', 1)) IN ('', 'http', 'https')""",
-        "extension_skip_filter": """
-            SELECT pk, path FROM (
-              SELECT p_partkey AS pk,
-                     '/files/item-' || CAST(p_partkey AS VARCHAR) ||
-                     (CASE WHEN p_partkey % 8 = 0 THEN '.pdf'
-                           WHEN p_partkey % 8 = 1 THEN '.jpg'
-                           WHEN p_partkey % 8 = 2 THEN '.css'
-                           WHEN p_partkey % 8 = 3 THEN '.docx'
-                           WHEN p_partkey % 8 = 4 THEN '.html'
-                           WHEN p_partkey % 8 = 5 THEN '.GZ'
-                           ELSE '' END) AS path
-              FROM part
-            )
-            WHERE NOT regexp_matches(lower(path),
-              '\\.(pdf|docx?|xlsx?|pptx?|zip|rar|tar|gz|7z|jpe?g|png|gif|webp|svg|ico|mp3|mp4|avi|mov|wmv|flv|css|js|json|xml|rss|atom)$')""",
-        "path_prefix_filter": CANON_SQL + """
-            SELECT DISTINCT url_norm, path FROM canon
-            WHERE starts_with(path, '/page/1')""",
-        "html_only_filter": CANON_SQL + f"""
-            SELECT url_norm, {_CTYPE_SQL} AS content_type FROM canon
-            WHERE contains({_CTYPE_SQL}, 'text/html')""",
-        "content_type_dispatch": CANON_SQL + f"""
-            SELECT (CASE WHEN contains({_CTYPE_SQL}, 'application/pdf') THEN 'pdf'
-                         WHEN contains({_CTYPE_SQL}, 'application/vnd.openxmlformats-officedocument.wordprocessingml.document') THEN 'docx'
-                         WHEN contains({_CTYPE_SQL}, 'text/html') THEN 'html'
-                         ELSE 'other' END) AS kind,
-                   COUNT(*) AS n
-            FROM canon GROUP BY 1""",
-        "image_size_threshold": CANON_SQL + f"""
-            SELECT url_norm, {_BYTES_SQL} AS bytes,
-                   ROUND({_BYTES_SQL} / 1024.0, 2) AS size_kb
-            FROM canon
-            WHERE starts_with({_CTYPE_SQL}, 'image/') AND {_BYTES_SQL} > 102400""",
-        "bot_protection": """
-            SELECT doc_id,
-                   regexp_matches(lower(body),
-                     'checking your browser|ddos protection|please enable javascript|access denied|security check|verify you are human|captcha|incapsula|perimeterx|sucuri|cloudflare|please wait while we verify|just a moment|ray id|attention required|sorry, you have been blocked'
-                   ) AS is_blocked
-            FROM (
-              SELECT doc_id,
-                     (CASE WHEN doc_id % 10 = 0 THEN 'One moment... checking your browser ' || text
-                           WHEN doc_id % 10 = 1 THEN 'Attention Required! | Cloudflare — ' || text
-                           ELSE text END) AS body
-              FROM documents
-            )""",
-        "bot_protection_sitemap": _sitemap_bot_oracle_sql(),
-        "substring_search": """
-            SELECT doc_id, n_chars FROM documents WHERE contains(text, 'spark')""",
-        "pagination_synthesis": CANON_SQL + """
-            SELECT 'https://' || host || path || '?page=' || CAST(g AS VARCHAR) AS candidate_url
-            FROM (
-              SELECT DISTINCT host, path FROM canon
-              WHERE NOT regexp_matches(path, '\\.[a-z0-9]+$') AND k % 50 = 0
-            ), generate_series(2, 10) AS t(g)""",
-        "archive_url_generation": """
-            SELECT base || '/' || month || '/' AS archive_url
-            FROM (
-              SELECT DISTINCT 'https://host-' || lpad(CAST(n_nationkey % 5 AS VARCHAR), 4, '0')
-                     || '.test/news/' || CAST(2020 + n_nationkey % 6 AS VARCHAR) AS base
-              FROM nation
-            ),
-            (SELECT unnest(['january','february','march','april','may','june',
-                            'july','august','september','october','november','december']) AS month)""",
-        "sitemap_output": CANON_SQL + f"""
-            SELECT url_norm AS loc, MAX(CAST(o.o_orderdate AS DATE)) AS lastmod
-            FROM canon JOIN orders o ON o.o_orderkey = canon.k
-            WHERE {_STATUS_SQL} = 200 AND {_CTYPE_SQL} = 'text/html'
-            GROUP BY url_norm
-            ORDER BY loc""",
-        "truncate_ellipsis": """
-            SELECT doc_id,
-                   (CASE WHEN length(text) > 40 THEN substr(text, 1, 37) || '...'
-                         ELSE text END) AS display_text
-            FROM documents""",
-        "filename_sanitize": CANON_SQL + """
-            SELECT DISTINCT url_norm,
-              (CASE WHEN n2 = '' THEN 'page' ELSE n2 END) AS filename
-            FROM (
-              SELECT url_norm,
-                regexp_replace(
-                  substr(
-                    regexp_replace(
-                      regexp_replace(
-                        regexp_replace(
-                          (CASE WHEN path = '' OR path = '/' THEN 'index' ELSE path END),
-                          '^/', ''),
-                        '/', '_', 'g'),
-                      '[<>:"\\\\|?*]', '_', 'g'),
-                    1, 200),
-                  '[. ]+$', '') AS n2
-              FROM canon
-            )""",
-        "headline_filename": """
-            SELECT ck, (CASE WHEN name = '' THEN 'article' ELSE name END) AS filename
-            FROM (
-              SELECT ck, substr(prefix || trim(regexp_replace(h4, '-{2,}', '-', 'g'), '-'), 1, 200) AS name
-              FROM (
-                SELECT c_custkey AS ck,
-                  (CASE WHEN c_custkey % 2 = 0
-                        THEN '2026' || lpad(CAST(c_custkey % 12 + 1 AS VARCHAR), 2, '0') || '15'
-                        ELSE NULL END) AS dc,
-                  (CASE WHEN c_custkey % 2 = 0
-                        THEN '2026-' || lpad(CAST(c_custkey % 12 + 1 AS VARCHAR), 2, '0') || '-15_'
-                        ELSE '' END) AS prefix,
-                  regexp_replace(
-                    replace(lower('Breaking: ' || c_name || ' wins (again)!'), ' ', '-'),
-                    '[<>:"/\\\\|?*'',.;!()\\[\\]{}]', '', 'g') AS h4
-                FROM customer
-              )
-            )""",
-        # --- crawl spine batch 3 oracles ---
-        "broken_links": CANON_SQL + f"""
-            , pages AS (SELECT k, url_norm AS found_on FROM canon),
-            targets AS (
-              SELECT k % 1000 AS lk, MIN(url_norm) AS href FROM canon GROUP BY 1
-            ),
-            status AS (
-              SELECT url_norm AS href2, MIN({_STATUS_SQL}) AS status
-              FROM canon GROUP BY 1
-            )
-            SELECT p.found_on, t.href AS broken_url, s.status,
-                   CAST(l.l_linenumber AS INT) AS link_pos
-            FROM lineitem l
-            JOIN pages p ON p.k = l.l_orderkey
-            JOIN targets t ON t.lk = l.l_partkey % 1000
-            LEFT JOIN status s ON s.href2 = t.href
-            WHERE s.status >= 400""",
-        "resolve_reference": CANON_SQL + """
-            SELECT k, href,
-              (CASE
-                 WHEN regexp_matches(href, '^https?://') THEN href
-                 WHEN starts_with(href, '/') THEN 'https://' || host || href
-                 WHEN starts_with(href, '../')
-                   THEN 'https://' || host
-                        || regexp_replace(regexp_replace(path, '[^/]*$', ''), '[^/]*/$', '')
-                        || regexp_replace(href, '^\\.\\./', '')
-                 ELSE 'https://' || host || regexp_replace(path, '[^/]*$', '') || href
-               END) AS resolved
-            FROM (
-              SELECT k, host, path,
-                (CASE WHEN k % 4 = 0 THEN 'https://ext.test/abs'
-                      WHEN k % 4 = 1 THEN '/rooted/page'
-                      WHEN k % 4 = 2 THEN 'child'
-                      ELSE '../up' END) AS href
-              FROM canon
-            )""",
-        "lastmod_date_parse": """
-            SELECT o_orderkey AS k,
-                   strftime(o_orderdate, '%a, %d %b %Y') || ' 08:30:00 GMT'
-                     AS last_modified_header,
-                   CAST(o_orderdate AS DATE) AS lastmod
-            FROM orders""",
-        "robots_filter": CANON_SQL + """
-            , corpus2 AS (SELECT DISTINCT url_norm, host, path FROM canon),
-            robots AS (
-              SELECT DISTINCT
-                'host-' || lpad(CAST(s_suppkey % 41 AS VARCHAR), 4, '0') || '.test' AS host,
-                (CASE WHEN s_suppkey % 2 = 0 THEN 'deny' ELSE 'allow' END) AS rule,
-                '/page/' || CAST(s_suppkey % 10 AS VARCHAR) AS path_pfx
-              FROM supplier
-            ),
-            matches AS (
-              SELECT c.url_norm, c.host, r.rule, r.path_pfx
-              FROM corpus2 c LEFT JOIN robots r
-                ON r.host = c.host AND starts_with(c.path, r.path_pfx)
-            ),
-            best AS (
-              SELECT url_norm, host, rule,
-                     ROW_NUMBER() OVER (PARTITION BY url_norm
-                       ORDER BY length(COALESCE(path_pfx, '')) DESC, rule ASC) AS rn
-              FROM matches
-            )
-            SELECT host, COUNT(*) AS n_allowed
-            FROM best
-            WHERE rn = 1 AND COALESCE(rule, 'allow') <> 'deny'
-            GROUP BY host""",
-        "targets_file_source": """
-            SELECT DISTINCT u.url FROM (
-              SELECT unnest(regexp_extract_all(value, 'https?://[^\\s]+')) AS url
-              FROM read_csv('/root/repo/fixtures/targets.txt',
-                            columns={'value': 'VARCHAR'}, delim='\\t', header=false)
-            ) u""",
-        # --- training-data pipeline oracles ---
-        "dedup_exact": f"""
-            WITH {_DUP_DOCS_SQL.strip()}
-            SELECT doc_id, MIN(doc_id) OVER (PARTITION BY text) AS canonical_id
-            FROM docs""",
-        "dedup_jaccard_pairs": f"""
-            WITH {_DUP_DOCS_SQL.strip()}, {_TOKENS_SQL.strip()}, {_SHINGLES_SQL.strip()},
-            sizes AS (SELECT doc_id, COUNT(*) AS n_sh FROM sh GROUP BY doc_id),
-            inter AS (
-              SELECT a.doc_id AS a, b.doc_id AS b, COUNT(*) AS n_common
-              FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-              GROUP BY 1, 2
-            )
-            SELECT i.a, i.b, i.n_common,
-                   ROUND(i.n_common / (na.n_sh + nb.n_sh - i.n_common), 6) AS jaccard
-            FROM inter i
-            JOIN sizes na ON na.doc_id = i.a
-            JOIN sizes nb ON nb.doc_id = i.b
-            WHERE i.n_common / (na.n_sh + nb.n_sh - i.n_common) >= 0.5""",
-        "dedup_minhash_lsh": _minhash_oracle_sql(),
-        "dedup_simhash": _simhash_oracle_sql(16),
-        "dedup_simhash_pairs": _simhash_pairs_oracle_sql(16, 1),
-        "per_host_fetch_sequence": _FRONTIER_SQL + """
-            SELECT host,
-                   string_agg(url_norm, '|'
-                     ORDER BY round, parent_seq, link_pos, url_norm) AS fetch_sequence
-            FROM frontier GROUP BY host""",
-        "embedding_cosine_pairs": _COSINE_PAIRS_ORACLE_SQL,
-        # tiled GEMM strategy must reproduce the row-pair baseline exactly
-        "embedding_cosine_tiled": _COSINE_PAIRS_ORACLE_SQL,
-        "embedding_ann_lsh": _ann_banded_oracle_sql(8, 10, 0.15),
-        "embedding_ann_lsh_banded": _ann_banded_oracle_sql(4, 8, 0.15),
-        "embedding_ann_topk": _ann_topk_oracle_sql(4, 8, 5, 8),
-        "url_hash31": _url_hash31_oracle_sql(),
-        "head_probe": _head_probe_oracle_sql(),
-        "crawl_multiround": _crawl_multiround_oracle_sql(),
-        "adaptive_crawl": _adaptive_crawl_oracle_sql(),
-        # resume-from-snapshot must equal the UNINTERRUPTED golden crawl
-        "resume_crawl": _crawl_multiround_oracle_sql(),
-        # the STREAMING-hosted loop must equal the batch engine and the
-        # sequential golden crawl — identical oracle
-        "streaming_crawl": _crawl_multiround_oracle_sql(),
-        # capture mode: rendered links in the loop, same golden-crawl
-        # oracle machinery with the flag set
-        "capture_crawl": _crawl_multiround_oracle_sql(render_links=True),
-        "rendered_dom_source": _rendered_dom_oracle_sql(),
-        "extract_links_rendered": _extract_links_rendered_oracle_sql(),
-        "redirect_chain": """
-            SELECT CAST(c_custkey AS BIGINT) AS k,
-                   CAST(CASE WHEN c_custkey % 14 >= 10 THEN 0 ELSE 200 END AS INT) AS status,
-                   (CASE WHEN c_custkey % 14 >= 10
-                         THEN 'stopped after 10 redirects' END) AS error_class,
-                   (CASE WHEN c_custkey % 14 >= 10 THEN NULL
-                         ELSE 'arrived k=' || CAST(c_custkey AS VARCHAR)
-                              || ' hops=' || CAST(c_custkey % 14 AS VARCHAR)
-                    END) AS final_text
-            FROM customer""",
-        "robots_parse": """
-            WITH ks AS (SELECT c_custkey AS k FROM customer)
-            SELECT 'h' || CAST(k AS VARCHAR) || '.test' AS host,
-                   'deny' AS rule,
-                   '/c' || CAST(k AS VARCHAR) || '/' AS path_pfx
-            FROM ks WHERE k % 2 = 0
-            UNION ALL
-            SELECT 'h' || CAST(k AS VARCHAR) || '.test', 'deny',
-                   '/a' || CAST(k AS VARCHAR) || '/'
-            FROM ks WHERE k % 2 = 1
-            UNION ALL
-            SELECT 'h' || CAST(k AS VARCHAR) || '.test', 'allow', '/b/'
-            FROM ks WHERE k % 2 = 1""",
-        "media_frame_sample": """
-            SELECT 'media://' || CAST(doc_id AS VARCHAR) AS media_ref,
-                   CAST(g * 10 AS INT) AS frame_idx,
-                   CAST((g * 10 * 1000) // 24 AS BIGINT) AS ts_ms,
-                   CAST(NULL AS VARCHAR) AS decode_error
-            FROM documents
-            CROSS JOIN (SELECT unnest(generate_series(0, 7)) AS g)
-            WHERE doc_id % 4 = 2 AND g * 10 < strlen(text) % 240 + 1""",
-        "dedup_embedding_semantic": _semantic_dedup_oracle_sql(4, 8, 0.5),
-        "dedup_semantic_closure": _semantic_closure_oracle_sql(4, 8, 0.3),
-        "embedding_ivf_topk": _ivf_topk_oracle_sql(5, 8, 8, nprobe=2),
-        "pdf_cid_extract": """
-            SELECT doc_id, substring(text, 1, 120) AS extracted FROM documents""",
-        "media_decode_png": """
-            -- expected (width, height, pixel-sum) from the pixel formula;
-            -- the Spark side must round-trip REAL PNG bytes to match
-            SELECT k,
-                   CAST(k % 8 + 2 AS INT) AS width,
-                   CAST(k % 5 + 2 AS INT) AS height,
-                   CAST(SUM((k * 31 + u.j * 7) % 256) AS BIGINT) AS pix_sum
-            FROM (SELECT c_custkey AS k FROM customer) t,
-                 unnest(generate_series(0, (k % 8 + 2) * (k % 5 + 2) * 3 - 1)) AS u(j)
-            GROUP BY k""",
-        "media_cmyk_transform": f"""
-            WITH {_CMYK_SUMS_SQL}
-            SELECT k, c_sum, m_sum, y_sum, k_sum FROM sums""",
-        "media_tiff_container": f"""
-            -- structural fields are fixed by the writer's parameters
-            -- (Photometric 5 Separated, InkSet 1 CMYK, LZW=5, Predictor
-            -- 1+k%2, ceil(h/(k%3+1)) strips); ink sums come from the
-            -- shared CMYK pixel math; tiff_ok is the in-kernel byte
-            -- round-trip through the real container
-            WITH {_CMYK_SUMS_SQL}
-            SELECT k,
-                   CAST(k % 8 + 2 AS INT) AS width,
-                   CAST(k % 5 + 2 AS INT) AS height,
-                   CAST(5 AS INT) AS photometric,
-                   CAST(5 AS INT) AS compression,
-                   CAST(1 + k % 2 AS INT) AS predictor,
-                   CAST(1 AS INT) AS inkset,
-                   CAST((k % 5 + 2 + k % 3) // (k % 3 + 1) AS INT) AS n_strips,
-                   TRUE AS tiff_ok,
-                   c_sum, m_sum, y_sum, k_sum
-            FROM sums""",
-        "media_pdf_cmyk_wrap": f"""
-            WITH {_CMYK_SUMS_SQL}
-            SELECT k,
-                   CAST(k % 8 + 2 AS INT) AS width,
-                   CAST(k % 5 + 2 AS INT) AS height,
-                   'DeviceCMYK' AS colorspace,
-                   'FlateDecode' AS pdf_filter,
-                   CAST(8 AS INT) AS bits,
-                   CAST(5 AS INT) AS n_objects,
-                   TRUE AS pdf_ok,
-                   c_sum, m_sum, y_sum, k_sum
-            FROM sums""",
-        "media_decode_wav": """
-            SELECT k,
-                   CAST(8000 AS INT) AS sample_rate,
-                   CAST(k % 50 + 20 AS INT) AS n_samples,
-                   CAST(SUM(((k * 131 + u.i * 17) % 256 - 128)
-                          * ((k * 131 + u.i * 17) % 256 - 128)) AS BIGINT) AS sum_sq
-            FROM (SELECT c_custkey AS k FROM customer) t,
-                 unnest(generate_series(0, k % 50 + 20 - 1)) AS u(i)
-            GROUP BY k""",
-        "text_quality": f"""
-            SELECT doc_id,
-                   n_chars_m, n_tokens, n_punct,
-                   ROUND((n_chars_m - (n_tokens - 1)) / GREATEST(n_tokens, 1), 4) AS avg_token_len,
-                   punct_ratio,
-                   ROUND(LEAST(n_tokens / 50.0, 1.0) * 0.5
-                         + (CASE WHEN punct_ratio < 0.1 THEN 0.3 ELSE 0.0 END)
-                         + LEAST(CAST(en_hits AS DOUBLE) / 3.0, 1.0) * 0.2, 6) AS quality_score
-            FROM (
-              SELECT doc_id,
-                     CAST(length(text) AS BIGINT) AS n_chars_m,
-                     CAST(CASE WHEN trim(text) = '' THEN 0
-                          ELSE len(string_split_regex(trim(text), '\\s+')) END AS BIGINT) AS n_tokens,
-                     CAST(len(regexp_extract_all(text, '[^\\w\\s]')) AS BIGINT) AS n_punct,
-                     ROUND(CAST(len(regexp_extract_all(text, '[^\\w\\s]')) AS BIGINT)
-                           / GREATEST(CAST(length(text) AS BIGINT), 1), 6) AS punct_ratio,
-                     {_stopword_hits_sql("text", LANG_STOPWORDS["en"])} AS en_hits
-              FROM documents
-            )""",
-        "lang_id": _lang_id_oracle_sql(),
-        "ngram_contamination": """
-WITH corpus AS (SELECT doc_id, text FROM documents WHERE doc_id % 20 <> 0),
-bench AS (SELECT doc_id, text FROM documents WHERE doc_id % 20 = 0),
-ctok AS (
-  SELECT doc_id, CAST(t.i AS INT) AS pos1, l[t.i] AS token
-  FROM (SELECT doc_id, string_split_regex(trim(text), '\\s+') AS l FROM corpus),
-       unnest(generate_series(1, len(l))) AS t(i)
-  WHERE l[t.i] <> ''
-),
-cgrams AS (
-  SELECT DISTINCT doc_id, token || ' ' || t1 || ' ' || t2 || ' ' || t3 AS g
-  FROM (
-    SELECT doc_id, token,
-           lead(token, 1) OVER (PARTITION BY doc_id ORDER BY pos1) AS t1,
-           lead(token, 2) OVER (PARTITION BY doc_id ORDER BY pos1) AS t2,
-           lead(token, 3) OVER (PARTITION BY doc_id ORDER BY pos1) AS t3
-    FROM ctok
-  )
-  WHERE t3 IS NOT NULL
-),
-btok AS (
-  SELECT doc_id, CAST(t.i AS INT) AS pos1, l[t.i] AS token
-  FROM (SELECT doc_id, string_split_regex(trim(text), '\\s+') AS l FROM bench),
-       unnest(generate_series(1, len(l))) AS t(i)
-  WHERE l[t.i] <> ''
-),
-bgrams AS (
-  SELECT DISTINCT token || ' ' || t1 || ' ' || t2 || ' ' || t3 AS g
-  FROM (
-    SELECT doc_id, token,
-           lead(token, 1) OVER (PARTITION BY doc_id ORDER BY pos1) AS t1,
-           lead(token, 2) OVER (PARTITION BY doc_id ORDER BY pos1) AS t2,
-           lead(token, 3) OVER (PARTITION BY doc_id ORDER BY pos1) AS t3
-    FROM btok
-  )
-  WHERE t3 IS NOT NULL
-),
-hits AS (
-  SELECT c.doc_id, COUNT(*) AS n FROM cgrams c JOIN bgrams b USING (g)
-  GROUP BY c.doc_id
-)
-SELECT c.doc_id,
-       CAST(COALESCE(h.n, 0) AS BIGINT) AS n_contaminated_ngrams,
-       COALESCE(h.n, 0) > 0 AS is_contaminated
-FROM (SELECT doc_id FROM corpus) c LEFT JOIN hits h USING (doc_id)
-""",
-        "boilerplate_ngrams": """
-WITH docs AS (SELECT doc_id, text FROM documents),
-tok AS (
-  SELECT doc_id, CAST(t.i AS INT) AS pos1, l[t.i] AS token
-  FROM (SELECT doc_id, string_split_regex(trim(text), '\\s+') AS l FROM docs),
-       unnest(generate_series(1, len(l))) AS t(i)
-  WHERE l[t.i] <> ''
-),
-grams AS (
-  SELECT DISTINCT doc_id, token || ' ' || t1 || ' ' || t2 AS g
-  FROM (
-    SELECT doc_id, token,
-           lead(token, 1) OVER (PARTITION BY doc_id ORDER BY pos1) AS t1,
-           lead(token, 2) OVER (PARTITION BY doc_id ORDER BY pos1) AS t2
-    FROM tok
-  )
-  WHERE t2 IS NOT NULL
-),
-df AS (SELECT g, COUNT(*) AS dfc FROM grams GROUP BY g),
-per_doc AS (
-  SELECT doc_id, COUNT(*) AS n_ngrams,
-         SUM(CASE WHEN dfc > 5 THEN 1 ELSE 0 END) AS nb
-  FROM grams JOIN df USING (g) GROUP BY doc_id
-)
-SELECT d.doc_id,
-       CAST(COALESCE(p.n_ngrams, 0) AS BIGINT) AS n_ngrams,
-       CAST(COALESCE(p.nb, 0) AS BIGINT) AS n_boilerplate_ngrams
-FROM (SELECT doc_id FROM documents) d LEFT JOIN per_doc p USING (doc_id)
-""",
-        "pii_scrub": _pii_scrub_oracle_sql(),
-        "curation_pipeline": _curation_pipeline_oracle_sql(),
-        "text_repetition": """
-            WITH w AS (
-              SELECT doc_id,
-                     CASE WHEN trim(text) = '' THEN CAST([] AS VARCHAR[])
-                          ELSE string_split_regex(trim(text), '\\s+') END AS ws
-              FROM documents
-            ),
-            b AS (
-              SELECT doc_id, ws,
-                     CASE WHEN len(ws) >= 2
-                          THEN list_transform(range(1, len(ws)), i -> ws[i] || ' ' || ws[i + 1])
-                          ELSE CAST([] AS VARCHAR[]) END AS bg
-              FROM w
-            )
-            SELECT doc_id,
-                   CAST(len(ws) AS BIGINT) AS n_words,
-                   CAST(len(list_distinct(ws)) AS BIGINT) AS n_distinct_words,
-                   CAST(len(bg) AS BIGINT) AS n_bigrams,
-                   CAST(len(list_distinct(bg)) AS BIGINT) AS n_distinct_bigrams
-            FROM b""",
-        "token_counts": """
-            SELECT doc_id,
-                   CAST(CASE WHEN trim(text) = '' THEN 0
-                        ELSE len(string_split_regex(trim(text), '\\s+')) END AS BIGINT) AS n_tokens_ws,
-                   CAST(len(regexp_extract_all(text, '[A-Za-z]+|[0-9]+|[^A-Za-z0-9\\s]')) AS BIGINT) AS n_tokens_bpe
-            FROM documents""",
-        "mixture_resample": """
-            WITH dom AS (
-              SELECT doc_id,
-                     (CASE WHEN doc_id % 10 < 6 THEN 'head'
-                           WHEN doc_id % 10 < 9 THEN 'mid'
-                           ELSE 'tail' END) AS source
-              FROM documents
-            ),
-            c AS (SELECT source, COUNT(*) AS c FROM dom GROUP BY source),
-            r AS (
-              SELECT source,
-                     CAST(FLOOR(1000000 * sqrt(CAST((SELECT MIN(c) FROM c) AS DOUBLE)
-                                               / CAST(c AS DOUBLE))) AS BIGINT) AS rate_micro
-              FROM c
-            )
-            SELECT d.doc_id, d.source, r.rate_micro
-            FROM dom d JOIN r ON d.source = r.source
-            WHERE ((d.doc_id % 999999937) * 2654435761) % 999999937 % 1000000
-                  < r.rate_micro""",
-        "pack_sequences": """
-            WITH t AS (
-              SELECT doc_id,
-                     CAST(CASE WHEN trim(text) = '' THEN 0
-                          ELSE len(string_split_regex(trim(text), '\\s+')) END AS BIGINT) AS n_tokens
-              FROM documents
-            ),
-            c AS (
-              SELECT doc_id, n_tokens,
-                     SUM(n_tokens) OVER (ORDER BY doc_id) AS tok_end
-              FROM t
-            ),
-            s AS (
-              SELECT doc_id, n_tokens, tok_end, tok_end - n_tokens AS tok_start
-              FROM c WHERE n_tokens > 0
-            )
-            SELECT doc_id,
-                   CAST(u.sq AS BIGINT) AS seq_id,
-                   CAST(GREATEST(tok_start, u.sq * 256) - u.sq * 256 AS BIGINT) AS seq_tok_start,
-                   CAST(LEAST(tok_end, (u.sq + 1) * 256) - u.sq * 256 AS BIGINT) AS seq_tok_end,
-                   CAST(GREATEST(tok_start, u.sq * 256) - tok_start AS BIGINT) AS doc_tok_start,
-                   CAST(LEAST(tok_end, (u.sq + 1) * 256) - tok_start AS BIGINT) AS doc_tok_end,
-                   n_tokens
-            FROM s, unnest(generate_series(CAST(tok_start // 256 AS BIGINT),
-                                           CAST((tok_end - 1) // 256 AS BIGINT))) AS u(sq)""",
-        "bpe_merges": _bpe_merges_oracle_sql(),
-        "bpe_encode_corpus": _bpe_encode_corpus_oracle_sql(),
-        "embedding_pq_topk": _pq_topk_oracle_sql(),
-        "embedding_pq_rerank": _pq_rerank_oracle_sql(),
-        "embedding_ivfpq_topk": _ivfpq_topk_oracle_sql(),
-        "embedding_ivfpq_query_only": _ivfpq_topk_oracle_sql(n_queries=16, q_lo=8),
-        "embedding_ivfpq_rerank": _ivfpq_rerank_oracle_sql(),
-        "warc_source": """
-            SELECT CAST(doc_id AS BIGINT) AS doc_id,
-                   'https://w' || CAST(doc_id // 20 AS VARCHAR) || '.example.org/doc/'
-                       || CAST(doc_id AS VARCHAR) AS target_uri,
-                   CAST(CASE WHEN doc_id % 13 = 0 THEN 404 ELSE 200 END AS INT) AS http_status,
-                   CASE WHEN doc_id % 13 = 0 THEN 'text/plain'
-                        ELSE 'text/html' END AS mime,
-                   CAST(strlen(substring(text, 1, 200)) AS BIGINT) AS content_length,
-                   substring(text, 1, 200) AS payload
-            FROM documents""",
-        "warc_cdx_index": _warc_cdx_oracle_sql(),
-        "warc_source_split": _warc_split_oracle_sql(),
-        "webdata_pipeline": _webdata_pipeline_oracle_sql(),
-        "adaptive_budget": _ADAPTIVE_BUDGET_ORACLE_SQL,
-        "html_text_extract": _html_text_oracle_sql(),
-        "perplexity_buckets": _perplexity_buckets_oracle_sql(),
-        "dsir_importance": _DSIR_ORACLE_SQL,
-        "spider_trap_detect": _SPIDER_TRAP_ORACLE_SQL,
-        "recrawl_schedule": _RECRAWL_ORACLE_SQL,
-        "quality_classifier": _QUALITY_CLF_ORACLE_SQL,
-        "urlseen_hll": _urlseen_hll_oracle_sql(),
-        "adaptive_fetch_width": _adaptive_fetch_width_oracle_sql(),
-        "host_url_hll": _host_url_hll_oracle_sql(),
-        "cms_heavy_hitters": _cms_heavy_hitters_oracle_sql(),
-        "fetch_latency_quantiles": _fetch_latency_quantiles_oracle_sql(),
-        "bloom_seen_audit": _bloom_seen_audit_oracle_sql(),
-        "cuckoo_requeue_audit": _cuckoo_requeue_audit_oracle_sql(),
-        "bm25_retrieval": f"""
-            WITH q(query_id, term) AS (VALUES {_bm25_values_sql()}),
-            d AS (
-              SELECT doc_id,
-                     CASE WHEN trim(text) = '' THEN CAST([] AS VARCHAR[])
-                          ELSE string_split_regex(trim(text), '\\s+') END AS l
-              FROM documents
-            ),
-            tok AS (
-              SELECT doc_id, l[t.i] AS token, len(l) AS dl
-              FROM d, unnest(generate_series(1, len(l))) AS t(i)
-              WHERE l[t.i] <> ''
-            ),
-            s AS (SELECT COUNT(*) AS s FROM tok),
-            n AS (SELECT COUNT(*) AS n FROM documents),
-            tf AS (
-              SELECT doc_id, token, COUNT(*) AS tf, MAX(dl) AS dl
-              FROM tok WHERE token IN (SELECT DISTINCT term FROM q)
-              GROUP BY 1, 2
-            ),
-            df AS (SELECT token, COUNT(*) AS df FROM tf GROUP BY 1),
-            scored AS (
-              SELECT q.query_id, tf.doc_id,
-                     (CAST(floor(1000.0 * ln((CAST(n AS DOUBLE) - df + 0.5)
-                                             / (df + 0.5) + 1.0)) AS BIGINT)
-                      * tf * 22 * s)
-                     // (10 * s * tf + 3 * s + 9 * dl * n) AS term_score
-              FROM tf JOIN df USING (token) JOIN q ON q.term = tf.token, s, n
-            ),
-            totals AS (
-              SELECT query_id, doc_id, CAST(SUM(term_score) AS BIGINT) AS score_milli
-              FROM scored GROUP BY 1, 2
-            )
-            SELECT query_id, doc_id, bm25_rank, score_milli FROM (
-              SELECT *, CAST(row_number() OVER (
-                   PARTITION BY query_id
-                   ORDER BY score_milli DESC, doc_id ASC) AS INT) AS bm25_rank
-              FROM totals
-            ) WHERE bm25_rank <= 10""",
-        "bigram_lm_scores": """
-            WITH d AS (
-              SELECT doc_id,
-                     CASE WHEN trim(text) = '' THEN CAST([] AS VARCHAR[])
-                          ELSE string_split_regex(trim(text), '\\s+') END AS l
-              FROM documents
-            ),
-            tok AS (SELECT t.w FROM d, unnest(l) AS t(w)),
-            c1 AS (SELECT w, COUNT(*) AS c1 FROM tok GROUP BY 1),
-            v AS (SELECT COUNT(*) AS v FROM c1),
-            g AS (
-              SELECT doc_id, l[t.i] AS w1, l[t.i + 1] AS w2
-              FROM d, unnest(generate_series(1, len(l) - 1)) AS t(i)
-            ),
-            c2 AS (SELECT w1, w2, COUNT(*) AS c2 FROM g GROUP BY 1, 2),
-            lp AS (
-              SELECT g.doc_id,
-                     CAST(floor(1000.0 * ln((c2 + 1.0)
-                          / (c1 + CAST(v AS DOUBLE)))) AS BIGINT) AS lp
-              FROM g JOIN c2 USING (w1, w2) JOIN c1 ON c1.w = g.w1, v
-            ),
-            pd AS (
-              SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_bigrams,
-                     CAST(SUM(lp) AS BIGINT) AS logprob_milli
-              FROM lp GROUP BY 1
-            )
-            SELECT doc.doc_id,
-                   CAST(COALESCE(n_bigrams, 0) AS BIGINT) AS n_bigrams,
-                   CAST(COALESCE(logprob_milli, 0) AS BIGINT) AS logprob_milli,
-                   CAST(CASE WHEN COALESCE(n_bigrams, 0) = 0 THEN 0
-                        ELSE -((-logprob_milli) // n_bigrams) END AS BIGINT)
-                        AS avg_logprob_milli
-            FROM documents doc LEFT JOIN pd USING (doc_id)""",
-        "text_normalize": r"""
-            SELECT doc_id,
-                   lower(trim(regexp_replace(
-                     regexp_replace('  MiXeD' || chr(9) || 'Case ' || chr(7) || text || '  ',
-                                    '[\x00-\x08\x0b\x0c\x0e-\x1f\x7f]', '', 'g'),
-                     '\s+', ' ', 'g'))) AS norm_text
-            FROM documents""",
-        "sample_stratified": """
-            SELECT doc_id,
-                   (CASE WHEN length(text) >= 200 THEN 'long' ELSE 'short' END) AS stratum
-            FROM documents
-            WHERE (((doc_id % 999999937) * 2654435761) % 999999937) % 1000000
-                  < CAST((CASE WHEN length(text) >= 200 THEN 1.0 ELSE 0.2 END) * 1000000 AS BIGINT)""",
-        "tag_filter": """
-            SELECT c_custkey AS item_id,
-                   'https://feed.test/p/' || CAST(c_custkey AS VARCHAR) AS link,
-                   'tag-' || CAST(c_custkey % 5 AS VARCHAR) || ',common' AS tags
-            FROM customer
-            WHERE c_custkey % 7 <> 0
-              AND contains('tag-' || CAST(c_custkey % 5 AS VARCHAR) || ',common', 'tag-2')""",
-        "gzip_decode": """
-            SELECT doc_id,
-                   (CASE WHEN doc_id % 2 = 0 THEN 'gzip' ELSE 'identity' END) AS encoding,
-                   substring(text, 1, 120) AS decoded
-            FROM documents""",
-        "feed_capture_join": CANON_SQL + f"""
-            , feed AS (
-              SELECT 'Item ' || CAST(k AS VARCHAR) AS headline, url_norm
-              FROM canon WHERE k % 4 = 0
-            ),
-            captures AS (
-              SELECT url_norm, MIN(k) AS k FROM canon GROUP BY url_norm
-            )
-            SELECT f.headline, f.url_norm,
-                   'item-' || CAST(regexp_extract(f.headline, '([0-9]+)$', 1) AS VARCHAR) AS captured_file,
-                   {_STATUS_SQL.replace('k %', 'c.k %')} AS status
-            FROM feed f JOIN captures c USING (url_norm)""",
-        "csv_sink": CANON_SQL + f"""
-            SELECT url_norm AS url, {_STATUS_SQL} AS status,
-                   {_CTYPE_SQL} AS content_type, {_BYTES_SQL} AS bytes
-            FROM canon""",
-        "pdf_text_extract": """
-            SELECT doc_id, substring(text, 1, 200) AS extracted FROM documents""",
-        "pdf_filters_extract": """
-            SELECT doc_id,
-                   (CASE WHEN doc_id % 7 = 0 THEN 'Encrypted'
-                         WHEN doc_id % 8 = 0 THEN 'FlateDecode'
-                         WHEN doc_id % 8 = 1 THEN 'RunLengthDecode'
-                         WHEN doc_id % 8 = 2 THEN 'ASCIIHexDecode'
-                         WHEN doc_id % 8 = 3 THEN 'ASCII85Decode'
-                         WHEN doc_id % 8 = 4 THEN 'LZWDecode'
-                         WHEN doc_id % 8 = 5 THEN 'ASCII85Decode+FlateDecode'
-                         WHEN doc_id % 8 = 6 THEN 'FlateDecode+Pred12'
-                         ELSE 'LZWDecode+Pred2' END) AS filter_chain,
-                   (CASE WHEN doc_id % 7 = 0 THEN ''
-                         ELSE substring(text, 1, 160) END) AS extracted
-            FROM documents""",
-        "docx_text_extract": """
-            SELECT doc_id, substring(text, 1, 150) AS extracted FROM documents""",
-        "doc_fingerprint": f"""
-            WITH docs AS (SELECT doc_id, text FROM documents), {_TOKENS_SQL.strip()},
-            vocab AS (
-              SELECT token, CAST(row_number() OVER (ORDER BY token) AS BIGINT) AS token_id
-              FROM (SELECT DISTINCT token FROM tokens)
-            )
-            SELECT t.doc_id,
-                   CAST(SUM((((v.token_id * 1000003) % 1000000007) * t.pos1) % 1000000007)
-                        % 1000000007 AS BIGINT) AS fingerprint
-            FROM tokens t JOIN vocab v USING (token)
-            GROUP BY t.doc_id""",
-        # the STREAM must equal the batch answer — identical oracle SQL
-        "streaming_window_agg": """
-            SELECT make_timestamp(win_id * 3600 * 1000000) AS win_start,
-                   event_type,
-                   COUNT(*) AS n_events,
-                   CAST(ROUND(SUM(CAST(value AS DECIMAL(20,6))), 4) AS DOUBLE) AS value_sum
-            FROM (
-              SELECT *, CAST(floor(date_part('epoch', ts)) AS BIGINT) // 3600 AS win_id FROM events
-            ) GROUP BY 1, 2""",
-        "pagerank": _pagerank_oracle_sql(3),
-        "hits_scores": _hits_oracle_sql(3),
-        "token_budget_fill": _TOKEN_BUDGET_FILL_ORACLE_SQL,
-        "duplicate_passages": """
-            WITH corpus AS (
-              SELECT d.doc_id,
-                     CASE WHEN d.doc_id % 9 = 0 AND n.text IS NOT NULL
-                          THEN substring(n.text, 1, 240) || ' ' || d.text
-                          ELSE d.text END AS text
-              FROM documents d LEFT JOIN documents n ON n.doc_id = d.doc_id + 1
-            ),
-            tok AS (
-              SELECT doc_id, CAST(t.i AS INT) - 1 AS pos, l[t.i] AS token
-              FROM (SELECT doc_id, string_split_regex(trim(text), '\\s+') AS l
-                    FROM corpus),
-                   unnest(generate_series(1, len(l))) AS t(i)
-              WHERE l[t.i] <> ''
-            ),
-            grams AS (
-              SELECT doc_id, pos,
-                     token || ' ' || lead(token,1) OVER w || ' ' ||
-                     lead(token,2) OVER w || ' ' || lead(token,3) OVER w || ' ' ||
-                     lead(token,4) OVER w AS gram,
-                     lead(token,4) OVER w AS last4
-              FROM tok WINDOW w AS (PARTITION BY doc_id ORDER BY pos)
-            ),
-            g AS (SELECT doc_id, pos, gram FROM grams WHERE last4 IS NOT NULL),
-            m AS (
-              SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-                     a.pos AS a_pos, b.pos AS b_pos, a.pos - b.pos AS diag
-              FROM g a JOIN g b ON a.gram = b.gram AND a.doc_id < b.doc_id
-            ),
-            isl AS (
-              SELECT *, a_pos - row_number() OVER (
-                          PARTITION BY doc_a, doc_b, diag ORDER BY a_pos) AS island
-              FROM m
-            )
-            SELECT doc_a, doc_b,
-                   CAST(MIN(a_pos) AS INT) AS a_start,
-                   CAST(MIN(b_pos) AS INT) AS b_start,
-                   CAST(COUNT(*) + 4 AS INT) AS match_len
-            FROM isl GROUP BY doc_a, doc_b, diag, island
-            HAVING COUNT(*) + 4 >= 8""",
-        "tfidf_top_terms": """
-            WITH tok AS (
-              SELECT doc_id, l[t.i] AS token
-              FROM (SELECT doc_id, string_split_regex(trim(text), '\\s+') AS l
-                    FROM documents),
-                   unnest(generate_series(1, len(l))) AS t(i)
-              WHERE l[t.i] <> ''
-            ),
-            tf AS (SELECT doc_id, token, COUNT(*) AS tf FROM tok GROUP BY 1, 2),
-            df AS (SELECT token, COUNT(*) AS df FROM tf GROUP BY 1),
-            n AS (SELECT COUNT(*) AS n FROM documents),
-            scored AS (
-              SELECT doc_id, token,
-                     CAST(tf * CAST(floor(1000.0 * ln(CAST(n AS DOUBLE) / df))
-                          AS BIGINT) AS BIGINT) AS score
-              FROM tf JOIN df USING (token), n
-            )
-            SELECT doc_id, token, tfidf_rank, score FROM (
-              SELECT *, CAST(row_number() OVER (
-                   PARTITION BY doc_id ORDER BY score DESC, token ASC) AS INT)
-                   AS tfidf_rank
-              FROM scored
-            ) WHERE tfidf_rank <= 3""",
-        # append mode emits a window exactly once, when the watermark
-        # (max event time − 2h) passes its END — the oracle is the batch
-        # aggregation restricted to those finalized windows
-        "streaming_append_sink": """
-            SELECT make_timestamp(win_id * 3600 * 1000000) AS win_start,
-                   event_type,
-                   COUNT(*) AS n_events,
-                   CAST(ROUND(SUM(CAST(value AS DECIMAL(20,6))), 4) AS DOUBLE) AS value_sum
-            FROM (
-              SELECT *, CAST(floor(date_part('epoch', ts)) AS BIGINT) // 3600 AS win_id FROM events
-            ), (SELECT max(ts) AS m FROM events)
-            WHERE (win_id + 1) * 3600 <= date_part('epoch', m) - 7200
-            GROUP BY 1, 2""",
-        "events_window_agg": """
-            SELECT make_timestamp(win_id * 3600 * 1000000) AS win_start,
-                   event_type,
-                   COUNT(*) AS n_events,
-                   CAST(ROUND(SUM(CAST(value AS DECIMAL(20,6))), 4) AS DOUBLE) AS value_sum
-            FROM (
-              SELECT *, CAST(floor(date_part('epoch', ts)) AS BIGINT) // 3600 AS win_id FROM events
-            ) GROUP BY 1, 2""",
-        "events_sessionize": """
-            -- session_id must be CAST to BIGINT: DuckDB SUM(int) yields HUGEINT,
-            -- which pandas renders float64 and the driver hash sees 3.0 != 3.
-            SELECT user_id, session_id,
-                   COUNT(*) AS n_events,
-                   MIN(ts) AS session_start,
-                   MAX(ts) AS session_end
-            FROM (
-              SELECT user_id, ts,
-                     CAST(SUM(CASE WHEN prev_ts IS NULL
-                              OR CAST(floor(date_part('epoch', ts)) AS BIGINT)
-                                 - CAST(floor(date_part('epoch', prev_ts)) AS BIGINT) > 1800
-                         THEN 1 ELSE 0 END)
-                       OVER (PARTITION BY user_id ORDER BY ts
-                             ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS session_id
-              FROM (
-                SELECT user_id, ts, lag(ts) OVER (PARTITION BY user_id ORDER BY ts) AS prev_ts
-                FROM events
-              )
-            ) GROUP BY 1, 2""",
-        "events_error_rate": """
-            -- n_errors must be CAST to BIGINT (HUGEINT -> pandas float64 otherwise).
-            SELECT make_timestamp(win_id * 3600 * 1000000) AS win_start,
-                   COUNT(*) AS n_total,
-                   CAST(SUM(CASE WHEN event_type = 'error' THEN 1 ELSE 0 END) AS BIGINT) AS n_errors,
-                   ROUND(SUM(CASE WHEN event_type = 'error' THEN 1 ELSE 0 END) / COUNT(*), 6) AS error_rate
-            FROM (
-              SELECT *, CAST(floor(date_part('epoch', ts)) AS BIGINT) // 3600 AS win_id FROM events
-            ) GROUP BY 1""",
-        "props_json_extract": """
-            SELECT event_id,
-                   json_extract_string(props, '$.k') AS k_str,
-                   CAST(json_extract_string(props, '$.k') AS INT) AS k_val
-            FROM events""",
-        "feed_field_coalesce": """
-            SELECT c_custkey AS item_id,
-                   COALESCE(title, name) AS headline,
-                   COALESCE(url, permalink) AS link,
-                   published AS date,
-                   CAST(NULL AS VARCHAR) AS datecode,
-                   summary AS brief,
-                   keywords AS tags
-            FROM (
-              SELECT c_custkey,
-                     (CASE WHEN c_custkey % 3 = 0 THEN 'T' || c_name END) AS title,
-                     'N' || c_name AS name,
-                     (CASE WHEN c_custkey % 2 = 0 THEN 'https://u/' || CAST(c_custkey AS VARCHAR) END) AS url,
-                     'https://p/' || CAST(c_custkey AS VARCHAR) AS permalink,
-                     (CASE WHEN c_custkey % 5 = 0 THEN '2026-01-01' END) AS published,
-                     c_mktsegment AS summary,
-                     (CASE WHEN c_custkey % 4 = 0 THEN 'tag-a,tag-b' END) AS keywords
-              FROM customer
-            )""",
-        "media_metadata": """
-            SELECT 'media://' || CAST(doc_id AS VARCHAR) AS media_ref,
-                   (CASE WHEN doc_id % 4 = 0 THEN 'image'
-                         WHEN doc_id % 4 = 1 THEN 'audio'
-                         WHEN doc_id % 4 = 2 THEN 'video'
-                         ELSE 'pdf' END) AS media_type,
-                   CAST(strlen(text) AS BIGINT) AS n_bytes,
-                   (CASE WHEN doc_id % 4 IN (0, 2)
-                         THEN CAST(strlen(text) % 1920 + 1 AS INT) END) AS width,
-                   (CASE WHEN doc_id % 4 IN (0, 2)
-                         THEN CAST(strlen(text) % 1080 + 1 AS INT) END) AS height,
-                   (CASE WHEN doc_id % 4 = 2
-                         THEN CAST(strlen(text) % 240 + 1 AS INT) END) AS n_frames,
-                   CAST(NULL AS VARCHAR) AS decode_error
-            FROM documents""",
-    }
-
-
-# ---------------------------------------------------------------------------
-# flagship
-# ---------------------------------------------------------------------------
+    return {name: REGISTRY[name].oracle_sql() for name in QUERY_ORDER}
 
 
 def entry(spark: SparkSession) -> DataFrame:

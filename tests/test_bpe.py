@@ -106,9 +106,9 @@ def test_driver_query_matches_golden_values(spark):
     import __spark_entry__ as entry
 
     duckdb = pytest.importorskip("duckdb")
-    df = entry.q_bpe_merges(spark, "unused")
+    df = entry.queries()["bpe_merges"](spark, "unused")
     got = sorted(tuple(r) for r in df.collect())
     want = sorted(
-        tuple(r) for r in duckdb.sql(entry._bpe_merges_oracle_sql()).fetchall()
+        tuple(r) for r in duckdb.sql(entry.oracle_sql()["bpe_merges"]).fetchall()
     )
     assert got == want

@@ -12,6 +12,7 @@ import pytest
 
 import __spark_entry__ as entry_mod
 from tools.check_oracles import TABLES, value_hash
+from webcrawler_go_spark.queries import REGISTRY
 
 SF_DIR = "/root/testdata/sf0.001"
 # queries run this many at a time: at sf0.001 a query's wall time is
@@ -54,12 +55,24 @@ def test_every_query_has_callable():
 
 
 def test_oracle_keys_subset_and_parseable(con, oracles):
-    """Every oracle key must name a registered query, and every oracle
-    SQL must at least parse in DuckDB (EXPLAIN, no execution)."""
+    """Every registered query has an oracle, and every oracle SQL must
+    at least parse in DuckDB (EXPLAIN, no execution)."""
     qs = entry_mod.queries()
-    assert set(oracles) <= set(qs), set(oracles) - set(qs)
+    assert set(oracles) == set(qs), set(oracles) ^ set(qs)
     for name, sql in oracles.items():
         con.sql("EXPLAIN " + sql)  # raises on parse/bind errors
+
+
+def test_order_lists_every_registered_query_once():
+    """queries() and oracle_sql() show exactly the queries that
+    QUERY_ORDER lists, so the order must name each registered query
+    once, and each must carry an oracle."""
+    order = entry_mod.QUERY_ORDER
+    dup = sorted({n for n in order if order.count(n) > 1})
+    assert not dup, dup
+    assert set(order) == set(REGISTRY), set(order) ^ set(REGISTRY)
+    no_oracle = sorted(n for n, q in REGISTRY.items() if not q.oracle)
+    assert not no_oracle, no_oracle
 
 
 def _run_query(spark, con, oracles, name):

@@ -1,11 +1,22 @@
-"""Dump formatted physical plans of the engine's key queries → PLANS.md.
+"""Dump formatted physical plans of the engine's key queries.
 
-Concrete evidence for the plan-shape claims in BENCH.md: pushed filters,
-pruned read schemas, broadcast joins, codegen spans.
+    python tools/dump_plans.py                      # QUERIES below → PLANS.md
+    python tools/dump_plans.py --out-dir plans/r08 --suffix _after \
+        --sf <sf dir> webdata_pipeline lang_id
+
+With no ``--out-dir`` the plans of the named queries (default: QUERIES)
+go into PLANS.md, each cut at 600 lines: concrete evidence for the
+plan-shape claims in BENCH.md (pushed filters, pruned read schemas,
+broadcast joins, codegen spans). With ``--out-dir`` each plan is written
+whole to ``<out-dir>/<query><suffix>.txt``, the layout of the round-8
+before/after evidence in plans/r08. Build-time eager work (checkpoints)
+runs as usual.
 """
 
 from __future__ import annotations
 
+import argparse
+import os
 import sys
 
 sys.path.insert(0, ".")
@@ -74,6 +85,13 @@ QUERIES = [
 
 
 def main() -> None:
+    ap = argparse.ArgumentParser(description=__doc__.split("\n")[0])
+    ap.add_argument("queries", nargs="*", default=QUERIES)
+    ap.add_argument("--sf", default=SF, help="sf dir the queries read")
+    ap.add_argument("--out-dir", help="one <query><suffix>.txt per query here")
+    ap.add_argument("--suffix", default="")
+    args = ap.parse_args()
+
     from webcrawler_go_spark.session import get_spark
     import __spark_entry__ as m
 
@@ -82,6 +100,22 @@ def main() -> None:
     mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
         "formatted"
     )
+    qs = m.queries()
+
+    def plan_of(name: str) -> str:
+        df = qs[name](spark, args.sf)
+        return df._jdf.queryExecution().explainString(mode).strip()
+
+    if args.out_dir:
+        os.makedirs(args.out_dir, exist_ok=True)
+        for name in args.queries:
+            path = os.path.join(args.out_dir, f"{name}{args.suffix}.txt")
+            with open(path, "w") as f:
+                f.write(plan_of(name) + "\n")
+            print("wrote", path)
+        spark.stop()
+        return
+
     out = [
         "# PLANS — formatted physical plans of key queries (sf0.01)",
         "",
@@ -96,9 +130,8 @@ def main() -> None:
     # sub-tree; the operator/exchange inventory a reviewer needs is in
     # the head. Cap per query, with the cut stated.
     max_lines = 600
-    for name in QUERIES:
-        df = m.queries()[name](spark, SF)
-        plan = df._jdf.queryExecution().explainString(mode).strip()
+    for name in args.queries:
+        plan = plan_of(name)
         lines = plan.splitlines()
         if len(lines) > max_lines:
             plan = "\n".join(lines[:max_lines]) + (

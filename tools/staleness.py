@@ -1,8 +1,8 @@
 """Rotation ledger for the driver's 50-slot CORRECTNESS window.
 
 The driver records only the FIRST 50 ``queries()`` entries per round, so
-registration order is a priority tiering (see the ``queries()``
-docstring).  This tool mechanizes the arithmetic the judge did by hand
+the order of ``QUERY_ORDER`` in ``__spark_entry__.py`` is a priority
+tiering.  This tool mechanizes the arithmetic the judge did by hand
 through round 6 (VERDICT r6 "Next round" #8): it reads every
 ``CORRECTNESS_r*.json`` plus the live registry and prints
 

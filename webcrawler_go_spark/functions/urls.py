@@ -1,4 +1,4 @@
-"""URL canonicalization, parsing, resolution and filename hashing.
+"""URL canonicalization, parsing and filename hashing.
 
 Reference behaviors re-expressed (citations into /root/reference/):
 
@@ -6,8 +6,6 @@ Reference behaviors re-expressed (citations into /root/reference/):
   ignore_query_params, empty path → "/" (crawler.go:1047-1062 getVisitedKey,
   pdfcapture.go:564-584 normalizeURL, sitemap.go:143-150), default scheme
   https:// for scheme-less input (main.go:50-52).
-* ``resolve_reference`` — RFC 3986 resolution of an href against the page
-  base (crawler.go:862-866, jsonfeed.go:286-302).
 * ``hash31_hex8_col`` — Go-parity filename hash (pdfcapture.go:556-562).
 * ``sanitize_filename`` — pdfcapture.go:514-554.
 * ``sanitize_headline_filename`` — jsonfeed.go:305-343.
@@ -26,7 +24,7 @@ URL grammar:
 
 from __future__ import annotations
 
-from urllib.parse import urljoin, urlsplit, urlunsplit
+from urllib.parse import urlsplit, urlunsplit
 
 import pandas as pd
 from pyspark.sql import Column
@@ -54,10 +52,6 @@ def strip_query(url: Column) -> Column:
     return F.regexp_replace(url, r"\?.*$", "")
 
 
-def url_scheme(url: Column) -> Column:
-    return F.lower(F.regexp_extract(url, r"^([a-zA-Z][a-zA-Z0-9+.-]*)://", 1))
-
-
 def url_host(url: Column) -> Column:
     """Authority component, lowercased (hostnames are case-insensitive)."""
     return F.lower(
@@ -70,11 +64,6 @@ def url_path(url: Column) -> Column:
     (pdfcapture.go:580-582)."""
     p = F.regexp_extract(url, r"^[a-zA-Z][a-zA-Z0-9+.-]*://[^/?#]*([^?#]*)", 1)
     return F.when(p == "", F.lit("/")).otherwise(p)
-
-
-def url_query(url: Column) -> Column:
-    """Query string without the '?' ('' when absent)."""
-    return F.regexp_extract(url, r"\?([^#]*)", 1)
 
 
 def canonicalize_cols(url: Column, ignore_query: bool = False) -> dict[str, Column]:
@@ -223,20 +212,6 @@ def canonicalize_urls_udf(ignore_query: bool = False):
         return urls.map(lambda u: _canon_one(u, ignore_query))
 
     return canonicalize
-
-
-def resolve_reference_udf():
-    """RFC 3986 reference resolution (crawler.go:862-866). No Spark
-    built-in exists; urljoin matches Go's ResolveReference on the common
-    grammar. Factory (UDF registration needs an active session)."""
-
-    @pandas_udf("string")
-    def resolve_reference(base: pd.Series, href: pd.Series) -> pd.Series:
-        return pd.Series(
-            [urljoin(b, h) for b, h in zip(base, href)], dtype="object"
-        )
-
-    return resolve_reference
 
 
 def hash31_hex8_udf():

@@ -79,6 +79,3 @@ def hash31_hex8(s: str) -> str:
     return f"{h:08x}"
 
 
-def hash31_hex8_np(strs) -> np.ndarray:
-    """Vectorized hash31_hex8 for pandas-UDF use."""
-    return np.array([hash31_hex8(s) for s in strs], dtype=object)

@@ -156,19 +156,11 @@ def _unescape_pdf_bytes(s: bytes) -> bytes:
     return bytes(out)
 
 
-def _unescape_pdf_string(s: bytes) -> str:
-    return _unescape_pdf_bytes(s).decode("latin-1")
-
-
 def _hex_bytes(h: bytes) -> bytes:
     h = re.sub(rb"\s", b"", h)
     if len(h) % 2:
         h += b"0"  # PDF spec: odd-length hex pads with 0
     return bytes.fromhex(h.decode("ascii"))
-
-
-def _decode_hex(h: bytes) -> str:
-    return _hex_bytes(h).decode("latin-1")
 
 
 # ---------------------------------------------------------------------------

@@ -17,8 +17,6 @@ from webcrawler_go_spark.functions.classify import (
     has_skipped_extension,
     is_crawlable_href,
 )
-from webcrawler_go_spark.functions.urls import canonicalize_cols
-from webcrawler_go_spark.hashing import str_hash64
 
 
 def documents_from_fetch(fetched: DataFrame) -> DataFrame:
@@ -161,18 +159,6 @@ def next_frontier_candidates(
 # --- mode queries over the fetch log (SURVEY §3.1 step 5) -------------------
 
 
-def search_hits(fetched: DataFrame, target: str) -> DataFrame:
-    """Search mode (crawler.go:806-828): pages whose text spans contain the
-    case-sensitive target (C6). Uses F.exists over the span array —
-    nested-field pruning keeps the scan narrow."""
-    return fetched.filter(
-        F.exists(
-            "spans",
-            lambda s: (s["kind"] == "text") & s["text"].contains(target),
-        )
-    ).select("url", "status", "content_type", "bytes")
-
-
 def broken_links(fetched: DataFrame, link_status: DataFrame) -> DataFrame:
     """Broken-link mode (crawler.go:830-888): every outlink joined to its
     fetch status; status ≥400 or network error = broken. link_status is
@@ -201,15 +187,3 @@ def broken_links(fetched: DataFrame, link_status: DataFrame) -> DataFrame:
     )
 
 
-def oversized_images(fetched: DataFrame, threshold_kb: int) -> DataFrame:
-    """Oversized-image mode (crawler.go:890-954): media fetches larger than
-    threshold KB (main.go:498 multiplies by 1024)."""
-    return (
-        fetched.filter(F.col("content_type").startswith("image/"))
-        .filter(F.col("bytes") > F.lit(threshold_kb) * 1024)
-        .select(
-            "url",
-            "bytes",
-            (F.col("bytes") / 1024.0).alias("size_kb"),
-        )
-    )

@@ -57,13 +57,6 @@ def _doc_len(text_col) -> F.Column:
     ).cast("long")
 
 
-def _tokens(docs: DataFrame, text_col: str) -> DataFrame:
-    return docs.select(
-        "doc_id",
-        F.explode(F.split(F.trim(F.col(text_col)), r"\s+")).alias("token"),
-    ).filter(F.col("token") != "")
-
-
 def bm25_topk(
     docs: DataFrame,
     queries: DataFrame,

@@ -190,8 +190,26 @@ class CrawlEngine:
         frontier (the streaming host delivers seeds per micro-batch):
         rows enter at ``at_round`` and dedup against url_seen naturally
         on the next round's anti-join."""
+        self.frontier_t.commit(
+            self._seed_rows(seeds, at_round, attempts=0, not_before_round=at_round),
+            mode=mode,
+            lineage={"round": at_round, "op": "seed"},
+        )
+
+    def _seed_rows(
+        self,
+        seeds: DataFrame,
+        at_round: int,
+        attempts: int,
+        not_before_round: int,
+        link_pos_offset: int = 0,
+    ) -> DataFrame:
+        """seeds(url, priority, seq) → frontier rows with parent_seq=0
+        and link_pos = seq + ``link_pos_offset``."""
         parts = canonicalize_cols(F.col("url"), self.config.ignore_query_params)
-        fr = seeds.select(
+        # no "+ 0" in seed()'s plan
+        pos = F.col("seq") + link_pos_offset if link_pos_offset else F.col("seq")
+        return seeds.select(
             F.col("url"),
             parts["url_norm"].alias("url_norm"),
             F.xxhash64(parts["url_norm"]).alias("url_hash"),
@@ -199,12 +217,9 @@ class CrawlEngine:
             parts["path"].alias("path"),
             F.lit(at_round).alias("round"),
             F.lit(0).cast("long").alias("parent_seq"),
-            F.col("seq").cast("int").alias("link_pos"),
-            F.lit(0).alias("attempts"),
-            F.lit(at_round).alias("not_before_round"),
-        )
-        self.frontier_t.commit(
-            fr, mode=mode, lineage={"round": at_round, "op": "seed"}
+            pos.cast("int").alias("link_pos"),
+            F.lit(attempts).alias("attempts"),
+            F.lit(not_before_round).alias("not_before_round"),
         )
 
     def seed_phase1(self, start_url: str, alt_entry_points: list[str]) -> None:
@@ -217,30 +232,15 @@ class CrawlEngine:
         seeds = self.spark.createDataFrame(
             rows, "url string, priority double, seq int"
         )
-        parts = canonicalize_cols(F.col("url"), self.config.ignore_query_params)
-
-        def to_frontier(df, attempts, nbr, pos_offset):
-            return df.select(
-                F.col("url"),
-                parts["url_norm"].alias("url_norm"),
-                F.xxhash64(parts["url_norm"]).alias("url_hash"),
-                parts["host"].alias("host"),
-                parts["path"].alias("path"),
-                F.lit(0).alias("round"),
-                F.lit(0).cast("long").alias("parent_seq"),
-                (F.col("seq") + pos_offset).cast("int").alias("link_pos"),
-                F.lit(attempts).alias("attempts"),
-                F.lit(nbr).alias("not_before_round"),
-            )
-
-        alts = to_frontier(seeds, attempts=0, nbr=0, pos_offset=0)
-        main = to_frontier(
+        alts = self._seed_rows(seeds, 0, attempts=0, not_before_round=0)
+        main = self._seed_rows(
             self.spark.createDataFrame(
                 [(start_url, 1.0, 0)], "url string, priority double, seq int"
             ),
+            0,
             attempts=1,
-            nbr=1,
-            pos_offset=len(alt_entry_points),
+            not_before_round=1,
+            link_pos_offset=len(alt_entry_points),
         )
         self.frontier_t.commit(
             alts.unionByName(main), mode="replace", lineage={"round": 0, "op": "seed-phase1"}

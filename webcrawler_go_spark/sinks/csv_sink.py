@@ -10,7 +10,6 @@ results (the reference's actual use case)."""
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 # mode → ordered CSV columns (reference crawler.go:513-520)
 MODE_COLUMNS = {
@@ -41,10 +40,3 @@ def write_csv(
     )
 
 
-def timestamped_filename(mode_name: str) -> "F.Column":
-    """Reference names files crawl_<mode>_<timestamp>.csv
-    (crawler.go:220-242). Deterministic variant: caller supplies the
-    round/snapshot id instead of wall clock (determinism rule 2)."""
-    return F.concat_ws(
-        "_", F.lit("crawl"), F.lit(mode_name), F.lit("snapshot")
-    )

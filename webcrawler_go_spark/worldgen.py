@@ -136,14 +136,6 @@ def error_class_of(world: World, url: str) -> str | None:
     return ["timeout", "connection refused", "no such host", "certificate"][r % 4]
 
 
-def lastmod_days_of(world: World, url: str) -> int | None:
-    """Days since 2026-01-01 for ~50% of HTML pages (sitemap.go:248-257)."""
-    h = _h(world, url, 5)
-    if h % 2:
-        return None
-    return h % 365
-
-
 def _words(h: int, n: int) -> str:
     out = []
     for i in range(n):
@@ -290,140 +282,6 @@ def spans_of(world: World, url: str) -> list[tuple[str, str, str, int]]:
         (kind, text, media, off)
         for off, (_, _, (kind, text, media)) in enumerate(keyed)
     ]
-
-
-def synth_spans_batch(world: World, urls: list[str]) -> list[list[tuple]]:
-    """Whole-batch vectorized ``spans_of`` — bit-identical to the scalar
-    path (asserted in tests), ~3× cheaper per URL. Used by the Arrow
-    fetch kernel; the sequential oracle keeps the scalar functions.
-
-    All hash streams are computed as flat numpy uint64 arrays over the
-    ragged (url → span → word) structure via repeat/cumsum indexing; only
-    the final string joins and the per-URL interleave sort stay in Python
-    (≤ ~120 items per URL).
-    """
-    import numpy as np
-
-    from webcrawler_go_spark.hashing import splitmix64_np
-
-    n = len(urls)
-    if n == 0:
-        return []
-    u64 = np.uint64
-    statuses = np.array([status_of(world, u) for u in urls], dtype=np.int64)
-    ctypes_html = np.array(
-        [content_type_of(world, u) == "text/html" for u in urls], dtype=bool
-    )
-    h6 = np.array([_h(world, u, 6) for u in urls], dtype=np.uint64)
-    h7 = np.array([_h(world, u, 7) for u in urls], dtype=np.uint64)
-    h8 = np.array([_h(world, u, 8) for u in urls], dtype=np.uint64)
-    h9 = np.array([_h(world, u, 9) for u in urls], dtype=np.uint64)
-    host_is = np.array([_host_page_of(u)[0] for u in urls], dtype=np.uint64)
-
-    # --- text spans (mirrors text_spans_of + _words) ---
-    n_text = 1 + (h7 % u64(world.max_text_spans)).astype(np.int64)
-    t_parent = np.repeat(np.arange(n), n_text)
-    t_starts = np.concatenate(([0], np.cumsum(n_text)))
-    t_within = np.arange(t_starts[-1]) - np.repeat(t_starts[:-1], n_text)
-    with np.errstate(over="ignore"):
-        sh = splitmix64_np(h7[t_parent] + u64(101) * t_within.astype(np.uint64))
-    n_words = 4 + (sh % u64(12)).astype(np.int64)
-    w_starts = np.concatenate(([0], np.cumsum(n_words)))
-    w_parent = np.repeat(np.arange(len(sh)), n_words)
-    w_within = np.arange(w_starts[-1]) - np.repeat(w_starts[:-1], n_words)
-    with np.errstate(over="ignore"):
-        widx = splitmix64_np(sh[w_parent] + w_within.astype(np.uint64)) % u64(
-            len(_WORDS)
-        )
-    words_flat = np.array(_WORDS, dtype=object)[widx.astype(np.int64)]
-    needle = (sh % u64(97)) == 0
-    texts_flat = []
-    for si in range(len(sh)):
-        t = " ".join(words_flat[w_starts[si]:w_starts[si + 1]])
-        if needle[si]:
-            t = f"{t} {SEARCH_NEEDLE}"
-        texts_flat.append(t)
-    bot = (h7 % u64(100)) == 0
-
-    # --- media refs (mirrors media_refs_of) ---
-    n_media = (h8 % u64(world.max_media_spans + 1)).astype(np.int64)
-    m_parent = np.repeat(np.arange(n), n_media)
-    m_starts = np.concatenate(([0], np.cumsum(n_media)))
-    m_within = np.arange(m_starts[-1]) - np.repeat(m_starts[:-1], n_media)
-    with np.errstate(over="ignore"):
-        mh = splitmix64_np(h8[m_parent] + u64(977) * m_within.astype(np.uint64))
-    m_ext = np.array(_MEDIA_EXT, dtype=object)[(mh % u64(len(_MEDIA_EXT))).astype(np.int64)]
-    m_id = (mh % u64(100_000)).astype(np.int64)
-
-    # --- outlinks (mirrors outlinks_of) ---
-    has_links = (statuses == 200) & ctypes_html
-    n_links = np.where(has_links, (h6 % u64(world.max_links + 1)).astype(np.int64), 0)
-    l_parent = np.repeat(np.arange(n), n_links)
-    l_starts = np.concatenate(([0], np.cumsum(n_links)))
-    l_within = np.arange(l_starts[-1]) - np.repeat(l_starts[:-1], n_links)
-    with np.errstate(over="ignore"):
-        hh = splitmix64_np(
-            h6[l_parent]
-            ^ (
-                l_within.astype(np.uint64) * u64(0x5851F42D4C957F2D)
-                + u64(0x14057B7EF767814F)
-            )
-        )
-    same = (hh % u64(100)) < u64(world.same_host_pct)
-    skew_u = ((hh >> u64(7)) % u64(10_000)).astype(np.float64) / 10_000.0
-    skew_host = (world.n_hosts * skew_u * skew_u).astype(np.int64) % world.n_hosts
-    l_host = np.where(same, host_is[l_parent].astype(np.int64), skew_host)
-    l_page = ((hh >> u64(17)) % u64(world.pages_per_host)).astype(np.int64)
-
-    # --- interleave per URL (mirrors spans_of) ---
-    out: list[list[tuple]] = []
-    for i in range(n):
-        if statuses[i] != 200:
-            out.append([])
-            continue
-        texts = texts_flat[t_starts[i]:t_starts[i + 1]]
-        if bot[i]:
-            texts = [f"{BOT_PHRASE} {texts[0]}"] + texts[1:]
-        hn = host_name(int(host_is[i]))
-        medias = [
-            f"https://{hn}/media/{m_id[j]}.{m_ext[j]}"
-            for j in range(m_starts[i], m_starts[i + 1])
-        ]
-        links = [
-            page_url(int(l_host[j]), int(l_page[j]))
-            for j in range(l_starts[i], l_starts[i + 1])
-        ]
-        queue = (
-            [("text", t, "") for t in texts]
-            + [("media", "", m) for m in medias]
-            + [("link", "", l) for l in links]
-        )
-        keys = splitmix64_np(
-            h9[i] + u64(31) * np.arange(len(queue), dtype=np.uint64)
-        )
-        order = sorted(range(len(queue)), key=lambda j: (keys[j], j))
-        out.append(
-            [
-                (queue[j][0], queue[j][1], queue[j][2], off)
-                for off, j in enumerate(order)
-            ]
-        )
-    return out
-
-
-def doc_outlinks(world: World, url: str) -> list[str]:
-    """Outlinks in *document order* (their order within the span sequence).
-
-    This — not the raw ``outlinks_of`` list — defines link_pos for the
-    crawl-order parity key (round, parent_seq, link_pos), mirroring the
-    reference's DOM-document-order link discovery (crawler.go:957-999).
-    """
-    return [m for kind, _t, m, _o in spans_of(world, url) if kind == "link"]
-
-
-def body_text_of(world: World, url: str) -> str:
-    """Flat page text (joined text spans) for substring-search parity."""
-    return " ".join(text_spans_of(world, url))
 
 
 def _synth_structure(world: World, urls: list[str]) -> dict:
