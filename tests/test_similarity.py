@@ -1,16 +1,14 @@
 """Similarity-search operator tests (exact cosine, quantized parity,
-LSH recall, top-k)."""
+LSH recall, top-k, zero-norm vectors, tie-breaks)."""
 
 from __future__ import annotations
 
 import math
 
+from tests.similarity_reference import brute_force_topk, cosine_pairs
 from webcrawler_go_spark.operators.similarity import (
-    brute_force_topk,
-    cosine_pairs,
     cosine_pairs_quantized,
     cosine_pairs_tiled,
-    lsh_candidate_pairs,
 )
 
 VECS = [
@@ -37,15 +35,6 @@ def test_quantized_matches_float_on_clear_margins(spark):
     f = {(r.a, r.b) for r in cosine_pairs(_emb(spark), threshold=0.9).collect()}
     q = {(r.a, r.b) for r in cosine_pairs_quantized(_emb(spark), threshold=0.9).collect()}
     assert f == q
-
-
-def test_lsh_separates_opposites(spark):
-    """Hyperplane LSH must put v and -v in complementary buckets → the
-    (1,5) pair can never be a candidate; near-identical vectors share
-    all buckets → (1,2) always survives."""
-    pairs = {(r.a, r.b) for r in lsh_candidate_pairs(_emb(spark), threshold=0.9).collect()}
-    assert (1, 2) in pairs
-    assert (1, 5) not in pairs
 
 
 def test_ivf_topk_recall_on_clusters(spark):
@@ -122,20 +111,18 @@ def test_banded_lsh_bucket_distribution(spark):
     ]
     emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
 
-    from webcrawler_go_spark.operators.similarity import (
-        _banded_sign_term,
-        quantized,
-    )
+    from tests.similarity_reference import banded_sign_term
+    from webcrawler_go_spark.operators.similarity import quantized
 
     n_tables, bits = 4, 8
-    v = quantized(F.col("embedding"), 1000)
+    v = quantized(F.col("embedding"))
 
     def table_bucket(t):
         sig = F.lit(0).cast("long")
         for k in range(bits):
             p = t * bits + k
             signed = F.aggregate(
-                F.zip_with(v, F.sequence(F.lit(1), F.size(v)), _banded_sign_term(p)),
+                F.zip_with(v, F.sequence(F.lit(1), F.size(v)), banded_sign_term(p)),
                 F.lit(0).cast("long"),
                 lambda acc, x: acc + x,
             )
@@ -160,7 +147,7 @@ def test_ann_topk_lsh_matches_exact_on_clusters(spark):
     """Bucketed top-k finds the true nearest neighbor for clustered
     vectors (near-identical vectors share every table's bucket)."""
     import numpy as np
-    from webcrawler_go_spark.operators.similarity import ann_topk_lsh, brute_force_topk
+    from webcrawler_go_spark.operators.similarity import ann_topk_lsh
 
     rng = np.random.default_rng(3)
     base = rng.standard_normal((5, 8))
@@ -200,7 +187,7 @@ def test_ivf_topk_recall_vs_brute_force_sf001():
     sf = "/root/testdata/sf0.01"
     if not os.path.exists(f"{sf}/embeddings.parquet"):
         pytest.skip("driver testdata not present")
-    from webcrawler_go_spark.operators.similarity import brute_force_topk, ivf_topk
+    from webcrawler_go_spark.operators.similarity import ivf_topk
     from webcrawler_go_spark.session import get_spark
 
     spark = get_spark(app_name="tests", master="local[4]", shuffle_partitions=8)
@@ -309,7 +296,8 @@ def test_pq_topk_matches_numpy_reference(spark):
     reference, bit-for-bit (integer micro-unit distances)."""
     import random
 
-    from webcrawler_go_spark.operators.similarity import pq_topk, pq_topk_numpy
+    from webcrawler_go_spark.operators.similarity import pq_topk
+    from webcrawler_go_spark.oracle.ann import pq_topk_numpy
 
     rng = random.Random(7)
     rows = [(i, [round(rng.uniform(-1, 1), 3) for _ in range(8)]) for i in range(30)]
@@ -360,7 +348,7 @@ def test_pq_recall_vs_brute_force_sf001():
     sf = "/root/testdata/sf0.01"
     if not os.path.exists(f"{sf}/embeddings.parquet"):
         pytest.skip("driver testdata not present")
-    from webcrawler_go_spark.operators.similarity import brute_force_topk, pq_topk
+    from webcrawler_go_spark.operators.similarity import pq_topk
     from webcrawler_go_spark.session import get_spark
 
     spark = get_spark(app_name="tests", master="local[4]", shuffle_partitions=8)
@@ -398,11 +386,7 @@ def test_pq_rerank_recovers_shortlisted_neighbors_sf001():
     sf = "/root/testdata/sf0.01"
     if not os.path.exists(f"{sf}/embeddings.parquet"):
         pytest.skip("driver testdata not present")
-    from webcrawler_go_spark.operators.similarity import (
-        brute_force_topk,
-        pq_rerank_topk,
-        pq_topk,
-    )
+    from webcrawler_go_spark.operators.similarity import pq_rerank_topk, pq_topk
     from webcrawler_go_spark.session import get_spark
 
     spark = get_spark(app_name="tests", master="local[4]", shuffle_partitions=8)
@@ -437,7 +421,8 @@ def test_ivfpq_matches_numpy_reference(spark):
     before the subspace sum) leaves no engine-dependent bits."""
     import numpy as np
 
-    from webcrawler_go_spark.operators.similarity import ivfpq_topk, ivfpq_topk_numpy
+    from webcrawler_go_spark.operators.similarity import ivfpq_topk
+    from webcrawler_go_spark.oracle.ann import ivfpq_topk_numpy
 
     rng = np.random.RandomState(11)
     n, dim = 60, 8
@@ -510,11 +495,7 @@ def test_ivfpq_rerank_contract_sf001():
     sf = "/root/testdata/sf0.01"
     if not os.path.exists(f"{sf}/embeddings.parquet"):
         pytest.skip("driver testdata not present")
-    from webcrawler_go_spark.operators.similarity import (
-        brute_force_topk,
-        ivfpq_rerank_topk,
-        ivfpq_topk,
-    )
+    from webcrawler_go_spark.operators.similarity import ivfpq_rerank_topk, ivfpq_topk
     from webcrawler_go_spark.session import get_spark
 
     spark = get_spark(app_name="tests", master="local[4]", shuffle_partitions=8)
@@ -556,11 +537,8 @@ def test_ivfpq_build_once_query_many(spark):
     training shuffles run once, not per batch."""
     import numpy as np
 
-    from webcrawler_go_spark.operators.similarity import (
-        ivfpq_build,
-        ivfpq_query,
-        ivfpq_topk_numpy,
-    )
+    from webcrawler_go_spark.operators.similarity import ivfpq_build, ivfpq_query
+    from webcrawler_go_spark.oracle.ann import ivfpq_topk_numpy
 
     rng = np.random.RandomState(23)
     n, dim = 50, 8
@@ -591,10 +569,8 @@ def test_banded_gemm_path_equals_rowjoin_reference(spark):
     candidates (stress the first-agreeing-table dedup)."""
     import random
 
-    from webcrawler_go_spark.operators.similarity import (
-        _lsh_banded_rowjoin,
-        lsh_candidate_pairs_banded,
-    )
+    from tests.similarity_reference import lsh_banded_rowjoin
+    from webcrawler_go_spark.operators.similarity import lsh_candidate_pairs_banded
 
     random.seed(8)
     rows = []
@@ -612,18 +588,133 @@ def test_banded_gemm_path_equals_rowjoin_reference(spark):
     rows.append((2003, [1.0, 2.0])) # same ragged dim → a real 2-dim pair
     emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
 
-    kw = dict(n_tables=4, bits_per_table=6, threshold=0.15, scale=1000)
+    kw = dict(n_tables=4, bits_per_table=6, threshold=0.15)
     got = {
         (r.a, r.b): r.cosine
         for r in lsh_candidate_pairs_banded(emb, **kw).collect()
     }
     ref = {
         (r.a, r.b): r.cosine
-        for r in _lsh_banded_rowjoin(
-            emb, 4, 6, 0.15, "embedding", "vec_id", 1000
-        ).collect()
+        for r in lsh_banded_rowjoin(emb, 4, 6, 0.15).collect()
     }
     assert got == ref
     assert got, "expected a non-trivial pair set at threshold 0.15"
     assert (2003, 2003) not in got
     assert all(a < b for a, b in got)
+
+
+# 1 is all-zero; 2 quantizes to zero (round(1e-4 · 1000) = 0) but is
+# non-zero in float; 3 and 4 are near-parallel
+ZERO_NORM_VECS = [
+    (1, [0.0, 0.0, 0.0, 0.0]),
+    (2, [1e-4, 0.0, 0.0, 0.0]),
+    (3, [1.0, 0.0, 0.0, 0.0]),
+    (4, [0.99, 0.01, 0.0, 0.0]),
+]
+
+
+def _assert_null_cosines_rank_last(rows, zero):
+    """Each query's zero-vector neighbors have a NULL cosine and rank
+    after every scored neighbor; every other cosine is a number."""
+    by_q: dict = {}
+    for r in rows:
+        by_q.setdefault(r.query_id, []).append(r)
+    assert by_q
+    seen_zero = False
+    for q, rs in by_q.items():
+        rs.sort(key=lambda r: r.rank)
+        assert [r.rank for r in rs] == list(range(1, len(rs) + 1)), q
+        nulls = [r.rank for r in rs if r.cosine is None]
+        scored = [r.rank for r in rs if r.cosine is not None]
+        for r in rs:
+            if q in zero or r.neighbor in zero:
+                assert r.cosine is None, (q, r)
+                seen_zero = True
+            else:
+                assert not math.isnan(r.cosine), (q, r)
+        if nulls and scored:
+            assert max(scored) < min(nulls), (q, rs)
+    assert seen_zero
+
+
+def test_zero_norm_vectors_fail_soft_on_every_cosine_path(spark):
+    """A zero-norm vector has no cosine. Every engine cosine path must
+    run to completion on it (no ANSI DIVIDE_BY_ZERO abort): threshold
+    paths emit no pair touching it, top-k paths give it a NULL cosine
+    ranked last (Spark's DESC puts NULLs last, as DuckDB's does). The
+    quantized paths see vectors 1 and 2 as zero; the float paths only 1."""
+    from webcrawler_go_spark.operators.similarity import (
+        ann_topk_lsh,
+        exact_rerank,
+        ivf_topk,
+        ivfpq_rerank_topk,
+        lsh_candidate_pairs_banded,
+        pq_rerank_topk,
+    )
+
+    emb = spark.createDataFrame(ZERO_NORM_VECS, "vec_id long, embedding array<float>")
+    q_zero, f_zero = {1, 2}, {1}
+
+    # threshold paths (quantized): a threshold below every real cosine
+    # keeps each pair that has one
+    for pairs in (
+        cosine_pairs_quantized(emb, threshold=-1.0),
+        cosine_pairs_tiled(emb, threshold=-1.0, n_blocks=2),
+        # one 1-bit table per plane: every vector shares a bucket
+        lsh_candidate_pairs_banded(emb, n_tables=2, bits_per_table=1, threshold=-1.0),
+    ):
+        assert {(r.a, r.b) for r in pairs.collect()} == {(3, 4)}
+
+    # top-k paths: ann_topk_lsh is quantized; 2 tables × 1 bit put vector
+    # 3 in a bucket with both zero vectors (table 1 is bucket 0 for all)
+    _assert_null_cosines_rank_last(
+        ann_topk_lsh(emb, emb, k=4, n_tables=2, bits_per_table=1).collect(), q_zero
+    )
+    short = spark.createDataFrame(
+        [(q, n) for q, _ in ZERO_NORM_VECS for n, _ in ZERO_NORM_VECS if q != n],
+        "query_id long, neighbor long",
+    )
+    for got in (
+        ivf_topk(emb, emb, k=4, n_cells=1),
+        exact_rerank(short, emb, emb, k=4),
+        pq_rerank_topk(emb, emb, k=4, shortlist=4, m=2, n_cents=2),
+        ivfpq_rerank_topk(emb, emb, k=4, shortlist=4, n_cells=1, nprobe=1, m=2, n_cents=2),
+    ):
+        rows = got.collect()
+        assert len(rows) == 12  # every (query, neighbor) pair is ranked
+        _assert_null_cosines_rank_last(rows, f_zero)
+
+
+def test_topk_ties_go_to_the_lowest_neighbor_id(spark):
+    """The shared top-k breaks a score tie by the lowest neighbor id:
+    tied cosines through exact_rerank, tied ADC distances (identical
+    vectors get identical codes) through pq_topk. Input rows arrive in
+    descending id order, so a sort on the score alone would not give
+    ascending ids."""
+    from webcrawler_go_spark.operators.similarity import exact_rerank, pq_topk
+
+    tied = [17, 13, 11, 7, 5, 3]
+    rows = [(0, [1.0, 0.0, 0.0, 0.0])] + [(i, [1.0, 1.0, 0.0, 0.0]) for i in tied]
+    rows.append((2, [2.0, 2.0, 0.0, 0.0]))  # cosine 0.707107, like the tied ones
+    rows.append((1, [-1.0, 0.0, 0.0, 0.0]))  # far: ranks after the ties
+    emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>").repartition(
+        4
+    )
+    queries = emb.filter("vec_id = 0")
+    want = sorted(tied + [2])
+
+    short = spark.createDataFrame(
+        [(0, i) for i, _ in reversed(rows) if i != 0], "query_id long, neighbor long"
+    ).repartition(4)
+    got = exact_rerank(short, emb, queries, k=len(want)).collect()
+    got = sorted(got, key=lambda r: r.rank)
+    assert len({r.cosine for r in got}) == 1, got
+    assert [r.neighbor for r in got] == want
+
+    got = sorted(
+        pq_topk(emb, queries, k=len(rows), m=2, n_cents=2).collect(), key=lambda r: r.rank
+    )
+    assert len({r.adc_d2_micro for r in got if r.neighbor in tied}) == 1, got
+    assert [r.neighbor for r in got] == [
+        n for _, n in sorted((r.adc_d2_micro, r.neighbor) for r in got)
+    ]

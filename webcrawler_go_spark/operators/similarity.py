@@ -1,63 +1,50 @@
 """Similarity search over an embedding column (array<float>).
 
-* **brute-force cosine** — exact: F.zip_with dot products, JVM-side,
-  no Python. All-pairs is O(n²) shuffle → only the baseline.
+* **exact cosine** — over vectors quantized to integers (``quantized``):
+  exact int64 dots in Arrow/numpy kernels, so every engine and
+  partitioning gets the same bits. All-pairs is O(n²), so the scale
+  shape is the block-packed tile GEMM (``cosine_pairs_tiled``).
 * **LSH-bucketed ANN (random hyperplanes)** — the scale path: sign of
   ⟨v, h_k⟩ for K deterministic hyperplanes gives a K-bit bucket; only
   same-bucket pairs are compared. Hyperplane components are deterministic
   ±1 patterns over dimension index (portable to ANSI SQL, so the oracle
   can verify bucketing AND the final pairs).
-* **IVF-style partitioning** is noted for completeness: k-means coarse
-  centroids then per-cell search; k-means itself is iterative — kept out
-  of the oracle surface, the LSH variant covers the ANN contract.
+* **IVF, PQ and IVFADC** — deterministic k-means (seeds = the lowest
+  ids, a fixed number of Lloyd steps) for coarse cells and subspace
+  codebooks, then top-k by float cosine or by integer ADC distance. Their
+  oracles are numpy replications of these plans (``oracle/ann.py`` and
+  ``queries/embeddings.py``).
 
-Everything here is pure DataFrame ops on `array<float>` — aggregate /
-zip_with / transform — so whole-stage codegen applies; no UDFs.
+Each building block is written once and shared by every path: the
+cosine (``_cosine``), the squared-L2 scan against broadcast centroids
+(``_sq_l2``, with ``_nearest`` and ``_lut`` on top), the k-means seeds
+(``_seed_cells``) and Lloyd steps (``_lloyd``), the float pair cosine
+(``_pair_cosine``) and the per-query top-k (``_topk``).
+
+Everything here is DataFrame ops or Arrow-batched numpy kernels: no
+interpreted higher-order function runs on corpus-scale rows.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-
-def _dot(a, b):
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: (x * y).cast("double")),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
+# quantization scale of every integer-cosine path: round(x · SCALE)
+SCALE = 1000
 
 
-def _norm(a):
-    return F.sqrt(
-        F.aggregate(
-            F.transform(a, lambda x: (x * x).cast("double")),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        )
-    )
-
-
-def quantized(vec, scale: int = 1000):
-    """array<float> → array<bigint> by round(x*scale).
+def quantized(vec):
+    """array<float> → array<bigint> by round(x*SCALE).
 
     Quantization makes every downstream dot/norm an EXACT integer sum —
     independent of addition order, hence bit-identical across engines
     (Spark vs the DuckDB oracle) and across partitionings. Rank/threshold
-    results on quantized cosine are therefore fully deterministic; the
-    float variants remain for production use where cross-engine
-    reproducibility is not part of the contract.
+    results on quantized cosine are therefore fully deterministic.
 
     float32 → float64 FIRST (exact), then scale in double: both engines
     round the identical double product."""
-    return F.transform(vec, lambda x: F.round(x.cast("double") * scale).cast("long"))
-
-
-def _qdot(a, b):
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x * y), F.lit(0).cast("long"), lambda s, v: s + v
-    )
+    return F.transform(vec, lambda x: F.round(x.cast("double") * SCALE).cast("long"))
 
 
 _QDOT_PANDAS_KERNEL = None
@@ -65,8 +52,8 @@ _QDOT_PANDAS_KERNEL = None
 
 def _qdot_pandas(a, b):
     """Exact integer dot of two array<long> columns via an Arrow-batched
-    numpy kernel. Bit-identical to ``_qdot`` (int64 sums are
-    order-independent) but vectorized: the aggregate/zip_with HOF
+    numpy kernel. Bit-identical to an aggregate/zip_with dot (int64 sums
+    are order-independent) but vectorized: the aggregate/zip_with HOF
     evaluates interpreted with per-row array allocation — the numpy
     einsum runs one C loop per batch. Used on verify hot paths where
     millions of candidate pairs flow through the dot."""
@@ -78,7 +65,7 @@ def _qdot_pandas(a, b):
         def _k(x, y):
             if len(x) == 0:
                 return pd.Series([], dtype="Int64")
-            # null / ragged guard: the HOF _qdot yields NULL for a null
+            # null / ragged guard: a zip_with dot yields NULL for a null
             # vector or a length mismatch (zip_with null-pads → null
             # products → null sum); np.vstack would instead raise and
             # fail the whole task. Map those rows to NA, vectorize the
@@ -107,15 +94,11 @@ def _qdot_pandas(a, b):
     return _QDOT_PANDAS_KERNEL(a, b)
 
 
-def with_norm(emb: DataFrame, vec_col: str = "embedding") -> DataFrame:
-    return emb.withColumn("_norm", _norm(F.col(vec_col)))
-
-
 def norms_codegen(
     emb: DataFrame, vec_col: str = "embedding", id_col: str = "vec_id"
 ) -> DataFrame:
-    """(id, _norm) via posexplode+SUM — bit-identical to ``_norm``
-    (float32 squares accumulated sequentially in float64: one agg
+    """(id, _norm) via posexplode+SUM — bit-identical to an aggregate HOF
+    norm (float32 squares accumulated sequentially in float64: one agg
     partial per id, rows arriving in pos order) but inside whole-stage
     codegen instead of the interpreted HOF evaluator. Precondition:
     non-null, non-empty vectors (posexplode drops empty rows where the
@@ -126,29 +109,76 @@ def norms_codegen(
     )
 
 
+def _quantized_rows(emb: DataFrame, vec_col: str, id_col: str) -> DataFrame:
+    """(id, q, n2): quantized vectors and their exact int64 squared norms,
+    through the same Arrow/numpy kernel as the pair dots (n rows, once
+    each) — keeps the plan free of interpreted HOFs."""
+    q = emb.select(F.col(id_col).alias("id"), quantized(F.col(vec_col)).alias("q"))
+    return q.withColumn("n2", _qdot_pandas(F.col("q"), F.col("q")))
+
+
+def _qnorm(n2: str):
+    """Norm of a quantized vector from its int64 squared norm column."""
+    return F.sqrt(F.col(n2).cast("double"))
+
+
+def _cosine(dot, norm_a, norm_b):
+    """dot / (norm_a · norm_b) rounded HALF_UP to 6 — the cosine of every
+    JVM-side path. A zero norm gives NULL instead of an ANSI
+    DIVIDE_BY_ZERO that aborts the job (DuckDB's x/0 is NULL too): a
+    threshold then drops the pair, and a top-k by cosine DESC ranks it
+    last."""
+    return F.round(F.try_divide(dot, norm_a * norm_b), 6)
+
+
+def _pair_cosine(pairs: DataFrame) -> DataFrame:
+    """(query_id, neighbor, v, qv, nv, nq) → (query_id, neighbor, cosine)
+    in float: explode the zipped vectors, SUM the float32 products in
+    float64 — codegen, same bits as an aggregate/zip_with dot (each
+    pair is one row → one agg partial in pos order). Each pair must
+    occur once in ``pairs``."""
+    ex = pairs.select(
+        "query_id", "neighbor", "nv", "nq",
+        F.posexplode(F.arrays_zip("v", "qv")).alias("pos", "z"),
+    )
+    dots = ex.groupBy("query_id", "neighbor").agg(
+        F.sum((F.col("z.v") * F.col("z.qv")).cast("double")).alias("_dot"),
+        F.first("nv").alias("nv"),
+        F.first("nq").alias("nq"),
+    )
+    return dots.select(
+        "query_id", "neighbor",
+        _cosine(F.col("_dot"), F.col("nv"), F.col("nq")).alias("cosine"),
+    )
+
+
+def _topk(df: DataFrame, by: list[str], score, k: int, tie: str = "neighbor") -> DataFrame:
+    """The ``k`` first rows of each ``by`` group ordered by ``score`` (a
+    column with its direction), ties to the lowest ``tie`` id, numbered
+    in an int ``rank`` column."""
+    w = Window.partitionBy(*by).orderBy(score, F.col(tie))
+    return df.withColumn("rank", F.row_number().over(w).cast("int")).filter(
+        F.col("rank") <= k
+    )
+
+
 def cosine_pairs_quantized(
     emb: DataFrame,
     threshold: float = 0.9,
-    scale: int = 1000,
     vec_col: str = "embedding",
     id_col: str = "vec_id",
 ) -> DataFrame:
     """Exact all-pairs cosine over quantized vectors (oracle-reproducible;
     see ``quantized``). Returns (a, b, cosine) with a < b."""
-    q = emb.select(F.col(id_col).alias("id"), quantized(F.col(vec_col), scale).alias("q"))
-    # norms via the same Arrow/numpy kernel as the pair dots (n rows,
-    # once each) — keeps the whole plan free of interpreted HOFs
-    q = q.withColumn("n2", _qdot_pandas(F.col("q"), F.col("q")))
+    q = _quantized_rows(emb, vec_col, id_col)
     a = q.select(F.col("id").alias("a"), F.col("q").alias("qa"), F.col("n2").alias("n2a"))
     b = q.select(F.col("id").alias("b"), F.col("q").alias("qb"), F.col("n2").alias("n2b"))
     pairs = a.join(b, F.col("a") < F.col("b"))
     # O(n²) pairs × per-pair dot: the Arrow/numpy kernel (exact int64,
     # order-independent) — the interpreted HOF dot is the slow path here
-    cos = _qdot_pandas(F.col("qa"), F.col("qb")) / (
-        F.sqrt(F.col("n2a").cast("double")) * F.sqrt(F.col("n2b").cast("double"))
-    )
+    cos = _cosine(_qdot_pandas(F.col("qa"), F.col("qb")), _qnorm("n2a"), _qnorm("n2b"))
     return (
-        pairs.withColumn("cosine", F.round(cos, 6))
+        pairs.withColumn("cosine", cos)
         .filter(F.col("cosine") >= threshold)
         .select("a", "b", "cosine")
     )
@@ -157,7 +187,6 @@ def cosine_pairs_quantized(
 def cosine_pairs_tiled(
     emb: DataFrame,
     threshold: float = 0.9,
-    scale: int = 1000,
     n_blocks: int = 16,
     vec_col: str = "embedding",
     id_col: str = "vec_id",
@@ -191,10 +220,7 @@ def cosine_pairs_tiled(
 
     spark = emb.sparkSession
     m = n_blocks
-    q = emb.select(
-        F.col(id_col).alias("id"), quantized(F.col(vec_col), scale).alias("q")
-    )
-    q = q.withColumn("n2", _qdot_pandas(F.col("q"), F.col("q")))
+    q = _quantized_rows(emb, vec_col, id_col)
     blocks = (
         q.withColumn("blk", F.pmod(F.col("id"), m))
         .groupBy("blk")
@@ -288,57 +314,39 @@ def cosine_pairs_tiled(
     )
 
 
-def cosine_pairs(
-    emb: DataFrame,
-    threshold: float = 0.95,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-) -> DataFrame:
-    """Exact all-pairs cosine ≥ threshold (a < b). Baseline only — the
-    cross join is O(n²); use lsh_candidate_pairs at scale."""
-    a = with_norm(emb, vec_col).select(
-        F.col(id_col).alias("a"), F.col(vec_col).alias("va"), F.col("_norm").alias("na")
-    )
-    b = with_norm(emb, vec_col).select(
-        F.col(id_col).alias("b"), F.col(vec_col).alias("vb"), F.col("_norm").alias("nb")
-    )
-    pairs = a.join(b, F.col("a") < F.col("b"))
-    cos = _dot(F.col("va"), F.col("vb")) / (F.col("na") * F.col("nb"))
+def _sq_l2(ex: DataFrame, cx: DataFrame, on: list[str], by: list[str]) -> DataFrame:
+    """``by`` + _d2 = Σ (x − c)²: the exploded vector elements ``ex``
+    (…, pos, x) ⨝ broadcast exploded centroids ``cx`` (…, pos, c) on
+    ``on``, summed per ``by`` group.
+
+    Whole-stage-codegen form (round-4 directive #3): SUM the float32
+    squared deltas per group in float64. Bit-identical to a
+    zip_with/aggregate HOF — the hash aggregate's partial phase
+    accumulates the exploded rows in pos order within one task (each
+    vector is one input row, so each group has exactly one partial) —
+    but it runs inside codegen instead of the interpreted per-row HOF
+    evaluator, the measured ~20× trap at 10^9 vectors (see
+    banded_signature_keys). Precondition: fixed-dimension vectors (the
+    join on pos contributes only shared dimensions; zip_with null-padded
+    ragged inputs to a NULL distance instead)."""
     return (
-        pairs.withColumn("cosine", F.round(cos, 6))
-        .filter(F.col("cosine") >= threshold)
-        .select("a", "b", "cosine")
+        ex.join(F.broadcast(cx), on)
+        .groupBy(*by)
+        .agg(
+            F.sum(
+                ((F.col("x") - F.col("c")) * (F.col("x") - F.col("c"))).cast("double")
+            ).alias("_d2")
+        )
     )
 
 
-def brute_force_topk(
-    emb: DataFrame,
-    queries: DataFrame,
-    k: int = 5,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
+def _nearest(
+    ex: DataFrame, cx: DataFrame, on: list[str], key: list[str], n: int = 1
 ) -> DataFrame:
-    """Exact top-k neighbors for each query vector (broadcast the small
-    query side; rank per query with a Window)."""
-    from pyspark.sql import Window
-
-    base = with_norm(emb, vec_col).select(
-        F.col(id_col).alias("neighbor"), F.col(vec_col).alias("v"), F.col("_norm").alias("nv")
-    )
-    q = with_norm(queries, vec_col).select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv"), F.col("_norm").alias("nq")
-    )
-    joined = base.crossJoin(F.broadcast(q)).filter(F.col("neighbor") != F.col("query_id"))
-    cos = _dot(F.col("v"), F.col("qv")) / (F.col("nv") * F.col("nq"))
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor")
-    )
-    return (
-        joined.withColumn("cosine", F.round(cos, 6))
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor", "cosine", F.col("rank").cast("int").alias("rank"))
-    )
+    """(*key, cell) for the ``n`` cells nearest each ``key`` vector by
+    squared L2 (``_sq_l2``), ties to the lowest cell id."""
+    d2 = _sq_l2(ex, cx, on, [*key, "cell"])
+    return _topk(d2, key, F.col("_d2").asc(), n, tie="cell").select(*key, "cell")
 
 
 def assign_to_centroids(
@@ -347,39 +355,48 @@ def assign_to_centroids(
     """(id, v) × broadcast centroids → (id, cell) for the ``nprobe``
     nearest cells by L2 (deterministic tie-break on cell id). nprobe=1 is
     the assignment used to BUILD the index; queries probe nprobe ≥ 1
-    cells to trade compute for recall (the standard IVF knob).
-
-    Whole-stage-codegen form (round-4 directive #3): posexplode the
-    vector, broadcast-join the exploded centroids on dimension index,
-    SUM the float32 squared deltas per (id, cell) in float64. Bit-
-    identical to the zip_with/aggregate HOF it replaces — the hash
-    aggregate's partial phase accumulates the exploded rows in pos order
-    within one task (each id's vector is one input row, so each
-    (id, cell) group has exactly one partial) — but it runs inside
-    codegen instead of the interpreted per-row HOF evaluator, the
-    measured ~20× trap at 10^9 vectors (see banded_signature_keys).
-    Precondition: fixed-dimension corpus (the join on pos contributes
-    only shared dimensions; zip_with null-padded ragged inputs to a
-    NULL distance instead)."""
-    from pyspark.sql import Window
-
+    cells to trade compute for recall (the standard IVF knob)."""
     ex = e.select("id", F.posexplode("v").alias("pos", "x"))
     cx = centroids.select("cell", F.posexplode("centroid").alias("pos", "c"))
-    d2 = (
-        ex.join(F.broadcast(cx), "pos")
-        .groupBy("id", "cell")
-        .agg(
-            F.sum(
-                ((F.col("x") - F.col("c")) * (F.col("x") - F.col("c"))).cast("double")
-            ).alias("_d2")
+    return _nearest(ex, cx, ["pos"], ["id"], nprobe)
+
+
+def _seed_cells(e: DataFrame, n: int) -> DataFrame:
+    """(id, v, cell) of the ``n`` lowest ids, cell = 0..n-1 in id order —
+    the deterministic k-means seeds. Sort+limit plans as
+    TakeOrderedAndProject (distributed per-partition top-K, merged on
+    the driver), not a single-partition Window over the whole corpus:
+    the Window runs on the already-limited n rows only."""
+    return e.orderBy("id").limit(n).withColumn(
+        "cell", F.row_number().over(Window.orderBy("id")) - 1
+    )
+
+
+def _lloyd(cents: DataFrame, members, keys: list[str], iters: int) -> DataFrame:
+    """``iters`` Lloyd steps from ``cents`` (*keys, centroid).
+    ``members(cents)`` gives each vector's elements under its nearest
+    centroid as (*keys, pos, x); the new centroid is the float64 mean
+    per pos cast to float32. A cell that loses every member has no row,
+    so it is DROPPED, never kept stale.
+
+    Each step is pinned (lazy localCheckpoint, metadata-scale rows) so
+    (a) the plan does not deepen per iteration and (b) every consumer of
+    the trained centroids shares ONE training compute instead of
+    re-running k-means per reference (no exchange reuse across repeated
+    subtrees)."""
+    for _ in range(iters):
+        means = members(cents).groupBy(*keys, "pos").agg(F.avg("x").alias("mean"))
+        cents = (
+            means.groupBy(*keys)
+            .agg(F.array_sort(F.collect_list(F.struct("pos", "mean"))).alias("pm"))
+            .select(
+                *keys,
+                # HOF on centroid rows only — metadata scale
+                F.transform("pm", lambda s: s["mean"].cast("float")).alias("centroid"),
+            )
+            .localCheckpoint(eager=False)
         )
-    )
-    w_best = Window.partitionBy("id").orderBy(F.col("_d2").asc(), F.col("cell").asc())
-    return (
-        d2.withColumn("_rk", F.row_number().over(w_best))
-        .filter(F.col("_rk") <= nprobe)
-        .select("id", "cell")
-    )
+    return cents
 
 
 def ivf_assign(
@@ -397,50 +414,17 @@ def ivf_assign(
     the IVF scale path for ANN: queries probe only the nearest cell(s)
     instead of the whole corpus — at 10^9 vectors the per-cell lists are
     the unit of partition pruning."""
-    from pyspark.sql import Window
-
     e = emb.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v"))
-    # Seed rows = n_cells lowest ids via sort+limit: Spark plans this as
-    # TakeOrderedAndProject (distributed per-partition top-K, merged on
-    # the driver) — not a single-partition Window over the whole corpus.
-    # The Window below runs on the already-limited n_cells rows only.
-    seeds = e.orderBy("id").limit(n_cells)
-    w = Window.orderBy("id")
-    cents = seeds.withColumn("_r", F.row_number().over(w)).select(
-        (F.col("_r") - 1).alias("cell"), F.col("v").alias("centroid")
+    cents = _seed_cells(e, n_cells).select("cell", F.col("v").alias("centroid"))
+    cents = _lloyd(
+        cents,
+        lambda c: e.join(assign_to_centroids(e, c), "id").select(
+            "cell", F.posexplode("v").alias("pos", "x")
+        ),
+        ["cell"],
+        lloyd_iters,
     )
-
-    def assign(centroids: DataFrame) -> DataFrame:
-        return assign_to_centroids(e, centroids)
-
-    for _ in range(lloyd_iters):
-        a = assign(cents)
-        # mean per cell: explode positions, avg, re-assemble
-        exploded = (
-            e.join(a, "id")
-            .select("cell", F.posexplode("v").alias("pos", "x"))
-            .groupBy("cell", "pos")
-            .agg(F.avg("x").alias("m"))
-        )
-        cents = (
-            exploded.groupBy("cell")
-            .agg(
-                F.array_sort(
-                    F.collect_list(F.struct("pos", "m"))
-                ).alias("pm")
-            )
-            .select(
-                "cell",
-                F.transform("pm", lambda s: s["m"].cast("float")).alias("centroid"),
-            )
-        )
-        # n_cells rows: pin each Lloyd step so (a) the iteration's plan
-        # does not deepen multiplicatively and (b) the final corpus
-        # assign and the query-side assign share ONE training compute
-        # instead of re-running k-means per reference (no exchange reuse
-        # across repeated subtrees)
-        cents = cents.localCheckpoint(eager=False)
-    return assign(cents), cents
+    return assign_to_centroids(e, cents), cents
 
 
 def ivf_topk(
@@ -458,12 +442,8 @@ def ivf_topk(
     at nprobe 1 / 2 / 3);
     at scale each probed cell is a partition-pruned slice instead of a
     full scan, so cost is nprobe/n_cells of the corpus."""
-    from pyspark.sql import Window
-
     assignments, cents = ivf_assign(emb, n_cells=n_cells, vec_col=vec_col, id_col=id_col)
-    # norms via the same codegen posexplode+SUM form as the assignment
-    # (bit-identical to the HOF _norm: float32 squares, sequential
-    # float64 accumulation inside one partial per id)
+    # norms via the same codegen posexplode+SUM form as the dots
     norms = norms_codegen(emb, vec_col=vec_col, id_col=id_col)
     base = (
         emb.select(F.col(id_col).alias("neighbor"), F.col(vec_col).alias("v"))
@@ -483,59 +463,14 @@ def ivf_topk(
         )
         .withColumnRenamed("cell", "qcell")
     )
+    # build assignment is nprobe=1, so each (query, neighbor) pair
+    # occurs once
     joined = base.join(
         F.broadcast(q), (F.col("cell") == F.col("qcell")) & (F.col("neighbor") != F.col("query_id"))
     )
-    # pair dot product: explode the zipped vectors, SUM the float32
-    # products in float64 — codegen, same bits as the HOF _dot (each
-    # (query_id, neighbor) pair is one joined row → one agg partial in
-    # pos order). Build assignment is nprobe=1, so each pair occurs once.
-    ex = joined.select(
-        "query_id", "neighbor", "nv", "nq",
-        F.posexplode(F.arrays_zip("v", "qv")).alias("pos", "z"),
+    return _topk(_pair_cosine(joined), ["query_id"], F.col("cosine").desc(), k).select(
+        "query_id", "neighbor", "cosine", "rank"
     )
-    dots = ex.groupBy("query_id", "neighbor").agg(
-        F.sum((F.col("z.v") * F.col("z.qv")).cast("double")).alias("_dot"),
-        F.first("nv").alias("nv"),
-        F.first("nq").alias("nq"),
-    )
-    cos = F.col("_dot") / (F.col("nv") * F.col("nq"))
-    w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("neighbor"))
-    return (
-        dots.withColumn("cosine", F.round(cos, 6))
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor", "cosine", F.col("rank").cast("int").alias("rank"))
-    )
-
-
-def _banded_sign_term(p: int):
-    """±1 component of plane ``p`` at dimension d: parity of
-    ((d·(2p+3) + 7p) mod 1009). The mod-1009 affine family gives ~1009
-    distinct planes (the mod-7 family of ``lsh_candidate_pairs`` caps at
-    7 — unusable for multi-table banding where tables must be
-    independent). Deterministic and ANSI-SQL-portable."""
-    return lambda x, d: F.when(
-        ((d * (2 * p + 3) + 7 * p) % 1009) % 2 == 1, x
-    ).otherwise(-x)
-
-
-def _banded_table_bucket(v, scale, t: int, bits_per_table: int):
-    """K-bit bucket of banded table ``t`` over vector column ``v`` — the
-    per-row higher-order-function formulation. Kept as the semantic
-    reference; hot paths use ``banded_signature_keys`` (identical bits,
-    ~50× faster: HOFs like aggregate/zip_with are interpreted row-at-a-
-    time, outside whole-stage codegen)."""
-    sig = F.lit(0).cast("long")
-    for k in range(bits_per_table):
-        p = t * bits_per_table + k
-        signed = F.aggregate(
-            F.zip_with(v, F.sequence(F.lit(1), F.size(v)), _banded_sign_term(p)),
-            F.lit(0).cast("long") if scale else F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-        sig = sig + F.when(signed > 0, F.lit(1 << k)).otherwise(F.lit(0))
-    return sig
 
 
 def banded_signature_keys(
@@ -544,13 +479,14 @@ def banded_signature_keys(
     bits_per_table: int,
     vec_col: str = "embedding",
     id_col: str = "vec_id",
-    scale: int | None = 1000,
 ) -> DataFrame:
     """(id, sigs: array<long>[n_tables]) — banded LSH signatures via
     posexplode + groupBy(id) with B×K plain SUM aggregates.
 
-    Same bits as ``_banded_table_bucket`` (the mod-1009 affine family),
-    but fully inside whole-stage codegen: higher-order functions
+    Plane ``p``'s component at dimension d is ±1 by the parity of
+    ((d·(2p+3) + 7p) mod 1009): ~1009 distinct planes, deterministic and
+    ANSI-SQL-portable (``queries/embeddings._banded_cte_parts`` mirrors
+    it). Fully inside whole-stage codegen: higher-order functions
     (aggregate/zip_with) evaluate interpreted per row — measured 19s for
     2000×64 vectors at B×K=32 — while the exploded SUM form runs the
     identical math in hash-aggregate codegen in <1s. Shuffle stays light:
@@ -560,10 +496,9 @@ def banded_signature_keys(
     Precondition: ``id_col`` is unique per row (true of vec_id) — the
     groupBy would merge duplicate ids into one meaningless signature.
     Empty/null vectors keep a row via posexplode_outer and land in
-    bucket 0 of every table (NULL sums → no bit set), matching the
-    per-row builder."""
+    bucket 0 of every table (NULL sums → no bit set)."""
     n_planes = n_tables * bits_per_table
-    q = quantized(F.col(vec_col), scale) if scale else F.col(vec_col)
+    q = quantized(F.col(vec_col))
     ex = emb.select(F.col(id_col).alias("id"), F.posexplode_outer(q).alias("pos", "qx"))
     d = F.col("pos") + 1  # the plane family indexes dimensions from 1
     aggs = [
@@ -596,7 +531,6 @@ def signature_rows_quantized(
     bits_per_table: int,
     vec_col: str = "embedding",
     id_col: str = "vec_id",
-    scale: int = 1000,
 ) -> DataFrame:
     """(id, sigs: array<long>[n_tables], q: array<long>) in ONE
     vectorized pass — the banded-LSH signature computation as a single
@@ -604,7 +538,7 @@ def signature_rows_quantized(
     B·K-aggregate shape (measured 4.6 s → <0.5 s at 20k×64, sf1.0: the
     exploded form pays 80 conditional SUM updates per element row).
 
-    Bit-identical to ``banded_signature_keys`` on the quantized path:
+    Bit-identical to ``banded_signature_keys``:
     quantization stays JVM-side (``F.round`` half-up — numpy's
     banker's rounding never touches the data), plane signs come from the
     same mod-1009 affine family, and the per-plane sums are exact — the
@@ -628,7 +562,7 @@ def signature_rows_quantized(
     # run the whole signature GEMM 1-way; identity when already spread
     base = spread_to_cluster(
         emb.select(
-            F.col(id_col).alias("id"), quantized(F.col(vec_col), scale).alias("q")
+            F.col(id_col).alias("id"), quantized(F.col(vec_col)).alias("q")
         )
     )
 
@@ -695,7 +629,6 @@ def lsh_candidate_pairs_banded(
     threshold: float = 0.9,
     vec_col: str = "embedding",
     id_col: str = "vec_id",
-    scale: int = 1000,
 ) -> DataFrame:
     """Multi-table (banded) hyperplane LSH near-pairs — the 10^9-vector
     scale path.
@@ -722,21 +655,15 @@ def lsh_candidate_pairs_banded(
     multiply-add inside BLAS. Same bits, same pairs, same cosines —
     the authoritative threshold still runs JVM-side on F.round(…, 6).
 
-    The quantized path is exact end to end: int64 dots are
+    The path is exact end to end on quantized vectors: int64 dots are
     order-independent, and the kernel runs the GEMM in float64 only when
     ``dim · max|q_a| · max|q_b| < 2^53`` proves every product and partial
     sum is exactly representable (falling back to int64 matmul
-    otherwise). The float path (``scale=None``) keeps the original
-    row-join formulation — HOF float sums are order-sensitive, so the
-    GEMM's different accumulation order could flip a last-ulp bit."""
-    if not scale:
-        return _lsh_banded_rowjoin(
-            emb, n_tables, bits_per_table, threshold, vec_col, id_col, scale
-        )
+    otherwise)."""
     import pandas as pd
 
     rows = signature_rows_quantized(
-        emb, n_tables, bits_per_table, vec_col=vec_col, id_col=id_col, scale=scale
+        emb, n_tables, bits_per_table, vec_col=vec_col, id_col=id_col
     ).select("id", "sigs", "q", F.posexplode("sigs").alias("tbl", "bucket"))
     groups = rows.groupBy("tbl", "bucket").agg(
         F.collect_list(F.struct("id", "sigs", "q")).alias("rows")
@@ -841,125 +768,6 @@ def lsh_candidate_pairs_banded(
     )
 
 
-def _lsh_banded_rowjoin(
-    emb: DataFrame,
-    n_tables: int,
-    bits_per_table: int,
-    threshold: float,
-    vec_col: str,
-    id_col: str,
-    scale: int | None,
-) -> DataFrame:
-    """The original row-join banded-LSH formulation: candidate pairs via a
-    (tbl, bucket) self-join, vectors re-attached, per-pair verify. Kept as
-    (a) the float-path implementation (order-sensitive sums must follow
-    the HOF's sequential accumulation) and (b) the semantic reference the
-    GEMM path is equality-tested against."""
-    v = quantized(F.col(vec_col), scale) if scale else F.col(vec_col)
-
-    # bucket join moves ONLY (id, sigs[B], tbl, bucket) — the B-fold
-    # explosion never carries vector payloads (sigs is B longs, fixed);
-    # vectors join back for the verify
-    keys = banded_signature_keys(
-        emb, n_tables, bits_per_table, vec_col=vec_col, id_col=id_col, scale=scale
-    ).select("id", "sigs", F.posexplode("sigs").alias("tbl", "bucket"))
-    # MATERIALIZE the key table before the self-join: without it Spark
-    # plans the signature computation into BOTH join sides (no exchange
-    # reuse across aliases). The materialized table is (id, B longs, tbl,
-    # bucket) per row — the LSH index itself, exactly what a 10^9-vector
-    # deployment would persist; lazy so queries() stays side-effect-free
-    # at build time.
-    keys = keys.localCheckpoint(eager=False)
-    # first-agreeing-table dedup: a pair that collides in several tables
-    # is emitted ONLY from the first one — a local filter per matched
-    # row, replacing a cluster-wide shuffle-DISTINCT over up to B×
-    # candidate instances (the classic multi-probe LSH dedup device).
-    # B is a plan-time constant, so the "first index where sa[t]==sb[t]"
-    # unrolls into a static CASE WHEN chain over GetArrayItem — pure
-    # whole-stage codegen, unlike the array_position(zip_with(..)) HOF
-    # form it replaces (interpreted per matched row; round-5 directive).
-    first_agree = F.when(F.col("sa")[0] == F.col("sb")[0], 0)
-    for t in range(1, n_tables):
-        first_agree = first_agree.when(F.col("sa")[t] == F.col("sb")[t], t)
-    cand = (
-        keys.select(F.col("id").alias("a"), F.col("sigs").alias("sa"), "tbl", "bucket")
-        .join(
-            keys.select(F.col("id").alias("b"), F.col("sigs").alias("sb"), "tbl", "bucket"),
-            ["tbl", "bucket"],
-        )
-        .filter(F.col("a") < F.col("b"))
-        .filter(F.col("tbl") == first_agree.otherwise(-1))
-        .select("a", "b")
-    )
-    dot = _qdot_pandas if scale else _dot
-    vecs = emb.select(F.col(id_col).alias("id"), v.alias("q"))
-    vecs = vecs.withColumn("n2", dot(F.col("q"), F.col("q")))
-    cand = cand.join(
-        vecs.select(F.col("id").alias("a"), F.col("q").alias("qa"), F.col("n2").alias("n2a")),
-        "a",
-    ).join(
-        vecs.select(F.col("id").alias("b"), F.col("q").alias("qb"), F.col("n2").alias("n2b")),
-        "b",
-    )
-    cos = dot(F.col("qa"), F.col("qb")) / (
-        F.sqrt(F.col("n2a").cast("double")) * F.sqrt(F.col("n2b").cast("double"))
-    )
-    return (
-        cand.withColumn("cosine", F.round(cos, 6))
-        .filter(F.col("cosine") >= threshold)
-        .select("a", "b", "cosine")
-    )
-
-
-def lsh_candidate_pairs(
-    emb: DataFrame,
-    n_planes: int = 8,
-    threshold: float = 0.9,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    scale: int | None = 1000,
-) -> DataFrame:
-    """ANN near-pairs: bucket by hyperplane signature, verify cosine only
-    within buckets. Recall < 1 by construction (ANN contract); precision
-    exact because candidates are re-verified. ``scale`` set → quantized
-    integer math (cross-engine reproducible); None → float path."""
-    v = quantized(F.col(vec_col), scale) if scale else F.col(vec_col)
-
-    def _signed_term(k: int):
-        # closure factory: zip_with lambdas must take exactly 2 params
-        return lambda x, d: F.when(((d * (2 * k + 3)) % 7) % 2 == 1, x).otherwise(-x)
-
-    sig = F.lit(0).cast("long")
-    for k in range(n_planes):
-        signed = F.aggregate(
-            F.zip_with(v, F.sequence(F.lit(1), F.size(v)), _signed_term(k)),
-            F.lit(0).cast("long") if scale else F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-        sig = sig + F.when(signed > 0, F.lit(1 << k)).otherwise(F.lit(0))
-    # integer accumulator for the quantized path, double for floats —
-    # seeding F.aggregate with a bigint zero over double elements is an
-    # AnalysisException (the round-1 scale=None bug).
-    dot = _qdot if scale else _dot
-    q = emb.select(
-        F.col(id_col).alias("id"),
-        (quantized(F.col(vec_col), scale) if scale else F.col(vec_col)).alias("q"),
-        sig.alias("bucket"),
-    )
-    q = q.withColumn("n2", dot(F.col("q"), F.col("q")))
-    a = q.select(F.col("id").alias("a"), "bucket", F.col("q").alias("qa"), F.col("n2").alias("n2a"))
-    b = q.select(F.col("id").alias("b"), "bucket", F.col("q").alias("qb"), F.col("n2").alias("n2b"))
-    cand = a.join(b, "bucket").filter(F.col("a") < F.col("b"))
-    cos = dot(F.col("qa"), F.col("qb")) / (
-        F.sqrt(F.col("n2a").cast("double")) * F.sqrt(F.col("n2b").cast("double"))
-    )
-    return (
-        cand.withColumn("cosine", F.round(cos, 6))
-        .filter(F.col("cosine") >= threshold)
-        .select("a", "b", "cosine")
-    )
-
-
 def ann_topk_lsh(
     emb: DataFrame,
     queries: DataFrame,
@@ -968,23 +776,17 @@ def ann_topk_lsh(
     bits_per_table: int = 8,
     vec_col: str = "embedding",
     id_col: str = "vec_id",
-    scale: int = 1000,
 ) -> DataFrame:
     """ANN top-k: banded multi-table LSH candidates (corpus rows sharing
     ≥1 (table, bucket) with the query), verified quantized cosine, per
     query Window top-k. Recall < 1 by LSH construction; at 10^9 vectors
     the candidate set per query is ~buckets-worth of rows instead of the
     corpus. Deterministic tie-break (cosine desc, neighbor asc)."""
-    from pyspark.sql import Window
-
-    dot = _qdot_pandas if scale else _dot
-    v = quantized(F.col(vec_col), scale) if scale else F.col(vec_col)
-
     base_keys = banded_signature_keys(
-        emb, n_tables, bits_per_table, vec_col=vec_col, id_col=id_col, scale=scale
+        emb, n_tables, bits_per_table, vec_col=vec_col, id_col=id_col
     ).select(F.col("id").alias("neighbor"), F.posexplode("sigs").alias("tbl", "bucket"))
     q_keys = banded_signature_keys(
-        queries, n_tables, bits_per_table, vec_col=vec_col, id_col=id_col, scale=scale
+        queries, n_tables, bits_per_table, vec_col=vec_col, id_col=id_col
     ).select(F.col("id").alias("query_id"), F.posexplode("sigs").alias("tbl", "bucket"))
     cand = (
         base_keys.join(q_keys, ["tbl", "bucket"])
@@ -992,10 +794,8 @@ def ann_topk_lsh(
         .select("query_id", "neighbor")
         .distinct()
     )
-    vecs = emb.select(F.col(id_col).alias("id"), v.alias("q"))
-    vecs = vecs.withColumn("n2", dot(F.col("q"), F.col("q")))
-    qvecs = queries.select(F.col(id_col).alias("id"), v.alias("q"))
-    qvecs = qvecs.withColumn("n2", dot(F.col("q"), F.col("q")))
+    vecs = _quantized_rows(emb, vec_col, id_col)
+    qvecs = _quantized_rows(queries, vec_col, id_col)
     cand = cand.join(
         vecs.select(
             F.col("id").alias("neighbor"), F.col("q").alias("qn"), F.col("n2").alias("n2n")
@@ -1009,16 +809,10 @@ def ann_topk_lsh(
         ),
         "query_id",
     )
-    cos = dot(F.col("qn"), F.col("qq")) / (
-        F.sqrt(F.col("n2n").cast("double")) * F.sqrt(F.col("n2q").cast("double"))
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("neighbor"))
-    return (
-        cand.withColumn("cosine", F.round(cos, 6))
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor", "cosine", F.col("rank").cast("int").alias("rank"))
-    )
+    cos = _cosine(_qdot_pandas(F.col("qn"), F.col("qq")), _qnorm("n2n"), _qnorm("n2q"))
+    return _topk(
+        cand.withColumn("cosine", cos), ["query_id"], F.col("cosine").desc(), k
+    ).select("query_id", "neighbor", "cosine", "rank")
 
 
 # ---------------------------------------------------------------------------
@@ -1045,30 +839,42 @@ def _subvectors(
     )
 
 
-def _pq_assign(sv: DataFrame, cents: DataFrame) -> DataFrame:
-    """(id, m, sv) × broadcast (m, cell, centroid) → nearest cell per
-    (id, m) by squared L2, tie → lowest cell. Same codegen shape and
-    float semantics as assign_to_centroids: float32 squared deltas,
-    float64 accumulation in pos order inside ONE hash-agg partial per
-    (id, m, cell) group (each (id, m) subvector is a single input row)."""
-    from pyspark.sql import Window
-
-    ex = sv.select("id", "m", F.posexplode("sv").alias("pos", "x"))
+def _pq_assign(ex: DataFrame, cents: DataFrame) -> DataFrame:
+    """(id, m, pos, x) subvector elements × broadcast codebook (m, cell,
+    centroid) → (id, m, cell): the nearest cell per (id, m) by squared
+    L2, tie → lowest cell (``_nearest``; each (id, m) subvector is a
+    single exploded row, so its distance has ONE agg partial)."""
     cx = cents.select("m", "cell", F.posexplode("centroid").alias("pos", "c"))
-    d2 = (
-        ex.join(F.broadcast(cx), ["m", "pos"])
-        .groupBy("id", "m", "cell")
-        .agg(
-            F.sum(
-                ((F.col("x") - F.col("c")) * (F.col("x") - F.col("c"))).cast("double")
-            ).alias("_d2")
-        )
+    return _nearest(ex, cx, ["m", "pos"], ["id", "m"])
+
+
+def _lut(ex: DataFrame, cents: DataFrame, by: list[str]) -> DataFrame:
+    """The ADC lookup table of the query subvector elements ``ex`` (*by,
+    m, pos, x) against codebook ``cents`` (m, cell, centroid): (*by, m,
+    code, d2_micro) with d2_micro = floor(10⁶ · squared L2) — integer
+    micro-units, so the scan's subspace sum is order-independent."""
+    cx = cents.select(
+        "m", F.col("cell").alias("code"), F.posexplode("centroid").alias("pos", "c")
     )
-    w = Window.partitionBy("id", "m").orderBy(F.col("_d2").asc(), F.col("cell").asc())
-    return (
-        d2.withColumn("_rk", F.row_number().over(w))
-        .filter(F.col("_rk") == 1)
-        .select("id", "m", "cell")
+    return _sq_l2(ex, cx, ["m", "pos"], [*by, "m", "code"]).select(
+        *by, "m", "code",
+        F.floor(F.lit(1e6) * F.col("_d2")).cast("long").alias("d2_micro"),
+    )
+
+
+def _adc_topk(codes: DataFrame, lut: DataFrame, on: list[str], k: int) -> DataFrame:
+    """The ADC scan: corpus codes (id, …, m, code) ⨝ broadcast LUT on
+    ``on``, integer SUM per (query, neighbor), top ``k`` by distance asc
+    → (query_id, neighbor, adc_d2_micro, rank). Self-pairs excluded."""
+    pairs = (
+        codes.withColumnRenamed("id", "neighbor")
+        .join(F.broadcast(lut), on)
+        .filter(F.col("neighbor") != F.col("query_id"))
+        .groupBy("query_id", "neighbor")
+        .agg(F.sum("d2_micro").alias("adc_d2_micro"))
+    )
+    return _topk(pairs, ["query_id"], F.col("adc_d2_micro").asc(), k).select(
+        "query_id", "neighbor", "adc_d2_micro", "rank"
     )
 
 
@@ -1097,37 +903,20 @@ def pq_train(
     assert dim % m == 0, f"dim {dim} not divisible by m {m}"
     d_sub = dim // m
     sv = _subvectors(e, m, d_sub)
+    ex = sv.select("id", "m", F.posexplode("sv").alias("pos", "x"))
 
-    from pyspark.sql import Window
-
-    seeds = e.orderBy("id").limit(k)
-    w = Window.orderBy("id")
-    seed_cells = seeds.withColumn("_r", F.row_number().over(w)).select(
-        "id", (F.col("_r") - 1).alias("cell"), "v"
-    )
-    cents = _subvectors(seed_cells.select("id", "v"), m, d_sub).join(
-        seed_cells.select("id", "cell"), "id"
+    seeds = _seed_cells(e, k)
+    cents = _subvectors(seeds.select("id", "v"), m, d_sub).join(
+        seeds.select("id", "cell"), "id"
     ).select("m", "cell", F.col("sv").alias("centroid"))
-
-    for _ in range(lloyd_iters):
-        a = _pq_assign(sv, cents)
-        exploded = (
-            sv.join(a, ["id", "m"])
-            .select("m", "cell", F.posexplode("sv").alias("pos", "x"))
-            .groupBy("m", "cell", "pos")
-            .agg(F.avg("x").alias("mean"))
-        )
-        cents = (
-            exploded.groupBy("m", "cell")
-            .agg(F.array_sort(F.collect_list(F.struct("pos", "mean"))).alias("pm"))
-            .select(
-                "m",
-                "cell",
-                # HOF on m·k codebook rows only — metadata scale
-                F.transform("pm", lambda s: s["mean"].cast("float")).alias("centroid"),
-            )
-        )
-    return cents
+    return _lloyd(
+        cents,
+        lambda c: sv.join(_pq_assign(ex, c), ["id", "m"]).select(
+            "m", "cell", F.posexplode("sv").alias("pos", "x")
+        ),
+        ["m", "cell"],
+        lloyd_iters,
+    )
 
 
 def pq_encode(
@@ -1145,8 +934,10 @@ def pq_encode(
     e = emb.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v"))
     if dim is None:
         dim = len(e.select("v").first()["v"])
-    sv = _subvectors(e, m, dim // m)
-    return _pq_assign(sv, cents).withColumnRenamed("cell", "code")
+    ex = _subvectors(e, m, dim // m).select(
+        "id", "m", F.posexplode("sv").alias("pos", "x")
+    )
+    return _pq_assign(ex, cents).withColumnRenamed("cell", "code")
 
 
 def pq_topk(
@@ -1175,9 +966,7 @@ def pq_topk(
 
     Recall@k grows with m and n_cents (the standard PQ knobs); exact
     re-ranking of the PQ top candidates with true vectors is
-    `brute_force_topk` over the shortlist."""
-    from pyspark.sql import Window
-
+    `pq_rerank_topk`."""
     e = emb.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v"))
     dim = len(e.select("v").first()["v"])
     d_sub = dim // m
@@ -1189,120 +978,7 @@ def pq_topk(
         qe.withColumnRenamed("query_id", "id"), m, d_sub
     ).withColumnRenamed("id", "query_id")
     qx = qsv.select("query_id", "m", F.posexplode("sv").alias("pos", "x"))
-    cx = cents.select("m", F.col("cell").alias("code"), F.posexplode("centroid").alias("pos", "c"))
-    lut = (
-        qx.join(F.broadcast(cx), ["m", "pos"])
-        .groupBy("query_id", "m", "code")
-        .agg(
-            F.sum(
-                ((F.col("x") - F.col("c")) * (F.col("x") - F.col("c"))).cast("double")
-            ).alias("_d2")
-        )
-        .select(
-            "query_id", "m", "code",
-            F.floor(F.lit(1e6) * F.col("_d2")).cast("long").alias("d2_micro"),
-        )
-    )
-    pairs = (
-        codes.withColumnRenamed("id", "neighbor")
-        .join(F.broadcast(lut), ["m", "code"])
-        .filter(F.col("neighbor") != F.col("query_id"))
-        .groupBy("query_id", "neighbor")
-        .agg(F.sum("d2_micro").alias("adc_d2_micro"))
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("adc_d2_micro").asc(), F.col("neighbor").asc()
-    )
-    return (
-        pairs.withColumn("rank", F.row_number().over(w).cast("int"))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor", "adc_d2_micro", "rank")
-    )
-
-
-def pq_topk_numpy(ids, vecs, query_ids, m=4, n_cents=16, k=5, lloyd_iters=2):
-    """Sequential numpy replication of the DETERMINISTIC pq_topk
-    pipeline — the golden oracle (the _ivf_topk_oracle_sql pattern).
-    Float semantics mirror the Spark plan exactly: element ops in
-    float32, accumulation sequential left-to-right in float64 (one
-    hash-agg partial in pos order), Lloyd means float64→float32, LUT
-    distances floored to integer micro-units BEFORE the subspace sum
-    (which is then order-independent integer math). Returns
-    [(query_id, neighbor, adc_d2_micro, rank)] sorted."""
-    import math as _math
-
-    import numpy as np
-
-    order = np.argsort(ids, kind="stable")
-    ids = np.asarray(ids)[order]
-    vecs = np.asarray(vecs, dtype=np.float32)[order]
-    n, dim = vecs.shape
-    assert dim % m == 0
-    d_sub = dim // m
-
-    def seq_sum64(arr32):
-        acc = 0.0
-        for x in arr32:
-            acc += float(x)
-        return acc
-
-    def sub(v, j):
-        return v[j * d_sub : (j + 1) * d_sub]
-
-    # codebooks per subspace: seeds = n_cents lowest ids' slices
-    cents = {j: {c: sub(vecs[c], j).copy() for c in range(min(n_cents, n))} for j in range(m)}
-    for _ in range(lloyd_iters):
-        assign = {}
-        for j in range(m):
-            live = sorted(cents[j])
-            for i in range(n):
-                d2s = []
-                for c in live:
-                    d = sub(vecs[i], j) - cents[j][c]
-                    d2s.append(seq_sum64(d * d))
-                best = min(range(len(live)), key=lambda t: (d2s[t], live[t]))
-                assign[(i, j)] = live[best]
-        for j in range(m):
-            new = {}
-            for c in sorted(cents[j]):
-                members = [sub(vecs[i], j) for i in range(n) if assign[(i, j)] == c]
-                if members:
-                    new[c] = (
-                        np.stack(members).astype(np.float64).mean(axis=0).astype(np.float32)
-                    )
-            cents[j] = new
-    codes = {}
-    for j in range(m):
-        live = sorted(cents[j])
-        for i in range(n):
-            d2s = []
-            for c in live:
-                d = sub(vecs[i], j) - cents[j][c]
-                d2s.append(seq_sum64(d * d))
-            best = min(range(len(live)), key=lambda t: (d2s[t], live[t]))
-            codes[(i, j)] = live[best]
-
-    out = []
-    qset = set(query_ids)
-    for qi in range(n):
-        if ids[qi] not in qset:
-            continue
-        lut = {}
-        for j in range(m):
-            for c in sorted(cents[j]):
-                d = sub(vecs[qi], j) - cents[j][c]
-                lut[(j, c)] = _math.floor(1e6 * seq_sum64(d * d))
-        scored = []
-        for ni in range(n):
-            if ids[ni] == ids[qi]:
-                continue
-            adc = sum(lut[(j, codes[(ni, j)])] for j in range(m))
-            scored.append((adc, int(ids[ni])))
-        scored.sort()
-        out.extend(
-            (int(ids[qi]), nb, adc, r + 1) for r, (adc, nb) in enumerate(scored[:k])
-        )
-    return sorted(out)
+    return _adc_topk(codes, _lut(qx, cents, ["query_id"]), ["m", "code"], k)
 
 
 def pq_rerank_topk(
@@ -1328,46 +1004,11 @@ def pq_rerank_topk(
     Float semantics of the exact pass = ivf_topk's dots: float32
     products accumulated sequentially in float64 (one partial per
     pair), cosine rounded HALF_UP to 6."""
-    from pyspark.sql import Window
-
     short = pq_topk(
         emb, queries, k=shortlist, m=m, n_cents=n_cents,
         vec_col=vec_col, id_col=id_col,
-    ).select("query_id", "neighbor")
-    e = emb.select(F.col(id_col).alias("neighbor"), F.col(vec_col).alias("v"))
-    nrm = norms_codegen(emb, vec_col=vec_col, id_col=id_col)
-    qe = queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv"))
-    qn = norms_codegen(queries, vec_col=vec_col, id_col=id_col)
-    pairs = (
-        short.join(e, "neighbor")
-        .join(
-            nrm.withColumnRenamed("id", "neighbor").withColumnRenamed("_norm", "nv"),
-            "neighbor",
-        )
-        .join(F.broadcast(qe), "query_id")
-        .join(
-            F.broadcast(
-                qn.withColumnRenamed("id", "query_id").withColumnRenamed("_norm", "nq")
-            ),
-            "query_id",
-        )
     )
-    ex = pairs.select(
-        "query_id", "neighbor", "nv", "nq",
-        F.posexplode(F.arrays_zip("v", "qv")).alias("pos", "z"),
-    )
-    dots = ex.groupBy("query_id", "neighbor").agg(
-        F.sum((F.col("z.v") * F.col("z.qv")).cast("double")).alias("_dot"),
-        F.first("nv").alias("nv"),
-        F.first("nq").alias("nq"),
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("neighbor"))
-    return (
-        dots.withColumn("cosine", F.round(F.col("_dot") / (F.col("nv") * F.col("nq")), 6))
-        .withColumn("rank", F.row_number().over(w).cast("int"))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor", "cosine", "rank")
-    )
+    return exact_rerank(short, emb, queries, k=k, vec_col=vec_col, id_col=id_col)
 
 
 # ---------------------------------------------------------------------------
@@ -1472,8 +1113,6 @@ def ivfpq_build(
     localCheckpoints the four frames so repeated `ivfpq_query` calls
     pay the Lloyd iterations exactly once (the in-session stand-in for
     persisting to storage)."""
-    from pyspark.sql import Window
-
     e = emb.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v"))
     dim = len(e.select("v").first()["v"])
     assert dim % m == 0, f"dim {dim} not divisible by m {m}"
@@ -1485,14 +1124,14 @@ def ivfpq_build(
     )
     cx = cents.select("cell", F.posexplode("centroid").alias("dpos", "c"))
     rsv = _residual_subvectors(e, assignments, cx, d_sub)
+    # residual subvector elements (id, m, pos, x); rsv's ``cell`` is the
+    # IVF cell, so the PQ cell is named ``pcell`` wherever both meet
+    rex = rsv.select("id", "m", F.explode("pm").alias("s")).select(
+        "id", "m", F.col("s.pos").alias("pos"), F.col("s.xr").alias("x")
+    )
 
     # PQ codebook seeds: residual slices of the n_cents lowest corpus ids
-    wseed = Window.orderBy("id")
-    seed_cells = (
-        e.orderBy("id").limit(n_cents)
-        .withColumn("_r", F.row_number().over(wseed))
-        .select("id", (F.col("_r") - 1).alias("pcell"))
-    )
+    seed_cells = _seed_cells(e, n_cents).select("id", F.col("cell").alias("pcell"))
     pq_cents = (
         rsv.join(F.broadcast(seed_cells), "id")
         .select(
@@ -1502,53 +1141,15 @@ def ivfpq_build(
             F.transform("pm", lambda s: s["xr"]).alias("centroid"),
         )
     )
-
-    def passign(cents_pq: DataFrame) -> DataFrame:
-        pcx = cents_pq.select(
-            "m", F.col("cell").alias("pcell"),
-            F.posexplode("centroid").alias("pos", "c"),
-        )
-        ex2 = rsv.select("id", "m", F.explode("pm").alias("s")).select(
-            "id", "m", F.col("s.pos").alias("pos"), F.col("s.xr").alias("x")
-        )
-        d2 = (
-            ex2.join(F.broadcast(pcx), ["m", "pos"])
-            .groupBy("id", "m", "pcell")
-            .agg(
-                F.sum(
-                    ((F.col("x") - F.col("c")) * (F.col("x") - F.col("c"))).cast("double")
-                ).alias("_d2")
-            )
-        )
-        wbest = Window.partitionBy("id", "m").orderBy(
-            F.col("_d2").asc(), F.col("pcell").asc()
-        )
-        return (
-            d2.withColumn("_rk", F.row_number().over(wbest))
-            .filter(F.col("_rk") == 1)
-            .select("id", "m", "pcell")
-        )
-
-    for _ in range(lloyd_iters):
-        a = passign(pq_cents)
-        exploded = (
-            rsv.select("id", "m", F.explode("pm").alias("s"))
-            .select("id", "m", F.col("s.pos").alias("pos"), F.col("s.xr").alias("x"))
-            .join(a, ["id", "m"])
-            .groupBy("m", "pcell", "pos")
-            .agg(F.avg("x").alias("mean"))
-        )
-        pq_cents = (
-            exploded.groupBy("m", "pcell")
-            .agg(F.array_sort(F.collect_list(F.struct("pos", "mean"))).alias("pm2"))
-            .select(
-                "m",
-                F.col("pcell").alias("cell"),
-                F.transform("pm2", lambda s: s["mean"].cast("float")).alias("centroid"),
-            )
-        )
-
-    codes = passign(pq_cents).withColumnRenamed("pcell", "code")
+    pq_cents = _lloyd(
+        pq_cents,
+        lambda c: rex.join(_pq_assign(rex, c), ["id", "m"]).select(
+            "m", "cell", "pos", "x"
+        ),
+        ["m", "cell"],
+        lloyd_iters,
+    )
+    codes = _pq_assign(rex, pq_cents).withColumnRenamed("cell", "code")
 
     if materialize:
         cents = cents.localCheckpoint(eager=True)
@@ -1578,8 +1179,6 @@ def ivfpq_query(
     (integer micro-units, broadcast), ADC-scan only those cells' codes.
     Marginal cost per batch: one broadcast-probe assignment + the
     codes ⨝ LUT integer scan — the training shuffles never re-run."""
-    from pyspark.sql import Window
-
     cents, assignments = index["cents"], index["assignments"]
     pq_cents, codes = index["pq_cents"], index["codes"]
     d_sub = index["d_sub"]
@@ -1588,174 +1187,14 @@ def ivfpq_query(
     qe = queries.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v"))
     qa = assign_to_centroids(qe, cents, nprobe=nprobe)
     qrsv = _residual_subvectors(qe, qa, cx, d_sub)
+    # one LUT per (query, probed cell): the residual depends on the cell
     qex = qrsv.select(
-        F.col("id").alias("query_id"), F.col("cell").alias("qcell"), "m",
-        F.explode("pm").alias("s"),
+        F.col("id").alias("query_id"), "cell", "m", F.explode("pm").alias("s")
     ).select(
-        "query_id", "qcell", "m",
-        F.col("s.pos").alias("pos"), F.col("s.xr").alias("x"),
+        "query_id", "cell", "m", F.col("s.pos").alias("pos"), F.col("s.xr").alias("x")
     )
-    pcx = pq_cents.select(
-        "m", F.col("cell").alias("code"), F.posexplode("centroid").alias("pos", "c")
-    )
-    lut = (
-        qex.join(F.broadcast(pcx), ["m", "pos"])
-        .groupBy("query_id", "qcell", "m", "code")
-        .agg(
-            F.sum(
-                ((F.col("x") - F.col("c")) * (F.col("x") - F.col("c"))).cast("double")
-            ).alias("_d2")
-        )
-        .select(
-            "query_id",
-            F.col("qcell").alias("cell"),
-            "m",
-            "code",
-            F.floor(F.lit(1e6) * F.col("_d2")).cast("long").alias("d2_micro"),
-        )
-    )
-
-    pairs = (
-        codes.join(assignments, "id")
-        .withColumnRenamed("id", "neighbor")
-        .join(F.broadcast(lut), ["cell", "m", "code"])
-        .filter(F.col("neighbor") != F.col("query_id"))
-        .groupBy("query_id", "neighbor")
-        .agg(F.sum("d2_micro").alias("adc_d2_micro"))
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("adc_d2_micro").asc(), F.col("neighbor").asc()
-    )
-    return (
-        pairs.withColumn("rank", F.row_number().over(w).cast("int"))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor", "adc_d2_micro", "rank")
-    )
-
-
-def ivfpq_topk_numpy(
-    ids, vecs, query_ids, k=5, n_cells=8, nprobe=2, m=4, n_cents=16, lloyd_iters=2
-):
-    """Sequential numpy replication of the DETERMINISTIC ivfpq_topk
-    pipeline — the golden oracle (pq_topk_numpy / _ivf_topk_oracle_sql
-    pattern). Float semantics mirror the Spark plan exactly: element ops
-    in float32, accumulation sequential left-to-right in float64, Lloyd
-    means float64 → float32, LUT distances floored to integer micro-
-    units BEFORE the (order-independent) subspace sum. Returns
-    [(query_id, neighbor, adc_d2_micro, rank)] sorted."""
-    import math as _math
-
-    import numpy as np
-
-    order = np.argsort(ids, kind="stable")
-    ids = np.asarray(ids)[order]
-    vecs = np.asarray(vecs, dtype=np.float32)[order]
-    n, dim = vecs.shape
-    assert dim % m == 0
-    d_sub = dim // m
-
-    def seq_sum64(arr32):
-        acc = 0.0
-        for x in arr32:
-            acc += float(x)
-        return acc
-
-    # ---- IVF coarse quantizer (the _ivf_topk_oracle_sql replication) --
-    cents = vecs[: min(n_cells, n)].copy()
-    live = list(range(min(n_cells, n)))
-
-    def assign_live(cs, lv):
-        cells = np.empty(n, dtype=np.int64)
-        for i, v in enumerate(vecs):
-            d = (v[None, :] - cs[lv]) * (v[None, :] - cs[lv])
-            d2 = [seq_sum64(row) for row in d]
-            cells[i] = lv[int(np.argmin(d2))]  # ties → lowest live cell
-        return cells
-
-    for _ in range(lloyd_iters):
-        cells = assign_live(cents, live)
-        new_live = []
-        for c in live:
-            members = vecs[cells == c]
-            if len(members):
-                cents[c] = members.astype(np.float64).mean(axis=0).astype(np.float32)
-                new_live.append(c)
-        live = new_live
-    final_cells = assign_live(cents, live)
-
-    # ---- residuals (float32 subtraction, same IEEE op as Spark) ------
-    resid = np.empty_like(vecs)
-    for i in range(n):
-        resid[i] = vecs[i] - cents[final_cells[i]]
-
-    def sub(v, j):
-        return v[j * d_sub : (j + 1) * d_sub]
-
-    # ---- one global PQ codebook on residuals -------------------------
-    pq = {
-        j: {c: sub(resid[c], j).copy() for c in range(min(n_cents, n))}
-        for j in range(m)
-    }
-    for _ in range(lloyd_iters):
-        assign = {}
-        for j in range(m):
-            lv = sorted(pq[j])
-            for i in range(n):
-                d2s = [seq_sum64((sub(resid[i], j) - pq[j][c]) ** 2) for c in lv]
-                best = min(range(len(lv)), key=lambda t: (d2s[t], lv[t]))
-                assign[(i, j)] = lv[best]
-        for j in range(m):
-            new = {}
-            for c in sorted(pq[j]):
-                members = [sub(resid[i], j) for i in range(n) if assign[(i, j)] == c]
-                if members:
-                    new[c] = (
-                        np.stack(members).astype(np.float64).mean(axis=0).astype(np.float32)
-                    )
-            pq[j] = new
-    codes = {}
-    for j in range(m):
-        lv = sorted(pq[j])
-        for i in range(n):
-            d2s = [seq_sum64((sub(resid[i], j) - pq[j][c]) ** 2) for c in lv]
-            best = min(range(len(lv)), key=lambda t: (d2s[t], lv[t]))
-            codes[(i, j)] = lv[best]
-
-    # ---- query: probe cells, residual LUT, integer ADC ---------------
-    def probed_cells(qi):
-        v = vecs[qi]
-        d = (v[None, :] - cents[live]) * (v[None, :] - cents[live])
-        d2 = [seq_sum64(row) for row in d]
-        o = sorted(range(len(live)), key=lambda t: (d2[t], live[t]))
-        return [live[t] for t in o[:nprobe]]
-
-    out = []
-    qset = set(int(q) for q in query_ids)
-    for qi in range(n):
-        if int(ids[qi]) not in qset:
-            continue
-        probe = probed_cells(qi)
-        luts = {}
-        for cell in probe:
-            qr = vecs[qi] - cents[cell]
-            for j in range(m):
-                for c in sorted(pq[j]):
-                    d = sub(qr, j) - pq[j][c]
-                    luts[(cell, j, c)] = _math.floor(1e6 * seq_sum64(d * d))
-        probe_set = set(probe)
-        scored = []
-        for ni in range(n):
-            if ids[ni] == ids[qi] or final_cells[ni] not in probe_set:
-                continue
-            adc = sum(
-                luts[(final_cells[ni], j, codes[(ni, j)])] for j in range(m)
-            )
-            scored.append((adc, int(ids[ni])))
-        scored.sort()
-        out.extend(
-            (int(ids[qi]), nb, adc, r + 1) for r, (adc, nb) in enumerate(scored[:k])
-        )
-    return sorted(out)
+    lut = _lut(qex, pq_cents, ["query_id", "cell"])
+    return _adc_topk(codes.join(assignments, "id"), lut, ["cell", "m", "code"], k)
 
 
 def exact_rerank(
@@ -1768,14 +1207,12 @@ def exact_rerank(
 ) -> DataFrame:
     """Exact-cosine re-rank of a (query_id, neighbor) shortlist — the
     second stage shared by every compressed-ANN production path
-    (pq_rerank_topk's contract): the exact pass touches shortlist·|Q|
+    (pq_rerank_topk and ivfpq_rerank_topk): the exact pass touches shortlist·|Q|
     pairs instead of N·|Q|, and any true top-k neighbor the shortlist
     retains provably ranks inside the re-ranked top-k (exact metric,
     superset ordering). Float semantics = ivf_topk's dots: float32
     products accumulated sequentially in float64 (one partial per
     pair), cosine rounded HALF_UP to 6."""
-    from pyspark.sql import Window
-
     e = emb.select(F.col(id_col).alias("neighbor"), F.col(vec_col).alias("v"))
     nrm = norms_codegen(emb, vec_col=vec_col, id_col=id_col)
     qe = queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv"))
@@ -1795,21 +1232,8 @@ def exact_rerank(
             "query_id",
         )
     )
-    ex = pairs.select(
-        "query_id", "neighbor", "nv", "nq",
-        F.posexplode(F.arrays_zip("v", "qv")).alias("pos", "z"),
-    )
-    dots = ex.groupBy("query_id", "neighbor").agg(
-        F.sum((F.col("z.v") * F.col("z.qv")).cast("double")).alias("_dot"),
-        F.first("nv").alias("nv"),
-        F.first("nq").alias("nq"),
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("neighbor"))
-    return (
-        dots.withColumn("cosine", F.round(F.col("_dot") / (F.col("nv") * F.col("nq")), 6))
-        .withColumn("rank", F.row_number().over(w).cast("int"))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor", "cosine", "rank")
+    return _topk(_pair_cosine(pairs), ["query_id"], F.col("cosine").desc(), k).select(
+        "query_id", "neighbor", "cosine", "rank"
     )
 
 

@@ -47,7 +47,7 @@ def q_embedding_cosine_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     from webcrawler_go_spark.operators.similarity import cosine_pairs_quantized
 
     emb = _t(spark, sf_dir, "embeddings")
-    return cosine_pairs_quantized(emb, threshold=0.2, scale=1000)
+    return cosine_pairs_quantized(emb, threshold=0.2)
 
 
 # tiled GEMM strategy must reproduce the row-pair baseline exactly
@@ -64,13 +64,13 @@ def q_embedding_cosine_tiled(spark: SparkSession, sf_dir: str) -> DataFrame:
     # n_blocks 8 → 32 (r8): 36 tiles left a 2-wave straggle at 32 cores;
     # 528 smaller tiles balance the GEMM across the cluster and shrink
     # per-task peak memory — the result set is blocking-invariant.
-    return cosine_pairs_tiled(emb, threshold=0.2, scale=1000, n_blocks=32)
+    return cosine_pairs_tiled(emb, threshold=0.2, n_blocks=32)
 
 
 def _banded_cte_parts(n_tables: int, bits_per_table: int) -> tuple[str, str]:
     """(signs, per_table) SQL fragments for the banded multi-table LSH
     bucketing — the single source of truth mirrored against
-    similarity._banded_table_bucket, shared by every banded oracle."""
+    similarity.banded_signature_keys, shared by every banded oracle."""
     n_planes = n_tables * bits_per_table
     signs = ",\n    ".join(
         f"SUM(CASE WHEN ((ord * {2 * p + 3} + {7 * p}) % 1009) % 2 = 1 "
@@ -136,7 +136,7 @@ def q_embedding_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = _t(spark, sf_dir, "embeddings")
     return lsh_candidate_pairs_banded(
-        emb, n_tables=8, bits_per_table=10, threshold=0.15, scale=1000
+        emb, n_tables=8, bits_per_table=10, threshold=0.15
     )
 
 
@@ -202,7 +202,7 @@ def q_embedding_ann_lsh_banded(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = _t(spark, sf_dir, "embeddings")
     return lsh_candidate_pairs_banded(
-        emb, n_tables=4, bits_per_table=8, threshold=0.15, scale=1000
+        emb, n_tables=4, bits_per_table=8, threshold=0.15
     )
 
 
@@ -274,7 +274,7 @@ def q_dedup_embedding_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = _t(spark, sf_dir, "embeddings")
     docs = _t(spark, sf_dir, "documents").select("doc_id")
     pairs = lsh_candidate_pairs_banded(
-        emb, n_tables=4, bits_per_table=8, threshold=0.5, scale=1000
+        emb, n_tables=4, bits_per_table=8, threshold=0.5
     )
     neighbors = pairs.select(
         F.col("a").alias("doc_id"), F.col("b").alias("nbr")
@@ -329,7 +329,7 @@ def q_dedup_semantic_closure(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = _t(spark, sf_dir, "embeddings")
     docs = _t(spark, sf_dir, "documents").select("doc_id")
     pairs = lsh_candidate_pairs_banded(
-        emb, n_tables=4, bits_per_table=8, threshold=0.3, scale=1000
+        emb, n_tables=4, bits_per_table=8, threshold=0.3
     )
     return canonicalize_closure(docs, pairs)
 
@@ -506,9 +506,9 @@ def q_embedding_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _pq_topk_oracle_sql(k: int = 5, m: int = 4, n_cents: int = 16, n_queries: int = 8) -> str:
     """Golden VALUES oracle for embedding_pq_topk: the sequential numpy
-    replication (similarity.pq_topk_numpy) evaluated over the driver's
+    replication (oracle.ann.pq_topk_numpy) evaluated over the driver's
     sf0.01 embeddings — the _ivf_topk_oracle_sql pattern."""
-    from webcrawler_go_spark.operators.similarity import pq_topk_numpy
+    from webcrawler_go_spark.oracle.ann import pq_topk_numpy
 
     emb = _oracle_embeddings()
     if emb is None:
@@ -542,7 +542,7 @@ def _pq_rerank_oracle_sql(
     """Golden VALUES for embedding_pq_rerank: pq_topk_numpy shortlist +
     sequential-float64 exact cosine, rounded HALF_UP to 6 (the
     _ivf_topk_oracle_sql float contract)."""
-    from webcrawler_go_spark.operators.similarity import pq_topk_numpy
+    from webcrawler_go_spark.oracle.ann import pq_topk_numpy
 
     emb = _oracle_embeddings()
     if emb is None:
@@ -571,11 +571,11 @@ def _ivfpq_topk_oracle_sql(
     n_cents: int = 16, n_queries: int = 8, q_lo: int = 0,
 ) -> str:
     """Golden VALUES oracle for embedding_ivfpq_topk: the sequential
-    numpy replication (similarity.ivfpq_topk_numpy) evaluated over the
+    numpy replication (oracle.ann.ivfpq_topk_numpy) evaluated over the
     driver's sf0.01 embeddings — the _ivf_topk_oracle_sql pattern.
     ``q_lo`` shifts the query-id window (the query_only row uses a
     DISJOINT batch from the build row's)."""
-    from webcrawler_go_spark.operators.similarity import ivfpq_topk_numpy
+    from webcrawler_go_spark.oracle.ann import ivfpq_topk_numpy
 
     emb = _oracle_embeddings()
     if emb is None:
@@ -597,7 +597,7 @@ def q_embedding_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     vectors this is THE standard operating point: the scan touches
     nprobe/n_cells of a corpus that lives as m small ints per vector
     (~1/32 the float footprint), never the raw floats. Oracle = numpy
-    golden replication (similarity.ivfpq_topk_numpy, the IVF float
+    golden replication (oracle.ann.ivfpq_topk_numpy, the IVF float
     contract); recall + nprobe monotonicity asserted in
     tests/test_similarity.py."""
     from webcrawler_go_spark.operators.similarity import ivfpq_topk
@@ -637,7 +637,7 @@ def _ivfpq_rerank_oracle_sql(
     """Golden VALUES for embedding_ivfpq_rerank: ivfpq_topk_numpy
     shortlist + sequential-float64 exact cosine, rounded HALF_UP to 6
     (the _pq_rerank_oracle_sql pattern)."""
-    from webcrawler_go_spark.operators.similarity import ivfpq_topk_numpy
+    from webcrawler_go_spark.oracle.ann import ivfpq_topk_numpy
 
     emb = _oracle_embeddings()
     if emb is None:

@@ -164,7 +164,7 @@ def q_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     q = q.join(first.select("doc_id"), "doc_id")
     emb = _t(spark, sf_dir, "embeddings")
     pairs = lsh_candidate_pairs_banded(
-        emb, n_tables=4, bits_per_table=8, threshold=0.5, scale=1000
+        emb, n_tables=4, bits_per_table=8, threshold=0.5
     )
     labels = canonicalize_closure(d.select("doc_id"), pairs)
     q = q.join(labels, "doc_id").filter(F.col("canonical_id") == F.col("doc_id"))
