@@ -15,9 +15,9 @@ from webcrawler_go_spark.operators.bpe import (
     bpe_encode,
     bpe_encode_sequential,
     bpe_train,
-    bpe_train_sequential,
     demo_word_counts,
 )
+from webcrawler_go_spark.oracle.bpe import bpe_train_sequential
 
 CORPUS = {
     "lower": 9,

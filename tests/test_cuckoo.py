@@ -41,10 +41,8 @@ def test_audit_distributed_equals_sequential(spark):
     from pyspark.sql import functions as F
     from pyspark.sql.functions import pandas_udf
 
-    from webcrawler_go_spark.operators.cuckoo import (
-        cuckoo_audit_sequential,
-        cuckoo_build_deterministic,
-    )
+    from webcrawler_go_spark.operators.cuckoo import cuckoo_build_deterministic
+    from webcrawler_go_spark.oracle.seen_filters import cuckoo_audit_sequential
 
     all_hashes = [h * 2_654_435_761 - 10**15 for h in range(4000)]
     seen = all_hashes[::3]

@@ -74,10 +74,8 @@ def test_distributed_bloom_audit_matches_sequential(spark):
     bitmaps → treeReduce OR → broadcast, pmod routing) reproduces the
     scalar single-loop reference count-for-count, including the exact
     false-positive count."""
-    from webcrawler_go_spark.operators.dedup import (
-        bloom_audit_sequential,
-        bloom_prefilter_sharded,
-    )
+    from webcrawler_go_spark.operators.dedup import bloom_prefilter_sharded
+    from webcrawler_go_spark.oracle.seen_filters import bloom_audit_sequential
 
     all_hashes = [h * 2654435761 - 10**15 for h in range(3000)]
     seen_hashes = all_hashes[::3]

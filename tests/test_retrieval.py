@@ -1,12 +1,8 @@
 """BM25 + bigram-LM parity vs the plain-Python sequential references."""
 from __future__ import annotations
 
-from webcrawler_go_spark.operators.retrieval import (
-    bigram_lm_scores,
-    bigram_lm_scores_sequential,
-    bm25_topk,
-    bm25_topk_sequential,
-)
+from tests.retrieval_reference import bigram_lm_scores_sequential, bm25_topk_sequential
+from webcrawler_go_spark.operators.retrieval import bigram_lm_scores, bm25_topk
 
 DOCS = [
     (0, "hash join table scan hash"),

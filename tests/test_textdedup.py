@@ -57,30 +57,6 @@ def test_simhash_hamming(spark):
     assert near[(1, 2)] == 0
 
 
-def test_global_row_number_exact_and_distributed(spark):
-    """rank.global_row_number == single-phase Window row_number, with no
-    single-partition exchange anywhere in the physical plan."""
-    from pyspark.sql import Window
-    from pyspark.sql import functions as F
-
-    from webcrawler_go_spark.operators.rank import global_row_number
-
-    df = spark.range(0, 5000).select(
-        F.concat(F.lit("tok-"), F.lpad((F.col("id") * 37 % 4001).cast("string"), 6, "0")).alias("token")
-    ).distinct()
-    got, n_rows = global_row_number(df, ["token"], out_col="rid", n_parts=8)
-    want = df.select("token", F.row_number().over(Window.orderBy("token")).cast("long").alias("rid"))
-    assert got.exceptAll(want).count() == 0 and want.exceptAll(got).count() == 0
-    assert n_rows == want.count()
-    # scale property: the ranked data never funnels through one task —
-    # no single-partition exchange anywhere, and the one Window in the
-    # plan is partitioned (by _pid). Output partition COUNT is left to
-    # AQE (it legitimately coalesces this tiny test result to 1).
-    plan = got._jdf.queryExecution().executedPlan().toString()
-    assert "SinglePartition" not in plan
-    assert "_pid" in plan
-
-
 def test_exact_duplicates_survives_digest_collision(spark):
     """Two DISTINCT texts forced into one digest bucket must stay separate
     groups (the text itself is part of the grouping key)."""
@@ -300,51 +276,6 @@ def test_tfidf_top_terms_known_values(spark):
     assert rows[(1, 2)].token == "apple" and rows[(1, 2)].score == idf_rare
     assert rows[(1, 3)].token == "common" and rows[(1, 3)].score == 0
     assert rows[(2, 1)].token == "banana"
-
-
-def test_global_cumsum_equals_single_partition_window(spark):
-    """Two-phase range-partitioned cumsum ≡ the single-partition Window
-    it replaces, on a key-skewed input."""
-    from pyspark.sql import Window
-    from pyspark.sql import functions as F
-
-    from webcrawler_go_spark.operators.rank import global_cumsum
-
-    rows = [(i, (i * 37 + 11) % 97) for i in range(997)]
-    df = spark.createDataFrame(rows, "k long, v long")
-    got = {
-        r.k: r.cum
-        for r in global_cumsum(df, ["k"], "v", out_col="cum", n_parts=8).collect()
-    }
-    w = Window.orderBy("k").rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    want = {r.k: r.cum for r in df.withColumn("cum", F.sum("v").over(w)).collect()}
-    assert got == want
-
-
-def test_grouped_cumsum_equals_keyed_window(spark):
-    """Two-phase per-group cumsum ≡ Window.partitionBy(group) on a
-    HOT-group input (one group holds ~90% of rows — the shape where the
-    keyed Window funnels a corpus through one task)."""
-    from pyspark.sql import Window
-    from pyspark.sql import functions as F
-
-    from webcrawler_go_spark.operators.rank import grouped_cumsum
-
-    rows = [(i, "hot" if i % 10 else f"cold{i % 3}", (i * 37 + 11) % 97)
-            for i in range(997)]
-    df = spark.createDataFrame(rows, "k long, g string, v long")
-    got = {
-        (r.g, r.k): r.cum
-        for r in grouped_cumsum(
-            df, ["g"], ["k"], "v", out_col="cum", n_parts=8
-        ).collect()
-    }
-    w = (
-        Window.partitionBy("g").orderBy("k")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    want = {(r.g, r.k): r.cum for r in df.withColumn("cum", F.sum("v").over(w)).collect()}
-    assert got == want
 
 
 def test_pack_sequences_invariants(spark):

@@ -4,8 +4,8 @@ token_budget_fill's prefix semantics need a per-source running token
 sum. The naive shape — ``Window.partitionBy(source)`` — funnels each
 source through ONE task; with a dominant source (the usual mixture:
 one web corpus dwarfing the rest) that single task sorts most of the
-corpus. `rank.grouped_cumsum` range-partitions over (source, order key)
-so the hot source tiles across partitions.
+corpus. `rank.range_rank` grouped by source range-partitions over
+(source, order key), so the hot source tiles across partitions.
 
 This bench builds a skewed mixture (HOT_SHARE of rows in one source,
 the rest split over a handful of tail sources), runs both shapes at
@@ -39,7 +39,7 @@ def main() -> None:
     from pyspark.sql import Window
     from pyspark.sql import functions as F
 
-    from webcrawler_go_spark.operators.rank import grouped_cumsum
+    from webcrawler_go_spark.operators.rank import range_rank
     from webcrawler_go_spark.session import get_spark
 
     spark = get_spark(
@@ -70,10 +70,9 @@ def main() -> None:
         Window.unboundedPreceding, Window.currentRow
     )
     naive = base.withColumn("cum", F.sum("n_tokens").over(w).cast("long"))
-    two_phase = grouped_cumsum(
-        base, ["source"], ["priority", "doc_id"], "n_tokens",
-        out_col="cum", n_parts=cpus,
-    )
+    two_phase = range_rank(
+        base, ["priority", "doc_id"], "cum", by=["source"], value_col="n_tokens"
+    )[0]
 
     t_naive = timed(naive)
     t_two = timed(two_phase)
@@ -90,7 +89,7 @@ def main() -> None:
         "hot_share_milli": HOT_MILLI,
         "cpus": cpus,
         "naive_keyed_window_sec": t_naive,
-        "grouped_cumsum_sec": t_two,
+        "two_phase_sec": t_two,
         "speedup": round(t_naive / t_two, 2),
         "sample_agreed": len(a),
     }))

@@ -108,7 +108,7 @@ def run_one(cpus: int) -> dict:
     fetch_frontier(
         schedule_round(
             dedup_against_seen(first_discovery(warm), seen.limit(1)),
-            budgets, 0, default_budget=1_000_000, salted=True, n_salts=cpus * 2,
+            budgets, 0, default_budget=1_000_000, salted=True,
         )[0].withColumnRenamed("round", "disc_round").withColumn("round", F.lit(0)),
         _world(),
     ).write.format("noop").mode("overwrite").save()
@@ -117,7 +117,7 @@ def run_one(cpus: int) -> dict:
     unique = first_discovery(frontier)
     new = dedup_against_seen(unique, seen)
     scheduled, _ = schedule_round(
-        new, budgets, 0, default_budget=1_000_000, salted=True, n_salts=cpus * 2
+        new, budgets, 0, default_budget=1_000_000, salted=True
     )
     scheduled = scheduled.withColumnRenamed("round", "disc_round").withColumn(
         "round", F.lit(0)

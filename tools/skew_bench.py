@@ -1,7 +1,8 @@
 """Skewed-frontier scheduling evidence (round-5 directive #7).
 
-The salted two-phase per-host rank (operators/politeness.py) is
-parity-tested against the single-phase Window, but its SCALING claim —
+The salted two-phase per-host rank (``rank.range_rank``, which
+``politeness.schedule_round`` runs when ``salted``) is parity-tested
+against the single-phase Window, but its SCALING claim —
 that it keeps a pathologically hot host from straggling the round — had
 no measurement. This tool builds two 1.2M-URL frontiers:
 
@@ -68,7 +69,7 @@ def build_frontier(spark, skew: bool):
     )
 
 
-def run_round(spark, frontier, salted: bool, cpus: int) -> float:
+def run_round(spark, frontier, salted: bool) -> float:
     from pyspark.sql import functions as F
 
     from webcrawler_go_spark.operators.dedup import dedup_against_seen, first_discovery
@@ -83,8 +84,7 @@ def run_round(spark, frontier, salted: bool, cpus: int) -> float:
     t0 = time.perf_counter()
     new = dedup_against_seen(first_discovery(frontier), seen)
     scheduled, _ = schedule_round(
-        new, budgets, 0, default_budget=2_000_000,
-        salted=salted, n_salts=cpus * 2,
+        new, budgets, 0, default_budget=2_000_000, salted=salted
     )
     scheduled = scheduled.withColumnRenamed("round", "disc_round").withColumn(
         "round", F.lit(0)
@@ -106,7 +106,7 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
 
     # warm codegen + Python workers
-    run_round(spark, build_frontier(spark, skew=False).limit(20_000), True, cpus)
+    run_round(spark, build_frontier(spark, skew=False).limit(20_000), True)
 
     results: dict[str, float] = {}
     # alternate configs; keep each config's best of 2 (shared-VM drift,
@@ -116,7 +116,7 @@ def main() -> None:
             for salted in (True, False):
                 key = f"{'hot' if skew else 'uniform'}_{'salted' if salted else 'window'}"
                 frontier = build_frontier(spark, skew)
-                secs = run_round(spark, frontier, salted, cpus)
+                secs = run_round(spark, frontier, salted)
                 results[key] = min(results.get(key, 1e9), secs)
                 print(f"  {key}: {secs:.1f}s", file=sys.stderr)
 

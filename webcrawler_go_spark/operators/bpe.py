@@ -28,9 +28,10 @@ non-conflicting batch is deterministic too).
 Encoding is the GPT-2 greedy lowest-merge-rank loop per word with the
 merge table broadcast, Arrow-batched, word-vocabulary cacheable.
 
-A sequential plain-Python reference (`bpe_train_sequential`,
-`bpe_encode_sequential`) provides the golden oracle; parity is asserted
-in tests and by the ``bpe_merges`` driver query.
+The plain-Python reference trainer, `bpe_train_sequential`, lives in
+``oracle/bpe.py`` and provides the golden oracle; parity is asserted in
+tests and by the ``bpe_merges`` driver query. The per-word encoder
+`bpe_encode_sequential` stays here: `bpe_encode`'s kernel runs it.
 """
 from __future__ import annotations
 
@@ -39,7 +40,7 @@ from pyspark.sql import functions as F
 
 
 # ---------------------------------------------------------------------------
-# sequential reference (the oracle; plain Python, no Spark)
+# per-word merges (plain Python; shared with the reference trainer)
 # ---------------------------------------------------------------------------
 
 def _merge_word(sym: tuple[str, ...], left: str, right: str) -> tuple[str, ...]:
@@ -54,48 +55,6 @@ def _merge_word(sym: tuple[str, ...], left: str, right: str) -> tuple[str, ...]:
             out.append(sym[i])
             i += 1
     return tuple(out)
-
-
-def bpe_train_sequential(
-    word_counts: dict[str, int], n_merges: int, merges_per_round: int = 1
-) -> list[tuple[str, str, int]]:
-    """Classic BPE merge learning: repeatedly take the highest-count
-    adjacent symbol pair (ties: lexicographic) and fuse it. With
-    ``merges_per_round`` > 1, each round greedily takes up to K pairs
-    from the top-``max(4K, 8)`` count-ranked CANDIDATE WINDOW that share
-    no symbol with an earlier pick of the same round (the batched
-    distributed variant — the window is what bounds the driver-side
-    collect in `bpe_train`, so the reference defines the algorithm WITH
-    it; for K=1 the window is irrelevant: the top pair is always
-    eligible, i.e. exact classic BPE). Returns [(left, right,
-    pair_count)] in merge order."""
-    vocab = {tuple(w): int(c) for w, c in word_counts.items() if w}
-    merges: list[tuple[str, str, int]] = []
-    while len(merges) < n_merges:
-        take = min(merges_per_round, n_merges - len(merges))
-        counts: dict[tuple[str, str], int] = {}
-        for sym, c in vocab.items():
-            for a, b in zip(sym, sym[1:]):
-                counts[(a, b)] = counts.get((a, b), 0) + c
-        if not counts:
-            break
-        window = max(4 * take, 8)
-        ranked = sorted(counts.items(), key=lambda kv: (-kv[1], kv[0]))[:window]
-        picked: list[tuple[str, str, int]] = []
-        used: set[str] = set()
-        for (a, b), c in ranked:
-            if len(picked) >= take:
-                break
-            if a in used or b in used or a + b in used:
-                continue
-            picked.append((a, b, c))
-            used.update((a, b, a + b))
-        if not picked:
-            break
-        for a, b, c in picked:
-            merges.append((a, b, c))
-            vocab = {_merge_word(s, a, b): cc for s, cc in vocab.items()}
-    return merges
 
 
 def bpe_encode_sequential(
@@ -163,9 +122,10 @@ def bpe_train(
             .agg(F.sum("c").alias("n"))
             .orderBy(F.col("n").desc(), F.col("l").asc(), F.col("r").asc())
             # the top-max(4K, 8) candidate WINDOW is part of the batched
-            # algorithm's definition (mirrored in bpe_train_sequential):
-            # it bounds the driver collect, and picks that deep conflict
-            # with this round's winners anyway at K=1 (classic BPE)
+            # algorithm's definition (mirrored in the reference trainer,
+            # oracle/bpe.py): it bounds the driver collect, and picks
+            # that deep conflict with this round's winners anyway at
+            # K=1 (classic BPE)
             .limit(max(4 * take, 8))
             .collect()
         )

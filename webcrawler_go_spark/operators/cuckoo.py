@@ -128,35 +128,3 @@ def cuckoo_build_deterministic(
     for h in sorted(int(h) for h in requeued_hashes):
         cf.delete(h)
     return cf
-
-
-def cuckoo_audit_sequential(
-    seen_hashes, requeued_hashes, all_hashes
-) -> dict[str, int]:
-    """Sequential single-process reference for the `cuckoo_requeue_audit`
-    driver row: same deterministic build, scalar bookkeeping. The law
-    under audit: an inserted-and-not-deleted key is ALWAYS found
-    (n_fn_active ≡ 0 — what makes the filter safe as a seen-set
-    pre-check); deleted (requeued) keys and never-seen keys may false-
-    positive at the fingerprint rate, counted exactly."""
-    cf = cuckoo_build_deterministic(seen_hashes, requeued_hashes)
-    requeued = set(int(h) for h in requeued_hashes)
-    active = set(int(h) for h in seen_hashes) - requeued
-    found = cf.contains_many(np.array([int(h) for h in all_hashes], dtype=np.int64))
-    n_fn_active = n_rq_found = n_fp_unseen = 0
-    for h, f in zip(all_hashes, found):
-        h = int(h)
-        if h in active:
-            n_fn_active += int(not f)
-        elif h in requeued:
-            n_rq_found += int(f)
-        else:
-            n_fp_unseen += int(f)
-    return {
-        "n_candidates": len(all_hashes),
-        "n_seen": len(set(int(h) for h in seen_hashes)),
-        "n_requeued": len(requeued),
-        "n_fn_active": n_fn_active,
-        "n_requeued_still_found": n_rq_found,
-        "n_fp_unseen": n_fp_unseen,
-    }

@@ -15,8 +15,8 @@ The crawl engine dedups in two layers:
 The Bloom filter here (``NumpyBloom``, sharded by ``pmod(url_hash,
 n_shards)`` so each shard is small enough to broadcast on its own) is not
 on the crawl path: the ``bloom_seen_audit`` query measures it against the
-exact seen set, and ``bloom_audit_sequential`` is that query's
-single-process reference.
+exact seen set, and ``oracle/seen_filters.bloom_audit_sequential`` is
+that query's single-process reference.
 """
 
 from __future__ import annotations
@@ -184,41 +184,6 @@ def bloom_prefilter_sharded(
         flagged.filter(~F.col("_maybe_seen")).drop("_maybe_seen"),
         flagged.filter(F.col("_maybe_seen")).drop("_maybe_seen"),
     )
-
-
-def bloom_audit_sequential(
-    seen_hashes: list[int],
-    all_hashes: list[int],
-    n_shards: int = 4,
-    fpp: float = 0.01,
-) -> dict[str, int]:
-    """Sequential single-process reference for the sharded-Bloom audit
-    driver row (`bloom_seen_audit`): same bitmap math (NumpyBloom, same
-    sizing ladder as ``bloom_prefilter_sharded``), but built with one
-    scalar loop and no Spark — what the distributed build (per-partition
-    bitmaps → treeReduce OR → broadcast, pmod shard routing through the
-    Arrow lookup kernel) must reproduce count-for-count. Returns the
-    audit counters; ``n_false_negative`` is structurally 0 (Bloom law)."""
-    n = len(seen_hashes)
-    per_shard = max(64, max(n, 64) // n_shards)
-    shards = [NumpyBloom(per_shard, fpp) for _ in range(n_shards)]
-    for h in seen_hashes:
-        shards[h % n_shards].add_many([h])
-    seen_set = set(seen_hashes)
-    n_maybe = n_fp = n_fn = 0
-    for h in all_hashes:
-        maybe = bool(shards[h % n_shards].contains_many([h])[0])
-        actual = h in seen_set
-        n_maybe += maybe
-        n_fp += int(maybe and not actual)
-        n_fn += int(actual and not maybe)
-    return {
-        "n_candidates": len(all_hashes),
-        "n_seen": n,
-        "n_maybe_seen": n_maybe,
-        "n_false_positive": n_fp,
-        "n_false_negative": n_fn,
-    }
 
 
 def dedup_against_seen(candidates: DataFrame, seen: DataFrame) -> DataFrame:

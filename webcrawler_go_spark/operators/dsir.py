@@ -81,7 +81,7 @@ def dsir_importance(
     ``selected`` marks the top ``floor(select_frac · n_raw)`` raw
     documents by (logweight desc, doc_id) — deterministic rank, not
     Gumbel sampling, so the oracle can state it exactly."""
-    from webcrawler_go_spark.operators.rank import global_row_number
+    from webcrawler_go_spark.operators.rank import range_rank
     from webcrawler_go_spark.operators.textdedup import token_vocab
 
     d = docs.select(
@@ -138,10 +138,11 @@ def dsir_importance(
     raw = scored.filter(~F.col("is_target")).withColumn(
         "_negw", -F.col("logweight_milli")
     )
-    k_sel = int(math.floor(raw.count() * select_frac))  # scalar stat, one action
-    ranked = global_row_number(raw, ["_negw", id_col], out_col="_rn")[0].select(
-        id_col, (F.col("_rn") <= k_sel).alias("selected")
-    )
+    ranked, n_raw = range_rank(raw, ["_negw", id_col], "_rn")
+    # the rank's driver-side offsets count the raw rows exactly, so the
+    # scoring plan runs once, with no separate count action
+    k_sel = int(math.floor(n_raw * select_frac))
+    ranked = ranked.select(id_col, (F.col("_rn") <= k_sel).alias("selected"))
     return (
         scored.join(ranked, id_col, "left")
         .select(

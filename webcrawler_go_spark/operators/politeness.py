@@ -13,12 +13,12 @@ sleeps don't compose, so the schedule is encoded IN DATA:
 * retry backoff — ``not_before_round`` column filtered against the
   current round (crawler.go:586-588's linear backoff, data-encoded).
 
-Skew: ``partitionBy(host)`` puts a hot host in one task. The two-phase
-salted rank keeps ordering parity while spreading the sort:
-rank within (host, salt) → per-salt offsets via a tiny aggregate →
-global per-host rank = salt_offset + local_rank. Salting only matters
-when a single host exceeds ~task-sized cardinality; below the threshold
-the single-phase Window is used (fewer shuffles).
+Skew: ``partitionBy(host)`` sorts a hot host in one task. When the
+engine salts a round (``salted``, above ``config.SALT_THRESHOLD`` rows)
+the rank comes from ``rank.range_rank`` instead: the same per-host
+row_number in two phases, range tiles of (host, order key) ranked
+locally plus per-tile offsets, so a hot host spreads over many tasks.
+Below the threshold the single-phase Window is cheaper (fewer shuffles).
 """
 
 from __future__ import annotations
@@ -27,6 +27,8 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+from webcrawler_go_spark.operators.rank import range_rank
 
 ORDER_COLS = ["round", "parent_seq", "link_pos", "url_hash"]
 # url_hash last = total tiebreak so ranking is deterministic even if two
@@ -43,75 +45,20 @@ def rank_per_host(frontier: DataFrame, by: tuple[str, ...] = ("host",)) -> DataF
     return frontier.withColumn("host_rank", F.row_number().over(w))
 
 
-def rank_per_host_salted(
-    frontier: DataFrame, n_salts: int = 16, by: tuple[str, ...] = ("host",)
-) -> DataFrame:
-    """Two-phase per-host rank for hot hosts (SURVEY §4.1 hard part).
-
-    ``Window.partitionBy(host)`` puts a mega-host in ONE task; at 10^10
-    URLs that task never finishes. Exact distributed ranking instead:
-
-    1. ``repartitionByRange(n_salts, host, *key)`` — range-partition on
-       the FULL order key, so each host's rows land in contiguous
-       partitions in key order, and a hot host is spread across many
-       partitions (Spark samples boundaries; skew is split);
-    2. local ``row_number`` within (host, partition) — partitions are
-       key-ranges, so local order = global order within the slice;
-    3. exact per-(host, partition) counts → cumulative offset by
-       partition id (tiny aggregate, broadcast back);
-    4. global rank = offset + local rank.
-
-    Exactness: range partitions tile the key space in partition-id order,
-    ranking inside each tile uses the full key, and offsets are exact
-    counts of earlier tiles ⇒ identical to the single-phase Window
-    (asserted in tests/test_crawl_parity.py::test_salted_rank_equals_unsalted).
-    ``by`` refines the host exactly as in ``rank_per_host``.
-    """
-    by = list(by)
-    key_cols = [F.col(c) for c in ORDER_COLS]
-    fr = frontier.repartitionByRange(n_salts, *[F.col(c) for c in by], *key_cols)
-    fr = fr.withColumn("_pid", F.spark_partition_id())
-    # pin ONE evaluation of the range exchange: the local-rank branch and
-    # the counts branch must observe the same sampled range boundaries,
-    # otherwise (host,_pid) offsets would not line up with local ranks
-    # (rows would silently drop at the offsets join). localCheckpoint also
-    # truncates lineage inside the iterative loop.
-    fr = fr.localCheckpoint(eager=True)
-    w_local = Window.partitionBy(*by, "_pid").orderBy(*key_cols)
-    fr = fr.withColumn("_local_rank", F.row_number().over(w_local))
-    counts = fr.groupBy(*by, "_pid").agg(F.count("*").alias("_n"))
-    w_off = (
-        Window.partitionBy(*by)
-        .orderBy("_pid")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    offsets = counts.withColumn(
-        "_offset", F.coalesce(F.sum("_n").over(w_off), F.lit(0))
-    ).select(*by, "_pid", "_offset")
-    return (
-        fr.join(F.broadcast(offsets), [*by, "_pid"], "left")
-        .withColumn(
-            "host_rank", (F.col("_offset") + F.col("_local_rank")).cast("int")
-        )
-        .drop("_local_rank", "_offset", "_pid")
-    )
-
-
 def schedule_round(
     frontier: DataFrame,
     budgets: DataFrame,
     current_round: int,
     default_budget: int = 20,
     salted: bool = False,
-    n_salts: int = 16,
     hold: Callable[[DataFrame], DataFrame] | None = None,
 ) -> tuple[DataFrame, DataFrame]:
     """W1+W2+W3: returns (scheduled, deferred).
 
     * ranks every input row ONCE, per (host, ready) where ready means
-      not_before_round ≤ round (salted two-phase when requested), so
-      ready rows rank 1.. among themselves and backoff rows never take
-      a budget slot;
+      not_before_round ≤ round (``range_rank``'s two phases when
+      ``salted``), so ready rows rank 1.. among themselves and backoff
+      rows never take a budget slot;
     * broadcast-joins the politeness budget dim (small by construction);
     * scheduled = ready rows with host_rank ≤ budget;
     * deferred = the rest: ready overflow re-enters the next round with
@@ -133,7 +80,9 @@ def schedule_round(
     )
     by = ("host", "_ready")
     ranked = (
-        rank_per_host_salted(fr, n_salts, by) if salted else rank_per_host(fr, by)
+        range_rank(fr, ORDER_COLS, "host_rank", by)[0]
+        if salted
+        else rank_per_host(fr, by)
     )
     ranked = ranked.join(F.broadcast(budgets), "host", "left").withColumn(
         "_budget",

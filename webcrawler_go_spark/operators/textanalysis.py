@@ -413,7 +413,6 @@ def pack_sequences(
     capacity: int = 2048,
     text_col: str = "text",
     id_col: str = "doc_id",
-    n_parts: int = 32,
 ) -> DataFrame:
     """Training-sequence PACKING by concat-and-chunk: lay every
     document's whitespace tokens end-to-end in ``id_col`` order and cut
@@ -429,17 +428,19 @@ def pack_sequences(
     * ``doc_tok_start/end`` — the corresponding span WITHIN the doc
     * ``n_tokens``        — the doc's total whitespace-token count
 
-    Scale shape: the global token offsets come from `global_cumsum`
-    (range exchange + driver offsets — NO single-partition Window), the
-    chunk overlap is a pure-codegen ``sequence``+``posexplode``, and
-    nothing else shuffles. Zero-token docs emit no rows."""
-    from webcrawler_go_spark.operators.rank import global_cumsum
+    Scale shape: each doc's global token end is the running token sum
+    in doc order from `rank.range_rank` with no group (range tiles,
+    local cumsum, driver-side tile offsets — NO single-partition
+    Window), the chunk overlap is a pure-codegen
+    ``sequence``+``posexplode``, and nothing else shuffles. Zero-token
+    docs emit no rows."""
+    from webcrawler_go_spark.operators.rank import range_rank
 
     t = docs.select(
         F.col(id_col).alias("doc_id"),
         token_count_ws(F.col(text_col)).alias("n_tokens"),
     )
-    c = global_cumsum(t, ["doc_id"], "n_tokens", out_col="tok_end", n_parts=n_parts)
+    c = range_rank(t, ["doc_id"], "tok_end", value_col="n_tokens")[0]
     c = c.filter(F.col("n_tokens") > 0).withColumn(
         "tok_start", F.col("tok_end") - F.col("n_tokens")
     )
@@ -526,7 +527,6 @@ def token_budget_fill(
     order_col: str = "priority",
     token_col: str = "n_tokens",
     id_col: str = "doc_id",
-    n_parts: int | None = None,
 ) -> DataFrame:
     """Fill a per-source TOKEN budget in priority order — the budgeted
     counterpart to `mixture_resample`'s rate damping. Mixture specs for
@@ -535,30 +535,21 @@ def token_budget_fill(
     (order_col, id) order while the running token sum stays within
     budget. The cumulative sum is monotone (token counts ≥ 0), so
     `cum ≤ budget` IS the prefix-fill semantics — the first document
-    that overshoots and everything after it drop out.
+    that overshoots and everything after it drop out. A NULL source is
+    one more source, as in ``PARTITION BY``.
 
-    Plan: `rank.grouped_cumsum`'s two-phase shape — range exchange over
-    (source, order, id) so a HOT source tiles across partitions, local
-    cumsum per (partition, source), metadata-scale per-(partition,
-    source) offsets broadcast back. A `Window.partitionBy(source)`
-    cumsum would funnel each source through ONE task — with a handful
-    of sources at 100 TB that is one task sorting an entire corpus
-    (VERDICT r6 What's-wrong #2); the two-phase plan sorts only tiles.
-    Returns the kept rows with their inclusive `cum_tokens`."""
-    from webcrawler_go_spark.operators.rank import grouped_cumsum
+    Plan: `rank.range_rank`'s running sum grouped by source — range
+    tiles over (source, order, id) so a HOT source spreads across
+    partitions, local cumsum per (tile, source), metadata-scale
+    per-(tile, source) offsets broadcast back. A
+    `Window.partitionBy(source)` cumsum would funnel each source through
+    ONE task — with a handful of sources at 100 TB that is one task
+    sorting an entire corpus (VERDICT r6 What's-wrong #2); the two-phase
+    plan sorts only tiles. Returns the kept rows with their inclusive
+    `cum_tokens`."""
+    from webcrawler_go_spark.operators.rank import range_rank
 
-    if n_parts is None:
-        # scale the hot-source spread with the cluster, not a constant:
-        # a fixed 32 re-creates a milder straggler on wide clusters
-        n_parts = max(
-            32, docs.sparkSession.sparkContext.defaultParallelism or 32
-        )
-    c = grouped_cumsum(
-        docs,
-        [source_col],
-        [order_col, id_col],
-        token_col,
-        out_col="cum_tokens",
-        n_parts=n_parts,
-    )
+    c = range_rank(
+        docs, [order_col, id_col], "cum_tokens", by=[source_col], value_col=token_col
+    )[0]
     return c.filter(F.col("cum_tokens") <= budget_tokens)

@@ -88,11 +88,9 @@ def token_vocab(tokens: DataFrame) -> DataFrame:
     Ranked with the two-phase distributed row_number (rank.py) — a bare
     ``Window.orderBy`` would pull the whole distinct vocabulary through
     ONE task, which dies at 100 TB corpora."""
-    from webcrawler_go_spark.operators.rank import global_row_number
+    from webcrawler_go_spark.operators.rank import range_rank
 
-    return global_row_number(
-        tokens.select("token").distinct(), ["token"], out_col="token_id"
-    )[0]
+    return range_rank(tokens.select("token").distinct(), ["token"], "token_id")[0]
 
 
 def doc_token_ids(docs: DataFrame, text_col: str = "text") -> DataFrame:
@@ -165,12 +163,10 @@ def minhash_signatures(
 
     Permutation-free MinHash: one narrow aggregate per hash, all
     JVM-side; shingle ids from the deterministic vocabulary."""
-    from webcrawler_go_spark.operators.rank import global_row_number
+    from webcrawler_go_spark.operators.rank import range_rank
 
     sh = shingles(docs, n, text_col)
-    vocab, n_vocab = global_row_number(
-        sh.select("shingle").distinct(), ["shingle"], out_col="sid"
-    )
+    vocab, n_vocab = range_rank(sh.select("shingle").distinct(), ["shingle"], "sid")
     ids = sh.join(_maybe_broadcast(vocab, n_vocab), "shingle").select("doc_id", "sid")
     aggs = [
         F.min((F.col("sid") * F.lit(a) + F.lit(b)) % F.lit(MINHASH_P)).alias(f"h{i}")
@@ -233,11 +229,11 @@ def simhash(
 
     bit_k(feature) = parity of ((feature_id * A_k + B_k) mod P); the
     doc's bit k is 1 iff more features set it than clear it."""
-    from webcrawler_go_spark.operators.rank import global_row_number
+    from webcrawler_go_spark.operators.rank import range_rank
 
     sh = shingles(docs, n=ngram, text_col=text_col)
-    vocab, n_vocab = global_row_number(
-        sh.select("shingle").distinct(), ["shingle"], out_col="token_id"
+    vocab, n_vocab = range_rank(
+        sh.select("shingle").distinct(), ["shingle"], "token_id"
     )
     ids = sh.join(_maybe_broadcast(vocab, n_vocab), "shingle").select(
         "doc_id", "token_id"

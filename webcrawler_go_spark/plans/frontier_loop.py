@@ -8,7 +8,7 @@ Round r (all DataFrame ops; driver only sequences rounds):
     new ──robots──► allowed                               (broadcast dim)
     allowed ∪ backoff ──rank per (host, ready)──► scheduled ≤ budget (W1+W2)
                                    └─► overflow + backoff → next round
-    scheduled ──mapInPandas fetch──► fetch_log+spans+outlinks   (S3)
+    scheduled ──mapInArrow fetch───► fetch_log+spans+outlinks   (S3)
     fetch ──posexplode──► next candidates (round+1)       (X1, F1-F4)
     fetch ──retry/blocked rules──► requeued               (W3, J3)
     frontier = candidates + requeued + overflow + backoff (raw: the

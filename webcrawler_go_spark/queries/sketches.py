@@ -324,7 +324,7 @@ def _oracle_corpus_min_k() -> tuple[list[int], list[int], list[int]] | None:
 def _bloom_seen_audit_oracle_sql() -> str:
     """Golden VALUES from the sequential sharded-Bloom reference over
     the shared Python corpus restatement (`_oracle_corpus_min_k`)."""
-    from webcrawler_go_spark.operators.dedup import bloom_audit_sequential
+    from webcrawler_go_spark.oracle.seen_filters import bloom_audit_sequential
 
     corpus = _oracle_corpus_min_k()
     if corpus is None:
@@ -422,7 +422,7 @@ def q_bloom_seen_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _cuckoo_requeue_audit_oracle_sql() -> str:
     """Golden VALUES from the sequential cuckoo reference over the same
     Python corpus restatement as the Bloom audit."""
-    from webcrawler_go_spark.operators.cuckoo import cuckoo_audit_sequential
+    from webcrawler_go_spark.oracle.seen_filters import cuckoo_audit_sequential
 
     min_k = _oracle_corpus_min_k()
     if min_k is None:

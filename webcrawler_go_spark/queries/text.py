@@ -446,10 +446,8 @@ def _bpe_merges_oracle_sql() -> str:
     deterministic word-frequency table — the head_probe golden-VALUES
     pattern: the distributed trainer must reproduce the scalar
     reference's merge table exactly, rank for rank."""
-    from webcrawler_go_spark.operators.bpe import (
-        bpe_train_sequential,
-        demo_word_counts,
-    )
+    from webcrawler_go_spark.operators.bpe import demo_word_counts
+    from webcrawler_go_spark.oracle.bpe import bpe_train_sequential
 
     merges = bpe_train_sequential(demo_word_counts(), 40, merges_per_round=4)
     rows = ",\n              ".join(
@@ -488,10 +486,8 @@ def _bpe_encode_corpus_oracle_sql() -> str:
     """Golden VALUES from the sequential BPE reference replicating the
     whole corpus pipeline (word counts → train 24/4 → encode) over the
     driver's sf0.01 documents parquet."""
-    from webcrawler_go_spark.operators.bpe import (
-        bpe_encode_sequential,
-        bpe_train_sequential,
-    )
+    from webcrawler_go_spark.operators.bpe import bpe_encode_sequential
+    from webcrawler_go_spark.oracle.bpe import bpe_train_sequential
 
     tbl = oracle_table("documents", ["doc_id", "text"])
     if tbl is None:
